@@ -8,10 +8,11 @@ import java.nio.file.{Files, Paths}
   * scans, broadcast vs shuffle join sides, WholeStageCodegen spans —
   * after every operator change.
   *
-  * Queries whose registered form executes-and-pins (`localCheckpoint`)
-  * are dumped through their [[Queries.planOnly]] variant: the registered
-  * form would fully execute here and then show only a checkpoint scan,
-  * hiding exactly the shapes this tool audits.
+  * Every query is constructed under [[Pin.lazily]], so the dump is the
+  * plan the registered lane executes with its sharing pins left lazy —
+  * an eager pin would run here and then show only a checkpoint scan,
+  * hiding exactly the shapes this tool audits. Pins that are part of an
+  * algorithm (index builds, iterative lineage breaks) still run.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -21,12 +22,11 @@ object Explain {
     val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
     val out = new StringBuilder
     wanted.foreach { name =>
-      Queries.planOnly.get(name).orElse(SparkEntry.queries.get(name)) match {
+      SparkEntry.queries.get(name) match {
         case Some(fn) =>
-          val tag = if (Queries.planOnly.contains(name)) " (plan-only variant)" else ""
-          out.append(s"\n===================== $name$tag =====================\n")
-          try out.append(fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
+          out.append(s"\n===================== $name =====================\n")
+          try out.append(Pin.lazily(fn(spark, sfDir)).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
           catch { case e: Throwable => out.append(s"FAILED TO PLAN: ${e.getMessage}\n") }
         case None => out.append(s"\n===== $name: no such query =====\n")
       }

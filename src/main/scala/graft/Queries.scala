@@ -534,7 +534,7 @@ object Queries {
     val shard = u.filter(col("doc_id") >= 300)
       .unionByName(u.filter(col("doc_id") < 10)
         .withColumn("doc_id", col("doc_id") + 10000))
-    val historySigs = Dedup.minhashSignatures(history, n = 4).localCheckpoint(true)
+    val historySigs = Pin(Dedup.minhashSignatures(history, n = 4))
     graft.stream.StreamingDedup.minhashDropStreamAgainst(
         shard, historySigs, n = 4, bands = 8, minSim = 0.7)
       .select("doc_id").orderBy("doc_id")
@@ -551,7 +551,7 @@ object Queries {
     val shard = u.filter(col("doc_id") >= 300)
       .unionByName(u.filter(col("doc_id") < 10)
         .withColumn("doc_id", col("doc_id") + 10000))
-    val historySigs = Dedup.simhashSignatures(history, n = 4).localCheckpoint(true)
+    val historySigs = Pin(Dedup.simhashSignatures(history, n = 4))
     graft.stream.StreamingDedup.simhashDropStreamAgainst(
         shard, historySigs, n = 4, maxHamming = 6)
       .select("doc_id").orderBy("doc_id")
@@ -602,7 +602,7 @@ object Queries {
     * occur and the verify path is exercised, not vacuous. */
   def x1BloomDedup(s: SparkSession, d: String): DataFrame = {
     val (history, shard) = plantedShard(documents(s, d), withSecondCopy = true)
-    val historyFp = Dedup.fingerprints(history).localCheckpoint(true)
+    val historyFp = Pin(Dedup.fingerprints(history))
     val bloom = graft.ext.BloomIndex.build(historyFp,
       expectedItems = 1000L, fpp = 0.05)
     Dedup.exactDedupAgainstBloom(shard, historyFp, bloom)
@@ -663,7 +663,7 @@ object Queries {
     * verify path is exercised, not vacuous. */
   def x1KeepbestBloom(s: SparkSession, d: String): DataFrame = {
     val (history, shard) = keepbestPlant(s, d)
-    val historyFp = Dedup.fingerprints(history).localCheckpoint(true)
+    val historyFp = Pin(Dedup.fingerprints(history))
     val bloom = graft.ext.BloomIndex.build(historyFp,
       expectedItems = 1000L, fpp = 0.05)
     Dedup.exactDedupKeepBestAgainstBloom(shard, historyFp, bloom,
@@ -867,11 +867,10 @@ object Queries {
   def x2IvfTopk(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val model = graft.ext.IvfIndex.build(emb, k = 8, iters = 2)
-    val out = graft.ext.IvfIndex
-      .topK(model, emb, emb.filter(col("vec_id") < 10), k = 5, nProbe = 3)
-      .localCheckpoint(true) // materialize, then release the index cache
-    model.release()
-    out
+    // Pin the top-k, then release the index cache.
+    Pin.releasing(graft.ext.IvfIndex
+      .topK(model, emb, emb.filter(col("vec_id") < 10), k = 5, nProbe = 3))(
+      model.release())
   }
 
   /** X2c-planted — [[x2IvfTopk]]'s operator over the planted queries:
@@ -884,13 +883,11 @@ object Queries {
   def x2IvfPlanted(s: SparkSession, d: String): DataFrame = {
     val emb = embeddings(s, d)
     val model = graft.ext.IvfIndex.build(emb, k = 8, iters = 2)
-    val out = graft.ext.IvfIndex
+    // Pin the rank-1 rows, then release the index cache.
+    Pin.releasing(graft.ext.IvfIndex
       .topK(model, emb, plantedQueryVecs(emb), k = 5, nProbe = 3)
       .filter(col("rank") === 1)
-      .orderBy("query_id")
-      .localCheckpoint(true) // materialize, then release the index cache
-    model.release()
-    out
+      .orderBy("query_id"))(model.release())
   }
 
   /** X2i — product-quantization ADC top-k over the real embeddings
@@ -1631,11 +1628,7 @@ object Queries {
     * (per-split rows + the corpus-total row from one shuffle), and
     * `n_straddling_sources` — re-derived from scratch by the oracle —
     * pins the leakage guarantee at ZERO. */
-  def x10SplitCards(s: SparkSession, d: String): DataFrame =
-    x10SplitCardsImpl(s, d, materialize = true)
-
-  private[graft] def x10SplitCardsImpl(s: SparkSession, d: String,
-      materialize: Boolean): DataFrame = {
+  def x10SplitCards(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val bench = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("bench_id"), col("text"))
@@ -1648,11 +1641,9 @@ object Queries {
     // ~1.1 s single-task evaluations of the same subtree). The
     // writePacked survivor-pin discipline; at 100 TB the production
     // shape is write-then-read of the curated artifact instead.
-    // (`materialize = false` keeps the lazy plan for Explain/audits.)
-    val split0 = curated.withColumn("split",
+    val split = Pin(curated.withColumn("split",
       graft.ext.Sampling.assignSplitByGroup(col("source"),
-        Seq("train" -> 0.8, "val" -> 0.2)))
-    val split = if (materialize) split0.localCheckpoint(true) else split0
+        Seq("train" -> 0.8, "val" -> 0.2))))
     val straddle = split.groupBy("source")
       .agg(countDistinct(col("split")).as("__k"))
       .agg(count(when(col("__k") > 1, lit(1))).as("n_straddling_sources"))
@@ -2277,7 +2268,7 @@ object Queries {
         documents(s, d))
       .filter(expr("(media_id % 6) div 3 = 1"))
     graft.stream.StreamingChunks.chunkDropBatch(arrivals, hist,
-        segmentSamples = 512, minFracPpm = 500000L, materialize = true)
+        segmentSamples = 512, minFracPpm = 500000L)
       .orderBy("media_id")
   }
 
@@ -2324,11 +2315,7 @@ object Queries {
     * dataset-card numbers a multimodal training corpus ships with.
     * FULL oracle: all three closed-form hash chains are shared with
     * their pair lanes, so every count replays exactly. */
-  def x10MediaFunnel(s: SparkSession, d: String): DataFrame =
-    x10MediaFunnelImpl(s, d, materialize = true)
-
-  private[graft] def x10MediaFunnelImpl(s: SparkSession, d: String,
-      materialize: Boolean): DataFrame = {
+  def x10MediaFunnel(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     // Corpus sizes census the slim document ids through the SHARED
     // generator predicates (the generators are 1-row-per-doc maps over
@@ -2349,56 +2336,45 @@ object Queries {
           col("n_signed"),
           (col("n_signed") - coalesce(col("n_dropped"), lit(0L)))
             .as("n_unique"))
-    // Each modality's signature frame pins ONCE (eager localCheckpoint
-    // of the slim (id, hash) rows) and feeds both the signed census
-    // and the drop arm — one decode pass per modality instead of 2–3
-    // (r17 opt; the dhashPngsDistinct pin discipline).
-    def pin(f: DataFrame): DataFrame =
-      if (materialize) f.localCheckpoint(true) else f
+    // Each modality's signature frame pins ONCE (the slim (id, hash)
+    // rows) and feeds both the signed census and the drop arm — one
+    // decode pass per modality instead of 2–3 (r17 opt; the
+    // dhashPngsDistinct pin discipline).
     // The three modality chains are INDEPENDENT pipelines of many
     // small eager jobs (pin + banded-core pins — the r17 residual
     // profile: ~30 sequential jobs, none over 1.3 s, orchestration-
     // bound). Overlap them from driver threads (guide §2.6: actions
     // are only sequential because the driver calls them sequentially;
     // each modality's job tail back-fills the cores the others leave
-    // idle). Lazy mode constructs inline — no jobs to overlap.
-    def modality[T](body: => T): () => T =
-      if (!materialize) { val v = body; () => v }
-      else {
-        val f = scala.concurrent.Future(body)(
-          scala.concurrent.ExecutionContext.global)
-        () => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf)
-      }
-    val imgF = modality {
-      val sigs = pin(graft.ext.Multimodal.dhashPngs(
-        graft.ext.Multimodal.dhashMediaFromDocuments(docs)))
-      val drop = graft.ext.Dedup.hammingEdges(sigs,
-          "media_id", "dhash", maxHamming = 3, materialize = materialize)
-        .select(col("doc_id_b").as("media_id"))
-      (sigs, drop)
-    }
-    val audF = modality {
-      val sigs = pin(graft.ext.Multimodal.ahashWavs(
-        graft.ext.Multimodal.ahashMediaFromDocuments(docs)))
-      val drop = graft.ext.Dedup.hammingEdges(sigs,
-          "media_id", "ahash", maxHamming = 3, materialize = materialize)
-        .select(col("doc_id_b").as("media_id"))
-      (sigs, drop)
-    }
-    val vidF = modality {
-      val frames = pin(graft.ext.Multimodal.videoFramePhashes(
-        graft.ext.Multimodal.videoMediaFromDocuments(docs)))
-      val sigs = frames.select(col("media_id")).distinct()
-        .select(col("media_id"))
-      val drop = graft.ext.Multimodal.frameAlignmentPairs(frames,
-          maxHamming = 4, minFracPpm = 600000L, materialize = materialize)
-        .select(col("media_id_b").as("media_id"))
-      (sigs, drop)
-    }
-    val (imgSigs, imgDrop) = imgF()
-    val (audSigs, audDrop) = audF()
-    val (vidSigs, vidDrop) = vidF()
+    // idle).
+    val Seq((imgSigs, imgDrop), (audSigs, audDrop), (vidSigs, vidDrop)) =
+      Pin.all(Seq[() => (DataFrame, DataFrame)](
+        () => {
+          val sigs = Pin(graft.ext.Multimodal.dhashPngs(
+            graft.ext.Multimodal.dhashMediaFromDocuments(docs)))
+          val drop = graft.ext.Dedup.hammingEdges(sigs,
+              "media_id", "dhash", maxHamming = 3)
+            .select(col("doc_id_b").as("media_id"))
+          (sigs, drop)
+        },
+        () => {
+          val sigs = Pin(graft.ext.Multimodal.ahashWavs(
+            graft.ext.Multimodal.ahashMediaFromDocuments(docs)))
+          val drop = graft.ext.Dedup.hammingEdges(sigs,
+              "media_id", "ahash", maxHamming = 3)
+            .select(col("doc_id_b").as("media_id"))
+          (sigs, drop)
+        },
+        () => {
+          val frames = Pin(graft.ext.Multimodal.videoFramePhashes(
+            graft.ext.Multimodal.videoMediaFromDocuments(docs)))
+          val sigs = frames.select(col("media_id")).distinct()
+            .select(col("media_id"))
+          val drop = graft.ext.Multimodal.frameAlignmentPairs(frames,
+              maxHamming = 4, minFracPpm = 600000L)
+            .select(col("media_id_b").as("media_id"))
+          (sigs, drop)
+        }))(_())
     card("audio", nMedia(graft.ext.Multimodal.ahashDocPred),
         audSigs, audDrop)
       .unionByName(card("image", nMedia(graft.ext.Multimodal.dhashDocPred),
@@ -3642,8 +3618,7 @@ object Queries {
     // writes it, X12d reads it) — pin the derivation once, like the
     // s3/x15 saved-index contract: the summary's rates and achieved
     // branches would otherwise each re-run the census join.
-    val weighted = Dedup.softDedupWeights(history.unionByName(shard))
-      .localCheckpoint(true)
+    val weighted = Pin(Dedup.softDedupWeights(history.unionByName(shard)))
     graft.ext.Mixing.weightedMixSummary(weighted,
       weights = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
       totalTokens = 3000L)
@@ -4582,299 +4557,6 @@ object Queries {
       .orderBy("window_start")
   }
 
-  /** Plan-inspection variants of the queries whose registered form
-    * executes-and-pins (`localCheckpoint`) — a checkpointed result scans
-    * the checkpoint, hiding the join/scan shapes a plan audit exists to
-    * see. Same operators, same parameters, `materialize = false`; used by
-    * [[Explain]] and the plan-audit spec, never by Verify/Bench. */
-  def planOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g23_kl_divergence" -> ((s, d) => {
-      // Un-pinned census (materialize = false), so the dump shows the
-      // one partial-agg value census feeding the broadcast PPM join +
-      // broadcast total — not a checkpoint scan.
-      graft.checks.KlDivergenceCheck("event_type",
-          Seq("click", "error", "purchase", "signup", "view"),
-          Seq(200000L, 200000L, 200000L, 200000L, 200000L), 0.05)
-        .census(events(s, d), materialize = false)
-        .orderBy("value")
-    }),
-    "x27_pctl_against" -> ((s, d) => {
-      // Un-persisted cuts, so the dump shows the REAL serve shape: the
-      // dim-sized census+CDF feeding the broadcast gate join — not a
-      // parquet scan of the per-JVM saved model.
-      val cuts = graft.ext.Calibrate.thresholds(
-        documents(s, d).select("source", "n_chars"),
-        "n_chars", "source", minPpm = 100000L)
-      graft.ext.Calibrate.gateAgainst(
-          documents(s, d).select("doc_id", "source", "n_chars"), cuts,
-          "n_chars", "source")
-        .orderBy("doc_id")
-    }),
-    "x10_pctl_funnel" -> ((s, d) => {
-      // Un-persisted cuts (same rationale): the funnel with the fitted
-      // floor derived lazily — a pure plan showing the calib gate's
-      // broadcast join inside the annotate pass.
-      val docs = documents(s, d)
-      val bench = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("bench_id"), col("text"))
-      val cuts = graft.ext.Calibrate.thresholds(
-        docs.select(col("lang"),
-          graft.ext.TextAnalysis.tokenCount(col("text")).as("n_tok_raw")),
-        "n_tok_raw", "lang", 100000L)
-      graft.ext.Curation.funnel(docs, bench, graft.ext.Curation.Config(
-        rates = Map("en" -> 0.4), seqLen = 512L, calibCuts = Some(cuts)))
-    }),
-    "x30_perceptron" -> ((s, d) => {
-      // ONE epoch's aggregate with the zero-weight literals — the real
-      // per-epoch shape (the registered frame is a collected local
-      // audit, which hides the map-side-combine aggregate this IS).
-      val fc = Seq("f_one", "q_stop_hits", "q_alpha_chars",
-        "q_punct_chars", "q_tokens")
-      val feats = graft.ext.QualityScore.scored(documents(s, d))
-        .withColumn("f_one", lit(1L))
-        .withColumn("y", when(col("lang") === "en", 1L).otherwise(-1L))
-      val mis = graft.ext.Perceptron
-        .marginOf(Seq.fill(fc.size)(0L), fc) * col("y") <= 0L
-      feats.agg(count(when(mis, lit(1))).as("n_mis"),
-        fc.map(f => coalesce(sum(when(mis, col("y") * col(f))), lit(0L))
-          .as(s"d_$f")): _*)
-    }),
-    "x26_budget_cut" -> ((s, d) => {
-      // Fixed (band, leftover) instead of the construction-time band
-      // census, so the dump shows the real phase-B shapes: the map-only
-      // full-keep filter, the ordered window over ONE band, the union.
-      graft.ext.BudgetCut.cutAtFixed(documents(s, d),
-          qualityCol = "n_chars", band = 20L, leftover = 1000L)
-        .groupBy("source")
-        .agg(count(lit(1)).as("kept_docs"), sum("tokens").as("kept_tokens"),
-          min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-        .orderBy("source")
-    }),
-    "s3_stream_neardup" -> ((s, d) => {
-      // Un-checkpointed history index, so the dump shows the signature
-      // aggregate feeding the per-band anti joins instead of a
-      // checkpoint scan.
-      val (history, shard) =
-        plantedShard(documents(s, d), withSecondCopy = false)
-      // Mirrors the registered form's shard spread (r18) so the audited
-      // plan differs only by the un-checkpointed index.
-      graft.stream.StreamingDedup.minhashDropStreamAgainst(
-          spreadDocs(shard, bytesPerTask = 128L * 1024),
-          Dedup.minhashSignatures(history, n = 4),
-          n = 4, bands = 8, minSim = 0.7)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "s4_stream_simhash" -> ((s, d) => {
-      val (history, shard) =
-        plantedShard(documents(s, d), withSecondCopy = false)
-      graft.stream.StreamingDedup.simhashDropStreamAgainst(
-          spreadDocs(shard, bytesPerTask = 128L * 1024),
-          Dedup.simhashSignatures(history, n = 4),
-          n = 4, maxHamming = 6)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "s6_stream_anndrop" -> ((s, d) => {
-      // Un-checkpointed band index, so the dump shows the signature
-      // banding feeding the per-band anti joins.
-      val emb = embeddings(s, d)
-      val history = emb.filter(col("vec_id") < 300)
-      val shard = emb.filter(col("vec_id") >= 300)
-        .unionByName(emb.filter(col("vec_id") < 10)
-          .withColumn("vec_id", col("vec_id") + 10000))
-      graft.stream.StreamingDedup.embedDropStreamAgainst(
-          shard,
-          graft.ext.Similarity.lshBands(history, "vec_id", "embedding",
-            dim = 64, numBits = 64, bands = 8, seed = 42L),
-          history, minSim = 0.95)
-        .select("vec_id").orderBy("vec_id")
-    }),
-    "s3_planted_neardup" -> ((s, d) => {
-      val u = uniquifiedDocs(s, d)
-      val history = u.filter(col("doc_id") < 300)
-      val shard = u.filter(col("doc_id") >= 300)
-        .unionByName(u.filter(col("doc_id") < 10)
-          .withColumn("doc_id", col("doc_id") + 10000))
-      graft.stream.StreamingDedup.minhashDropStreamAgainst(
-          shard, Dedup.minhashSignatures(history, n = 4),
-          n = 4, bands = 8, minSim = 0.7)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "s4_planted_simhash" -> ((s, d) => {
-      val u = uniquifiedDocs(s, d)
-      val history = u.filter(col("doc_id") < 300)
-      val shard = u.filter(col("doc_id") >= 300)
-        .unionByName(u.filter(col("doc_id") < 10)
-          .withColumn("doc_id", col("doc_id") + 10000))
-      graft.stream.StreamingDedup.simhashDropStreamAgainst(
-          shard, Dedup.simhashSignatures(history, n = 4),
-          n = 4, maxHamming = 6)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "x20_psi_drift" -> ((s, d) =>
-      // Un-materialized census, so the dump shows the (week,type,bin)
-      // aggregate feeding the grid/baseline/totals arithmetic.
-      graft.ext.PsiDrift.psiByWeek(events(s, d), materialize = false)),
-    "x12_weighted_mix" -> ((s, d) => {
-      // Un-checkpointed weight derivation, so the dump shows the census
-      // join feeding both audit branches instead of a checkpoint scan.
-      val (history, shard) =
-        plantedShard(documents(s, d), withSecondCopy = true)
-      graft.ext.Mixing.weightedMixSummary(
-        Dedup.softDedupWeights(history.unionByName(shard)),
-        weights = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
-        totalTokens = 3000L)
-    }),
-    "x1_minhash_planted" -> ((s, d) => {
-      val u = uniquifiedDocs(s, d)
-      val corpus = u.unionByName(u.filter(col("doc_id") < 5)
-        .withColumn("doc_id", col("doc_id") + 20000))
-      Dedup.minhashPairs(corpus, n = 4, bands = 8, minSim = 0.7,
-        materialize = false)
-    }),
-    "x1_simhash_planted" -> ((s, d) => {
-      val u = uniquifiedDocs(s, d)
-      val corpus = u.unionByName(u.filter(col("doc_id") < 5)
-        .withColumn("doc_id", col("doc_id") + 20000))
-      Dedup.simhashPairs(corpus, n = 4, maxHamming = 6,
-        materialize = false)
-    }),
-    "x1_bloom_dedup" -> ((s, d) => {
-      // Driver-built sketch (no Spark job) and un-checkpointed history,
-      // so the dump shows the fingerprint derivation feeding the probe
-      // filter + anti join + union shape.
-      val (history, shard) =
-        plantedShard(documents(s, d), withSecondCopy = true)
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.spark.util.sketch.BloomFilter.create(1000L, 0.05).writeTo(out)
-      Dedup.exactDedupAgainstBloom(shard, Dedup.fingerprints(history),
-          out.toByteArray)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "x10_ppl_funnel" -> ((s, d) => {
-      // Un-materialized LM model (the x15 planOnly discipline): the dump
-      // shows the count aggregates feeding the funnel's scoring joins.
-      val docs = documents(s, d)
-      val bench = docs.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("bench_id"), col("text"))
-      val model = graft.ext.NgramLm.train(docs.filter(col("doc_id") < 300))
-      graft.ext.Curation.funnel(docs, bench, graft.ext.Curation.Config(
-        minTokens = 25L, maxTokens = 90L,
-        rates = Map("en" -> 0.4), seqLen = 512L,
-        pplModel = Some(model), pplBands = Seq("head")))
-    }),
-    "x15_lm_ppl" -> ((s, d) => {
-      // Un-materialized model, so the dump shows the count aggregates
-      // feeding the scoring joins instead of checkpoint scans.
-      val docs = documents(s, d)
-      val model = graft.ext.NgramLm.train(docs.filter(col("doc_id") < 300))
-      graft.ext.NgramLm.scored(docs.filter(col("doc_id") >= 300), model)
-        .select("doc_id", "lm_grams", "lm_hits", "lm_logp_micro",
-          "lm_ppl", "lm_band")
-        .orderBy("doc_id")
-    }),
-    "x15_lm_ppl3" -> ((s, d) => {
-      // Un-materialized order-3 model (the x15 planOnly discipline).
-      val docs = documents(s, d)
-      val model = graft.ext.NgramLm.train(docs.filter(col("doc_id") < 300),
-        order = 3)
-      graft.ext.NgramLm.scored(docs.filter(col("doc_id") >= 300), model)
-        .select("doc_id", "lm_grams", "lm_hits", "lm_logp_micro",
-          "lm_ppl", "lm_band")
-        .orderBy("doc_id")
-    }),
-    "x16_dsir_weights" -> ((s, d) => {
-      // Un-materialized probe/model: the dump shows the target census
-      // and the probe's bucket marginal feeding the joins instead of
-      // checkpoint scans.
-      val docs = documents(s, d)
-      val (_, scored) = graft.ext.Dsir.fitScored(
-        docs.filter(col("doc_id") < 300), docs.filter(col("doc_id") >= 300),
-        materialize = false)
-      scored
-        .select("doc_id", "dsir_grams", "dsir_logw_micro", "dsir_logw")
-        .orderBy("doc_id")
-    }),
-    "x16_dsir_select" -> ((s, d) => {
-      val docs = documents(s, d)
-      val (_, scored) = graft.ext.Dsir.fitScored(
-        docs.filter(col("doc_id") < 300), docs.filter(col("doc_id") >= 300),
-        materialize = false)
-      graft.ext.Dsir.resampleFrom(scored, k = 100, seed = 42L)
-        .select("doc_id", "dsir_logw_micro", "dsir_key_micro")
-        .orderBy("doc_id")
-    }),
-    "x1_jaccard_pairs" -> ((s, d) =>
-      Dedup.jaccardPairs(documents(s, d), n = 4, minSim = 0.8, materialize = false)),
-    "x1_minhash_pairs" -> ((s, d) =>
-      Dedup.minhashPairs(documents(s, d), n = 4, bands = 8, minSim = 0.7,
-        materialize = false)),
-    "x1_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(documents(s, d), n = 4, maxHamming = 6,
-        maxBucketSize = Some(64), materialize = false)),
-    "x2_ivf_topk" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val model = graft.ext.IvfIndex.build(emb, k = 8, iters = 2)
-      // Index build still runs (it is jobs by nature); the QUERY plan —
-      // probe join + re-rank — stays lazy and inspectable.
-      graft.ext.IvfIndex.topK(model, emb, emb.filter(col("vec_id") < 10),
-        k = 5, nProbe = 3)
-    }),
-    // The r17 single-decode pins: the registered forms cache the frame
-    // /segment signatures and pin the verdict (decode once); the dumps
-    // below run materialize = false so the census + banded-core shapes
-    // stay visible instead of a checkpoint scan.
-    "x5_video_neardup" -> ((s, d) =>
-      graft.ext.Multimodal.frameMajorityPairs(
-        graft.ext.Multimodal.videoFramePhashes(
-          graft.ext.Multimodal.videoMediaFromDocuments(documents(s, d))),
-        maxHamming = 4, minFracPpm = 600000L, materialize = false)
-        .orderBy("media_id_a", "media_id_b")),
-    "x5_video_align" -> ((s, d) =>
-      graft.ext.Multimodal.frameAlignmentPairs(
-        graft.ext.Multimodal.videoFramePhashes(
-          graft.ext.Multimodal.videoMediaFromDocuments(documents(s, d))),
-        maxHamming = 4, minFracPpm = 600000L, materialize = false)
-        .orderBy("media_id_a", "media_id_b")),
-    "x5_video_against" -> ((s, d) => {
-      val media = graft.ext.Multimodal.videoMediaFromDocuments(
-        documents(s, d))
-      graft.ext.Multimodal.frameMajorityAgainst(
-          graft.ext.Multimodal.videoFramePhashes(
-            media.filter(expr("(media_id % 6) div 3 = 1"))),
-          graft.ext.Multimodal.videoFramePhashes(
-            media.filter(expr("(media_id % 6) div 3 = 0"))),
-          maxHamming = 4, minFracPpm = 600000L, materialize = false)
-        .orderBy("media_id_new", "media_id_hist")
-    }),
-    "x5_ahash_chunks" -> ((s, d) =>
-      graft.ext.Multimodal.ahashChunkPairs(
-        graft.ext.Multimodal.ahashChunks(
-          graft.ext.Multimodal.ahashChunkMediaFromDocuments(
-            documents(s, d)), segmentSamples = 512),
-        minFracPpm = 500000L, materialize = false)
-        .orderBy("media_id_a", "media_id_b")),
-    "s24_stream_chunks" -> ((s, d) => {
-      val arrivals = graft.ext.Multimodal.ahashChunkMediaFromDocuments(
-          documents(s, d))
-        .filter(expr("(media_id % 6) div 3 = 1"))
-      graft.stream.StreamingChunks.chunkDropBatch(arrivals,
-          graft.stream.StreamingChunks.chunkSegments(
-            graft.ext.Multimodal.ahashChunkMediaFromDocuments(
-              documents(s, d))
-              .filter(expr(
-                "(media_id % 6) div 3 = 0 AND (media_id div 6) % 2 = 0")),
-            segmentSamples = 512),
-          segmentSamples = 512, minFracPpm = 500000L)
-        .orderBy("media_id")
-    }),
-    "x10_media_funnel" -> ((s, d) =>
-      x10MediaFunnelImpl(s, d, materialize = false)),
-    "x10_split_cards" -> ((s, d) =>
-      // Un-pinned curated+split frame (the x10_media_funnel escape):
-      // the registered form checkpoints it for its two consumers, which
-      // would hide the curation plan this dump audits.
-      x10SplitCardsImpl(s, d, materialize = false)))
-
   /** S2 — streaming exact dedup, batch-replayed (the watermark is a
     * no-op on a static frame; `dropDuplicatesWithinWatermark` degenerates
     * to per-key dedup — same code path as the streaming mode, pinned by
@@ -4905,7 +4587,7 @@ object Queries {
     // production it is a SAVED parquet (column-pruned scans). A derived
     // frame would recompute the signature aggregate per band —
     // materialize once to mirror the persisted-index contract.
-    val historySigs = Dedup.minhashSignatures(history, n = 4).localCheckpoint(true)
+    val historySigs = Pin(Dedup.minhashSignatures(history, n = 4))
     // Batch replay only: spread the shard before the per-row MinHash
     // signature + 8-band anti-join chain (r18 — the whole chain ran on
     // the union's 2 scan partitions; a LIVE stream arrives pre-split
@@ -4925,7 +4607,7 @@ object Queries {
   def s4StreamSimhash(s: SparkSession, d: String): DataFrame = {
     val (history, shard) =
       plantedShard(documents(s, d), withSecondCopy = false)
-    val historySigs = Dedup.simhashSignatures(history, n = 4).localCheckpoint(true)
+    val historySigs = Pin(Dedup.simhashSignatures(history, n = 4))
     // Batch replay only: spread before the signature + banded anti-join
     // chain (the s3 rationale).
     graft.stream.StreamingDedup.simhashDropStreamAgainst(
@@ -4949,10 +4631,10 @@ object Queries {
     val shard = emb.filter(col("vec_id") >= 300)
       .unionByName(emb.filter(col("vec_id") < 10)
         .withColumn("vec_id", col("vec_id") + 10000))
-    val historyBands = graft.ext.Similarity
+    // Pinned: the persisted-index contract (saveBands).
+    val historyBands = Pin(graft.ext.Similarity
       .lshBands(history, "vec_id", "embedding", dim = 64, numBits = 64,
-        bands = 8, seed = 42L)
-      .localCheckpoint(true) // the persisted-index contract (saveBands)
+        bands = 8, seed = 42L))
     graft.stream.StreamingDedup.embedDropStreamAgainst(
         shard, historyBands, history, minSim = 0.95)
       .select("vec_id").orderBy("vec_id")

@@ -838,19 +838,18 @@ final case class KlDivergenceCheck(column: String,
     * the registered lane ships these rows alongside the verdict so the
     * oracle pins every contribution, not just their sum. `ppm` (and
     * `contrib_micro`) are NULL for observed values outside the
-    * declared partition. `materialize` pins the value census once (it
-    * feeds BOTH the contribution join and the total — unpinned, each
-    * would re-scan the corpus; the census is |distinct values| rows at
-    * ANY corpus size, so the pin is free — the PsiDrift discipline).
-    * False only for plan inspection. */
-  def census(df: DataFrame, materialize: Boolean = true): DataFrame = {
+    * declared partition. The value census is pinned once
+    * ([[graft.Pin]]): it feeds BOTH the contribution join and the total
+    * — unpinned, each would re-scan the corpus; the census is |distinct
+    * values| rows at ANY corpus size, so the pin is free — the PsiDrift
+    * discipline. */
+  def census(df: DataFrame): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
     val part = partitionValues.zip(weightsPpm).toDF("__v", "ppm")
-    val counts0 = df.filter(col(column).isNotNull)
+    val counts = graft.Pin(df.filter(col(column).isNotNull)
       .groupBy(col(column).cast("string").as("__v"))
-      .agg(count(lit(1)).as("n"))
-    val counts = if (materialize) counts0.localCheckpoint(true) else counts0
+      .agg(count(lit(1)).as("n")))
     val totals = counts.agg(sum(col("n")).as("__N"))
     counts.join(broadcast(part), Seq("__v"), "left")
       .crossJoin(broadcast(totals))
@@ -936,16 +935,16 @@ final case class ChiSquareCheck(column: String,
     * FULL coverage: observed values LEFT-extended with ppm (NULL =
     * out-of-partition, contrib NULL), declared-but-unobserved values
     * appended with n = 0 (their expected-count term is real χ² mass).
-    * The pinned counts census is |distinct values| rows at any corpus
-    * size (the [[KlDivergenceCheck.census]] discipline). */
-  def census(df: DataFrame, materialize: Boolean = true): DataFrame = {
+    * The counts census is pinned ([[graft.Pin]]) and is |distinct
+    * values| rows at any corpus size (the [[KlDivergenceCheck.census]]
+    * discipline). */
+  def census(df: DataFrame): DataFrame = {
     val session = df.sparkSession
     import session.implicits._
     val part = partitionValues.zip(weightsPpm).toDF("__v", "ppm")
-    val counts0 = df.filter(col(column).isNotNull)
+    val counts = graft.Pin(df.filter(col(column).isNotNull)
       .groupBy(col(column).cast("string").as("__v"))
-      .agg(count(lit(1)).as("n"))
-    val counts = if (materialize) counts0.localCheckpoint(true) else counts0
+      .agg(count(lit(1)).as("n")))
     val totals = counts.agg(sum(col("n")).as("__N"))
     // Census-side full coverage without a full-outer shuffle: observed
     // LEFT-joins the broadcast grid; unobserved declared values are the

@@ -128,20 +128,6 @@ object BudgetCut {
       .drop("__bc_band")
   }
 
-  /** Phase-B plan at a FIXED (band, leftover) — the plan-audit /
-    * Explain variant (the [[graft.Queries.planOnly]] discipline): the
-    * registered `cut` runs the band census at construction, and a plan
-    * dump must show the filter + bounded window + union shapes, not a
-    * census job. Never used by Verify/Bench. */
-  private[graft] def cutAtFixed(docs: DataFrame, qualityCol: String,
-                                textCol: String = "text",
-                                keyCol: String = "doc_id",
-                                bandWidth: Long = 16L, band: Long,
-                                leftover: Long): DataFrame =
-    phaseB(withBands(docs, qualityCol,
-        TextAnalysis.tokenCount(col(textCol)), bandWidth),
-      qualityCol, keyCol, band, leftover)
-
   /** Null-quality rows dropped; `tokens` (loud on null/negative — a
     * null token count would silently vanish from the census sum while
     * its row stayed cuttable) + the order-respecting band (`floor`

@@ -757,7 +757,7 @@ object Curation {
                   seed: Long = 42L, textCol: String = "text",
                   keyCol: String = "doc_id", seqLen: Long = 2048L,
                   blockSize: Long = 100000L, fanout: Long = 10000L,
-                  materialize: Boolean = true, numShards: Int = 1): Unit = {
+                  numShards: Int = 1): Unit = {
     require(numShards >= 1, s"numShards ($numShards) must be >= 1")
     val withSplit0 = curated
       .select(col(keyCol), col(textCol))
@@ -773,8 +773,7 @@ object Curation {
     // that artifact (write-then-read, the v6 discipline) — persisted
     // parquet, column-pruned scans, no executor-local checkpoint of
     // the full corpus (VERDICT r10).
-    val withSplit =
-      if (materialize) withSplit0.localCheckpoint(true) else withSplit0
+    val withSplit = graft.Pin(withSplit0)
     val packed = splits.map(_._1).map { nm =>
         Packing.materializeSequences(
             withSplit.filter(col("split") === nm),

@@ -293,35 +293,29 @@ object Dedup {
                           textCol: String = "text", keyCol: String = "doc_id",
                           n: Int = 3, numHashes: Int = 64, bands: Int = 16,
                           minSim: Double = 0.8, seed: Long = 42L,
-                          maxBucketSize: Option[Int] = None,
-                          materialize: Boolean = true): DataFrame = {
-    val sigs = minhashSignatures(shard, textCol, keyCol, n, numHashes, seed).cache()
-    if (materialize) sigs.count() // eager: 2 consumers — see jaccardPairs
-    val sb = capLshBuckets(lshBuckets(sigs, keyCol, numHashes, bands),
-      maxBucketSize)
-    val hb = capLshBuckets(lshBuckets(historySigs, keyCol, numHashes, bands),
-      maxBucketSize)
-    val cands = sb.as("x").join(hb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-      .select(col(s"x.$keyCol").as("doc_id_new"), col(s"y.$keyCol").as("doc_id_hist"))
-      .distinct()
-    val out = cands
-      .join(sigs.select(col(keyCol).as("doc_id_new"), col("sig").as("sig_a")),
-        "doc_id_new")
-      .join(historySigs.select(col(keyCol).as("doc_id_hist"), col("sig").as("sig_b")),
-        "doc_id_hist")
-      .withColumn("est_jaccard",
-        sigAgreement(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= minSim)
-      .select("doc_id_new", "doc_id_hist", "est_jaccard")
-      .orderBy("doc_id_new", "doc_id_hist")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      sigs.unpersist()
-      pinned
+                          maxBucketSize: Option[Int] = None): DataFrame =
+    // 2 consumers of the shard signatures — see jaccardPairs
+    graft.Pin.cached(
+        minhashSignatures(shard, textCol, keyCol, n, numHashes, seed)) { sigs =>
+      val sb = capLshBuckets(lshBuckets(sigs, keyCol, numHashes, bands),
+        maxBucketSize)
+      val hb = capLshBuckets(lshBuckets(historySigs, keyCol, numHashes, bands),
+        maxBucketSize)
+      val cands = sb.as("x").join(hb.as("y"),
+          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
+        .select(col(s"x.$keyCol").as("doc_id_new"), col(s"y.$keyCol").as("doc_id_hist"))
+        .distinct()
+      graft.Pin(cands
+        .join(sigs.select(col(keyCol).as("doc_id_new"), col("sig").as("sig_a")),
+          "doc_id_new")
+        .join(historySigs.select(col(keyCol).as("doc_id_hist"), col("sig").as("sig_b")),
+          "doc_id_hist")
+        .withColumn("est_jaccard",
+          sigAgreement(col("sig_a"), col("sig_b"), numHashes))
+        .filter(col("est_jaccard") >= minSim)
+        .select("doc_id_new", "doc_id_hist", "est_jaccard")
+        .orderBy("doc_id_new", "doc_id_hist"))
     }
-  }
 
   // -------------------------------------------------------------- shingling
 
@@ -357,45 +351,38 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, textCol: String = "text",
                    keyCol: String = "doc_id", n: Int = 3,
                    minSim: Double = 0.8,
-                   maxDocFreq: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
+                   maxDocFreq: Option[Int] = None): DataFrame = {
     // Join on the 64-bit shingle hash, not the string — same shuffle
     // volume in rows but far cheaper keys/compares; collision odds over a
     // shingle vocabulary are ~|V|²/2⁶⁴ (negligible vs the 4-dp rounding).
     val grams0 = wordShingles(docs, textCol, keyCol, n)
       .select(col(keyCol), xxhash64(col("gram")).as("gram"))
-    val grams = (maxDocFreq match {
+    val capped = maxDocFreq match {
       case Some(cap) => dropHotKeys(grams0, Seq("gram"), cap)
       case None => grams0
-    }).cache()
-    // Materialize the cache eagerly: the three consumers below (counts +
-    // both join sides) otherwise race to compute it concurrently before
-    // any block lands, tripling the shingling work. (`materialize=false`
-    // skips all eager work and cache cleanup — plan-inspection mode, used
-    // by the plan audits since a checkpointed result hides its plan.)
-    if (materialize) grams.count()
-    val counts = grams.groupBy(col(keyCol)).agg(count(lit(1)).as("n_grams"))
+    }
+    // Cache and count the shingles first: the three consumers below
+    // (counts + both join sides) otherwise race to compute them
+    // concurrently before any block lands, tripling the shingling work.
+    // The (small) pair set is pinned and the shingle cache released.
+    graft.Pin.cached(capped) { grams =>
+      val counts = grams.groupBy(col(keyCol)).agg(count(lit(1)).as("n_grams"))
 
-    val a = grams.select(col(keyCol).as("doc_id_a"), col("gram"))
-    val b = grams.select(col(keyCol).as("doc_id_b"), col("gram"))
-    val inter = a.join(b, Seq("gram"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("inter"))
+      val a = grams.select(col(keyCol).as("doc_id_a"), col("gram"))
+      val b = grams.select(col(keyCol).as("doc_id_b"), col("gram"))
+      val inter = a.join(b, Seq("gram"))
+        .filter(col("doc_id_a") < col("doc_id_b"))
+        .groupBy("doc_id_a", "doc_id_b")
+        .agg(count(lit(1)).as("inter"))
 
-    val out = inter
-      .join(counts.select(col(keyCol).as("doc_id_a"), col("n_grams").as("na")), "doc_id_a")
-      .join(counts.select(col(keyCol).as("doc_id_b"), col("n_grams").as("nb")), "doc_id_b")
-      .withColumn("jaccard",
-        round(col("inter") / (col("na") + col("nb") - col("inter")), 4))
-      .filter(col("jaccard") >= minSim)
-      .select("doc_id_a", "doc_id_b", "jaccard")
-      .orderBy("doc_id_a", "doc_id_b")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true) // materialize the (small) pair set…
-      grams.unpersist()                      // …and release the shingle cache
-      pinned
+      graft.Pin(inter
+        .join(counts.select(col(keyCol).as("doc_id_a"), col("n_grams").as("na")), "doc_id_a")
+        .join(counts.select(col(keyCol).as("doc_id_b"), col("n_grams").as("nb")), "doc_id_b")
+        .withColumn("jaccard",
+          round(col("inter") / (col("na") + col("nb") - col("inter")), 4))
+        .filter(col("jaccard") >= minSim)
+        .select("doc_id_a", "doc_id_b", "jaccard")
+        .orderBy("doc_id_a", "doc_id_b"))
     }
   }
 
@@ -643,32 +630,26 @@ object Dedup {
                    keyCol: String = "doc_id", n: Int = 3,
                    numHashes: Int = 64, bands: Int = 16,
                    minSim: Double = 0.8, seed: Long = 42L,
-                   maxBucketSize: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
-    val sigs = minhashSignatures(docs, textCol, keyCol, n, numHashes, seed).cache()
-    if (materialize) sigs.count() // eager: 3 consumers — see jaccardPairs
-    val buckets =
-      capLshBuckets(lshBuckets(sigs, keyCol, numHashes, bands), maxBucketSize)
-    val cands = buckets.as("x").join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col(s"x.$keyCol") < col(s"y.$keyCol"))
-      .select(col(s"x.$keyCol").as("doc_id_a"), col(s"y.$keyCol").as("doc_id_b"))
-      .distinct()
-    val out = cands
-      .join(sigs.select(col(keyCol).as("doc_id_a"), col("sig").as("sig_a")), "doc_id_a")
-      .join(sigs.select(col(keyCol).as("doc_id_b"), col("sig").as("sig_b")), "doc_id_b")
-      .withColumn("est_jaccard",
-        sigAgreement(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= minSim)
-      .select("doc_id_a", "doc_id_b", "est_jaccard")
-      .orderBy("doc_id_a", "doc_id_b")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      sigs.unpersist()
-      pinned
+                   maxBucketSize: Option[Int] = None): DataFrame =
+    // 3 consumers of the signatures — see jaccardPairs
+    graft.Pin.cached(
+        minhashSignatures(docs, textCol, keyCol, n, numHashes, seed)) { sigs =>
+      val buckets =
+        capLshBuckets(lshBuckets(sigs, keyCol, numHashes, bands), maxBucketSize)
+      val cands = buckets.as("x").join(buckets.as("y"),
+          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+            col(s"x.$keyCol") < col(s"y.$keyCol"))
+        .select(col(s"x.$keyCol").as("doc_id_a"), col(s"y.$keyCol").as("doc_id_b"))
+        .distinct()
+      graft.Pin(cands
+        .join(sigs.select(col(keyCol).as("doc_id_a"), col("sig").as("sig_a")), "doc_id_a")
+        .join(sigs.select(col(keyCol).as("doc_id_b"), col("sig").as("sig_b")), "doc_id_b")
+        .withColumn("est_jaccard",
+          sigAgreement(col("sig_a"), col("sig_b"), numHashes))
+        .filter(col("est_jaccard") >= minSim)
+        .select("doc_id_a", "doc_id_b", "est_jaccard")
+        .orderBy("doc_id_a", "doc_id_b"))
     }
-  }
 
   // ---------------------------------------------------------- SimHash (X1d)
 
@@ -732,10 +713,9 @@ object Dedup {
   def simhashPairs(docs: DataFrame, textCol: String = "text",
                    keyCol: String = "doc_id", n: Int = 3,
                    maxHamming: Int = 3,
-                   maxBucketSize: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame =
+                   maxBucketSize: Option[Int] = None): DataFrame =
     hammingPairs(simhashSignatures(docs, textCol, keyCol, n), keyCol,
-      "simhash", maxHamming, maxBucketSize, materialize)
+      "simhash", maxHamming, maxBucketSize)
 
   /** The signature column must already BE an integral 64-bit-compatible
     * type: a silent `cast("long")` would turn a mis-typed column (e.g.
@@ -795,38 +775,32 @@ object Dedup {
     * linear in family size (VERDICT r14 #1). */
   def hammingPairs(sigFrame: DataFrame, keyCol: String, sigCol: String,
                    maxHamming: Int,
-                   maxBucketSize: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
+                   maxBucketSize: Option[Int] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming in [0, 63]")
     requireSigLong(sigFrame, sigCol)
-    val sigs = sigFrame
-      .select(col(keyCol), col(sigCol).cast("long").as("simhash")).cache()
-    if (materialize) sigs.count() // eager: family join + both expansions
-    // Hamming-0 families: one equi-join on the 64-bit signature. Shuffles
-    // two-long rows, emits exactly the true duplicate pairs.
-    val famPairs = sigs.as("x").join(sigs.as("y"),
-        col("x.simhash") === col("y.simhash") &&
-          col(s"x.$keyCol") < col(s"y.$keyCol"))
-      .select(col(s"x.$keyCol").as("doc_id_a"), col(s"y.$keyCol").as("doc_id_b"),
-        lit(0).as("hamming"))
-    val sigPairs = qualifyingSigPairs(sigs, maxHamming, maxBucketSize)
-    // Expand qualifying signature pairs back to document pairs: the
-    // hamming-filtered sigPairs frame is tiny, so AQE broadcasts it into
-    // both expansion joins; least/greatest restores the keyCol ordering
-    // the per-document join expressed as x.key < y.key.
-    val crossPairs = sigPairs
-      .join(sigs.select(col(keyCol).as("ka"), col("simhash").as("sig_a")), "sig_a")
-      .join(sigs.select(col(keyCol).as("kb"), col("simhash").as("sig_b")), "sig_b")
-      .select(least(col("ka"), col("kb")).as("doc_id_a"),
-        greatest(col("ka"), col("kb")).as("doc_id_b"), col("hamming"))
-    val out = famPairs.unionByName(crossPairs)
-      .select("doc_id_a", "doc_id_b", "hamming")
-      .orderBy("doc_id_a", "doc_id_b")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      sigs.unpersist()
-      pinned
+    // cached: family join + both expansions read the signatures
+    graft.Pin.cached(sigFrame
+        .select(col(keyCol), col(sigCol).cast("long").as("simhash"))) { sigs =>
+      // Hamming-0 families: one equi-join on the 64-bit signature. Shuffles
+      // two-long rows, emits exactly the true duplicate pairs.
+      val famPairs = sigs.as("x").join(sigs.as("y"),
+          col("x.simhash") === col("y.simhash") &&
+            col(s"x.$keyCol") < col(s"y.$keyCol"))
+        .select(col(s"x.$keyCol").as("doc_id_a"), col(s"y.$keyCol").as("doc_id_b"),
+          lit(0).as("hamming"))
+      val sigPairs = qualifyingSigPairs(sigs, maxHamming, maxBucketSize)
+      // Expand qualifying signature pairs back to document pairs: the
+      // hamming-filtered sigPairs frame is tiny, so AQE broadcasts it into
+      // both expansion joins; least/greatest restores the keyCol ordering
+      // the per-document join expressed as x.key < y.key.
+      val crossPairs = sigPairs
+        .join(sigs.select(col(keyCol).as("ka"), col("simhash").as("sig_a")), "sig_a")
+        .join(sigs.select(col(keyCol).as("kb"), col("simhash").as("sig_b")), "sig_b")
+        .select(least(col("ka"), col("kb")).as("doc_id_a"),
+          greatest(col("ka"), col("kb")).as("doc_id_b"), col("hamming"))
+      graft.Pin(famPairs.unionByName(crossPairs)
+        .select("doc_id_a", "doc_id_b", "hamming")
+        .orderBy("doc_id_a", "doc_id_b"))
     }
   }
 
@@ -862,36 +836,30 @@ object Dedup {
     * quadratic output. */
   def hammingEdges(sigFrame: DataFrame, keyCol: String, sigCol: String,
                    maxHamming: Int,
-                   maxBucketSize: Option[Int] = None,
-                   materialize: Boolean = true): DataFrame = {
+                   maxBucketSize: Option[Int] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming in [0, 63]")
     requireSigLong(sigFrame, sigCol)
-    val sigs = sigFrame
-      .select(col(keyCol), col(sigCol).cast("long").as("simhash")).cache()
-    if (materialize) sigs.count() // eager: star join + both expansions
-    val reprs = sigs.groupBy("simhash").agg(min(col(keyCol)).as("__repr"))
-    val star = sigs.join(reprs, "simhash")
-      .filter(col(keyCol) =!= col("__repr"))
-      .select(col("__repr").as("doc_id_a"), col(keyCol).as("doc_id_b"),
-        lit(0).as("hamming"))
-    val sigPairs = qualifyingSigPairs(sigs, maxHamming, maxBucketSize)
-    // reprs is |distinct sigs| rows and sigPairs is tiny — AQE
-    // broadcasts both expansion joins.
-    val cross = sigPairs
-      .join(reprs.select(col("simhash").as("sig_a"), col("__repr").as("ra")),
-        "sig_a")
-      .join(reprs.select(col("simhash").as("sig_b"), col("__repr").as("rb")),
-        "sig_b")
-      .select(least(col("ra"), col("rb")).as("doc_id_a"),
-        greatest(col("ra"), col("rb")).as("doc_id_b"), col("hamming"))
-    val out = star.unionByName(cross)
-      .select("doc_id_a", "doc_id_b", "hamming")
-      .orderBy("doc_id_a", "doc_id_b")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      sigs.unpersist()
-      pinned
+    // cached: star join + both expansions read the signatures
+    graft.Pin.cached(sigFrame
+        .select(col(keyCol), col(sigCol).cast("long").as("simhash"))) { sigs =>
+      val reprs = sigs.groupBy("simhash").agg(min(col(keyCol)).as("__repr"))
+      val star = sigs.join(reprs, "simhash")
+        .filter(col(keyCol) =!= col("__repr"))
+        .select(col("__repr").as("doc_id_a"), col(keyCol).as("doc_id_b"),
+          lit(0).as("hamming"))
+      val sigPairs = qualifyingSigPairs(sigs, maxHamming, maxBucketSize)
+      // reprs is |distinct sigs| rows and sigPairs is tiny — AQE
+      // broadcasts both expansion joins.
+      val cross = sigPairs
+        .join(reprs.select(col("simhash").as("sig_a"), col("__repr").as("ra")),
+          "sig_a")
+        .join(reprs.select(col("simhash").as("sig_b"), col("__repr").as("rb")),
+          "sig_b")
+        .select(least(col("ra"), col("rb")).as("doc_id_a"),
+          greatest(col("ra"), col("rb")).as("doc_id_b"), col("hamming"))
+      graft.Pin(star.unionByName(cross)
+        .select("doc_id_a", "doc_id_b", "hamming")
+        .orderBy("doc_id_a", "doc_id_b"))
     }
   }
 
@@ -955,10 +923,9 @@ object Dedup {
   def simhashPairsAgainst(shard: DataFrame, historySigs: DataFrame,
                           textCol: String = "text", keyCol: String = "doc_id",
                           n: Int = 3, maxHamming: Int = 3,
-                          maxBucketSize: Option[Int] = None,
-                          materialize: Boolean = true): DataFrame =
+                          maxBucketSize: Option[Int] = None): DataFrame =
     hammingPairsAgainst(simhashSignatures(shard, textCol, keyCol, n),
-      historySigs, keyCol, "simhash", maxHamming, maxBucketSize, materialize)
+      historySigs, keyCol, "simhash", maxHamming, maxBucketSize)
 
   /** Cross-side Hamming pairs between a NEW shard's signature frame and
     * a frozen history signature index — the signature-agnostic core of
@@ -974,30 +941,23 @@ object Dedup {
     * ordered. */
   def hammingPairsAgainst(shardSigs: DataFrame, historySigs: DataFrame,
                           keyCol: String, sigCol: String, maxHamming: Int,
-                          maxBucketSize: Option[Int] = None,
-                          materialize: Boolean = true): DataFrame = {
+                          maxBucketSize: Option[Int] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming in [0, 63]")
     requireSigLong(shardSigs, sigCol)
     requireSigLong(historySigs, sigCol)
-    val sigs = shardSigs
-      .select(col(keyCol), col(sigCol).cast("long").as("simhash")).cache()
-    if (materialize) sigs.count()
     val hist = historySigs
       .select(col(keyCol), col(sigCol).cast("long").as("simhash"))
-    val sb = bandSimhash(sigs, keyCol, maxHamming, maxBucketSize)
-    val hb = bandSimhash(hist, keyCol, maxHamming, maxBucketSize)
-    val out = sb.as("x").join(hb.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
-      .select(col(s"x.$keyCol").as("doc_id_new"), col(s"y.$keyCol").as("doc_id_hist"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("doc_id_new", "doc_id_hist")
-    if (!materialize) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      sigs.unpersist()
-      pinned
+    graft.Pin.cached(shardSigs
+        .select(col(keyCol), col(sigCol).cast("long").as("simhash"))) { sigs =>
+      val sb = bandSimhash(sigs, keyCol, maxHamming, maxBucketSize)
+      val hb = bandSimhash(hist, keyCol, maxHamming, maxBucketSize)
+      graft.Pin(sb.as("x").join(hb.as("y"),
+          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket"))
+        .select(col(s"x.$keyCol").as("doc_id_new"), col(s"y.$keyCol").as("doc_id_hist"),
+          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxHamming)
+        .orderBy("doc_id_new", "doc_id_hist"))
     }
   }
 }

@@ -103,8 +103,7 @@ object Dsir {
       * parquet read back once; derived frames would re-run both corpus
       * censuses for every consumer. */
     def materialize(): Model =
-      Model(bucketCounts.localCheckpoint(true), totals.localCheckpoint(true),
-        buckets)
+      Model(graft.Pin(bucketCounts), graft.Pin(totals), buckets)
   }
 
   /** Persist a fitted model to parquet — the [[NgramLm.save]] /
@@ -183,20 +182,18 @@ object Dsir {
     * from). The raw census is the probe's bucket marginal
     * (Σ per-doc multiplicities = the gram census — the oracle derives
     * it the same way), so raw text is tokenized and md5-bucketed ONCE;
-    * with `materialize` the probe is pinned (compact: ≤ min(grams, B)
-    * rows per doc) and the model checkpoint follows the
-    * [[Model.materialize]] contract. Returns (model, scored raw). */
+    * the probe is pinned ([[graft.Pin]]; compact: ≤ min(grams, B) rows
+    * per doc) and the model follows the [[Model.materialize]] contract.
+    * Returns (model, scored raw). */
   def fitScored(target: DataFrame, raw: DataFrame,
                 textCol: String = "text", keyCol: String = "doc_id",
-                buckets: Int = DefaultBuckets, lambda: Double = DefaultLambda,
-                materialize: Boolean = true): (Model, DataFrame) = {
+                buckets: Int = DefaultBuckets,
+                lambda: Double = DefaultLambda): (Model, DataFrame) = {
     require(buckets >= 2, s"buckets ($buckets) must be >= 2")
-    val probe0 = probeOf(raw, textCol, keyCol, buckets)
-    val probe = if (materialize) probe0.localCheckpoint(true) else probe0
+    val probe = graft.Pin(probeOf(raw, textCol, keyCol, buckets))
     val rc = probe.groupBy(col("bucket")).agg(sum(col("m")).as("cr"))
-    val m0 = modelFrom(censusOf(target, textCol, keyCol, buckets, "ct"), rc,
-      buckets)
-    val model = if (materialize) m0.materialize() else m0
+    val model = modelFrom(censusOf(target, textCol, keyCol, buckets, "ct"),
+      rc, buckets).materialize()
     (model, weightedFromProbe(raw, probe, model, keyCol, lambda))
   }
 

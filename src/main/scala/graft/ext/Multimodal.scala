@@ -681,26 +681,22 @@ object Multimodal {
     * scale-safe, never all-pairs. A production corpus with ultra-hot
     * segment hashes (shared intros/jingles) caps them upstream the
     * way the MinHash lane caps hot shingles. */
-  def ahashChunkPairs(chunks0: DataFrame, minFracPpm: Long,
-      materialize: Boolean = true): DataFrame = {
+  def ahashChunkPairs(chunks0: DataFrame, minFracPpm: Long): DataFrame = {
     require(minFracPpm > 0L && minFracPpm <= 1000000L,
       s"minFracPpm ($minFracPpm) must be in (0, 1e6]")
     // The segment frame feeds THREE consumers (the per-clip census and
     // BOTH sides of the containment self-join) — uncached, each scan
     // re-runs the WAV decode + per-segment hashing. Cache + eager
     // count → decode once; pin the tiny verdict, release the cache
-    // (the hammingPairs discipline). try/finally: the cache must be
-    // released even when the count/pin fails (ADVICE r17 — an
-    // exception here used to leak the cached frame for the JVM's
-    // lifetime).
-    def build(chunks: DataFrame): DataFrame = {
+    // (the hammingPairs discipline, [[graft.Pin.cached]]).
+    graft.Pin.cached(chunks0) { chunks =>
       val segs = chunks.groupBy(col("media_id"))
         .agg(count(lit(1)).as("segs"))
       val a = chunks.select(col("media_id").as("media_id_a"),
         col("seg").as("seg_a"), col("ahash"))
       val b = chunks.select(col("media_id").as("media_id_b"),
         col("seg").as("seg_b"), col("ahash"))
-      a.join(b, Seq("ahash"))
+      graft.Pin(a.join(b, Seq("ahash"))
         .filter(col("media_id_a") < col("media_id_b"))
         .groupBy(col("media_id_a"), col("media_id_b"))
         .agg(countDistinct(col("seg_a")).as("matched_a"),
@@ -712,13 +708,7 @@ object Multimodal {
         .filter(least(col("matched_a"), col("matched_b")) * lit(1000000L)
           >= lit(minFracPpm) * least(col("segs_a"), col("segs_b")))
         .select(col("media_id_a"), col("media_id_b"),
-          col("matched_a"), col("matched_b"), col("segs_a"), col("segs_b"))
-    }
-    if (!materialize) build(chunks0)
-    else {
-      val chunks = chunks0.cache()
-      try { chunks.count(); build(chunks).localCheckpoint(true) }
-      finally chunks.unpersist()
+          col("matched_a"), col("matched_b"), col("segs_a"), col("segs_b")))
     }
   }
 
@@ -1179,33 +1169,28 @@ object Multimodal {
     // frame is cached and both consumers (the representative census and
     // the member join) read the cache — two uncached branches would each
     // re-scan and re-hash every payload (r15 review finding #5). The
-    // payloads themselves are never cached; the output pin below lets
-    // the cache release before returning. SHA-256, not MD5 (ADVICE
-    // r15): MD5 collisions are practically constructible, so two
+    // payloads themselves are never cached; the bounded 16 B/row output
+    // pin lets the cache release before returning. SHA-256, not MD5
+    // (ADVICE r15): MD5 collisions are practically constructible, so two
     // byte-distinct adversarial payloads could silently inherit one
     // representative's hash and break the ≡-dhashPngs contract.
-    val slim = media
-      .select(col("media_id"), sha2(col("payload"), 256).as("__fp"))
-      .cache()
-    slim.count()
-    val reps = slim.groupBy("__fp").agg(min(col("media_id")).as("__rep"))
-    // Move each DISTINCT payload once; decode through the ONE shared
-    // codec body ([[decodeDhash]] — a fix can't land on one path only),
-    // carrying the fingerprint so no join lineage re-evaluates.
-    val hashed = media.join(reps, media("media_id") === reps("__rep"))
-      .select(col("__fp"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val h = decodeDhash(r.getAs[Array[Byte]](1))
-          if (h == null) None else Some((r.getString(0), h.longValue))
+    graft.Pin.cached(media
+        .select(col("media_id"), sha2(col("payload"), 256).as("__fp"))) { slim =>
+      val reps = slim.groupBy("__fp").agg(min(col("media_id")).as("__rep"))
+      // Move each DISTINCT payload once; decode through the ONE shared
+      // codec body ([[decodeDhash]] — a fix can't land on one path only),
+      // carrying the fingerprint so no join lineage re-evaluates.
+      val hashed = media.join(reps, media("media_id") === reps("__rep"))
+        .select(col("__fp"), col("payload"))
+        .mapPartitions { rows =>
+          rows.flatMap { r =>
+            val h = decodeDhash(r.getAs[Array[Byte]](1))
+            if (h == null) None else Some((r.getString(0), h.longValue))
+          }
         }
-      }
-      .toDF("__fp", "dhash")
-    val out = slim.join(hashed, "__fp")
-      .select("media_id", "dhash")
-      .localCheckpoint(true) // 16 B/row — the bounded pin
-    slim.unpersist()
-    out
+        .toDF("__fp", "dhash")
+      graft.Pin(slim.join(hashed, "__fp").select("media_id", "dhash"))
+    }
   }
 
   /** X5e decode half — (media_id, dhash) signatures read back OUT OF
@@ -1685,7 +1670,7 @@ object Multimodal {
     * `media_id_a < media_id_b`, and equal-clip rows (within-clip
     * near-identical frames, common in real video) drop here. */
   def frameMajorityPairs(frames0: DataFrame, maxHamming: Int,
-      minFracPpm: Long, materialize: Boolean = true): DataFrame = {
+      minFracPpm: Long): DataFrame = {
     require(minFracPpm > 0L && minFracPpm <= 1000000L,
       s"minFracPpm ($minFracPpm) must be in (0, 1e6]")
     // The signature frame feeds TWO consumers (the per-clip frame
@@ -1693,17 +1678,14 @@ object Multimodal {
     // re-run the upstream decode+pHash of every frame (the costly
     // subtree; signatures themselves are 20 B/row). Cache + eager
     // count → decode once; the verdict output pins and the cache
-    // releases before returning (the hammingPairs discipline), with
-    // try/finally so a failed count/pin can't leak the cache
-    // (ADVICE r17).
-    def build(frames: DataFrame): DataFrame = {
+    // releases before returning (the hammingPairs discipline).
+    graft.Pin.cached(frames0) { frames =>
       val cnt = frames.groupBy(col("media_id"))
         .agg(count(lit(1)).as("frames"))
       val rids = frames.select(
         (col("media_id") * lit(FrameRidBase) + col("frame_idx")).as("rid"),
         col("phash"))
-      Dedup.hammingPairs(rids, "rid", "phash", maxHamming,
-          materialize = materialize)
+      graft.Pin(Dedup.hammingPairs(rids, "rid", "phash", maxHamming)
         .selectExpr(
           "doc_id_a div 1048576 AS media_id_a",
           "doc_id_a % 1048576 AS frame_a",
@@ -1721,13 +1703,7 @@ object Multimodal {
           >= lit(minFracPpm) * least(col("frames_a"), col("frames_b")))
         .select(col("media_id_a"), col("media_id_b"),
           col("matched_a"), col("matched_b"),
-          col("frames_a"), col("frames_b"))
-    }
-    if (!materialize) build(frames0)
-    else {
-      val frames = frames0.cache()
-      try { frames.count(); build(frames).localCheckpoint(true) }
-      finally frames.unpersist()
+          col("frames_a"), col("frames_b")))
     }
   }
 
@@ -1745,20 +1721,19 @@ object Multimodal {
     * fails alignment). Same banded Hamming core, one extra tiny
     * per-pair aggregate — never all-pairs. */
   def frameAlignmentPairs(frames0: DataFrame, maxHamming: Int,
-      minFracPpm: Long, materialize: Boolean = true): DataFrame = {
+      minFracPpm: Long): DataFrame = {
     require(minFracPpm > 0L && minFracPpm <= 1000000L,
       s"minFracPpm ($minFracPpm) must be in (0, 1e6]")
     // Same two-consumer shape as [[frameMajorityPairs]]: cache the slim
     // signatures so the frame decode runs once, pin the tiny verdict,
-    // release the cache — in try/finally (ADVICE r17).
-    def build(frames: DataFrame): DataFrame = {
+    // release the cache.
+    graft.Pin.cached(frames0) { frames =>
       val cnt = frames.groupBy(col("media_id"))
         .agg(count(lit(1)).as("frames"))
       val rids = frames.select(
         (col("media_id") * lit(FrameRidBase) + col("frame_idx")).as("rid"),
         col("phash"))
-      Dedup.hammingPairs(rids, "rid", "phash", maxHamming,
-          materialize = materialize)
+      graft.Pin(Dedup.hammingPairs(rids, "rid", "phash", maxHamming)
         .selectExpr(
           "doc_id_a div 1048576 AS media_id_a",
           "doc_id_a % 1048576 AS frame_a",
@@ -1777,13 +1752,7 @@ object Multimodal {
         .filter(col("aligned") * lit(1000000L)
           >= lit(minFracPpm) * least(col("frames_a"), col("frames_b")))
         .select(col("media_id_a"), col("media_id_b"), col("aligned"),
-          col("frames_a"), col("frames_b"))
-    }
-    if (!materialize) build(frames0)
-    else {
-      val frames = frames0.cache()
-      try { frames.count(); build(frames).localCheckpoint(true) }
-      finally frames.unpersist()
+          col("frames_a"), col("frames_b")))
     }
   }
 
@@ -1795,23 +1764,21 @@ object Multimodal {
     * containment verdict as [[frameMajorityPairs]], keyed
     * (new, hist). */
   def frameMajorityAgainst(newFrames0: DataFrame, histFrames: DataFrame,
-      maxHamming: Int, minFracPpm: Long,
-      materialize: Boolean = true): DataFrame = {
+      maxHamming: Int, minFracPpm: Long): DataFrame = {
     require(minFracPpm > 0L && minFracPpm <= 1000000L,
       s"minFracPpm ($minFracPpm) must be in (0, 1e6]")
     // Probe-side signatures feed the census AND the banded core; cache
     // so tonight's clips decode once. History is a parquet signature
     // index — re-scanning it is a footer-cheap columnar read, not a
-    // codec pass, so it stays uncached. try/finally releases the cache
-    // on any failure (ADVICE r17).
+    // codec pass, so it stays uncached.
     def pack(f: DataFrame) = f.select(
       (col("media_id") * lit(FrameRidBase) + col("frame_idx")).as("rid"),
       col("phash"))
     def cnt(f: DataFrame, out: String) = f.groupBy(col("media_id"))
       .agg(count(lit(1)).as(out))
-    def build(newFrames: DataFrame): DataFrame =
-      Dedup.hammingPairsAgainst(pack(newFrames), pack(histFrames),
-          "rid", "phash", maxHamming, materialize = materialize)
+    graft.Pin.cached(newFrames0) { newFrames =>
+      graft.Pin(Dedup.hammingPairsAgainst(pack(newFrames), pack(histFrames),
+          "rid", "phash", maxHamming)
         .selectExpr(
           "doc_id_new div 1048576 AS media_id_new",
           "doc_id_new % 1048576 AS frame_new",
@@ -1830,12 +1797,7 @@ object Multimodal {
           >= lit(minFracPpm) * least(col("frames_new"), col("frames_hist")))
         .select(col("media_id_new"), col("media_id_hist"),
           col("matched_new"), col("matched_hist"),
-          col("frames_new"), col("frames_hist"))
-    if (!materialize) build(newFrames0)
-    else {
-      val newFrames = newFrames0.cache()
-      try { newFrames.count(); build(newFrames).localCheckpoint(true) }
-      finally newFrames.unpersist()
+          col("frames_new"), col("frames_hist")))
     }
   }
 

@@ -104,12 +104,8 @@ object NgramLm {
       // corpus; pin them from concurrent driver threads so the 3–6
       // checkpoint jobs overlap instead of serializing (guide §2.6 —
       // at order 5 the sequential pins were most of the model's wall).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fs = (Seq(bigrams, unigrams, totals) ++ trigrams.toSeq ++ higher)
-        .map(f => Future(f.localCheckpoint(true)))
-      val pinned = fs.map(Await.result(_, Duration.Inf))
+      val pinned = graft.Pin.all(
+        Seq(bigrams, unigrams, totals) ++ trigrams.toSeq ++ higher)(graft.Pin(_))
       Model(pinned(0), pinned(1), pinned(2),
         trigrams.map(_ => pinned(3)),
         higher.indices.map(i => pinned(3 + trigrams.size + i)))

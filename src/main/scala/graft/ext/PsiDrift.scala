@@ -37,23 +37,21 @@ object PsiDrift {
     * missing-value bucket should pre-coalesce the value column to a
     * sentinel.
     *
-    * `materialize` pins the census once (it is consumed by FIVE derived
-    * frames — baseline slice, grid×2, smoothing join, totals — which
-    * would otherwise each re-scan the events table; the census is
+    * The census is pinned once ([[graft.Pin]]): it is consumed by FIVE
+    * derived frames — baseline slice, grid×2, smoothing join, totals —
+    * which would otherwise each re-scan the events table; the census is
     * |weeks|·|types|·|bins| rows at ANY corpus size, so pinning is
-    * free). False only for plan inspection. */
+    * free. */
   def psiByWeek(events: DataFrame, valueCol: String = "value",
                 typeCol: String = "event_type", tsCol: String = "ts",
-                binWidth: Double = 25.0,
-                materialize: Boolean = true): DataFrame = {
+                binWidth: Double = 25.0): DataFrame = {
     require(binWidth > 0, s"binWidth ($binWidth) must be positive")
     val week = floor(unix_timestamp(col(tsCol)) / lit(604800L)).cast("long")
     val bin = floor(col(valueCol) / lit(binWidth)).cast("long")
-    val counts0 = events
+    val counts = graft.Pin(events
       .select(week.as("week"), col(typeCol).as("event_type"), bin.as("bin"))
       .groupBy("week", "event_type", "bin")
-      .agg(count(lit(1)).as("n"))
-    val counts = if (materialize) counts0.localCheckpoint(true) else counts0
+      .agg(count(lit(1)).as("n")))
     // All frames below are derived from the tiny census — broadcast.
     val baseWeek = counts.agg(min(col("week")).as("base_week"))
     val base = counts.join(broadcast(baseWeek), col("week") === col("base_week"))

@@ -53,21 +53,19 @@ object SemDedup {
   def pairs(emb: DataFrame, k: Int, iters: Int = 2, minCosine: Double = 0.95,
             idCol: String = "vec_id", vecCol: String = "embedding",
             maxClusterSize: Option[Int] = None,
-            bandWidth: Option[Int] = None,
-            materialize: Boolean = true): DataFrame = {
+            bandWidth: Option[Int] = None): DataFrame = {
     // Ordering is a presentation contract of THIS surface only — the
     // decisions path consumes the unsorted set (the component resolver
     // re-shuffles by vertex anyway, so a pre-sort is pure waste there).
-    // With materialize, the sort reads the already-pinned pair set.
+    // The sort reads the already-pinned pair set.
     rawPairs(emb, k, iters, minCosine, idCol, vecCol,
-      maxClusterSize, bandWidth, materialize).orderBy("id_a", "id_b")
+      maxClusterSize, bandWidth).orderBy("id_a", "id_b")
   }
 
   private def rawPairs(emb: DataFrame, k: Int, iters: Int, minCosine: Double,
                        idCol: String, vecCol: String,
                        maxClusterSize: Option[Int],
-                       bandWidth: Option[Int],
-                       materialize: Boolean): DataFrame = {
+                       bandWidth: Option[Int]): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     val model = IvfIndex.build(emb, k, iters, idCol, vecCol)
     val asg0 = model.assignments // (idCol, cluster), cached by build
@@ -125,14 +123,9 @@ object SemDedup {
       // two probe-able clusters can't either (assignment is single-best),
       // so no distinct() is needed — each pair meets at most once (the
       // banded path's shift rule preserves this).
-    if (!materialize) out
-    else {
-      // Pin the (small) pair set, then drop the cached inverted lists —
-      // same lifecycle as the banded dedup operators (Dedup.jaccardPairs).
-      val pinned = out.localCheckpoint(true)
-      model.release()
-      pinned
-    }
+    // Pin the (small) pair set, then drop the cached inverted lists —
+    // same lifecycle as the banded dedup operators (Dedup.jaccardPairs).
+    graft.Pin.releasing(out)(model.release())
   }
 
   /** Full SemDeDup: pairs resolved to per-document decisions — one row
@@ -144,7 +137,7 @@ object SemDedup {
                 bandWidth: Option[Int] = None): DataFrame =
     DedupResolve.connectedComponents(
         rawPairs(emb, k, iters, minCosine, idCol, vecCol, maxClusterSize,
-          bandWidth, materialize = true),
+          bandWidth),
         aCol = "id_a", bCol = "id_b")
       .select(col("id"), col("component").as("cluster_id"),
         (col("id") === col("component")).as("keep"))

@@ -18,19 +18,24 @@ trait Notifier {
 
 object Notifiers {
 
+  /** A JSON string literal: quotes `s`, escaping backslash, quote, and
+    * ALL control chars (< 0x20) — a raw tab or CR would make a strict
+    * JSON reader reject the whole document. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** JSON encoding of the reference's envelope — field names match
     * pager-workflow.py:252-259 (`pipeline`, `task`, `error`,
     * `failed_validations`, `timestamp`, `dag_run_id`). */
   def toJson(r: FailureReport): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Notifiers.{jsonString => q}
     val failed = r.failedValidations.map(q).mkString("[", ",", "]")
     s"""{"pipeline":${q(r.pipeline)},"task":${q(r.task)},"error":${q(r.error)},""" +
       s""""failed_validations":$failed,"timestamp":${q(r.timestamp)},""" +

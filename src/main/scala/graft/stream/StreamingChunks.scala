@@ -76,23 +76,18 @@ object StreamingChunks {
     * Output: (media_id, n_segments) — n_segments 0 for clips that
     * produced no fingerprintable segment (always survivors). Use
     * directly on a batch frame, or per micro-batch via
-    * `foreachBatch`. */
+    * `foreachBatch`; never on a streaming frame — the survivor set is
+    * pinned ([[graft.Pin]]), and a streaming frame cannot cache. */
   def chunkDropBatch(media0: DataFrame, histChunks: DataFrame,
-      segmentSamples: Int, minFracPpm: Long,
-      materialize: Boolean = false): DataFrame = {
+      segmentSamples: Int, minFracPpm: Long): DataFrame = {
     require(minFracPpm > 0L && minFracPpm <= 1000000L,
       s"minFracPpm ($minFracPpm) must be in (0, 1e6]")
-    // materialize = true (BATCH callers only — a streaming frame cannot
-    // cache): the arrivals frame feeds the segment pass AND the
-    // survivor anti-join, and the segment frame feeds the drop verdict
-    // AND the per-clip census — uncached, the payload generation runs
-    // 3× and the WAV decode 2×. Cache both (arrivals are one
-    // micro-batch-sized slice, segments are 28 B/row), pin the tiny
-    // survivor output, release. The live foreachBatch path keeps the
-    // lazy default: each micro-batch is small and Spark pins the batch
-    // source itself.
-    // (try/finally: both caches release even when a count or the pin
-    // fails — ADVICE r17's leak-on-failure finding.)
+    // The arrivals frame feeds the segment pass AND the survivor
+    // anti-join, and the segment frame feeds the drop verdict AND the
+    // per-clip census — uncached, the payload generation runs 3× and
+    // the WAV decode 2×. Cache both (arrivals are one micro-batch-sized
+    // slice, segments are 28 B/row), pin the tiny survivor output,
+    // release.
     def build(media: DataFrame, segs: DataFrame): DataFrame = {
       val dropped = segs
         .join(histChunks.select(col("ahash")).distinct(), Seq("ahash"),
@@ -111,16 +106,10 @@ object StreamingChunks {
         .select(col("media_id"),
           coalesce(col("n_segments"), lit(0L)).as("n_segments"))
     }
-    if (!materialize)
-      build(media0, chunkSegments(media0, segmentSamples))
-    else {
-      val media = media0.cache()
-      try {
-        media.count()
-        val segs = chunkSegments(media, segmentSamples).cache()
-        try { segs.count(); build(media, segs).localCheckpoint(true) }
-        finally segs.unpersist()
-      } finally media.unpersist()
+    graft.Pin.cached(media0) { media =>
+      graft.Pin.cached(chunkSegments(media, segmentSamples)) { segs =>
+        graft.Pin(build(media, segs))
+      }
     }
   }
 }

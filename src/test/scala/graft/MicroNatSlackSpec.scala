@@ -311,8 +311,8 @@ class MicroNatSlackSpec extends SparkSpec {
     // dsir_logw = round(micro/1e6, 3) ties exactly when micro ends in
     // ±500; the tie-break then depends on each engine's decimal
     // rounding path rather than on ln at all. Integer check — exact.
-    val (_, scored) = Dsir.fitScored(docs.filter(col("doc_id") < 300),
-      docs.filter(col("doc_id") >= 300), materialize = false)
+    val (_, scored) = Pin.lazily(Dsir.fitScored(
+      docs.filter(col("doc_id") < 300), docs.filter(col("doc_id") >= 300)))
     val ties = scored
       .filter(pmod(abs(col("dsir_logw_micro")), lit(1000L)) === 500L)
       .count()

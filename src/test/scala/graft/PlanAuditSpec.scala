@@ -170,19 +170,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("fuzzy-dedup and IVF pipelines are cartesian-free (pre-materialization plans)") {
-    // The registered variants localCheckpoint their outputs, which
-    // replaces the inspectable plan with a checkpoint scan — audit the
-    // real shapes via materialize = false / the pure probe path.
+    // The registered variants pin their outputs, which replaces the
+    // inspectable plan with a checkpoint scan — audit the real shapes
+    // under Pin.lazily / the pure probe path.
     import graft.ext.{Dedup, IvfIndex}
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val model = IvfIndex.build(emb, k = 4, iters = 0)
     try {
-      val plans = Seq(
-        "jaccard" -> Dedup.jaccardPairs(docs, n = 4, materialize = false),
-        "minhash" -> Dedup.minhashPairs(docs, n = 4, bands = 8, materialize = false),
-        "simhash" -> Dedup.simhashPairs(docs, n = 4, maxHamming = 6, materialize = false),
-        "ivf" -> IvfIndex.topK(model, emb, emb.filter("vec_id < 3"), k = 3, nProbe = 2))
+      val plans = Pin.lazily(Seq(
+        "jaccard" -> Dedup.jaccardPairs(docs, n = 4),
+        "minhash" -> Dedup.minhashPairs(docs, n = 4, bands = 8),
+        "simhash" -> Dedup.simhashPairs(docs, n = 4, maxHamming = 6),
+        "ivf" -> IvfIndex.topK(model, emb, emb.filter("vec_id < 3"), k = 3, nProbe = 2)))
       plans.foreach { case (name, df) =>
         val nodes = planNodes(df.queryExecution.executedPlan)
         assert(!nodes.exists(_.contains("CartesianProduct")), s"$name plans a cartesian")
@@ -192,36 +192,34 @@ class PlanAuditSpec extends SparkSpec {
     } finally model.release()
   }
 
-  /** Queries whose construction IS their execution, by design: the fuzzy
-    * dedup/IVF operators pin their small outputs with `localCheckpoint`
-    * (and release intermediate caches), the resolution/funnel queries
-    * build on those pinned pair sets (and min-label propagation is
-    * iterative — actions are its nature), and the suite/ETL queries run
-    * the engine's action-based runners before returning the summary
-    * frame. Everything else must be a pure plan. */
-  private val eagerAtConstruction = Set(
-    "x1_jaccard_pairs", "x1_minhash_pairs", "x1_simhash_pairs", "x2_ivf_topk",
-    "x1_dedup_groups", "x2_semdedup", "x10_curation_funnel",
-    // same eager shape as x10_curation_funnel (jaccard pair pinning +
-    // guarded fuzzy-drop broadcast), keeper window aside
-    "x10_keepbest_funnel",
+  /** Queries whose construction IS their execution for a reason other
+    * than a sharing pin, so they run jobs even under [[Pin.lazily]]:
+    * suite and ETL runners, index and model fits, verdicts and guards
+    * read back to the driver, iterative resolution, and writes repeated
+    * at every construction. Everything else must be a pure plan once its
+    * pins are lazy. */
+  private val actsAtConstruction = Set(
+    // the IVF index build (k-means iterations + the checkpointed
+    // assignment pass) runs at construction; the planted and against
+    // variants add the parquet save+load round trip
+    "x2_ivf_topk", "x2_ivf_planted", "x2_ivf_against", "x2_ann_against",
+    // min-label propagation is iterative — actions are its nature
+    "x1_dedup_groups",
+    // SemDeDup's k-means quantizer build + component resolution
+    "x2_semdedup",
+    // the guarded fuzzy-drop broadcast (keeper window aside for the
+    // keepbest variant) acts at construction
+    "x10_curation_funnel", "x10_keepbest_funnel",
+    // the suite/ETL queries run the engine's action-based runners
+    // before returning the summary frame
     "v1_raw_gate", "v2_suite_summary", "g16_declarative_suite",
-    "v5_drift_check", "v6_checkpoint_run",
+    "v5_drift_check",
     // runs the REAL check engine (MonotonicCheck's range-partitioned
     // fold + the mode/bounds aggregates) at construction, the
     // v2_suite_summary shape
     "g22_ge_tail",
-    // localCheckpoint the derived history-signature index once,
-    // mirroring the persisted-parquet contract of the streaming path
-    // (the per-band anti joins would otherwise recompute the signature
-    // aggregate per band).
-    "s3_stream_neardup", "s4_stream_simhash", "s6_stream_anndrop",
-    // writes the audited corpus once per JVM at first construction
-    // (the persisted-index discipline)
-    "x10_layout_audit",
     // the band census (one tiny partial-agg job) runs at construction
-    // to pick the cut band; the plan-audit shapes come from the
-    // planOnly fixed-cut variant
+    // to pick the cut band
     "x26_budget_cut",
     // the BPE variant additionally reads the saved merge list into
     // plan literals and runs the same band census at construction
@@ -229,61 +227,122 @@ class PlanAuditSpec extends SparkSpec {
     // the streaming SCD-2 replay localCheckpoints the dimension state
     // per micro-batch (the transactional-table stand-in)
     "s7_stream_scd2",
-    // the planted-oracle variants share those eager shapes (checkpointed
+    // + the bounded driver union-find (x1_dedup_groups shape)
+    "x5_dhash_groups",
+    // builds + SAVES the signature index once per JVM, then probes the
+    // loaded parquet (edge materialization + driver union-find)
+    "x5_dhash_pipeline",
+    // Builds the Bloom sketch — an aggregate action by nature (the
+    // probe literal needs the bytes); production ships saved bytes.
+    "x1_bloom_dedup", "x1_keepbest_bloom",
+    // the against variant fits + SAVES the DSIR model on first
+    // construction (per-JVM persisted-index dir) and reads the params
+    // row back at load; the funnel reads the same params row
+    "x16_dsir_against", "x10_dsir_funnel",
+    // the writer IS the operator: curate -> partitioned parquet write
+    // at construction, the registered plan is the read-back census
+    "x10_write_verify", "x10_write_packed",
+    // fits + SAVES the per-stratum threshold cuts on first construction
+    // (the x16_dsir_against persisted-model discipline) and reads the
+    // cut row back at every construction; the registered plan probes
+    // the loaded parquet (s9 = the same fit on the history half,
+    // serving the shard half)
+    "x27_pctl_against", "x10_pctl_funnel", "s9_stream_pctl_gate",
+    // the fit IS the operator: k epoch aggregates run at construction,
+    // the registered frame is the collected per-epoch audit
+    "x30_perceptron",
+    // the scoring lane reads the 4-row final weights of the X3k
+    // persisted model into plan literals
+    "x3_lang_trained",
+    // the streaming serve lane's batch replay reads the same persisted
+    // trajectory + the 4-row weights fetch at construction
+    "s17_stream_lang",
+    // The deep BPE lane fetches the bounded census and runs the
+    // in-memory delta fit at EVERY construction (its output IS the fit
+    // audit).
+    "x53_bpe_deep",
+    // the PQ codebook fit (iters bounded aggregates) + the guarded
+    // query-count fetch run at construction (the x2_ivf shape); the
+    // planted twin skips the fit but keeps the broadcast guard fetch;
+    // the ivfpq pair additionally builds (and releases) the coarse
+    // quantizer and localCheckpoints its bounded output
+    "x2_pq_topk", "x2_pq_planted", "x2_ivfpq_topk", "x2_ivfpq_planted",
+    // reads the persisted merge list into plan literals at construction
+    "x53_bpe_tokenize", "x53_bpe_count",
+    // the s8 scorer fits the history index and reads its tiny stats
+    // into plan literals
+    "s8_stream_bm25",
+    // probes the saved benchmark index; the s10 stream gate reads the
+    // same artifact's params row at plan time (the s8 literal-model
+    // discipline)
+    "x8_contam_against", "s10_stream_decontam",
+    // runs the REAL check engine's three KL (resp. chi-square)
+    // verdicts (each an agg over the pinned value census — the
+    // g22_ge_tail shape) at construction
+    "g23_kl_divergence", "g24_chi_square",
+    // the xcodec groups lane adds the bounded driver union-find
+    // (x5_dhash_groups shape)
+    "x5_xcodec_groups",
+    // reads the persisted merge list into plan literals at construction
+    "s25_stream_bpe")
+
+  /** Queries that run jobs at construction only when pins are eager:
+    * their sharing pins ([[Pin]]) execute — the fuzzy dedup operators
+    * pin their small outputs and release intermediate caches, the
+    * models and indexes derived in-lane are pinned like saved artifacts
+    * — or a once-per-JVM artifact build runs at first construction,
+    * which the job-free audits pre-pay. */
+  private val eagerOnlyAtConstruction = Set(
+    "x1_jaccard_pairs", "x1_minhash_pairs", "x1_simhash_pairs",
+    "v6_checkpoint_run",
+    // pin the derived history-signature index once, mirroring the
+    // persisted-parquet contract of the streaming path (the per-band
+    // anti joins would otherwise recompute the signature aggregate per
+    // band).
+    "s3_stream_neardup", "s4_stream_simhash", "s6_stream_anndrop",
+    // writes the audited corpus once per JVM at first construction
+    // (the persisted-index discipline)
+    "x10_layout_audit",
+    // the planted-oracle variants share those eager shapes (pinned
     // history index / materialized pair signatures)
     "s3_planted_neardup", "s4_planted_simhash",
     "x1_minhash_planted", "x1_simhash_planted",
     // the image dHash lanes ride the same hammingPairs(Against) core
-    // as x1_simhash_pairs (materialized signature cache + checkpointed
-    // ordered pair set — the family/banded joins would otherwise
-    // decode+hash the corpus once per consumer); s19's drop stream is
-    // deliberately NOT here — its anti-join fold is lazy end-to-end
+    // as x1_simhash_pairs (cached signatures + pinned ordered pair set
+    // — the family/banded joins would otherwise decode+hash the corpus
+    // once per consumer); s19's drop stream is deliberately NOT here —
+    // its anti-join fold is lazy end-to-end
     "x5_dhash_pairs", "x5_dhash_dropset", "x5_dhash_against",
-    // the audio aHash lanes ride the same materialized cores
+    // the audio aHash lanes ride the same cached cores
     "x5_ahash_pairs", "x5_ahash_dropset", "x5_ahash_against",
     // r17: the chunked-audio lanes cache their segment signatures and
     // pin the containment verdict (decode once — the hammingPairs
-    // discipline applied to the segment self-join / drop anti-join)
+    // discipline applied to the segment self-join / drop anti-join);
+    // the stream lane also builds + SAVES the chunk segment-hash index
+    // once per JVM and probes the loaded parquet
     "x5_ahash_chunks", "s24_stream_chunks",
-    "x5_dhash_groups", // + the bounded driver union-find (x1_dedup_groups shape)
-    // builds + SAVES the signature index once per JVM, then probes the
-    // loaded parquet (edge materialization + driver union-find)
-    "x5_dhash_pipeline",
-    // the pHash pair lane rides the same materialized hammingPairs core
+    // the pHash pair lane rides the same cached hammingPairs core
     "x5_phash_pairs",
     // the video lanes' per-frame signatures ride the same core
     "x5_video_neardup", "x5_video_align",
     // builds + SAVES the frame-signature index once per JVM, then
-    // rides the materialized hammingPairsAgainst core
+    // rides the cached hammingPairsAgainst core
     "x5_video_against",
-    // the media capstone composes all three materialized hash cores
+    // the media capstone composes all three cached hash cores
     "x10_media_funnel",
-    // checkpoints the derived weight column (persisted-X17-state contract)
+    // pins the derived weight column (persisted-X17-state contract)
     "x12_weighted_mix",
-    // checkpoints the (week,type,bin) census consumed by five branches
+    // pins the (week,type,bin) census consumed by five branches
     "x20_psi_drift",
-    // localCheckpoints the trained LM count frames (persisted-model
-    // contract — scoring would otherwise re-run the reference-corpus
-    // aggregation once per join build); the against variant trains +
-    // SAVES once per JVM and probes the loaded parquet.
+    // pins the trained LM count frames (persisted-model contract —
+    // scoring would otherwise re-run the reference-corpus aggregation
+    // once per join build); the against variant trains + SAVES once per
+    // JVM and probes the loaded parquet, which the ppl funnel shares.
     "x15_lm_ppl", "x15_lm_ppl3", "x15_lm_ppl5", "x15_lm_against",
-    // Builds the Bloom sketch — an aggregate action by nature (the
-    // probe literal needs the bytes); production ships saved bytes.
-    "x1_bloom_dedup", "x1_keepbest_bloom",
-    // localCheckpoint the fitted DSIR bucket model (persisted-model
-    // contract, as x15); the against variant fits + SAVES the model on
-    // first construction (per-JVM persisted-index dir) and reads the
-    // params row back at load.
-    "x16_dsir_weights", "x16_dsir_select", "x16_dsir_against",
-    // x2_ivf_topk's eager index build (+ checkpointed rank-1 output /
-    // parquet save+load round trip for the against variants), and the
-    // ppl funnel localCheckpoints its trained LM counts like x15.
-    "x2_ivf_planted", "x2_ivf_against", "x2_ann_against", "x10_ppl_funnel",
-    // fits + checkpoints the DSIR bucket model feeding its selection
-    "x10_dsir_funnel",
-    // the writer IS the operator: curate -> partitioned parquet write
-    // at construction, the registered plan is the read-back census
-    "x10_write_verify", "x10_write_packed",
+    "x10_ppl_funnel",
+    // pins the fitted DSIR probe and bucket model (persisted-model
+    // contract, as x15)
+    "x16_dsir_weights", "x16_dsir_select",
     // r18: pins the curated+split survivors once for its two consumers
     // (straddle census + card rollup) — the writePacked pin discipline
     "x10_split_cards",
@@ -294,69 +353,24 @@ class PlanAuditSpec extends SparkSpec {
     // rewrite) once per JVM at first construction (the x10-writer
     // discipline); the registered plan is the read-back census
     "x29_jsonl_roundtrip", "x32_csv_roundtrip", "x33_compact_verify",
-    // fits + SAVES the per-stratum threshold cuts on first construction
-    // (the x16_dsir_against persisted-model discipline); the registered
-    // plan probes the loaded parquet (s9 = the same fit on the history
-    // half, serving the shard half)
-    "x27_pctl_against", "x10_pctl_funnel", "s9_stream_pctl_gate",
-    // the fit IS the operator: k epoch aggregates run at construction,
-    // the registered frame is the collected per-epoch audit
-    "x30_perceptron",
-    // the X3k persisted-model pair: feature materialization + the
+    // the X3k persisted-model fit: feature materialization + the
     // 4-class fit + trajectory save run once per JVM at first
-    // construction (x30's posture); the scoring lane additionally
-    // reads the 4-row final weights into plan literals
-    "x3_lang_train", "x3_lang_trained",
-    // the streaming serve lane's batch replay reads the same persisted
-    // trajectory + the 4-row weights fetch at construction
-    "s17_stream_lang",
-    // the X53 fit IS the operator: the word census + k merge-argmax
-    // aggregates run once per JVM at first construction and persist
-    // the vocab artifact; the registered frame reads the saved merges.
-    // The deep lane fetches the bounded census and runs the in-memory
-    // delta fit at EVERY construction (its output IS the fit audit).
-    "x53_bpe_train", "x53_bpe_deep",
-    // the PQ codebook fit (iters bounded aggregates) + the guarded
-    // query-count fetch run at construction (the x2_ivf shape); the
-    // planted twin skips the fit but keeps the broadcast guard fetch;
-    // the ivfpq pair additionally builds (and releases) the coarse
-    // quantizer and localCheckpoints its bounded output
-    "x2_pq_topk", "x2_pq_planted", "x2_ivfpq_topk", "x2_ivfpq_planted",
-    // reads the persisted merge list into plan literals at construction
-    "x53_bpe_tokenize", "x53_bpe_count",
+    // construction (x30's posture)
+    "x3_lang_train",
+    // the X53 fit: the word census + k merge-argmax aggregates run
+    // once per JVM at first construction and persist the vocab
+    // artifact; the registered frame reads the saved merges. The
+    // full-alphabet and byte-level siblings share the posture.
+    "x53_bpe_train", "x53_bpe_train_full", "x53_bpe_bytes",
     // builds + SAVES the inverted index once per JVM at first
     // construction; the registered plan probes the saved postings
     // (the merged variant builds two shard indexes + the merge; the
-    // removed variant builds the full index + the decrement; the s8
-    // scorer fits the history index and reads its tiny stats into
-    // plan literals)
+    // removed variant builds the full index + the decrement)
     "x24_bm25_against", "x24_bm25_merged", "x24_bm25_removed",
-    "s8_stream_bm25",
-    // shingles + SAVES the benchmark index once per JVM at first
-    // construction; the registered plan probes the loaded grams (the
-    // s10 stream gate reads the same artifact's params row at plan
-    // time — the s8 literal-model discipline)
-    "x8_contam_against", "s10_stream_decontam",
-    // runs the REAL check engine's three KL (resp. chi-square)
-    // verdicts (each an agg over the pinned value census — the
-    // g22_ge_tail shape) at construction
-    "g23_kl_divergence", "g24_chi_square",
-    // the xcodec drop set rides the materialized hammingEdges core
-    // (decode+re-encode+hash cache, checkpointed edge set — the
-    // x5_dhash_dropset shape on the union corpus); the groups lane
-    // adds the bounded driver union-find (x5_dhash_groups shape)
-    "x5_xcodec_dedup", "x5_xcodec_groups",
-    // (s21_stream_phash is deliberately NOT here — like s19, its
-    // per-band anti-join fold is lazy end-to-end once the per-JVM
-    // index save is pre-paid)
-    // full-alphabet and byte-level siblings of x53_bpe_train: the
-    // census + merge argmaxes run once per JVM and persist the vocab
-    "x53_bpe_train_full", "x53_bpe_bytes",
-    // reads the persisted merge list into plan literals at construction
-    "s25_stream_bpe",
-    // builds + SAVES the chunk segment-hash index once per JVM; the
-    // registered batch replay probes the loaded parquet
-    "s24_stream_chunks")
+    // the xcodec drop set rides the cached hammingEdges core
+    // (decode+re-encode+hash cache, pinned edge set — the
+    // x5_dhash_dropset shape on the union corpus)
+    "x5_xcodec_dedup")
 
   test("top-N per group never plans a single-partition global sort or window") {
     // The operator exists to avoid the one-reducer-per-group shape; the
@@ -379,7 +393,12 @@ class PlanAuditSpec extends SparkSpec {
       "top-N per group must not funnel through a single partition")
   }
 
-  test("constructing a registered query runs zero Spark jobs") {
+  /** Construct every registered query outside `exempt` — under
+    * [[Pin.lazily]] when `lazyPins` — and assert it ran no Spark job. */
+  private def assertConstructionJobFree(exempt: Set[String],
+                                        lazyPins: Boolean): Unit = {
+    def construct(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame) =
+      if (lazyPins) Pin.lazily(fn(spark, sfDir)) else fn(spark, sfDir)
     // Building a DataFrame must be free: an eager action inside a query
     // constructor (the old `.head()` offset derivation in x1_embed_neardup)
     // makes every plan-inspection context — Explain, this spec, the bench
@@ -398,8 +417,8 @@ class PlanAuditSpec extends SparkSpec {
     // alphabetically). What this test asserts is the STEADY-STATE
     // contract: re-constructing a registered query is job-free.
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => eagerAtConstruction(q._1))
-      .foreach { case (_, fn) => fn(spark, sfDir) }
+      .filterNot(q => exempt(q._1))
+      .foreach { case (_, fn) => construct(fn) }
     val actionJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -413,17 +432,26 @@ class PlanAuditSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot(q => eagerAtConstruction(q._1))
+        .filterNot(q => exempt(q._1))
         .foreach { case (name, fn) =>
           org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
           actionJobs.clear()
-          fn(spark, sfDir) // construct only — no action
+          construct(fn) // construct only — no action
           org.apache.spark.graftbridge.ListenerBridge.flush(spark.sparkContext)
           assert(actionJobs.isEmpty,
             s"$name ran Spark job(s) at plan-construction time: " +
               actionJobs.toArray.mkString(", "))
         }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("constructing a registered query runs zero Spark jobs") {
+    assertConstructionJobFree(actsAtConstruction ++ eagerOnlyAtConstruction,
+      lazyPins = false)
+  }
+
+  test("under Pin.lazily, only non-pin construction actions run Spark jobs") {
+    assertConstructionJobFree(actsAtConstruction, lazyPins = true)
   }
 
   test("the base curation funnel's plan shape is pinned — optional gates are free when OFF") {
