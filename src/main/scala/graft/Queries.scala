@@ -401,11 +401,6 @@ object Queries {
       .orderBy("validation_name")
   }
 
-  /** Memoized checkpoint stores — one run per (JVM, sfDir), mirroring
-    * [[driftBaselines]]. */
-  private val checkpointStores =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** V6 — the GE-checkpoint analog end-to-end: the checked-in checkpoint
     * file loads the declarative suite, runs it fused, persists results
     * through the ResultStore, and the QUERY OUTPUT is the store read
@@ -413,13 +408,10 @@ object Queries {
     * read loop, not just the in-memory verdicts. */
   def v6CheckpointRun(s: SparkSession, d: String): DataFrame = {
     val runId = "2026-01-01T00:00:00Z"
-    val store = checkpointStores.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_store").toString
+    val store = persistedIndexDir("graft_ckpt_store", d) { dir =>
       val spec = graft.suite.Checkpoint.load("checkpoints/testdata_core.json")
       graft.suite.Checkpoint.run(s, d, spec, dir, runId)
-      dir
-    })
+    }
     graft.sink.ResultStore.read(s, store, Some(runId))
       .select("run_id", "validation_name", "status",
         "element_count", "unexpected_count")
@@ -2782,8 +2774,7 @@ object Queries {
     * censused per (lang, band). MemoryStream ≡ batch pinned in
     * StreamingQualitySpec. */
   def s13StreamQuality(s: SparkSession, d: String): DataFrame = {
-    val cfg = graft.ext.QualityScore
-      .loadResourceConfig("recipes/quality_scorer.json")
+    val cfg = graft.ext.QualityScore.loadConfig("recipes/quality_scorer.json")
     graft.stream.StreamingQuality.scoreStream(documents(s, d), cfg)
       .groupBy("lang", "q_band")
       .agg(count(lit(1)).as("n_docs"),
@@ -2984,7 +2975,7 @@ object Queries {
     val bench = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("bench_id"), col("text"))
     graft.ext.Curation.funnel(docs, bench,
-      graft.ext.CurationRecipe.loadResource("recipes/base_curation.json"))
+      graft.ext.CurationRecipe.load("recipes/base_curation.json"))
   }
 
   /** X10h — the funnel with the C4 RULE BUNDLE as the quality stage

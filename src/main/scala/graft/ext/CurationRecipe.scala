@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
+import graft.Decl
+
 /** File-first curation recipes: a [[Curation.Config]] authored as JSON
   * or YAML — the same discipline as the declarative check suites
   * ([[graft.suite.SuiteLoader]]) and the file-loaded scorer
@@ -9,8 +11,10 @@ import org.apache.spark.sql.functions._
   * reviewed, diffable ARTIFACT, not code.
   *
   * Loadable surface (snake_case keys; absent keys keep the Config
-  * default; unknown keys are REJECTED loudly — a typo like
-  * `min_token` must not silently run the default recipe):
+  * default). The file is read through [[graft.Decl]]: unknown keys
+  * and mistyped values are REJECTED loudly with the key's path — a
+  * typo like `min_token` or an integer given as `2.5` must not
+  * silently run the default recipe; lists must be non-empty:
   *
   * {{{
   * { "min_tokens": 25, "max_tokens": 90,
@@ -42,96 +46,24 @@ import org.apache.spark.sql.functions._
   * couldn't. */
 object CurationRecipe {
 
-  private val KnownKeys = Set(
-    "min_containment", "contamination_ngram", "min_tokens", "max_tokens",
-    "rates", "default_rate", "seed", "seq_len", "quality_min_band",
-    "clean_first", "dedup_lines_first", "xdoc_min_df", "soft_dedup",
-    "c4_gate", "c4_block_phrases", "keeper_quality",
-    "gopher_preset", "gopher_presets",
-    "url_col", "blocked_domains",
-    "text_col", "key_col", "strata_col")
-
   /** Parse recipe text into a Config. `yaml = true` for YAML. */
-  def parse(text: String, yaml: Boolean = false): Curation.Config = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
-    import scala.jdk.CollectionConverters._
-    val mapper =
-      if (yaml) new ObjectMapper(new YAMLFactory()) else new ObjectMapper()
-    val root = mapper.readTree(text)
-    val unknown = root.fieldNames().asScala.toSeq.filterNot(KnownKeys)
-    require(unknown.isEmpty,
-      s"curation recipe: unknown keys ${unknown.mkString(", ")} — " +
-        "a typo must not silently run the default recipe")
+  def parse(text: String, yaml: Boolean = false): Curation.Config =
+    Decl.parse(text, yaml)(read)
 
-    def longAt(key: String, default: Long): Long = {
-      val n = root.path(key)
-      if (n.isMissingNode) default
-      else {
-        require(n.isIntegralNumber && n.canConvertToLong,
-          s"curation recipe: $key must be an integer, got '$n'")
-        n.asLong()
-      }
-    }
-    def intAt(key: String, default: Int): Int = {
-      val v = longAt(key, default.toLong)
-      require(v >= Int.MinValue && v <= Int.MaxValue,
-        s"curation recipe: $key ($v) out of int range")
-      v.toInt
-    }
-    def doubleAt(key: String, default: Double): Double = {
-      val n = root.path(key)
-      if (n.isMissingNode) default
-      else { require(n.isNumber, s"curation recipe: $key must be numeric"); n.asDouble() }
-    }
-    def boolAt(key: String, default: Boolean): Boolean = {
-      val n = root.path(key)
-      if (n.isMissingNode) default
-      else { require(n.isBoolean, s"curation recipe: $key must be a boolean"); n.asBoolean() }
-    }
-    def strAt(key: String, default: String): String = {
-      val n = root.path(key)
-      if (n.isMissingNode) default
-      else { require(n.isTextual, s"curation recipe: $key must be a string"); n.asText() }
-    }
-    def strSeqAt(key: String, default: Seq[String]): Seq[String] = {
-      val n = root.path(key)
-      if (n.isMissingNode) default
-      else {
-        require(n.isArray, s"curation recipe: $key must be an array of strings")
-        val s = n.elements().asScala.map { e =>
-          require(e.isTextual, s"curation recipe: $key entries must be strings")
-          e.asText()
-        }.toSeq
-        require(s.forall(_.nonEmpty), s"curation recipe: $key entries must be non-empty")
-        s
-      }
-    }
+  /** Load a recipe from a file path, or (fallback) the classpath — the
+    * engine's bundled recipes load whatever the caller's working
+    * directory is ([[graft.Decl.load]]; .yaml/.yml vs .json by suffix). */
+  def load(path: String): Curation.Config = Decl.load(path)(read)
 
+  private def read(r: Decl.Node): Curation.Config = {
     val base = Curation.Config()
-    val rates = {
-      val n = root.path("rates")
-      if (n.isMissingNode) base.rates
-      else {
-        require(n.isObject, "curation recipe: rates must be an object of stratum -> rate")
-        n.fields().asScala.map { e =>
-          require(e.getValue.isNumber,
-            s"curation recipe: rates.${e.getKey} must be numeric")
-          e.getKey -> e.getValue.asDouble()
-        }.toMap
-      }
-    }
-    val textCol = strAt("text_col", base.textCol)
-    val keeper = {
-      val n = root.path("keeper_quality")
-      if (n.isMissingNode) None
-      else {
-        require(n.isTextual && n.asText() == "text_length",
-          "curation recipe: keeper_quality supports the builtin " +
-            s"'text_length' only (got '$n') — arbitrary quality " +
-            "expressions stay code")
-        Some(length(col(textCol)))
-      }
+    val textCol = r.strOpt("text_col").getOrElse(base.textCol)
+    val keeper = r.strOpt("keeper_quality").map { k =>
+      require(k == "text_length",
+        "curation recipe: keeper_quality supports the builtin " +
+          s"'text_length' only (got '$k') — arbitrary quality " +
+          "expressions stay code")
+      length(col(textCol))
     }
     def presetOf(name: String): TextAnalysis.GopherPreset = {
       require(TextAnalysis.gopherPresets.contains(name),
@@ -139,73 +71,33 @@ object CurationRecipe {
           s"catalog (${TextAnalysis.gopherPresets.keys.toSeq.sorted.mkString(", ")})")
       TextAnalysis.gopherPresets(name)
     }
-    val gopherPreset = {
-      val n = root.path("gopher_preset")
-      if (n.isMissingNode) None
-      else {
-        require(n.isTextual, "curation recipe: gopher_preset must be a string")
-        Some(presetOf(n.asText()))
-      }
+    val ngram = r.longOpt("contamination_ngram").map { n =>
+      require(n.isValidInt, s"curation recipe: contamination_ngram ($n) out of int range")
+      n.toInt
     }
-    val gopherPresets = {
-      val n = root.path("gopher_presets")
-      if (n.isMissingNode) None
-      else Some(strSeqAt("gopher_presets", Nil).map(k => k -> presetOf(k)).toMap)
-    }
-    val xdocMinDf = {
-      val n = root.path("xdoc_min_df")
-      if (n.isMissingNode) None else Some(longAt("xdoc_min_df", 0L))
-    }
-    val urlCol = {
-      val n = root.path("url_col")
-      if (n.isMissingNode) None else Some(strAt("url_col", ""))
-    }
-
     base.copy(
-      minContainment = doubleAt("min_containment", base.minContainment),
-      contaminationNGram = intAt("contamination_ngram", base.contaminationNGram),
-      minTokens = longAt("min_tokens", base.minTokens),
-      maxTokens = longAt("max_tokens", base.maxTokens),
-      rates = rates,
-      defaultRate = doubleAt("default_rate", base.defaultRate),
-      seed = longAt("seed", base.seed),
-      seqLen = longAt("seq_len", base.seqLen),
-      qualityMinBand = strAt("quality_min_band", base.qualityMinBand),
-      cleanFirst = boolAt("clean_first", base.cleanFirst),
-      dedupLinesFirst = boolAt("dedup_lines_first", base.dedupLinesFirst),
-      xdocMinDf = xdocMinDf,
-      softDedup = boolAt("soft_dedup", base.softDedup),
-      c4Gate = boolAt("c4_gate", base.c4Gate),
-      c4BlockPhrases = strSeqAt("c4_block_phrases", base.c4BlockPhrases),
+      minContainment = r.doubleOpt("min_containment").getOrElse(base.minContainment),
+      contaminationNGram = ngram.getOrElse(base.contaminationNGram),
+      minTokens = r.longOpt("min_tokens").getOrElse(base.minTokens),
+      maxTokens = r.longOpt("max_tokens").getOrElse(base.maxTokens),
+      rates = r.doubleMapOpt("rates").getOrElse(base.rates),
+      defaultRate = r.doubleOpt("default_rate").getOrElse(base.defaultRate),
+      seed = r.longOpt("seed").getOrElse(base.seed),
+      seqLen = r.longOpt("seq_len").getOrElse(base.seqLen),
+      qualityMinBand = r.strOpt("quality_min_band").getOrElse(base.qualityMinBand),
+      cleanFirst = r.boolOpt("clean_first").getOrElse(base.cleanFirst),
+      dedupLinesFirst = r.boolOpt("dedup_lines_first").getOrElse(base.dedupLinesFirst),
+      xdocMinDf = r.longOpt("xdoc_min_df"),
+      softDedup = r.boolOpt("soft_dedup").getOrElse(base.softDedup),
+      c4Gate = r.boolOpt("c4_gate").getOrElse(base.c4Gate),
+      c4BlockPhrases = r.stringsOpt("c4_block_phrases").getOrElse(base.c4BlockPhrases),
       keeperQuality = keeper,
-      gopherPreset = gopherPreset,
-      gopherPresets = gopherPresets,
-      urlCol = urlCol,
-      blockedDomains = strSeqAt("blocked_domains", base.blockedDomains),
+      gopherPreset = r.strOpt("gopher_preset").map(presetOf),
+      gopherPresets = r.stringsOpt("gopher_presets").map(_.map(k => k -> presetOf(k)).toMap),
+      urlCol = r.strOpt("url_col"),
+      blockedDomains = r.stringsOpt("blocked_domains").getOrElse(base.blockedDomains),
       textCol = textCol,
-      keyCol = strAt("key_col", base.keyCol),
-      strataCol = strAt("strata_col", base.strataCol))
-  }
-
-  /** Load a recipe from a file path (.yaml/.yml vs .json by suffix). */
-  def load(path: String): Curation.Config = {
-    val yaml = path.endsWith(".yaml") || path.endsWith(".yml")
-    parse(java.nio.file.Files.readString(java.nio.file.Paths.get(path)), yaml)
-  }
-
-  /** [[load]] from the library's own CLASSPATH (leading slash optional)
-    * — for recipes that SHIP WITH the engine jar: a filesystem path is
-    * relative to the process working directory, which a library must
-    * not assume (the registered recipe query failed under a bench
-    * harness launched from another directory — cwd is the caller's,
-    * not the repo's). Checked-in pipeline recipes keep using [[load]];
-    * this is for the engine's own bundled defaults. */
-  def loadResource(resource: String): Curation.Config = {
-    val path = if (resource.startsWith("/")) resource else s"/$resource"
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"recipe resource $path not on the classpath")
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parse(text, path.endsWith(".yaml") || path.endsWith(".yml"))
+      keyCol = r.strOpt("key_col").getOrElse(base.keyCol),
+      strataCol = r.strOpt("strata_col").getOrElse(base.strataCol))
   }
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Decl
+
 /** X13 — linear quality-classifier scoring: the fasttext-style "model
   * quality" hook of a curation pipeline, as a PURE-ARITHMETIC proxy
   * (public pipelines like CCNet/FineWeb gate documents on a learned
@@ -163,55 +165,37 @@ object QualityScore {
     * Absent weight fields default to 0 (NOT the English-centric toy
     * defaults — a learned file that omits a term means the term's
     * coefficient is zero); absent `stopwords` keeps the default list;
-    * `thresholds` is required. Ranges validate LOUDLY: milli-unit
-    * weights and thresholds are capped at ±10⁶ so the documented
-    * overflow bound (~10⁷ chars/doc before ANSI throws) survives any
-    * loaded vector. */
+    * `thresholds` is required. The file is read through [[graft.Decl]]:
+    * an unknown key (`weights.stopp` is not a zero `stop`) or a
+    * non-integer weight is rejected with its path. Ranges validate
+    * LOUDLY: milli-unit weights and thresholds are capped at ±10⁶ so
+    * the documented overflow bound (~10⁷ chars/doc before ANSI throws)
+    * survives any loaded vector. */
   final case class ScorerConfig(weights: Weights, hi: Long, lo: Long)
 
   /** Parse scorer-config text. `yaml = true` for YAML; default JSON. */
-  def parseConfig(text: String, yaml: Boolean = false): ScorerConfig = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
-    val mapper =
-      if (yaml) new ObjectMapper(new YAMLFactory()) else new ObjectMapper()
-    val root = mapper.readTree(text)
-    val wn = root.path("weights")
-    def w(field: String): Long = {
-      val n = wn.path(field)
-      if (n.isMissingNode) 0L
-      else {
-        // isIntegralNumber too: canConvertToLong is a RANGE check and
-        // would silently truncate a float weight like 1.5.
-        require(n.isIntegralNumber && n.canConvertToLong,
-          s"scorer config: weights.$field must be an integer (milli-units), got '$n'")
-        n.asLong()
-      }
-    }
-    val tn = root.path("thresholds")
-    require(!tn.isMissingNode &&
-      tn.path("hi").isIntegralNumber && tn.path("hi").canConvertToLong &&
-      tn.path("lo").isIntegralNumber && tn.path("lo").canConvertToLong,
-      "scorer config: thresholds.hi and thresholds.lo (integer milli-units) are required")
-    val stopwords =
-      if (root.path("stopwords").isMissingNode) Weights().stopwords
-      else {
-        import scala.jdk.CollectionConverters._
-        val s = root.path("stopwords").elements().asScala.map(_.asText()).toSeq
-        require(s.nonEmpty && s.forall(_.nonEmpty),
-          "scorer config: stopwords must be non-empty strings")
-        s
-      }
+  def parseConfig(text: String, yaml: Boolean = false): ScorerConfig =
+    Decl.parse(text, yaml)(readConfig)
+
+  /** Load a scorer config from a file path, or (fallback) the classpath
+    * — a library query must not assume the caller's cwd
+    * ([[graft.Decl.load]]; .yaml/.yml vs .json picks the format). */
+  def loadConfig(path: String): ScorerConfig = Decl.load(path)(readConfig)
+
+  private def readConfig(root: Decl.Node): ScorerConfig = {
+    val weights = root.objOpt("weights")
+    val coefs = Seq("bias", "stop", "alpha", "punct", "mean_tok_len")
+      .map(k => k -> weights.flatMap(_.longOpt(k)).getOrElse(0L))
+    val coef = coefs.toMap
+    val thresholds = root.obj("thresholds")
     val cfg = ScorerConfig(
-      Weights(bias = w("bias"), stop = w("stop"), alpha = w("alpha"),
-        punct = w("punct"), meanTokLen = w("mean_tok_len"),
-        stopwords = stopwords),
-      hi = tn.path("hi").asLong(), lo = tn.path("lo").asLong())
+      Weights(bias = coef("bias"), stop = coef("stop"), alpha = coef("alpha"),
+        punct = coef("punct"), meanTokLen = coef("mean_tok_len"),
+        stopwords = root.stringsOpt("stopwords").getOrElse(Weights().stopwords)),
+      hi = thresholds.long("hi"), lo = thresholds.long("lo"))
     val bound = 1000000L
-    val named = Seq("bias" -> cfg.weights.bias, "stop" -> cfg.weights.stop,
-      "alpha" -> cfg.weights.alpha, "punct" -> cfg.weights.punct,
-      "mean_tok_len" -> cfg.weights.meanTokLen,
-      "thresholds.hi" -> cfg.hi, "thresholds.lo" -> cfg.lo)
+    val named = coefs.map { case (k, v) => s"weights.$k" -> v } ++
+      Seq("thresholds.hi" -> cfg.hi, "thresholds.lo" -> cfg.lo)
     named.foreach { case (name, v) =>
       require(math.abs(v) <= bound,
         s"scorer config: $name ($v) exceeds ±$bound milli-units — the " +
@@ -220,25 +204,5 @@ object QualityScore {
     require(cfg.hi >= cfg.lo,
       s"scorer config: thresholds.hi (${cfg.hi}) must be >= lo (${cfg.lo})")
     cfg
-  }
-
-  /** Load a scorer config from a file path (.yaml/.yml vs .json picks
-    * the format). */
-  def loadConfig(path: String): ScorerConfig = {
-    val yaml = path.endsWith(".yaml") || path.endsWith(".yml")
-    parseConfig(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)), yaml)
-  }
-
-  /** Load a scorer config from the CLASSPATH (the [[graft.ext
-    * .CurationRecipe.loadResource]] discipline — a library query must
-    * not assume the caller's cwd). */
-  def loadResourceConfig(resource: String): ScorerConfig = {
-    val path = if (resource.startsWith("/")) resource else s"/$resource"
-    val in = getClass.getResourceAsStream(path)
-    require(in != null, s"scorer config resource $path not on the classpath")
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parseConfig(text, path.endsWith(".yaml") || path.endsWith(".yml"))
   }
 }

@@ -2,6 +2,8 @@ package graft.sink
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.Try
+
 import graft.model.FailureReport
 
 /** V4 — alert fan-out on validation failure, sink-agnostic.
@@ -63,9 +65,17 @@ object Notifiers {
 
   /** Fan-out to several sinks — the reference alerts PagerDuty AND the
     * agent (pager-workflow.py:250-267); one sink failing must not starve
-    * the others (its per-sink try/except). */
+    * the others (its per-sink try/except). Every sink runs; afterwards
+    * the first failure is thrown with the others attached as suppressed
+    * exceptions (the [[graft.suite.Concurrency.all]] policy), so a lost
+    * alert surfaces instead of vanishing. */
   final case class FanOut(sinks: Seq[Notifier]) extends Notifier {
-    def notify(report: FailureReport): Unit =
-      sinks.foreach(s => try s.notify(report) catch { case _: Exception => () })
+    def notify(report: FailureReport): Unit = {
+      val failures = sinks.flatMap(s => Try(s.notify(report)).failed.toOption)
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    }
   }
 }

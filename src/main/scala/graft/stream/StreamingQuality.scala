@@ -16,8 +16,8 @@ import graft.ext.QualityScore
   * batch (pinned in StreamingQualitySpec). The weight vector is a
   * FILE-LOADED [[QualityScore.ScorerConfig]] — the reviewed, diffable
   * artifact a production gate actually deploys, not code constants
-  * ([[QualityScore.loadResourceConfig]]; the X13/CurationRecipe
-  * authoring discipline).
+  * ([[QualityScore.loadConfig]], which falls back to the classpath; the
+  * X13/CurationRecipe authoring discipline).
   *
   * Annotate-don't-drop: every document passes through carrying
   * `q_score_num`/`q_band` (+ the `q_` feature columns), so the caller

@@ -1,12 +1,8 @@
 package graft.suite
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.SparkSession
 
+import graft.Decl
 import graft.model.ValidationSuiteResult
 import graft.sink.ResultStore
 
@@ -26,47 +22,21 @@ final case class CheckpointSpec(
   */
 object Checkpoint {
 
-  private val knownFields =
-    Set("checkpoint_name", "suite", "use_history", "write_docs")
+  /** Parse checkpoint text (`yaml = true` for YAML). `suite` is
+    * required; an unknown key (`use_histroy`) or a mistyped value is
+    * rejected, never defaulted ([[graft.Decl]]). */
+  def parse(text: String, yaml: Boolean = false): CheckpointSpec =
+    Decl.parse(text, yaml)(read)
 
-  def parse(text: String, yaml: Boolean = false): CheckpointSpec = {
-    val mapper =
-      if (yaml) new ObjectMapper(new YAMLFactory()) else new ObjectMapper()
-    val root = mapper.readTree(text)
-    // Reject unknown keys: a typo like "use_histroy" must not silently
-    // drop the declared behavior (same silent-kwarg-default class the
-    // suite loader guards against).
-    val unknown = {
-      import scala.jdk.CollectionConverters._
-      root.fieldNames().asScala.filterNot(knownFields).toSeq
-    }
-    require(unknown.isEmpty,
-      s"unknown checkpoint field(s) ${unknown.mkString(", ")} — " +
-        s"known: ${knownFields.toSeq.sorted.mkString(", ")}")
-    val suite = root.path("suite").asText("")
-    require(suite.nonEmpty, s"checkpoint declares no 'suite' path: $root")
+  /** Load from disk or (fallback) the classpath ([[graft.Decl.load]]). */
+  def load(path: String): CheckpointSpec = Decl.load(path)(read)
+
+  private def read(root: Decl.Node): CheckpointSpec =
     CheckpointSpec(
-      name = root.path("checkpoint_name").asText("unnamed"),
-      suitePath = suite,
-      useHistory = root.path("use_history").asBoolean(false),
-      writeDocs = root.path("write_docs").asBoolean(false))
-  }
-
-  /** Load from disk or (fallback) the classpath — same resolution as
-    * [[SuiteLoader.load]]. */
-  def load(path: String): CheckpointSpec = {
-    val yaml = path.endsWith(".yaml") || path.endsWith(".yml")
-    val p = Paths.get(path)
-    val text =
-      if (Files.exists(p)) Files.readString(p)
-      else {
-        val in = getClass.getClassLoader.getResourceAsStream(path)
-        require(in != null, s"checkpoint not found on disk or classpath: $path")
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      }
-    parse(text, yaml)
-  }
+      name = root.strOpt("checkpoint_name").getOrElse("unnamed"),
+      suitePath = root.str("suite"),
+      useHistory = root.boolOpt("use_history").getOrElse(false),
+      writeDocs = root.boolOpt("write_docs").getOrElse(false))
 
   /** Run the checkpoint: suite file → bound checks → fused run →
     * results appended to the store under `runId` (→ readable by the

@@ -1,15 +1,8 @@
 package graft.suite
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.SparkSession
 
-import graft.Tables
+import graft.{Decl, Tables}
 import graft.checks._
 
 /** One table's expectations as declared in a suite file (unbound — no
@@ -49,40 +42,29 @@ final case class SuiteSpec(suiteName: String, tables: Seq[TableSpec])
   * `max_pct_change` (GE's URN-based evaluation parameters reduce to this
   * one store-backed lookup here) — suites declaring it must bind through
   * [[bindWithHistory]].
+  *
+  * Files are read through [[graft.Decl]]: an unknown key at any level
+  * (a misspelt kwarg, a table's misspelt `expectations`) and a mistyped
+  * value (`"min_value": "abc"`, an integer bound given as 2.5,
+  * `approx: "yes"`) are rejected with the key's path, never defaulted.
   */
 object SuiteLoader {
 
   /** Parse suite text. `yaml = true` for YAML; default JSON. */
-  def parse(text: String, yaml: Boolean = false): SuiteSpec = {
-    val mapper =
-      if (yaml) new ObjectMapper(new YAMLFactory()) else new ObjectMapper()
-    val root = mapper.readTree(text)
-    val tables = root.path("tables").elements().asScala.map { t =>
-      val name = reqText(t, "table")
-      val checks = t.path("expectations").elements().asScala.flatMap { e =>
-        toChecks(reqText(e, "type"), e.path("kwargs"))
-      }.toSeq
-      TableSpec(name, checks)
-    }.toSeq
-    require(tables.nonEmpty, "suite declares no tables")
-    SuiteSpec(root.path("suite_name").asText("unnamed"), tables)
-  }
+  def parse(text: String, yaml: Boolean = false): SuiteSpec =
+    Decl.parse(text, yaml)(read)
 
   /** Load a suite from a filesystem path, or (fallback) the classpath —
     * checked-in suites ship as resources so Verify/Bench need no cwd
     * assumptions. Extension picks the format (.yaml/.yml vs .json). */
-  def load(path: String): SuiteSpec = {
-    val yaml = path.endsWith(".yaml") || path.endsWith(".yml")
-    val p = Paths.get(path)
-    val text =
-      if (Files.exists(p)) Files.readString(p)
-      else {
-        val in = getClass.getClassLoader.getResourceAsStream(path)
-        require(in != null, s"suite file not found on disk or classpath: $path")
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      }
-    parse(text, yaml)
+  def load(path: String): SuiteSpec = Decl.load(path)(read)
+
+  private def read(root: Decl.Node): SuiteSpec = {
+    val tables = root.objs("tables").map { t =>
+      TableSpec(t.str("table"),
+        t.objs("expectations").flatMap(e => toChecks(e.str("type"), e.obj("kwargs"))))
+    }
+    SuiteSpec(root.strOpt("suite_name").getOrElse("unnamed"), tables)
   }
 
   /** Bind a parsed suite to the testdata tables under `sfDir`. Rejects
@@ -145,19 +127,18 @@ object SuiteLoader {
     * tolerance measures over condition rows, as GE does. Either kwarg on
     * an expectation type that doesn't support it throws (a tolerance or
     * condition that silently does nothing is worse than an error). */
-  private[suite] def toChecks(expectationType: String, kw: JsonNode): Seq[Check] = {
-    val base: Seq[Check] = expectationType match {
-      case "expect_column_quantile_values_to_be_between"
-          if kw.hasNonNull("quantile_ranges") =>
-        quantileRanges(kw)
-      case other => Seq(toCheck(other, kw))
+  private[suite] def toChecks(expectationType: String, kw: Decl.Node): Seq[Check] = {
+    val ranges =
+      if (expectationType != "expect_column_quantile_values_to_be_between") None
+      else kw.objOpt("quantile_ranges")
+    val base: Seq[Check] = ranges match {
+      case Some(qr) => quantileRanges(kw, qr)
+      case None => Seq(toCheck(expectationType, kw))
     }
-    val conditioned =
-      if (!kw.hasNonNull("row_condition")) base
-      else {
-        val cond = reqText(kw, "row_condition")
-        if (kw.hasNonNull("condition_parser")) {
-          val p = kw.get("condition_parser").asText()
+    val conditioned = kw.strOpt("row_condition") match {
+      case None => base
+      case Some(cond) =>
+        kw.strOpt("condition_parser").foreach { p =>
           require(p == "spark",
             s"unsupported condition_parser '$p' — row_condition here is a " +
               "Spark SQL predicate (declare 'spark' or omit)")
@@ -172,74 +153,72 @@ object SuiteLoader {
             s"row_condition is not supported for $expectationType " +
               s"(check ${other.name}) — it applies to column map expectations only")
         }
+    }
+    kw.doubleOpt("mostly") match {
+      case None => conditioned
+      case Some(mostly) => conditioned.map {
+        case a: AggCheck => MostlyCheck(a, mostly)
+        case other => throw new IllegalArgumentException(
+          s"'mostly' is not supported for $expectationType (check ${other.name})")
       }
-    if (!kw.hasNonNull("mostly")) conditioned
-    else conditioned.map {
-      case a: AggCheck => MostlyCheck(a, kw.get("mostly").asDouble())
-      case other => throw new IllegalArgumentException(
-        s"'mostly' is not supported for $expectationType (check ${other.name})")
     }
   }
 
   /** GE's one-expectation-many-quantiles form:
     * `quantile_ranges: { quantiles: [..], value_ranges: [[lo,hi],..] }`
     * unrolled to per-quantile checks (null bound → unbounded, as GE). */
-  private def quantileRanges(kw: JsonNode): Seq[Check] = {
-    val column = reqText(kw, "column")
-    val qr = kw.get("quantile_ranges")
-    val qs = qr.path("quantiles").elements().asScala.map(_.asDouble()).toSeq
-    val ranges = qr.path("value_ranges").elements().asScala.map { r =>
-      require(r.isArray && r.size() == 2, s"value_range must be [lo, hi]: $r")
-      def bound(i: Int, default: Double): Double =
-        if (r.get(i).isNull) default else r.get(i).asDouble()
-      (bound(0, Double.NegativeInfinity), bound(1, Double.PositiveInfinity))
-    }.toSeq
-    require(qs.nonEmpty && qs.size == ranges.size,
-      s"quantile_ranges needs equal-length non-empty quantiles/value_ranges, " +
+  private def quantileRanges(kw: Decl.Node, qr: Decl.Node): Seq[Check] = {
+    val column = kw.str("column")
+    val qs = qr.doubles("quantiles")
+    val ranges = qr.ranges("value_ranges").map { case (lo, hi) =>
+      (lo.getOrElse(Double.NegativeInfinity), hi.getOrElse(Double.PositiveInfinity))
+    }
+    require(qs.size == ranges.size,
+      s"quantile_ranges needs equal-length quantiles/value_ranges, " +
         s"got ${qs.size} quantiles and ${ranges.size} ranges")
-    val approx = kw.path("approx").asBoolean(false)
+    val approx = kw.boolOpt("approx").getOrElse(false)
     qs.zip(ranges).map { case (q, (lo, hi)) =>
       if (approx) ApproxQuantileCheck(column, q, lo, hi)
       else QuantileCheck(column, q, lo, hi)
     }
   }
 
-  private def toCheck(expectationType: String, kw: JsonNode): Check =
+  private def toCheck(expectationType: String, kw: Decl.Node): Check =
     expectationType match {
       case "expect_table_row_count_to_be_between" =>
-        RowCountCheck(optLong(kw, "min_value").getOrElse(1L),
-          optLong(kw, "max_value").getOrElse(Long.MaxValue))
+        RowCountCheck(kw.longOpt("min_value").getOrElse(1L),
+          kw.longOpt("max_value").getOrElse(Long.MaxValue))
       case "expect_column_values_to_not_be_null" =>
-        NotNullCheck(reqText(kw, "column"))
+        NotNullCheck(kw.str("column"))
       case "expect_column_values_to_be_in_set" =>
-        InSetCheck(reqText(kw, "column"), strings(kw, "value_set"))
+        InSetCheck(kw.str("column"), kw.strings("value_set"))
       case "expect_column_values_to_not_be_in_set" =>
-        NotInSetCheck(reqText(kw, "column"), strings(kw, "value_set"))
+        NotInSetCheck(kw.str("column"), kw.strings("value_set"))
       case "expect_column_values_to_be_between" =>
-        BetweenCheck(reqText(kw, "column"),
-          optDouble(kw, "min_value"), optDouble(kw, "max_value"))
+        BetweenCheck(kw.str("column"),
+          kw.doubleOpt("min_value"), kw.doubleOpt("max_value"))
       case "expect_column_values_to_match_regex" =>
-        RegexCheck(reqText(kw, "column"), reqText(kw, "regex"))
+        RegexCheck(kw.str("column"), kw.str("regex"))
       case "expect_column_values_to_be_of_type" =>
-        TypeCastCheck(reqText(kw, "column"), reqText(kw, "type_"))
+        TypeCastCheck(kw.str("column"), kw.str("type_"))
       case "expect_column_values_to_be_null" =>
-        NullCheck(reqText(kw, "column"))
+        NullCheck(kw.str("column"))
       case "expect_column_pair_values_a_to_be_greater_than_b" =>
-        PairGreaterCheck(reqText(kw, "column_A"), reqText(kw, "column_B"),
-          kw.path("or_equal").asBoolean(false),
-          optText(kw, "ignore_row_if").getOrElse("both_values_are_missing"))
+        PairGreaterCheck(kw.str("column_A"), kw.str("column_B"),
+          kw.boolOpt("or_equal").getOrElse(false),
+          kw.strOpt("ignore_row_if").getOrElse("both_values_are_missing"))
       case "expect_column_pair_values_to_be_equal" =>
-        PairEqualCheck(reqText(kw, "column_A"), reqText(kw, "column_B"),
-          optText(kw, "ignore_row_if").getOrElse("both_values_are_missing"))
+        PairEqualCheck(kw.str("column_A"), kw.str("column_B"),
+          kw.strOpt("ignore_row_if").getOrElse("both_values_are_missing"))
       case "expect_column_proportion_of_unique_values_to_be_between" =>
-        ProportionUniqueCheck(reqText(kw, "column"),
-          optDouble(kw, "min_value").getOrElse(0.0),
-          optDouble(kw, "max_value").getOrElse(1.0))
+        ProportionUniqueCheck(kw.str("column"),
+          kw.doubleOpt("min_value").getOrElse(0.0),
+          kw.doubleOpt("max_value").getOrElse(1.0))
       case "expect_column_median_to_be_between" =>
         // GE's median == interpolated p50 — the exact quantile check.
-        QuantileCheck(reqText(kw, "column"), 0.5,
-          optDouble(kw, "min_value").getOrElse(Double.NegativeInfinity),
-          optDouble(kw, "max_value").getOrElse(Double.PositiveInfinity))
+        QuantileCheck(kw.str("column"), 0.5,
+          kw.doubleOpt("min_value").getOrElse(Double.NegativeInfinity),
+          kw.doubleOpt("max_value").getOrElse(Double.PositiveInfinity))
       case "expect_column_mean_to_be_between" =>
         aggBounds(kw, "mean")
       case "expect_column_min_to_be_between" =>
@@ -256,14 +235,14 @@ object SuiteLoader {
         // engine — the suite must DECLARE the order key. Required like
         // the quantile kwarg: silently defaulting would validate a
         // meaningless ordering.
-        require(kw.hasNonNull("order_by"),
-          s"missing 'order_by' in $kw — a distributed table has no row " +
-            "order; declare the key the sequence is read in")
-        MonotonicCheck(reqText(kw, "column"), reqText(kw, "order_by"),
+        val orderBy = kw.strOpt("order_by").getOrElse(throw new IllegalArgumentException(
+          "missing 'order_by' — a distributed table has no row order; " +
+            "declare the key the sequence is read in"))
+        MonotonicCheck(kw.str("column"), orderBy,
           increasing = expectationType.endsWith("increasing"),
-          strictly = kw.path("strictly").asBoolean(false))
+          strictly = kw.boolOpt("strictly").getOrElse(false))
       case "expect_column_most_common_value_to_be_in_set" =>
-        MostCommonValueCheck(reqText(kw, "column"), strings(kw, "value_set"))
+        MostCommonValueCheck(kw.str("column"), kw.strings("value_set"))
       case "expect_column_kl_divergence_to_be_less_than" =>
         // GE's categorical partition_object: {values, weights}. Weights
         // land as integer PPM (the check requires an exact 1,000,000
@@ -278,101 +257,68 @@ object SuiteLoader {
         // does NOT sum to ~1.0 leaves a residual the apportionment
         // refuses to absorb, and the check's own exact-sum guard still
         // fails loudly.
-        require(kw.hasNonNull("partition_object"),
-          s"missing 'partition_object' in $kw — declare the expected " +
-            "categorical distribution as {values, weights}")
-        val po = kw.get("partition_object")
-        val values = strings(po, "values")
-        val ppm = weightsToPpm(po)
-        require(kw.hasNonNull("threshold"),
-          s"missing 'threshold' in $kw")
-        KlDivergenceCheck(reqText(kw, "column"), values, ppm,
-          kw.get("threshold").asDouble())
+        val po = kw.obj("partition_object")
+        KlDivergenceCheck(kw.str("column"), po.strings("values"),
+          weightsToPpm(po.doubles("weights")), kw.double("threshold"))
       case "expect_column_chisquare_test_p_value_to_be_greater_than" =>
         // GE's other distribution check (G24). Same partition_object →
         // PPM discipline as KL above; the p-value gate resolves to a
         // DECLARED critical value — either an explicit `critical_value`
         // kwarg, or the plan-constant table at df = |values| − 1 and
         // the declared significance `p_value` (GE's default 0.05).
-        require(kw.hasNonNull("partition_object"),
-          s"missing 'partition_object' in $kw — declare the expected " +
-            "categorical distribution as {values, weights}")
-        val po = kw.get("partition_object")
-        val values = strings(po, "values")
-        val ppm = weightsToPpm(po)
-        val critical =
-          if (kw.hasNonNull("critical_value"))
-            kw.get("critical_value").asDouble()
-          else ChiSquareCheck.criticalValue(values.size - 1,
-            kw.path("p_value").asDouble(0.05))
-        ChiSquareCheck(reqText(kw, "column"), values, ppm, critical)
+        val po = kw.obj("partition_object")
+        val values = po.strings("values")
+        val ppm = weightsToPpm(po.doubles("weights"))
+        val pValue = kw.doubleOpt("p_value").getOrElse(0.05)
+        val critical = kw.doubleOpt("critical_value")
+          .getOrElse(ChiSquareCheck.criticalValue(values.size - 1, pValue))
+        ChiSquareCheck(kw.str("column"), values, ppm, critical)
       case "expect_column_values_to_be_unique" =>
-        UniqueCheck(Seq(reqText(kw, "column")))
+        UniqueCheck(Seq(kw.str("column")))
       case "expect_compound_columns_to_be_unique" =>
-        UniqueCheck(strings(kw, "column_list"))
+        UniqueCheck(kw.strings("column_list"))
       case "expect_column_value_lengths_to_be_between" =>
         // Clamp instead of narrowing: .toInt of an out-of-Int-range bound
         // silently wraps negative and fails every value.
         def asLen(v: Long): Int =
           math.min(math.max(v, 0L), Int.MaxValue.toLong).toInt
-        ValueLengthCheck(reqText(kw, "column"),
-          asLen(optLong(kw, "min_value").getOrElse(0L)),
-          asLen(optLong(kw, "max_value").getOrElse(Int.MaxValue.toLong)))
+        ValueLengthCheck(kw.str("column"),
+          asLen(kw.longOpt("min_value").getOrElse(0L)),
+          asLen(kw.longOpt("max_value").getOrElse(Int.MaxValue.toLong)))
       case "expect_column_unique_value_count_to_be_between" =>
         // `approx: true` → the HLL sketch variant for very hot columns.
         // ORACLE NOTE: the estimate is not engine-portable, so a suite
         // declaring it must size bounds so the verdict, not the value, is
         // what both engines agree on (see ApproxDistinctCountCheck).
-        val (lo14, hi14) = (optLong(kw, "min_value").getOrElse(0L),
-          optLong(kw, "max_value").getOrElse(Long.MaxValue))
-        if (kw.path("approx").asBoolean(false))
-          ApproxDistinctCountCheck(reqText(kw, "column"), lo14, hi14)
-        else DistinctCountCheck(reqText(kw, "column"), lo14, hi14)
+        val (lo14, hi14) = (kw.longOpt("min_value").getOrElse(0L),
+          kw.longOpt("max_value").getOrElse(Long.MaxValue))
+        if (kw.boolOpt("approx").getOrElse(false))
+          ApproxDistinctCountCheck(kw.str("column"), lo14, hi14)
+        else DistinctCountCheck(kw.str("column"), lo14, hi14)
       case "expect_column_quantile_values_to_be_between" =>
         // A defaulted quantile (missing/typoed kwarg → 0.0) would build a
         // p0 check that validates nothing — required, like other kwargs.
-        require(kw.hasNonNull("quantile"), s"missing 'quantile' in $kw")
-        val (lo15, hi15) = (optDouble(kw, "min_value").getOrElse(Double.NegativeInfinity),
-          optDouble(kw, "max_value").getOrElse(Double.PositiveInfinity))
-        if (kw.path("approx").asBoolean(false))
-          ApproxQuantileCheck(reqText(kw, "column"),
-            kw.path("quantile").asDouble(), lo15, hi15)
-        else QuantileCheck(reqText(kw, "column"), kw.path("quantile").asDouble(),
-          lo15, hi15)
+        val q = kw.double("quantile")
+        val (lo15, hi15) = (kw.doubleOpt("min_value").getOrElse(Double.NegativeInfinity),
+          kw.doubleOpt("max_value").getOrElse(Double.PositiveInfinity))
+        if (kw.boolOpt("approx").getOrElse(false))
+          ApproxQuantileCheck(kw.str("column"), q, lo15, hi15)
+        else QuantileCheck(kw.str("column"), q, lo15, hi15)
       case "expect_table_columns_to_match_set" =>
-        SchemaCheck(strings(kw, "column_set"),
-          kw.path("exact_match").asBoolean(false))
+        SchemaCheck(kw.strings("column_set"),
+          kw.boolOpt("exact_match").getOrElse(false))
       case "expect_row_count_within_pct_of_last_run" =>
         // Required like the quantile kwarg: a typo ('max_pct_chnage')
         // silently defaulting to 10% changes the declared tolerance.
-        require(kw.hasNonNull("max_pct_change"),
-          s"missing 'max_pct_change' in $kw")
-        UnresolvedDriftCheck(kw.path("max_pct_change").asDouble())
+        UnresolvedDriftCheck(kw.double("max_pct_change"))
       case other =>
         throw new IllegalArgumentException(s"unknown expectation type: $other")
     }
 
-  private def aggBounds(kw: JsonNode, stat: String): AggBoundsCheck =
-    AggBoundsCheck(reqText(kw, "column"), stat,
-      optDouble(kw, "min_value").getOrElse(Double.NegativeInfinity),
-      optDouble(kw, "max_value").getOrElse(Double.PositiveInfinity))
-
-  private def reqText(n: JsonNode, field: String): String = {
-    val v = n.path(field)
-    require(v.isTextual && v.asText().nonEmpty, s"missing/non-string '$field' in $n")
-    v.asText()
-  }
-  private def optDouble(n: JsonNode, field: String): Option[Double] =
-    if (n.hasNonNull(field)) Some(n.get(field).asDouble()) else None
-  private def optText(n: JsonNode, field: String): Option[String] =
-    if (n.hasNonNull(field)) Some(n.get(field).asText()) else None
-  private def optLong(n: JsonNode, field: String): Option[Long] =
-    if (n.hasNonNull(field)) Some(n.get(field).asLong()) else None
-  private def strings(n: JsonNode, field: String): Seq[String] = {
-    val v = n.path(field)
-    require(v.isArray && v.size() > 0, s"missing/empty array '$field' in $n")
-    v.elements().asScala.map(_.asText()).toSeq
-  }
+  private def aggBounds(kw: Decl.Node, stat: String): AggBoundsCheck =
+    AggBoundsCheck(kw.str("column"), stat,
+      kw.doubleOpt("min_value").getOrElse(Double.NegativeInfinity),
+      kw.doubleOpt("max_value").getOrElse(Double.PositiveInfinity))
 
   /** GE partition_object weights → integer PPM by LARGEST-REMAINDER
     * apportionment (ADVICE r16): floor each weight's exact ppm, then
@@ -380,8 +326,7 @@ object SuiteLoader {
     * to the largest fractional remainders, position-tie-broken. A
     * vector that does NOT sum to ~1.0 leaves a residual this refuses
     * to absorb — the checks' own exact-1,000,000 guard stays loud. */
-  private def weightsToPpm(po: JsonNode): Seq[Long] = {
-    val raw = po.path("weights").elements().asScala.map(_.asDouble()).toSeq
+  private def weightsToPpm(raw: Seq[Double]): Seq[Long] = {
     val floors = raw.map(w => math.floor(w * 1e6).toLong)
     val residual = 1000000L - floors.sum
     if (residual <= 0L || residual > raw.size) floors

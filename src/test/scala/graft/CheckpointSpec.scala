@@ -111,4 +111,15 @@ class CheckpointSpec extends SparkSpec {
       """{"suite": "s.json", "use_histroy": true}"""))
     assert(e.getMessage.contains("use_histroy"))
   }
+
+  test("a repeated key or a second document is a parse error, not a dropped declaration") {
+    Seq("""{"suite": "s.json", "use_history": true, "use_history": false}""" -> false,
+        "suite: s.json\nuse_history: true\nuse_history: false\n" -> true,
+        """{"suite": "s.json"} {"use_history": true}""" -> false,
+        "suite: s.json\n---\nuse_history: true\n" -> true
+    ).foreach { case (doc, yaml) =>
+      intercept[com.fasterxml.jackson.core.JsonProcessingException](
+        Checkpoint.parse(doc, yaml))
+    }
+  }
 }

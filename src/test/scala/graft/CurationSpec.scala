@@ -376,15 +376,15 @@ class CurationSpec extends SparkSpec {
   test("recipe file drives the funnel: inline parity, loud rejections, rich fields") {
     import graft.ext.CurationRecipe
     // The checked-in recipe is exactly the base config, and the funnel
-    // it drives is row-identical to the inline one. File-path and
-    // classpath loaders must agree on the same bytes (the registered
-    // query uses the classpath form — cwd-independent).
+    // it drives is row-identical to the inline one. A file path and the
+    // classpath fallback must agree on the same bytes (the registered
+    // query loads the classpath copy — cwd-independent).
     val fromFile = Curation.funnel(docs, bench,
       CurationRecipe.load(
         "src/main/resources/recipes/base_curation.json")).collect().head
     val inline = Curation.funnel(docs, bench, cfg).collect().head
     assert(fromFile.toSeq == inline.toSeq)
-    assert(CurationRecipe.loadResource("recipes/base_curation.json") ==
+    assert(CurationRecipe.load("recipes/base_curation.json") ==
       CurationRecipe.load("src/main/resources/recipes/base_curation.json"))
     // A typo must not silently run the default recipe.
     intercept[IllegalArgumentException](

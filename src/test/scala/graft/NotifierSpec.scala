@@ -8,8 +8,9 @@ import graft.model.FailureReport
 import graft.pipeline.Pipeline
 import graft.sink.{Notifier, Notifiers}
 
-/** V4 alert fan-out: JSON envelope shape, file sink, fan-out isolation,
-  * and the E2E wiring through the pipeline failure path. */
+/** V4 alert fan-out: JSON envelope shape, file sink, fan-out isolation
+  * and failure reporting, and the E2E wiring through the pipeline
+  * failure path. */
 class NotifierSpec extends SparkSpec {
 
   private val report = FailureReport(
@@ -55,7 +56,20 @@ class NotifierSpec extends SparkSpec {
     val seen = mutable.Buffer[String]()
     val boom: Notifier = _ => throw new RuntimeException("sink down")
     val ok: Notifier = r => seen += r.runId
-    Notifiers.FanOut(Seq(boom, ok)).notify(report)
+    val e = intercept[RuntimeException](Notifiers.FanOut(Seq(boom, ok)).notify(report))
+    assert(e.getMessage == "sink down")
+    assert(seen.toSeq == Seq("run-42"))
+  }
+
+  test("FanOut reports every failing sink: the first thrown, the rest suppressed") {
+    val seen = mutable.Buffer[String]()
+    val down: Notifier = _ => throw new RuntimeException("pager down")
+    val ok: Notifier = r => seen += r.runId
+    val full: Notifier = _ => throw new java.io.IOException("disk full")
+    val e = intercept[RuntimeException](
+      Notifiers.FanOut(Seq(down, ok, full)).notify(report))
+    assert(e.getMessage == "pager down")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("disk full"))
     assert(seen.toSeq == Seq("run-42"))
   }
 

@@ -119,7 +119,7 @@ class QualityScoreSpec extends SparkSpec {
     assert(y.weights == QualityScore.Weights(bias = 0L, stop = 2000L,
       alpha = 1000L, punct = 0L, meanTokLen = 0L))
     // Loud failures: missing thresholds, oversized weights, hi < lo,
-    // non-integer weights.
+    // non-integer weights, misspelt weights.
     intercept[IllegalArgumentException](
       QualityScore.parseConfig("""{ "weights": { "stop": 1 } }"""))
     intercept[IllegalArgumentException](QualityScore.parseConfig(
@@ -128,6 +128,10 @@ class QualityScoreSpec extends SparkSpec {
       """{ "thresholds": { "hi": 1, "lo": 2 } }"""))
     intercept[IllegalArgumentException](QualityScore.parseConfig(
       """{ "weights": { "stop": 1.5 }, "thresholds": { "hi": 1, "lo": 0 } }"""))
+    // A misspelt weight is not a zero coefficient.
+    val typo = intercept[IllegalArgumentException](QualityScore.parseConfig(
+      """{ "weights": { "stopp": 900 }, "thresholds": { "hi": 1, "lo": 0 } }"""))
+    assert(typo.getMessage.contains("weights.stopp"), typo.getMessage)
     // File loading picks the format by extension.
     val dir = java.nio.file.Paths.get(Files.tmp("graft-scorer-cfg"))
     val jf = dir.resolve("w.json"); java.nio.file.Files.writeString(jf, json)

@@ -8,8 +8,7 @@ import graft.stream.StreamingQuality
 class StreamingQualitySpec extends SparkSpec {
 
   private val ddl = "doc_id BIGINT, text STRING"
-  private val cfg =
-    QualityScore.loadResourceConfig("recipes/quality_scorer.json")
+  private val cfg = QualityScore.loadConfig("recipes/quality_scorer.json")
 
   test("the shipped scorer config loads with the non-default weights " +
        "and provably diverges from the code defaults") {

@@ -69,6 +69,31 @@ class SuiteLoaderSpec extends SparkSpec {
       """{"tables":[{"table":"t","expectations":[
         |  {"type":"expect_column_values_to_not_be_null","kwargs":{}}]}]}""".stripMargin
     intercept[IllegalArgumentException](SuiteLoader.parse(noColumn))
+    // Mistyped values and misspelt keys are rejected with the key's
+    // path, never coerced or defaulted.
+    def table(expectations: String) =
+      s"""{"tables":[{"table":"t","expectations":[$expectations]}]}"""
+    Seq(
+      table("""{"type":"expect_column_values_to_be_between",
+              |  "kwargs":{"column":"v","min_value":"abc"}}""".stripMargin) ->
+        "kwargs.min_value must be a number",
+      table("""{"type":"expect_table_row_count_to_be_between",
+              |  "kwargs":{"min_value":2.5}}""".stripMargin) ->
+        "kwargs.min_value must be an integer",
+      table("""{"type":"expect_column_unique_value_count_to_be_between",
+              |  "kwargs":{"column":"c","max_value":10,"approx":"yes"}}""".stripMargin) ->
+        "kwargs.approx must be a boolean",
+      table("""{"type":"expect_column_values_to_be_between",
+              |  "kwargs":{"column":"v","min_vale":0.0}}""".stripMargin) ->
+        "kwargs.min_vale",
+      """{"tables":[{"table":"t","expectation":[
+        |  {"type":"expect_column_values_to_not_be_null",
+        |   "kwargs":{"column":"c"}}]}]}""".stripMargin ->
+        "present here: table, expectation"
+    ).foreach { case (doc, offending) =>
+      val e = intercept[IllegalArgumentException](SuiteLoader.parse(doc))
+      assert(e.getMessage.contains(offending), e.getMessage)
+    }
   }
 
   test("drift expectations resolve against store history at bind time") {
