@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
@@ -57,19 +58,25 @@ object Decl {
     * exists, from the classpath (leading slash optional): files that
     * ship with the engine load whatever the caller's working directory
     * is. The suffix picks the format, `.yaml`/`.yml` YAML and anything
-    * else JSON. */
-  def load[A](path: String)(read: Node => A): A = {
-    val p = Paths.get(path)
-    val text =
-      if (Files.exists(p)) Files.readString(p)
-      else {
-        val in = getClass.getClassLoader.getResourceAsStream(path.stripPrefix("/"))
-        require(in != null, s"file not found on disk or classpath: $path")
-        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      }
-    parse(text, path.endsWith(".yaml") || path.endsWith(".yml"))(read)
-  }
+    * else JSON. Every failure to find, read, parse or type the file is
+    * an IllegalArgumentException whose message starts with `path`: a
+    * suite loaded from a checkpoint, or a Jackson error (which prints
+    * `Source: REDACTED`), would otherwise not say which file is bad. */
+  def load[A](path: String)(read: Node => A): A =
+    try {
+      val p = Paths.get(path)
+      val text =
+        if (Files.exists(p)) Files.readString(p)
+        else {
+          val in = getClass.getClassLoader.getResourceAsStream(path.stripPrefix("/"))
+          require(in != null, "not found on disk or classpath")
+          try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+          finally in.close()
+        }
+      parse(text, path.endsWith(".yaml") || path.endsWith(".yml"))(read)
+    } catch {
+      case NonFatal(e) => throw new IllegalArgumentException(s"$path: ${e.getMessage}", e)
+    }
 
   /** A typed read of one value: `(value, its path)` to the value or an
     * IllegalArgumentException naming the path. */

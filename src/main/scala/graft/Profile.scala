@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -7,6 +8,10 @@ import scala.collection.mutable
   * warm then once timed, and prints a per-JOB and per-STAGE wall/task
   * breakdown from a [[SparkListener]] — the event-log profile the
   * optimization rounds cite, without hand-parsing JSON event logs.
+  * Beside the job count it prints the timed pass's Janino compiles (the
+  * warm pass already compiled the query's classes, so these are classes
+  * the generated-code cache evicted, or code that differs between the
+  * passes; see [[Sessions.CodegenCacheEntries]]).
   * Never part of the bench or verify contracts; output is a diagnostic
   * table on stdout.
   */
@@ -69,13 +74,15 @@ object Profile {
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       spark.catalog.clearCache()
       collector.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       // Let straggler listener events drain before reading the tables.
       Thread.sleep(500)
       println(f"%n========== $name: wall $wall%.3f s, " +
-        f"${collector.jobs.size} jobs ==========")
+        f"${collector.jobs.size} jobs, $compiles Janino compiles ==========")
       collector.jobs.sortBy(-_.wallMs).foreach { j =>
         println(f"  job ${j.jobId}%4d ${j.wallMs}%6d ms  ${j.desc.take(90)}")
         j.stages.flatMap(collector.stages.get).sortBy(-_.wallMs).take(4)

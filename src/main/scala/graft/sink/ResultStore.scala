@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.ValidationSuiteResult
 
@@ -16,6 +17,20 @@ import graft.model.ValidationSuiteResult
   */
 object ResultStore {
 
+  /** The store's columns, as [[toDF]] writes them. [[read]] reads with
+    * it: partition inference would type `run_id` from the directory names
+    * (run ids "0042" and "0043" came back as the integers 42 and 43) and
+    * run a schema-inference Spark job on every read. */
+  val schema: StructType = StructType(Seq(
+    StructField("run_id", StringType),
+    StructField("validation_name", StringType),
+    StructField("status", StringType),
+    StructField("message", StringType),
+    StructField("element_count", LongType),
+    StructField("unexpected_count", LongType),
+    StructField("unexpected_percent", DoubleType),
+    StructField("partial_unexpected_list", ArrayType(StringType))))
+
   /** A suite result as a DataFrame (one row per check), stamped with the
     * run id so successive runs append into a queryable history. */
   def toDF(spark: SparkSession, suite: ValidationSuiteResult,
@@ -25,9 +40,7 @@ object ResultStore {
       .map(r => (runId, r.validationName, r.status, r.message,
         r.elementCount, r.unexpectedCount, r.unexpectedPercent,
         r.partialUnexpectedList))
-      .toDF("run_id", "validation_name", "status", "message",
-        "element_count", "unexpected_count", "unexpected_percent",
-        "partial_unexpected_list")
+      .toDF(schema.fieldNames.toIndexedSeq: _*)
   }
 
   /** Append the suite result into the store, partitioned by run —
@@ -37,9 +50,10 @@ object ResultStore {
     toDF(spark, suite, runId)
       .write.mode(SaveMode.Append).partitionBy("run_id").parquet(dir)
 
-  /** Read the store back (all runs, or one). */
+  /** Read the store back (all runs, or one), with [[schema]]; `run_id`
+    * comes last, as a partition column. */
   def read(spark: SparkSession, dir: String, runId: Option[String] = None): DataFrame = {
-    val all = spark.read.parquet(dir)
+    val all = spark.read.schema(schema).parquet(dir)
     runId.fold(all)(id => all.filter(col("run_id") === id))
   }
 

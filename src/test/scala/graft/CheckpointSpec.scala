@@ -122,4 +122,30 @@ class CheckpointSpec extends SparkSpec {
         Checkpoint.parse(doc, yaml))
     }
   }
+
+  test("a bad file on disk fails with its path in the message") {
+    val dir = tmp
+    def file(name: String, text: String) = {
+      val p = java.nio.file.Paths.get(dir, name)
+      java.nio.file.Files.writeString(p, text)
+      p.toString
+    }
+    // A mistyped kwarg in a suite that a checkpoint loads.
+    val suite = file("bad_suite.json",
+      """{"tables":[{"table":"orders","expectations":[
+        |  {"type":"expect_column_values_to_be_between",
+        |   "kwargs":{"column":"o_totalprice","min_value":"abc"}}]}]}""".stripMargin)
+    val spec = Checkpoint.load(file("ckpt.json", s"""{"suite": "$suite"}"""))
+    val typed = intercept[IllegalArgumentException](
+      Checkpoint.run(spark, sfDir, spec, s"$dir/store", "r1"))
+    assert(typed.getMessage.startsWith(suite), typed.getMessage)
+    assert(typed.getMessage.contains("kwargs.min_value must be a number"))
+    // Syntax errors, JSON and YAML.
+    Seq(file("broken.json", """{"suite": "s.json",}"""),
+        file("broken.yaml", "suite: [s.json\n")).foreach { path =>
+      val e = intercept[IllegalArgumentException](Checkpoint.load(path))
+      assert(e.getMessage.startsWith(path), e.getMessage)
+      assert(e.getCause.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException])
+    }
+  }
 }

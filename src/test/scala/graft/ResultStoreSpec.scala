@@ -35,6 +35,20 @@ class ResultStoreSpec extends SparkSpec {
     assert(plan.contains("run-1") || plan.contains("PartitionFilters"))
   }
 
+  test("run ids keep their string form, leading zeros included") {
+    val dir = JFiles.createTempDirectory("graft-store").toString + "/store"
+    ResultStore.write(spark, suite(bad = true), dir, "0042")
+    ResultStore.write(spark, suite(bad = false), dir, "0043")
+    val all = ResultStore.read(spark, dir)
+    assert(all.schema("run_id").dataType == org.apache.spark.sql.types.StringType)
+    def runIds(df: org.apache.spark.sql.DataFrame) =
+      df.select("run_id").distinct().collect().map(_.getString(0)).sorted.toSeq
+    assert(runIds(all) == Seq("0042", "0043"))
+    val r42 = ResultStore.read(spark, dir, Some("0042"))
+    assert(runIds(r42) == Seq("0042"))
+    assert(r42.filter("status = 'FAILED'").count() == 1)
+  }
+
   test("data docs render the summary table") {
     val md = ResultStore.renderDocs(suite(bad = true), "run-9")
     assert(md.contains("**Overall: FAILED** — 1/2 passed"))
