@@ -53,27 +53,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = Sessions.local(cpus)
-
-    // Optional args = subset of query names (focused measurement while
+    // Optional args = subset of lane names (focused measurement while
     // iterating on one operator); default = the full registry. Unknown
     // names fail fast — a typo must not silently time zero queries and
     // (with SPARK_GRAFT_BENCH_OUT set) overwrite the output with an
     // empty result.
-    val unknown = args.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.mkString(", ")} — known: " +
-        SparkEntry.queries.keySet.toSeq.sorted.mkString(", "))
-    val wanted: String => Boolean =
-      if (args.isEmpty) _ => true else args.toSet
-    val queries = SparkEntry.queries.toSeq.filter(q => wanted(q._1)).sortBy(_._1)
+    val lanes = Lanes.select(args.toSeq).sortBy(_.name)
+    val cpus = Sessions.cpusFromEnv
+    val spark = Sessions.local(cpus)
 
     // Warm-up: run the whole suite once, discarding timings (JIT, codegen
     // cache, parquet footer cache, broadcast thread pools).
-    queries.foreach { case (_, fn) =>
-      try materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
+    lanes.foreach { lane =>
+      try materialize(lane.build(spark, sfDir)) catch { case _: Throwable => () }
     }
 
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
@@ -113,7 +105,7 @@ object Bench {
     val statStart = procStatSnapshot()
     var errors = List.empty[String]
     var flaky = List.empty[String] // some reps failed, some passed
-    val results = queries.flatMap { case (name, fn) =>
+    val results = lanes.flatMap { case Lane(name, fn, _) =>
       val times = (1 to reps).flatMap { _ =>
         // Operators that persist() intermediates (e.g. fuzzy dedup) would
         // otherwise hit a previous pass's cache via plan-fragment matching

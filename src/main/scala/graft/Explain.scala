@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit main: dumps `explain("formatted")` for every registered
-  * query (or the ones named in args) to stdout or `SPARK_GRAFT_EXPLAIN_OUT`.
+  * lane (or the ones named in args; an unknown name fails) to stdout or
+  * `SPARK_GRAFT_EXPLAIN_OUT`.
   * Used to audit the physical plans — PushedAggregation/PushedFilters on
   * scans, broadcast vs shuffle join sides, WholeStageCodegen spans —
   * after every operator change.
@@ -16,20 +17,15 @@ import java.nio.file.{Files, Paths}
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val lanes = Lanes.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Sessions.local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors()))
-    val wanted = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
+    val spark = Sessions.local(Sessions.cpusFromEnv)
     val out = new StringBuilder
-    wanted.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          out.append(s"\n===================== $name =====================\n")
-          try out.append(Pin.lazily(fn(spark, sfDir)).queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode))
-          catch { case e: Throwable => out.append(s"FAILED TO PLAN: ${e.getMessage}\n") }
-        case None => out.append(s"\n===== $name: no such query =====\n")
-      }
+    (if (args.isEmpty) lanes.sortBy(_.name) else lanes).foreach { lane =>
+      out.append(s"\n===================== ${lane.name} =====================\n")
+      try out.append(Pin.lazily(lane.build(spark, sfDir)).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
+      catch { case e: Throwable => out.append(s"FAILED TO PLAN: ${e.getMessage}\n") }
     }
     sys.env.get("SPARK_GRAFT_EXPLAIN_OUT") match {
       case Some(p) => Files.writeString(Paths.get(p), out.toString)

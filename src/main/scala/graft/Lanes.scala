@@ -1,8 +1,55 @@
 package graft
 
-/** DuckDB-runnable ANSI SQL oracles, one per [[Queries]] entry (driver
-  * contract: column names and rounding match the Spark side exactly). */
-object Oracles {
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One registered lane: its name, the body that builds its result (in
+  * [[Queries]]), and how the correctness gate checks that result. */
+final case class Lane(name: String, build: (SparkSession, String) => DataFrame,
+    check: LaneCheck)
+
+sealed trait LaneCheck
+
+/** DuckDB-runnable ANSI SQL over the same parquet tables; the
+  * correctness gate hash-compares its result with the lane's (column
+  * names and rounding match the Spark side exactly). */
+final case class Oracle(sql: String) extends LaneCheck
+
+/** No oracle: the lane's output cannot be replayed in DuckDB (a
+  * randomized family, or a computation DuckDB lacks), so the
+  * correctness gate checks only rows > 0. `twin` is the oracle-checked
+  * lane that runs the same code on a planted or deterministic input. */
+final case class RowsOnly(twin: String) extends LaneCheck
+
+/** The lane registry: every lane declared once in [[all]], with its
+  * oracle SQL or its rows-only twin. [[SparkEntry.queries]] and
+  * [[SparkEntry.oracleSql]] are views of it. */
+object Lanes {
+
+  /** `lanes` unchanged, once each name is unique and each rows-only
+    * lane's twin is a registered oracle-checked lane; otherwise fails
+    * naming the lane. */
+  def checked(lanes: Seq[Lane]): Seq[Lane] = {
+    val names = lanes.map(_.name)
+    val twice = names.diff(names.distinct).distinct
+    require(twice.isEmpty, s"lane(s) registered more than once: ${twice.mkString(", ")}")
+    val checks = lanes.map(l => l.name -> l.check).toMap
+    for (Lane(name, _, RowsOnly(twin)) <- lanes) {
+      require(checks.contains(twin),
+        s"rows-only lane $name: twin $twin is not registered")
+      require(checks(twin).isInstanceOf[Oracle],
+        s"rows-only lane $name: twin $twin is rows-only too")
+    }
+    lanes
+  }
+
+  /** The lanes named, each once in the order given, or every lane when
+    * `names` is empty. An unknown name fails, naming it: a misspelt
+    * name must not make a main run, dump or time nothing and exit 0. */
+  def select(names: Seq[String]): Seq[Lane] = {
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, s"unknown lane name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else names.distinct.map(byName)
+  }
 
   private def inList(vs: Seq[String]): String =
     vs.map(v => s"'$v'").mkString("(", ",", ")")
@@ -1359,7 +1406,7 @@ object Oracles {
   private val langWColNames: Seq[String] =
     graft.ext.LangTrained.FeatureCols.map(f => s"w_$f")
 
-  /** The X3k SERVING replay (see the x3_lang_trained map comment). */
+  /** The X3k SERVING replay (see the x3_lang_trained lane's comment). */
   private def langTrainedSql: String = {
     val dim = langFeatExprs.size
     val langs = graft.ext.LangTrained.Langs
@@ -2053,51 +2100,51 @@ object Oracles {
       |  FROM pimg i LEFT JOIN pbits b ON i.doc_id = b.doc_id
       |  GROUP BY i.doc_id)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "d1_count" -> "SELECT count(*) AS cnt FROM lineitem",
+  val all: Seq[Lane] = checked(Seq(
+    Lane("d1_count", Queries.d1Count, Oracle("SELECT count(*) AS cnt FROM lineitem")),
 
-    "d2_null_keys" ->
-      "SELECT count(*) AS null_cnt FROM orders WHERE o_custkey IS NULL",
+    Lane("d2_null_keys", Queries.d2NullKeys, Oracle(
+      "SELECT count(*) AS null_cnt FROM orders WHERE o_custkey IS NULL")),
 
-    "d3_distinct" ->
-      "SELECT DISTINCT r_name AS region_name FROM region ORDER BY region_name",
+    Lane("d3_distinct", Queries.d3Distinct, Oracle(
+      "SELECT DISTINCT r_name AS region_name FROM region ORDER BY region_name")),
 
-    "d4_whitelist_violations" ->
+    Lane("d4_whitelist_violations", Queries.d4WhitelistViolations, Oracle(
       s"""SELECT DISTINCT n_name AS region_name
          |FROM nation JOIN region ON n_regionkey = r_regionkey
          |WHERE n_name NOT IN $wl
-         |ORDER BY region_name""".stripMargin,
+         |ORDER BY region_name""".stripMargin)),
 
-    "r1_region_whitelist" ->
+    Lane("r1_region_whitelist", Queries.r1RegionWhitelist, Oracle(
       s"""SELECT DISTINCT coalesce(n_name, '') AS region
          |FROM nation
          |WHERE coalesce(n_name, '') NOT IN $wl
-         |ORDER BY region""".stripMargin,
+         |ORDER BY region""".stripMargin)),
 
-    "r2_nonempty" ->
-      "SELECT count(*) AS record_count, count(*) > 0 AS passed FROM customer",
+    Lane("r2_nonempty", Queries.r2NonEmpty, Oracle(
+      "SELECT count(*) AS record_count, count(*) > 0 AS passed FROM customer")),
 
-    "r3_schema_compliance" ->
+    Lane("r3_schema_compliance", Queries.r3SchemaCompliance, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN event_type IS NULL OR ts IS NULL OR value IS NULL THEN 1 END) AS noncompliant
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "r4_business_rule" ->
+    Lane("r4_business_rule", Queries.r4BusinessRule, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN coalesce(value, 0) < 0 THEN 1 END) AS violations
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "t1_stg_territory" ->
+    Lane("t1_stg_territory", Queries.t1StgTerritory, Oracle(
       """SELECT n_nationkey AS territory_key, trim(n_name) AS region_name, trim(r_name) AS zone_name
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY territory_key""".stripMargin,
+        |ORDER BY territory_key""".stripMargin)),
 
-    "t2_stg_salesperson" ->
+    Lane("t2_stg_salesperson", Queries.t2StgSalesperson, Oracle(
       """SELECT s_suppkey AS salesperson_key, trim(s_name) AS salesperson_name,
         |       CAST(s_nationkey AS BIGINT) AS nation_key, round(s_acctbal, 2) AS acctbal
-        |FROM supplier ORDER BY salesperson_key""".stripMargin,
+        |FROM supplier ORDER BY salesperson_key""".stripMargin)),
 
-    "t3_mart_sales" ->
+    Lane("t3_mart_sales", Queries.t3MartSales, Oracle(
       """SELECT r_name AS region_name, n_name AS nation_name,
         |       count(*) AS line_count,
         |       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
@@ -2108,9 +2155,9 @@ object Oracles {
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey
         |GROUP BY 1, 2
-        |ORDER BY region_name, nation_name""".stripMargin,
+        |ORDER BY region_name, nation_name""".stripMargin)),
 
-    "t3_mart_rollup" ->
+    Lane("t3_mart_rollup", Queries.t3MartRollup, Oracle(
       // The same mart derivation under GROUP BY ROLLUP; the level is
       // the explicit grouping(r)*2 + grouping(n) sum and rolled keys
       // coalesce to the '(all)' sentinel — both engines spell the
@@ -2128,26 +2175,26 @@ object Oracles {
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY grouping_level, region_name, nation_name""".stripMargin,
+        |ORDER BY grouping_level, region_name, nation_name""".stripMargin)),
 
-    "t4_scd2_snapshot" -> scd2SnapshotSql,
+    Lane("t4_scd2_snapshot", Queries.t4Scd2Snapshot, Oracle(scd2SnapshotSql)),
 
-    "s7_stream_scd2" -> scd2SnapshotSql,
+    Lane("s7_stream_scd2", Queries.s7StreamScd2, Oracle(scd2SnapshotSql)),
 
-    "g1_row_counts" -> {
+    Lane("g1_row_counts", Queries.g1RowCounts, Oracle({
       val unions = graft.Tables.all.map(t =>
         s"SELECT '$t' AS table_name, count(*) AS cnt FROM $t")
       unions.mkString("SELECT table_name, cnt FROM (", " UNION ALL ", ") ORDER BY table_name")
-    },
+    })),
 
-    "g2_not_null" ->
+    Lane("g2_not_null", Queries.g2NotNull, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN o_orderkey IS NULL THEN 1 END) AS null_orderkey,
         |       count(CASE WHEN o_custkey IS NULL THEN 1 END) AS null_custkey,
         |       count(CASE WHEN o_orderdate IS NULL THEN 1 END) AS null_orderdate
-        |FROM orders""".stripMargin,
+        |FROM orders""".stripMargin)),
 
-    "g3_in_set" ->
+    Lane("g3_in_set", Queries.g3InSet, Oracle(
       s"""SELECT c.element_count, c.unexpected_count,
          |       round(c.unexpected_count * 100.0 / c.element_count, 4) AS unexpected_percent,
          |       s.unexpected_sample
@@ -2156,66 +2203,66 @@ object Oracles {
          |      FROM customer) c,
          |     (SELECT coalesce(string_agg(seg, ','), '') AS unexpected_sample
          |      FROM (SELECT DISTINCT c_mktsegment AS seg FROM customer
-         |            WHERE c_mktsegment NOT IN $segs ORDER BY 1 LIMIT 20)) s""".stripMargin,
+         |            WHERE c_mktsegment NOT IN $segs ORDER BY 1 LIMIT 20)) s""".stripMargin)),
 
-    "g4_not_in_set" ->
+    Lane("g4_not_in_set", Queries.g4NotInSet, Oracle(
       """SELECT element_count, unexpected_count,
         |       round(unexpected_count * 100.0 / element_count, 4) AS unexpected_percent
         |FROM (SELECT count(*) AS element_count,
         |             count(CASE WHEN o_orderstatus IN ('P') THEN 1 END) AS unexpected_count
-        |      FROM orders)""".stripMargin,
+        |      FROM orders)""".stripMargin)),
 
-    "g5_between" ->
+    Lane("g5_between", Queries.g5Between, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 END) AS qty_out_of_range,
         |       count(CASE WHEN l_discount < 0 OR l_discount > 0.1 THEN 1 END) AS discount_out_of_range
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
 
-    "g6_schema_columns" ->
+    Lane("g6_schema_columns", Queries.g6SchemaColumns, Oracle(
       """SELECT column_name FROM (VALUES
         |  ('l_orderkey'), ('l_partkey'), ('l_suppkey'), ('l_linenumber'),
         |  ('l_quantity'), ('l_extendedprice'), ('l_discount'), ('l_tax'),
         |  ('l_returnflag'), ('l_linestatus'), ('l_shipdate')
-        |) AS t(column_name) ORDER BY column_name""".stripMargin,
+        |) AS t(column_name) ORDER BY column_name""".stripMargin)),
 
-    "g7_unique" ->
+    Lane("g7_unique", Queries.g7Unique, Oracle(
       """SELECT count(CASE WHEN cnt > 1 THEN 1 END) AS dup_keys,
         |       CAST(coalesce(sum(CASE WHEN cnt > 1 THEN cnt END), 0) AS BIGINT) AS dup_rows
-        |FROM (SELECT o_orderkey, count(*) AS cnt FROM orders GROUP BY 1)""".stripMargin,
+        |FROM (SELECT o_orderkey, count(*) AS cnt FROM orders GROUP BY 1)""".stripMargin)),
 
-    "g8_compound_unique" ->
+    Lane("g8_compound_unique", Queries.g8CompoundUnique, Oracle(
       """SELECT count(CASE WHEN cnt > 1 THEN 1 END) AS dup_keys,
         |       CAST(coalesce(sum(CASE WHEN cnt > 1 THEN cnt END), 0) AS BIGINT) AS dup_rows
-        |FROM (SELECT l_orderkey, l_linenumber, count(*) AS cnt FROM lineitem GROUP BY 1, 2)""".stripMargin,
+        |FROM (SELECT l_orderkey, l_linenumber, count(*) AS cnt FROM lineitem GROUP BY 1, 2)""".stripMargin)),
 
-    "g9_regex" ->
+    Lane("g9_regex", Queries.g9Regex, Oracle(
       """SELECT element_count, unexpected_count,
         |       round(unexpected_count * 100.0 / element_count, 4) AS unexpected_percent
         |FROM (SELECT count(*) AS element_count,
         |             count(CASE WHEN NOT regexp_matches(o_orderpriority, '^[1-5]-[A-Z ]+$') THEN 1 END) AS unexpected_count
-        |      FROM orders)""".stripMargin,
+        |      FROM orders)""".stripMargin)),
 
-    "g10_type_cast" ->
+    Lane("g10_type_cast", Queries.g10TypeCast, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN props IS NOT NULL AND TRY_CAST(props AS DOUBLE) IS NULL THEN 1 END) AS props_non_numeric,
         |       count(CASE WHEN user_id IS NOT NULL AND TRY_CAST(user_id AS VARCHAR) IS NULL THEN 1 END) AS user_id_non_string
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "g11_agg_bounds" ->
+    Lane("g11_agg_bounds", Queries.g11AggBounds, Oracle(
       """SELECT count(*) AS element_count,
         |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / count(c_acctbal), 2) AS mean_acctbal,
         |       round(min(c_acctbal), 2) AS min_acctbal,
         |       round(max(c_acctbal), 2) AS max_acctbal
-        |FROM customer""".stripMargin,
+        |FROM customer""".stripMargin)),
 
-    "g12_pair_greater" ->
+    Lane("g12_pair_greater", Queries.g12PairGreater, Oracle(
       """SELECT element_count, unexpected_count,
         |       round(unexpected_count * 100.0 / element_count, 4) AS unexpected_percent
         |FROM (SELECT count(*) AS element_count,
         |             count(CASE WHEN l_extendedprice <= l_quantity THEN 1 END) AS unexpected_count
-        |      FROM lineitem)""".stripMargin,
+        |      FROM lineitem)""".stripMargin)),
 
-    "v2_suite_summary" -> {
+    Lane("v2_suite_summary", Queries.v2SuiteSummary, Oracle({
       // The suite summary re-derived declaratively: each row is one check's
       // (name, status, element_count, unexpected_count) over the T1–T3
       // model outputs, with the deliberately-incomplete whitelist.
@@ -2256,18 +2303,18 @@ object Oracles {
          |               count(CASE WHEN trim(n_name) NOT IN $wl THEN 1 END) AS bad
          |        FROM nation JOIN region ON n_regionkey = r_regionkey)
          |) ORDER BY validation_name""".stripMargin
-    },
+    })),
 
-    "g13_g15_profile" ->
+    Lane("g13_g15_profile", Queries.g13G15Profile, Oracle(
       """SELECT count(*) AS element_count,
         |       count(CASE WHEN length(c_name) < 5 OR length(c_name) > 30 THEN 1 END)
         |         AS name_length_out_of_range,
         |       count(DISTINCT c_mktsegment) AS distinct_segments,
         |       round(quantile_cont(c_acctbal, 0.5), 4) AS median_acctbal,
         |       round(quantile_cont(c_acctbal, 0.95), 4) AS p95_acctbal
-        |FROM customer""".stripMargin,
+        |FROM customer""".stripMargin)),
 
-    "v1_raw_gate" ->
+    Lane("v1_raw_gate", Queries.v1RawGate, Oracle(
       """SELECT * FROM (
         |  SELECT 'raw_nation.not_null:n_nationkey' AS validation_name,
         |         CASE WHEN bad = 0 THEN 'PASSED' ELSE 'FAILED' END AS status,
@@ -2301,21 +2348,21 @@ object Oracles {
         |         CASE WHEN cnt >= 1 THEN 'PASSED' ELSE 'FAILED' END,
         |         cnt, CAST(CASE WHEN cnt >= 1 THEN 0 ELSE 1 END AS BIGINT)
         |  FROM (SELECT count(*) AS cnt FROM supplier)
-        |) ORDER BY validation_name""".stripMargin,
+        |) ORDER BY validation_name""".stripMargin)),
 
-    "x1_exact_dedup" ->
+    Lane("x1_exact_dedup", Queries.x1ExactDedup, Oracle(
       """SELECT doc_id, lang, source, n_chars FROM (
         |  SELECT doc_id, lang, source, n_chars,
         |         row_number() OVER (
         |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
         |           ORDER BY doc_id) AS rn
-        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
+        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
     // Keeper-policy exact dedup: max raw length then min doc_id,
     // replayed as a DESC/ASC window over the planted-padded corpus.
     // coalesce(length,-1) mirrors the Spark side's null-quality floor
     // (any value below every real length is equivalent ordering).
-    "x1_dedup_keepbest" ->
+    Lane("x1_dedup_keepbest", Queries.x1DedupKeepBest, Oracle(
       """WITH corpus AS (
         |  SELECT doc_id, lang, source, n_chars, text FROM documents
         |  UNION ALL
@@ -2329,9 +2376,9 @@ object Oracles {
         |         row_number() OVER (
         |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
         |           ORDER BY coalesce(length(text), -1) DESC, doc_id) AS rn
-        |  FROM corpus) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
+        |  FROM corpus) WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
-    "x1_incremental_dedup" -> incrementalDedupSql,
+    Lane("x1_incremental_dedup", Queries.x1IncrementalDedup, Oracle(incrementalDedupSql)),
 
     // Keeper-policy incremental dedup: the intra-shard keeper is the
     // DESC/ASC window (max raw length, ties min doc_id; coalesce(-1)
@@ -2341,11 +2388,11 @@ object Oracles {
     // winning their intra-shard family, while the +10000 padded
     // plants of docs 300–309 (absent from history) replace their
     // in-shard originals.
-    "x1_keepbest_against" -> keepbestAgainstSql,
+    Lane("x1_keepbest_against", Queries.x1KeepbestAgainst, Oracle(keepbestAgainstSql)),
 
     // The Bloom-gated keeper lane claims result-identity with the plain
     // anti join (no false negatives, positives verified) — same replay.
-    "x1_keepbest_bloom" -> keepbestAgainstSql,
+    Lane("x1_keepbest_bloom", Queries.x1KeepbestBloom, Oracle(keepbestAgainstSql)),
 
     // Planted-copy variants of the randomized-family paths: the corpus
     // is rewritten so distinct docs share ZERO shingles (detection
@@ -2353,24 +2400,28 @@ object Oracles {
     // certain, est. Jaccard exactly 1.0 / Hamming exactly 0) — the
     // survivor/pair set is hash-family-invariant and replayed here from
     // the planted structure (see Queries.uniquifiedDocs).
-    "s3_planted_neardup" ->
+    Lane("s3_planted_neardup", Queries.s3PlantedNeardup, Oracle(
       (uniquifiedCte + plantedShardCte + "\n" +
         """SELECT s.doc_id FROM shard s
           |WHERE NOT EXISTS (SELECT 1 FROM history h WHERE h.utext = s.utext)
-          |ORDER BY doc_id""".stripMargin),
+          |ORDER BY doc_id""".stripMargin))),
 
-    "s4_planted_simhash" ->
+    Lane("s3_stream_neardup", Queries.s3StreamNeardup, RowsOnly("s3_planted_neardup")),
+
+    Lane("s4_planted_simhash", Queries.s4PlantedSimhash, Oracle(
       (uniquifiedCte + plantedShardCte + "\n" +
         """SELECT s.doc_id FROM shard s
           |WHERE NOT EXISTS (SELECT 1 FROM history h WHERE h.utext = s.utext)
-          |ORDER BY doc_id""".stripMargin),
+          |ORDER BY doc_id""".stripMargin))),
+
+    Lane("s4_stream_simhash", Queries.s4StreamSimhash, RowsOnly("s4_planted_simhash")),
 
     // Streaming embedding near-dup drop: fully replayable (no planted
     // twin needed) because identical vectors collide in every band
     // under ANY hyperplane family and verify at cosine exactly 1.0,
     // while the base corpus's pairwise maximum sits far below the 0.95
     // gate — the engine's drop set IS the NOT-EXISTS cosine predicate.
-    "s6_stream_anndrop" ->
+    Lane("s6_stream_anndrop", Queries.s6StreamAnnDrop, Oracle(
       """WITH hist AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings WHERE vec_id < 300),
@@ -2386,39 +2437,43 @@ object Oracles {
         |  WHERE round(list_inner_product(s.v, h.v) /
         |              sqrt(list_inner_product(s.v, s.v)
         |                   * list_inner_product(h.v, h.v)), 4) >= 0.95)
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
-    "x1_minhash_planted" ->
+    Lane("x1_minhash_planted", Queries.x1MinhashPlanted, Oracle(
       (uniquifiedCte + plantedPairCte + "\n" +
         """SELECT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b,
           |       CAST(1.0 AS DOUBLE) AS est_jaccard
           |FROM corpus x JOIN corpus y
           |  ON x.utext = y.utext AND x.doc_id < y.doc_id
-          |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+          |ORDER BY doc_id_a, doc_id_b""".stripMargin))),
 
-    "x1_simhash_planted" ->
+    Lane("x1_minhash_pairs", Queries.x1MinhashPairs, RowsOnly("x1_minhash_planted")),
+
+    Lane("x1_simhash_planted", Queries.x1SimhashPlanted, Oracle(
       (uniquifiedCte + plantedPairCte + "\n" +
         """SELECT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b,
           |       CAST(0 AS INTEGER) AS hamming
           |FROM corpus x JOIN corpus y
           |  ON x.utext = y.utext AND x.doc_id < y.doc_id
-          |ORDER BY doc_id_a, doc_id_b""".stripMargin),
+          |ORDER BY doc_id_a, doc_id_b""".stripMargin))),
+
+    Lane("x1_simhash_pairs", Queries.x1SimhashPairs, RowsOnly("x1_simhash_planted")),
 
     // The Bloom-gated variant must be RESULT-IDENTICAL to the plain
     // anti join for any sketch (no false negatives; positives exactly
     // verified) — same oracle, same hash, by construction.
-    "x1_bloom_dedup" -> incrementalDedupSql,
-    "x17_soft_dedup" -> softDedupSql,
+    Lane("x1_bloom_dedup", Queries.x1BloomDedup, Oracle(incrementalDedupSql)),
+    Lane("x17_soft_dedup", Queries.x17SoftDedup, Oracle(softDedupSql)),
 
     // NOTE on the shared-CTE entries: the blocks are concatenated (never
     // interpolated into a string that later runs .stripMargin — the SQL
     // `||` operator at a line start would be eaten as a margin).
-    "x1_jaccard_pairs" ->
+    Lane("x1_jaccard_pairs", Queries.x1JaccardPairs, Oracle(
       ("WITH " + gram4Ctes + ",\n" + jaccardPairCtes + "\n" +
         """SELECT doc_id_a, doc_id_b, jaccard FROM jpair
-          |WHERE jaccard >= 0.8 ORDER BY doc_id_a, doc_id_b""".stripMargin),
+          |WHERE jaccard >= 0.8 ORDER BY doc_id_a, doc_id_b""".stripMargin))),
 
-    "x1_dedup_groups" ->
+    Lane("x1_dedup_groups", Queries.x1DedupGroups, Oracle(
       // The x1_jaccard pair derivation, then connected components via the
       // recursive reachability CTE: creach accumulates, for every vertex,
       // the labels of all vertices that can reach it along the symmetric
@@ -2427,9 +2482,9 @@ object Oracles {
       ("WITH RECURSIVE " + gram4Ctes + ",\n" + jaccardPairCtes + ",\n" +
         componentCtes + "\n" +
         """SELECT id AS doc_id, min(lbl) AS cluster_id, min(lbl) = id AS keep
-          |FROM creach GROUP BY id ORDER BY doc_id""".stripMargin),
+          |FROM creach GROUP BY id ORDER BY doc_id""".stripMargin))),
 
-    "x1_span_dedup" ->
+    Lane("x1_span_dedup", Queries.x1SpanDedup, Oracle(
       // Token-block spans replayed: 0-based block pos = (ord-1)/8 over
       // the normalized token stream, span = the block's tokens re-joined.
       // keep iff the span is corpus-unique, OR this is its first
@@ -2459,9 +2514,9 @@ object Oracles {
         |       count(CASE WHEN NOT kept THEN 1 END) AS n_dropped,
         |       md5(coalesce(string_agg(CASE WHEN kept THEN span END, ' ' ORDER BY pos),
         |                    '')) AS text_md5
-        |FROM flagged GROUP BY 1 ORDER BY doc_id""".stripMargin,
+        |FROM flagged GROUP BY 1 ORDER BY doc_id""".stripMargin)),
 
-    "x1_substring_dedup" ->
+    Lane("x1_substring_dedup", Queries.x1SubstringDedup, Oracle(
       // Stride-1 overlapping 8-token windows over the normalized stream:
       // a window repeated corpus-wide keeps only its first (doc_id, pos)
       // occurrence; a TOKEN drops iff some covered (repeated, non-first)
@@ -2511,9 +2566,9 @@ object Oracles {
         |       -- coalesce: array_to_string of a fully-dropped doc's empty
         |       -- kept list is NULL; Spark's concat_ws is ''.
         |       md5(coalesce(array_to_string(kept, ' '), '')) AS text_md5
-        |FROM k ORDER BY doc_id""".stripMargin,
+        |FROM k ORDER BY doc_id""".stripMargin)),
 
-    "x1_embed_neardup" ->
+    Lane("x1_embed_neardup", Queries.x1EmbedNearDup, Oracle(
       """WITH corpus AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         |  UNION ALL
@@ -2526,9 +2581,9 @@ object Oracles {
         |               sqrt(list_inner_product(a.v, a.v) * list_inner_product(b.v, b.v)), 4)
         |           AS cosine_sim
         |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id)
-        |WHERE cosine_sim >= 0.95 ORDER BY vec_id_a, vec_id_b""".stripMargin,
+        |WHERE cosine_sim >= 0.95 ORDER BY vec_id_a, vec_id_b""".stripMargin)),
 
-    "x2_semdedup" ->
+    Lane("x2_semdedup", Queries.x2SemDedup, Oracle(
       // Brute-force pairs >= 0.95 over the planted-copy corpus (the
       // x1_embed_neardup derivation) + recursive component resolution.
       // Valid against the k-means path because identical vectors share a
@@ -2552,9 +2607,9 @@ object Oracles {
         |  UNION
         |  SELECT e.dst, r.lbl FROM ereach r JOIN eedges e ON e.src = r.id)
         |SELECT id, min(lbl) AS cluster_id, min(lbl) = id AS keep
-        |FROM ereach GROUP BY id ORDER BY id""".stripMargin,
+        |FROM ereach GROUP BY id ORDER BY id""".stripMargin)),
 
-    "x2_quant_topk" ->
+    Lane("x2_quant_topk", Queries.x2QuantTopk, Oracle(
       // Symmetric int8 quantization replayed in SQL: scale = max|x|/127,
       // q = round(x/scale) — all double arithmetic in the same order as
       // the Spark side, so the quantized vectors and ranking match
@@ -2577,9 +2632,9 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM s) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    "x2_centroid_outliers" ->
+    Lane("x2_centroid_outliers", Queries.x2CentroidOutliers, Oracle(
       // Quantization (the shared X2d double-arithmetic scheme), the
       // per-(label, dim) integer census, the rational-centroid
       // distance numerator, and ONE plain window over the same
@@ -2611,7 +2666,7 @@ object Oracles {
         |               AS rank_in_group
         |      FROM dd)
         |WHERE rank_in_group <= 5
-        |ORDER BY label, rank_in_group""".stripMargin,
+        |ORDER BY label, rank_in_group""".stripMargin)),
 
     // The PQ planted twin replayed in closed form: the constructed
     // corpus's sub-vector (vec_id + m) % 4 IS codeword p of an
@@ -2621,7 +2676,7 @@ object Oracles {
     // total order, self excluded. The SAME oracle serves the IVF-PQ
     // planted lane: with nProbe = k every inverted list is probed, so
     // the composed path is mathematically the exhaustive ADC scan.
-    "x2_pq_planted" ->
+    Lane("x2_pq_planted", Queries.x2PqPlanted, Oracle(
       """WITH ids AS (SELECT vec_id FROM embeddings),
         |q AS (SELECT vec_id AS query_id FROM ids WHERE vec_id < 5),
         |grid AS (SELECT m, j
@@ -2639,9 +2694,11 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS adc_score,
         |         CAST(row_number() OVER (PARTITION BY query_id
         |           ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
-        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    "x2_ivfpq_planted" ->
+    Lane("x2_pq_topk", Queries.x2PqTopk, RowsOnly("x2_pq_planted")),
+
+    Lane("x2_ivfpq_planted", Queries.x2IvfpqPlanted, Oracle(
       // The x2_pq_planted replay with the IVFADC decomposition folded
       // back together: corpus vector = 100-hot coarse block (dims 0-3
       // for even ids, 4-7 for odd — cell i = 2m+j is in the low block
@@ -2670,9 +2727,11 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS adc_score,
         |         CAST(row_number() OVER (PARTITION BY query_id
         |           ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
-        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    "x2_topk_cosine" ->
+    Lane("x2_ivfpq_topk", Queries.x2IvfpqTopk, RowsOnly("x2_ivfpq_planted")),
+
+    Lane("x2_topk_cosine", Queries.x2TopkCosine, Oracle(
       """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
@@ -2685,9 +2744,9 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM s) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    "x2_hard_negatives" ->
+    Lane("x2_hard_negatives", Queries.x2HardNegatives, Oracle(
       // The banded top-k replayed: same cosine/6-dp/tiebreak discipline
       // as x2_topk_cosine, with the [0, 0.95] band applied to the
       // ROUNDED sim before the window — the engine filters before its
@@ -2705,9 +2764,9 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM b) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM b) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    "x2_mrl_topk" ->
+    Lane("x2_mrl_topk", Queries.x2MrlTopk, Oracle(
       // BOTH stages replayed: candidate ranking on the 16-component
       // prefix (6-dp rounded sim, id tiebreak — the engine's ranking
       // discipline), top-20 candidates per query, then the exact
@@ -2739,13 +2798,13 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s2) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |  FROM s2) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
     // Planted ANN/IVF twins: queries are byte-identical copies of corpus
     // vectors 0-9 re-keyed past max(vec_id), so the true top-1 (the
     // source vector at cosine exactly 1.0) survives ANY hyperplane
     // family / centroid seed and a brute-force replay is a real oracle.
-    "x2_ann_planted" ->
+    Lane("x2_ann_planted", Queries.x2AnnPlanted, Oracle(
       """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
         |                  CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 10),
@@ -2759,12 +2818,15 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin,
+        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
+
+    // (x2_ann_against also probes the saved index under the oracle)
+    Lane("x2_ann_topk", Queries.x2AnnTopk, RowsOnly("x2_ann_planted")),
 
     // Same planted fixture probed through the SAVED LSH band index
     // (saveBands → annTopKAgainst): byte-identical vectors reproduce
     // the saved signatures, so the same brute-force rank-1 replay holds.
-    "x2_ann_against" ->
+    Lane("x2_ann_against", Queries.x2AnnAgainst, Oracle(
       """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
         |                  CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 10),
@@ -2778,12 +2840,12 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin,
+        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
 
     // Same planted fixture probed through the SAVED index
     // (save → load → topKAgainst): byte-identical vectors make rank-1
     // invariant to the round trip, so the same brute-force replay holds.
-    "x2_ivf_against" ->
+    Lane("x2_ivf_against", Queries.x2IvfAgainst, Oracle(
       """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
         |                  CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 10),
@@ -2797,9 +2859,9 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin,
+        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
 
-    "x2_ivf_planted" ->
+    Lane("x2_ivf_planted", Queries.x2IvfPlanted, Oracle(
       """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
         |                  CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 10),
@@ -2813,14 +2875,17 @@ object Oracles {
         |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
         |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin,
+        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
 
-    "x3_top_tokens" ->
+    // (x2_ivf_against also probes the saved index under the oracle)
+    Lane("x2_ivf_topk", Queries.x2IvfTopk, RowsOnly("x2_ivf_planted")),
+
+    Lane("x3_top_tokens", Queries.x3TopTokens, Oracle(
       """SELECT tok AS token, count(*) AS cnt
         |FROM (SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents)
-        |GROUP BY 1 ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
+        |GROUP BY 1 ORDER BY cnt DESC, token LIMIT 20""".stripMargin)),
 
-    "x3_quality_by_lang" ->
+    Lane("x3_quality_by_lang", Queries.x3QualityByLang, Oracle(
       """WITH per_doc AS (
         |  SELECT lang, n_chars,
         |         len(string_split_regex(trim(text), '\s+')) AS n_tokens,
@@ -2838,9 +2903,9 @@ object Oracles {
         |       round(CAST(sum(n_tokens) AS DOUBLE) / count(n_tokens), 2) AS avg_tokens,
         |       round(CAST(sum(CAST(mean_token_len AS DECIMAL(24,8))) AS DOUBLE) / count(mean_token_len), 4) AS avg_token_len,
         |       round(CAST(sum(CAST(stopword_ratio AS DECIMAL(24,8))) AS DOUBLE) / count(stopword_ratio), 4) AS avg_stopword_ratio
-        |FROM per_doc GROUP BY 1 ORDER BY lang""".stripMargin,
+        |FROM per_doc GROUP BY 1 ORDER BY lang""".stripMargin)),
 
-    "x3_c4_rules" ->
+    Lane("x3_c4_rules", Queries.x3C4Rules, Oracle(
       // The C4 §2.2 recipe replayed at the string level: per line the
       // whitespace-strip, terminal-punctuation tail, five-word floor,
       // and "javascript" exclusion; per page the brace and blocked-
@@ -2879,9 +2944,9 @@ object Oracles {
         |       CAST(sum(n_sent) AS BIGINT) AS sentences,
         |       CAST(sum(CAST(('0x' || substr(md5(xt), 1, 15)) AS BIGINT)
         |         % 1000000000) AS BIGINT) AS c4_fp_sum
-        |FROM fl GROUP BY source ORDER BY source""".stripMargin),
+        |FROM fl GROUP BY source ORDER BY source""".stripMargin))),
 
-    "x3_gopher_rules" ->
+    Lane("x3_gopher_rules", Queries.x3GopherRules, Oracle(
       // Every rule replayed in integer cross-multiplied form (3·n ≤ Σlen,
       // 10·symbols > chars, 5·dup ≥ bigrams, 10·dup > 3·lines,
       // 5·c₂ > chars / 50·c₃ > 9·chars / 25·c₄ > 4·chars) — no float
@@ -3076,25 +3141,25 @@ object Oracles {
         |                   AND $dupNotPass
         |                   THEN 1 END) AS n_pass
         |FROM f GROUP BY 1 ORDER BY lang""".stripMargin
-      },
+      })),
 
-    "x3_fingerprints" ->
+    Lane("x3_fingerprints", Queries.x3Fingerprints, Oracle(
       """SELECT source, count(*) AS n_docs,
         |       count(DISTINCT fp) AS distinct_fp,
         |       min(fp) AS min_fp, max(fp) AS max_fp
         |FROM (SELECT source,
         |             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp
         |      FROM documents)
-        |GROUP BY 1 ORDER BY source""".stripMargin,
+        |GROUP BY 1 ORDER BY source""".stripMargin)),
 
-    "x3_token_counts" ->
+    Lane("x3_token_counts", Queries.x3TokenCounts, Oracle(
       """SELECT lang, count(*) AS n_docs,
         |       CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS ws_tokens,
         |       CAST(sum(len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+'))) AS BIGINT) AS bpe_tokens,
         |       round(avg(len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+'))), 2) AS avg_bpe_tokens
-        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin)),
 
-    "x14_url_stage" ->
+    Lane("x14_url_stage", Queries.x14UrlStage, Oracle(
       // The URL stage re-derived: same (source, doc_id)-residue URL
       // construction, then an INDEPENDENT canonicalization restatement
       // (strpos/substr for the query split where the engine uses an
@@ -3124,9 +3189,9 @@ object Oracles {
         |            OR dom = 'src7.example.org' OR dom LIKE '%.src7.example.org')
         |         AS is_url_ok,
         |       doc_id = min(doc_id) OVER (PARTITION BY curl) AS is_url_canonical
-        |FROM c ORDER BY doc_id""".stripMargin),
+        |FROM c ORDER BY doc_id""".stripMargin))),
 
-    "x14_domain_cap" ->
+    Lane("x14_domain_cap", Queries.x14DomainCap, Oracle(
       // The per-domain cap replayed over the SAME shared URL-plant CTEs:
       // dom = nowww with ANY port stripped (the blocklist key), cap = a
       // plain window over the (n_chars DESC, doc_id ASC) total order —
@@ -3143,9 +3208,9 @@ object Oracles {
         |  FROM dom d JOIN documents doc USING (doc_id))
         |SELECT dom, rank_in_domain, doc_id, n_chars FROM r
         |WHERE rank_in_domain <= 3
-        |ORDER BY dom, rank_in_domain""".stripMargin),
+        |ORDER BY dom, rank_in_domain""".stripMargin))),
 
-    "s13_stream_quality" ->
+    Lane("s13_stream_quality", Queries.s13StreamQuality, Oracle(
       // The streaming scorer's batch replay with the FILE-LOADED
       // weights (recipes/quality_scorer.json: 1800·stop + 1200·alpha
       // − 900·punct + 120·sum_tok_len; hi/lo = 1670/1560) — the same
@@ -3185,9 +3250,9 @@ object Oracles {
         |SELECT lang, q_band, count(*) AS n_docs,
         |       CAST(sum(ntok) AS BIGINT) AS tokens,
         |       CAST(sum(score_num) AS BIGINT) AS score_num_sum
-        |FROM b GROUP BY 1, 2 ORDER BY lang, q_band""".stripMargin,
+        |FROM b GROUP BY 1, 2 ORDER BY lang, q_band""".stripMargin)),
 
-    "x13_quality_bands" ->
+    Lane("x13_quality_bands", Queries.x13QualityBands, Oracle(
       // The linear scorer replayed with zero float division: band
       // decisions multiply through by the positive denominator
       // n_tokens·n_chars, so `score >= t` becomes the integer
@@ -3227,9 +3292,9 @@ object Oracles {
         |  FROM f)
         |SELECT lang, band, count(*) AS n_docs,
         |       CAST(sum(ntok) AS BIGINT) AS tokens
-        |FROM b GROUP BY 1, 2 ORDER BY lang, band""".stripMargin,
+        |FROM b GROUP BY 1, 2 ORDER BY lang, band""".stripMargin)),
 
-    "x30_perceptron" ->
+    Lane("x30_perceptron", Queries.x30Perceptron, Oracle(
       // Distributed TRAINING replayed bit-for-bit: the batch
       // perceptron's three epochs as chained CTEs over the x13 integer
       // feature definitions — per epoch, every misclassified document
@@ -3296,33 +3361,33 @@ object Oracles {
         |  SELECT 1 AS epoch, * FROM w1
         |  UNION ALL SELECT 2 AS epoch, * FROM w2
         |  UNION ALL SELECT 3 AS epoch, * FROM w3)
-        |ORDER BY epoch""".stripMargin,
+        |ORDER BY epoch""".stripMargin)),
 
-    "x24_bm25_rank" ->
+    Lane("x24_bm25_rank", Queries.x24Bm25Rank, Oracle(
       // BM25 replayed: the ONE micro-nat idf rounding (non-negative
       // form), then pure integer arithmetic — both floor divisions
       // (`div` ≡ `//` for these non-negative operands), the rational
       // avgdl as (dl·n)//ltot inside the saturation denominator, the
       // per-doc contribution sum, and the (score desc, doc_id asc)
       // top-10 window.
-      bm25RankSql,
+      bm25RankSql)),
 
     // The persisted-index probe scores the SAME exact integers (save ->
     // probe == fresh pinned in TfIdfSpec), so it replays the same SQL --
     // the x15_lm_against / x16_dsir_against precedent.
-    "x24_bm25_against" -> bm25RankSql,
+    Lane("x24_bm25_against", Queries.x24Bm25Against, Oracle(bm25RankSql)),
 
     // Merging two disjoint-shard indexes must be indistinguishable from
     // indexing the union fresh — same full-corpus replay again.
-    "x24_bm25_merged" -> bm25RankSql,
+    Lane("x24_bm25_merged", Queries.x24Bm25Merged, Oracle(bm25RankSql)),
 
     // Document removal must leave an artifact INDISTINGUISHABLE from
     // indexing the remainder fresh: the same replay, documents table
     // pre-filtered to the kept set — every idf (df AND N/L) must have
     // shifted exactly as if the removed docs never existed.
-    "x24_bm25_removed" -> bm25RankSqlOn("NOT (doc_id % 7 = 3)"),
+    Lane("x24_bm25_removed", Queries.x24Bm25Removed, Oracle(bm25RankSqlOn("NOT (doc_id % 7 = 3)"))),
 
-    "s8_stream_bm25" ->
+    Lane("s8_stream_bm25", Queries.s8StreamBm25, Oracle(
       // The streaming relevance scorer batch-replayed: idf re-derived
       // from the FIT corpus (docs < 300 — df = distinct containing
       // docs, absent terms df 0), then the same integer per-term
@@ -3375,9 +3440,9 @@ object Oracles {
         |SELECT d.doc_id, coalesce(a.bm25_micro, 0) AS bm25_micro,
         |       CAST(coalesce(a.terms_hit, 0) AS BIGINT) AS terms_hit
         |FROM sdl d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "x19_nfc_dedup" ->
+    Lane("x19_nfc_dedup", Queries.x19NfcDedup, Oracle(
       // NFC-aware dedup replayed WITHOUT computing NFD: NFC(NFD(x)) =
       // NFC(x) is a Unicode invariant, so the decomposed twin (+2e6)
       // shares the composed twin's (+1e6) nfc_normalize family key and
@@ -3404,9 +3469,9 @@ object Oracles {
         |         doc_id = min(doc_id) OVER (PARTITION BY kt) AS keep
         |  FROM k)
         |SELECT doc_id, md5(coalesce(ntext, '')) AS nfc_fp
-        |FROM s WHERE keep ORDER BY doc_id""".stripMargin,
+        |FROM s WHERE keep ORDER BY doc_id""".stripMargin)),
 
-    "x31_kanon" ->
+    Lane("x31_kanon", Queries.x31Kanon, Oracle(
       // The k-anonymity audit replayed as the NAIVE per-group window
       // the census+join formulation avoids. NULL user_id: a real
       // group for counting (window partitions nulls together, like
@@ -3422,9 +3487,9 @@ object Oracles {
         |       count(DISTINCT user_id) AS groups_total,
         |       count(DISTINCT CASE WHEN gs < 10 THEN user_id END)
         |         AS groups_suppressed
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    "x31_ldiversity" ->
+    Lane("x31_ldiversity", Queries.x31LDiversity, Oracle(
       // The l-diversity audit replayed: per-customer distinct-status
       // census, null-safe join back (NULL custkey is a real quasi
       // group for rows_total/rows_kept but excluded from the DISTINCT
@@ -3444,9 +3509,9 @@ object Oracles {
         |       count(DISTINCT o_custkey) AS groups_total,
         |       count(DISTINCT CASE WHEN div < 3 THEN o_custkey END)
         |         AS groups_suppressed
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "x12_upsample" ->
+    Lane("x12_upsample", Queries.x12Upsample, Oracle(
       // The epoch expansion replayed copy for copy: per-source ppm
       // factor (when-chain restated as CASE), whole epochs by integer
       // division, the fractional-epoch keep draw by the SAME salted
@@ -3476,24 +3541,24 @@ object Oracles {
         |       CAST(sum(n_chars) AS BIGINT) AS char_mass,
         |       CAST(sum((doc_id * 1031 + epoch_idx) % 1000000000)
         |            AS BIGINT) AS copy_fp_sum
-        |FROM e GROUP BY source ORDER BY source""").stripMargin,
+        |FROM e GROUP BY source ORDER BY source""").stripMargin)),
 
-    "x16_dsir_weights" ->
+    Lane("x16_dsir_weights", Queries.x16DsirWeights, Oracle(
       ("WITH " + dsirWeightCtes + "\n" +
         """SELECT doc_id, dsir_grams, dsir_logw_micro,
           |       round(CAST(dsir_logw_micro AS DOUBLE) / 1000000, 3) AS dsir_logw
-          |FROM w ORDER BY doc_id""".stripMargin),
+          |FROM w ORDER BY doc_id""".stripMargin))),
 
     // The persisted-model probe scores IDENTICALLY to the fresh fit
     // (integer micro-nat weights; save→load parity pinned by DsirSpec),
     // so the loaded-model query replays the SAME weight derivation.
-    "x16_dsir_against" ->
+    Lane("x16_dsir_against", Queries.x16DsirAgainst, Oracle(
       ("WITH " + dsirWeightCtes + "\n" +
         """SELECT doc_id, dsir_grams, dsir_logw_micro,
           |       round(CAST(dsir_logw_micro AS DOUBLE) / 1000000, 3) AS dsir_logw
-          |FROM w ORDER BY doc_id""".stripMargin),
+          |FROM w ORDER BY doc_id""".stripMargin))),
 
-    "x16_dsir_select" ->
+    Lane("x16_dsir_select", Queries.x16DsirSelect, Oracle(
       // The Gumbel draw replayed: hash64 → (h + 0.5)/2⁶³ uniform →
       // round(1e6·(−ln(−ln u))) integer perturbation → top-100 by the
       // perturbed key (ties by doc_id) → re-sorted on doc_id.
@@ -3508,20 +3573,20 @@ object Oracles {
            |top AS (
            |  SELECT * FROM sel ORDER BY dsir_key_micro DESC, doc_id LIMIT 100)
            |SELECT doc_id, dsir_logw_micro, dsir_key_micro
-           |FROM top ORDER BY doc_id""".stripMargin),
+           |FROM top ORDER BY doc_id""".stripMargin))),
 
-    "x15_lm_ppl" -> lmPplSql,
+    Lane("x15_lm_ppl", Queries.x15LmPpl, Oracle(lmPplSql)),
 
     // The persisted-model probe scores IDENTICALLY to the fresh train
     // (integer micro-nats; save→load parity pinned by NgramLmSpec), so
     // the loaded-model query replays the SAME bigram derivation.
-    "x15_lm_against" -> lmPplSql,
+    Lane("x15_lm_against", Queries.x15LmPplAgainst, Oracle(lmPplSql)),
 
     // The 5-gram KenLM shape (VERDICT r10 next #5): the generated
     // order-n replay with all four backoff levels.
-    "x15_lm_ppl5" -> lmPplSqlN(5),
+    Lane("x15_lm_ppl5", Queries.x15LmPpl5, Oracle(lmPplSqlN(5))),
 
-    "x15_lm_ppl3" ->
+    Lane("x15_lm_ppl3", Queries.x15LmPpl3, Oracle(
       // The trigram stupid-backoff replay: same counts-from-docs<300 /
       // probe-from-docs>=300 shape as x15_lm_ppl one order up, with the
       // TWO-level backoff CASE — trigram hit over its (w1,w2) context
@@ -3597,9 +3662,9 @@ object Oracles {
         |            ELSE 'tail' END AS lm_band
         |FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
         |LEFT JOIN per USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x4_zscore_flags" ->
+    Lane("x4_zscore_flags", Queries.x4ZscoreFlags, Oracle(
       """WITH stats AS (
         |  SELECT event_type,
         |         CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / count(value) AS m,
@@ -3612,16 +3677,16 @@ object Oracles {
         |  SELECT event_id, e.event_type, value,
         |         round((value - m) / sd, 4) AS z
         |  FROM events e JOIN stats USING (event_type))
-        |WHERE abs(z) > 3.0 ORDER BY event_id""".stripMargin,
+        |WHERE abs(z) > 3.0 ORDER BY event_id""".stripMargin)),
 
-    "s1_windowed_checks" ->
+    Lane("s1_windowed_checks", Queries.s1WindowedChecks, Oracle(
       """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
         |       count(*) AS n_rows,
         |       count(CASE WHEN user_id IS NULL THEN 1 END) AS null_user_id,
         |       count(CASE WHEN value < 0 THEN 1 END) AS value_below_zero
-        |FROM events GROUP BY 1 ORDER BY window_start""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY window_start""".stripMargin)),
 
-    "v5_drift_check" ->
+    Lane("v5_drift_check", Queries.v5DriftCheck, Oracle(
       // The drift loop re-derived: baseline run = orders minus keys
       // ≡ 0 mod 10 (~10% shrink → ~11.1% drift vs the full table), so the
       // ±15% check passes and the ±5% check fails. Status compares the
@@ -3643,9 +3708,9 @@ object Oracles {
         |         cur, CAST(CASE WHEN pct <= 5.0 THEN 0 ELSE 1 END AS BIGINT),
         |         round(pct, 4)
         |  FROM p
-        |) ORDER BY validation_name""".stripMargin,
+        |) ORDER BY validation_name""".stripMargin)),
 
-    "x5_frame_sample" ->
+    Lane("x5_frame_sample", Queries.x5FrameSample, Oracle(
       // Frame refs = one per second of duration; duration_ms = n_chars*10,
       // so frames per video doc = max(n_chars // 100 - 1, 0) + 1
       // (sequence(0, greatest(dur/1000 - 1, 0)) inclusive on the Spark
@@ -3655,26 +3720,26 @@ object Oracles {
         |  SELECT doc_id AS media_id,
         |         unnest(range(0, greatest(CAST(n_chars AS BIGINT) // 100 - 1, 0) + 1)) AS frame_idx
         |  FROM documents WHERE doc_id % 3 = 2)
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin)),
 
-    "g16_declarative_suite" ->
+    Lane("g16_declarative_suite", Queries.g16DeclarativeSuite, Oracle(
       // The checked-in suites/testdata_core.json re-derived declaratively:
       // one row per expectation — (qualified name, status, element_count,
       // unexpected_count) — exactly the suite summary the loader+runner
       // emit. The c_mktsegment in-set check deliberately FAILs (MACHINERY
       // is outside the declared set, mirroring the reference's
       // intentionally-excluded whitelist).
-      s"""SELECT * FROM ($testdataCoreSuiteRows) ORDER BY validation_name""",
+      s"""SELECT * FROM ($testdataCoreSuiteRows) ORDER BY validation_name""")),
 
-    "v6_checkpoint_run" ->
+    Lane("v6_checkpoint_run", Queries.v6CheckpointRun, Oracle(
       // The checkpoint persists the same suite results into the store
       // under a fixed run id; the query reads the store back, so the
       // oracle is the g16 derivation plus the run_id column.
       s"""SELECT '2026-01-01T00:00:00Z' AS run_id, *
          |FROM ($testdataCoreSuiteRows)
-         |ORDER BY validation_name""".stripMargin,
+         |ORDER BY validation_name""".stripMargin)),
 
-    "x3_lang_confusion" ->
+    Lane("x3_lang_confusion", Queries.x3LangConfusion, Oracle(
       // The language-ID heuristic replayed in SQL: script-ratio gates
       // (kana → ja at 5%, hangul → ko and han → zh at 30% — most
       // specific first, since ja/ko text contains han), then per-language
@@ -3719,9 +3784,9 @@ object Oracles {
         |         ELSE 'de' END AS predicted
         |  FROM s)
         |SELECT label, predicted, count(*) AS n
-        |FROM p GROUP BY 1, 2 ORDER BY label, predicted""".stripMargin,
+        |FROM p GROUP BY 1, 2 ORDER BY label, predicted""".stripMargin)),
 
-    "x3_lang_train" -> {
+    Lane("x3_lang_train", Queries.x3LangTrain, Oracle({
       // The 4-class one-vs-rest TRAINING replayed bit-for-bit: the
       // shared integer feature CTE, then per class the x30 chained
       // epoch CTEs (w starts at 0 → epoch 1 misclassifies ALL; each
@@ -3742,7 +3807,7 @@ object Oracles {
                     .mkString(",\n       ")}
            |FROM ($unions)
            |ORDER BY lang, epoch""".stripMargin
-    },
+    })),
 
     // The trained model SERVING replayed: the same trajectory CTEs
     // yield the final weights, margins are pure integer dot products
@@ -3753,28 +3818,28 @@ object Oracles {
     // census compares both against the corpus label. ONE definition
     // serves x3_lang_trained AND its streaming batch replay
     // s17_stream_lang (the s14/x42 shared-oracle contract).
-    "x3_lang_trained" -> langTrainedSql,
+    Lane("x3_lang_trained", Queries.x3LangTrained, Oracle(langTrainedSql)),
 
-    "s17_stream_lang" -> langTrainedSql,
+    Lane("s17_stream_lang", Queries.s17StreamLang, Oracle(langTrainedSql)),
 
-    "x11_skew_profile" ->
+    Lane("x11_skew_profile", Queries.x11SkewProfile, Oracle(
       // Top-10 heaviest l_suppkey values with their row share; ties at
       // the cut break by key ascending on both sides.
       """SELECT l_suppkey, cnt, share FROM (
         |  SELECT l_suppkey, count(*) AS cnt,
         |         round(count(*) * 100.0 / (SELECT count(*) FROM lineitem), 3) AS share
         |  FROM lineitem GROUP BY 1)
-        |ORDER BY cnt DESC, l_suppkey LIMIT 10""".stripMargin,
+        |ORDER BY cnt DESC, l_suppkey LIMIT 10""".stripMargin)),
 
-    "x11_salted_join" ->
+    Lane("x11_salted_join", Queries.x11SaltedJoin, Oracle(
       // The PLAIN inner join: equality with the Spark side's salted
       // spray+replicate layout proves salting is result-invisible.
       """SELECT l_suppkey AS s_suppkey, count(*) AS n_lines,
         |       max(s_nationkey) AS nation_key
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY s_suppkey""".stripMargin,
+        |GROUP BY 1 ORDER BY s_suppkey""".stripMargin)),
 
-    "x12_token_mix" ->
+    Lane("x12_token_mix", Queries.x12TokenMix, Oracle(
       // The recipe replayed: per-source token supply, literal targets
       // (budget 3000 × weights .5/.3/.2 on src0/1/2, else 0), keep
       // threshold = floor(least(1, target/supply)·10⁴ + 0.5) — the same
@@ -3812,9 +3877,9 @@ object Oracles {
         |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
         |       CAST(coalesce(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
         |FROM rates r LEFT JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
 
-    "x12_weighted_mix" ->
+    Lane("x12_weighted_mix", Queries.x12WeightedMix, Oracle(
       // Weight-aware mixing replayed end-to-end: the soft-dedup census
       // (window count over the normalized text, floor(10⁶/n) ppm — same
       // planted-shard union as x17_soft_dedup), the micro-token supply
@@ -3862,9 +3927,9 @@ object Oracles {
         |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
         |       CAST(coalesce(k.utokens_kept, 0) AS BIGINT) AS utokens_kept
         |FROM rates r LEFT JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
 
-    "x10_soft_funnel" ->
+    Lane("x10_soft_funnel", Queries.x10SoftFunnel, Oracle(
       // The SOFT-dedup funnel replayed over the planted union: no stage
       // drops documents for exact duplication; instead each doc carries
       // wppm = floor(10⁶ / family size) and the tokens_weighted_* sums
@@ -3952,9 +4017,9 @@ object Oracles {
           |       tokens_weighted_sampled,
           |       CASE WHEN n_tokens = 0 THEN 0
           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin),
+          |FROM f""".stripMargin))),
 
-    "x12_temperature_mix" ->
+    Lane("x12_temperature_mix", Queries.x12TemperatureMix, Oracle(
       // Temperature-0.5 targets replayed exactly: sqrt is IEEE-754
       // correctly rounded in BOTH engines (general pow is not — that is
       // why the registered recipe uses α = 0.5), weights quantize to
@@ -3993,17 +4058,17 @@ object Oracles {
         |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
         |       CAST(coalesce(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
         |FROM rates r LEFT JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
 
-    "x12_training_order" ->
+    Lane("x12_training_order", Queries.x12TrainingOrder, Oracle(
       // The keyed-hash global order replayed (the shared FULL-WIDTH
       // ORDER-grade wrap-mix, order-salted), doc_id tiebreak, first 50.
       s"""SELECT doc_id,
         |       ${orderKeySql("doc_id", 42L ^ graft.ext.Sampling.OrderSalt)} AS shuffle_key
         |FROM documents
-        |ORDER BY shuffle_key, doc_id LIMIT 50""".stripMargin,
+        |ORDER BY shuffle_key, doc_id LIMIT 50""".stripMargin)),
 
-    "s2_stream_dedup" ->
+    Lane("s2_stream_dedup", Queries.s2StreamDedup, Oracle(
       // The batch replay of the streaming dedup: corpus = documents + 5
       // planted exact copies; unique = distinct normalized text (the md5
       // fingerprint is injective up to collision, so counts agree).
@@ -4020,9 +4085,9 @@ object Oracles {
         |             count(DISTINCT norm)
         |               + CASE WHEN count(*) > count(norm) THEN 1 ELSE 0 END AS n_unique
         |      FROM n)
-        |SELECT n_docs, n_unique, n_docs - n_unique AS n_dups FROM u""".stripMargin,
+        |SELECT n_docs, n_unique, n_docs - n_unique AS n_dups FROM u""".stripMargin)),
 
-    "x6_stratified_sample" ->
+    Lane("x6_stratified_sample", Queries.x6StratifiedSample, Oracle(
       // The keyed hash replayed exactly (shared bucketSql — split-key
       // per-half multiply + xor-shift, combining multiply, mod); keep
       // iff bucket < rate*10000 (en 4000, zh 5000, else 10000).
@@ -4036,9 +4101,9 @@ object Oracles {
         |                       WHEN 'zh' THEN 5000
         |                       ELSE 10000 END AS t
         |      FROM documents)
-        |GROUP BY 1 ORDER BY stratum""".stripMargin,
+        |GROUP BY 1 ORDER BY stratum""".stripMargin)),
 
-    "x6_splits" ->
+    Lane("x6_splits", Queries.x6Splits, Oracle(
       // The split when-chain replayed over the shared bucket formula
       // (split-salted seed): cumulative half-up bounds 9800/9900/10000
       // for 98/1/1.
@@ -4049,9 +4114,9 @@ object Oracles {
         |                  ELSE 'holdout' END AS split
         |      FROM (SELECT ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} AS b
         |            FROM documents))
-        |GROUP BY 1 ORDER BY split""".stripMargin,
+        |GROUP BY 1 ORDER BY split""".stripMargin)),
 
-    "x6_sample_then_split" ->
+    Lane("x6_sample_then_split", Queries.x6SampleThenSplit, Oracle(
       // Both hashes replayed: the sample keeps bucket(seed 42) < 5000,
       // the split then bands the SURVIVORS by the split-salted hash —
       // cumulative half-up bounds 8000/9000/10000 for 80/10/10. With one
@@ -4065,9 +4130,9 @@ object Oracles {
         |      FROM (SELECT ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} AS b
         |            FROM documents
         |            WHERE ${bucketSql("doc_id")} < 5000))
-        |GROUP BY 1 ORDER BY split""".stripMargin,
+        |GROUP BY 1 ORDER BY split""".stripMargin)),
 
-    "x6_top_per_stratum" ->
+    Lane("x6_top_per_stratum", Queries.x6TopPerStratum, Oracle(
       // The staged skew-safe top-N proven EXACT: the oracle selects
       // with one plain window over the same TOTAL order (n_chars DESC,
       // doc_id ASC — the unique key makes ties deterministic), so any
@@ -4078,9 +4143,9 @@ object Oracles {
         |           ORDER BY n_chars DESC, doc_id ASC) AS rank_in_group
         |  FROM documents)
         |WHERE rank_in_group <= 5
-        |ORDER BY lang, rank_in_group""".stripMargin,
+        |ORDER BY lang, rank_in_group""".stripMargin)),
 
-    "x6_quota_sample" ->
+    Lane("x6_quota_sample", Queries.x6QuotaSample, Oracle(
       // The exact-quota draw replayed: the ORDER-grade key (hash64 +
       // wrapped-multiply finalizer, the x12 orderKeySql definition)
       // and one plain window over the same (draw DESC, doc_id ASC)
@@ -4094,25 +4159,25 @@ object Oracles {
         |               ${orderKeySql("doc_id", 77L)} AS draw
         |        FROM documents))
         |WHERE rank_in_group <= 20
-        |ORDER BY lang, rank_in_group""".stripMargin,
+        |ORDER BY lang, rank_in_group""".stripMargin)),
 
-    "x8_contamination" -> contaminationSql,
+    Lane("x8_contamination", Queries.x8Contamination, Oracle(contaminationSql)),
 
     // The persisted-benchmark-index probe shares contaminationPairs'
     // scoring tail by construction (ONE containmentFromGrams), so it
     // hash-matches the SAME full replay — index ≡ fresh.
-    "x8_contam_against" -> contaminationSql,
+    Lane("x8_contam_against", Queries.x8ContamAgainst, Oracle(contaminationSql)),
 
     // The streaming gate batch-replayed: survivors = the COMPLEMENT of
     // the same containment CTE (a doc with >= 0.8 of any benchmark's
     // 4-grams drops; null/short docs have no grams and survive).
-    "s10_stream_decontam" ->
+    Lane("s10_stream_decontam", Queries.s10StreamDecontam, Oracle(
       ("WITH " + gram4Ctes + ",\n" + benchGramsRawCtes + "\n" +
         """SELECT doc_id FROM documents
           |WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-          |ORDER BY doc_id""".stripMargin),
+          |ORDER BY doc_id""".stripMargin))),
 
-    "x3_repetition" ->
+    Lane("x3_repetition", Queries.x3Repetition, Oracle(
       // Bigram repetition per language: same normalization + lead-window
       // gram construction as the x1_jaccard oracle (n=2); docs with no
       // bigrams drop out of both sides.
@@ -4135,9 +4200,9 @@ object Oracles {
         |       CAST(sum(total) AS BIGINT) AS grams_total,
         |       CAST(sum(total - dist) AS BIGINT) AS dup_grams,
         |       round(sum(total - dist) * 1.0 / sum(total), 4) AS dup_frac
-        |FROM per GROUP BY 1 ORDER BY lang""".stripMargin,
+        |FROM per GROUP BY 1 ORDER BY lang""".stripMargin)),
 
-    "x10_funnel_by_source" ->
+    Lane("x10_funnel_by_source", Queries.x10FunnelBySource, Oracle(
       // The per-source audit: x10's annotate replay minus the fuzzy
       // stage (no pair frame in the registered config → the flag is
       // constant true and after_fuzzy == after_history), grouped by
@@ -4209,9 +4274,9 @@ object Oracles {
         |       tokens_after_decontam, tokens_after_quality, n_tokens,
         |       CASE WHEN n_tokens = 0 THEN 0
         |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-        |FROM f ORDER BY source""".stripMargin),
+        |FROM f ORDER BY source""".stripMargin))),
 
-    "x10_curation_funnel" ->
+    Lane("x10_curation_funnel", Queries.x10CurationFunnel, Oracle(
       // The annotate-don't-filter funnel replayed: dedup flag = min id
       // per normalized text; fuzzy flag = NOT a non-canonical member of
       // the jaccard-pair components (x1_dedup_groups' recursive CTE);
@@ -4222,9 +4287,9 @@ object Oracles {
       curationFunnelSql("", "documents",
         raw"""doc_id = min(doc_id) OVER (
              |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-             |           AS is_canonical,""".stripMargin),
+             |           AS is_canonical,""".stripMargin))),
 
-    "x10_keepbest_funnel" ->
+    Lane("x10_keepbest_funnel", Queries.x10KeepbestFunnel, Oracle(
       // The same funnel replay over the padded keeper plant
       // (x1_dedup_keepbest's corpus) with the dedup flag switched to
       // the raw-longest keeper window. The fuzzy component resolution
@@ -4242,9 +4307,9 @@ object Oracles {
         raw"""doc_id = first_value(doc_id) OVER (
              |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
              |           ORDER BY coalesce(length(text), -1) DESC, doc_id)
-             |           AS is_canonical,""".stripMargin),
+             |           AS is_canonical,""".stripMargin))),
 
-    "x10_dsir_funnel" ->
+    Lane("x10_dsir_funnel", Queries.x10DsirFunnel, Oracle(
       // The funnel with the X16 Gumbel top-100 replacing the hash
       // sampler: DSIR weights + the deterministic Gumbel draw replayed
       // from dsirWeightCtes (x16_dsir_select's exact CTEs), the
@@ -4338,9 +4403,9 @@ object Oracles {
           |       tokens_after_quality, n_tokens,
           |       CASE WHEN n_tokens = 0 THEN 0
           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin),
+          |FROM f""".stripMargin))),
 
-    "x10_ppl_funnel" ->
+    Lane("x10_ppl_funnel", Queries.x10PplFunnel, Oracle(
       // The ppl-gated funnel (CCNet recipe) replayed end-to-end: the x10
       // stages (no fuzzy pairs, no URL/history — those legs are no-ops
       // here) plus the full x15 LM arithmetic — training counts from RAW
@@ -4456,9 +4521,9 @@ object Oracles {
           |       tokens_after_quality, n_tokens,
           |       CASE WHEN n_tokens = 0 THEN 0
           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin),
+          |FROM f""".stripMargin))),
 
-    "x9_pack_sequences" ->
+    Lane("x9_pack_sequences", Queries.x9PackSequences, Oracle(
       // The two-level prefix sum degenerates to ONE ordered window
       // single-node: start = exclusive cumsum of token counts in doc_id
       // order; spans = the 512-token chunks [start, start+n_tok) crosses.
@@ -4481,9 +4546,9 @@ object Oracles {
         |       greatest(seq_id * 512, start) - start AS begin_tok,
         |       least((seq_id + 1) * 512, start + n_tok) - start AS end_tok,
         |       n_tok
-        |FROM spans ORDER BY doc_id, seq_id""".stripMargin,
+        |FROM spans ORDER BY doc_id, seq_id""".stripMargin)),
 
-    "x9_materialize" ->
+    Lane("x9_materialize", Queries.x9Materialize, Oracle(
       // The pack layout replayed (same CTEs as x9_pack_sequences) and
       // then MATERIALIZED: each span slices its 1-based-inclusive
       // token range, sequences reassemble by string_agg in doc_id
@@ -4514,9 +4579,9 @@ object Oracles {
         |        FROM spans))
         |SELECT seq_id, CAST(sum(ntk) AS BIGINT) AS seq_tok,
         |       md5(string_agg(chunk, ' ' ORDER BY doc_id)) AS seq_md5
-        |FROM sl GROUP BY seq_id ORDER BY seq_id""".stripMargin,
+        |FROM sl GROUP BY seq_id ORDER BY seq_id""".stripMargin)),
 
-    "x9_pack_padded" ->
+    Lane("x9_pack_padded", Queries.x9PackPadded, Oracle(
       // Pad-to-boundary variant: the advance summed by the window is the
       // token count ceil-rounded to whole 512-token sequences, so every
       // document starts on a boundary; spans still cover actual tokens
@@ -4541,9 +4606,9 @@ object Oracles {
         |       greatest(seq_id * 512, start) - start AS begin_tok,
         |       least((seq_id + 1) * 512, start + n_tok) - start AS end_tok,
         |       n_tok
-        |FROM spans ORDER BY doc_id, seq_id""".stripMargin,
+        |FROM spans ORDER BY doc_id, seq_id""".stripMargin)),
 
-    "x7_pii_scan" ->
+    Lane("x7_pii_scan", Queries.x7PiiScan, Oracle(
       // Synthetic PII planted on every 17th doc, replicated verbatim;
       // the same RE2-safe patterns replayed via regexp_extract_all.
       """WITH planted AS (
@@ -4565,9 +4630,9 @@ object Oracles {
         |       CAST(sum(n_email) AS BIGINT) AS n_email,
         |       CAST(sum(n_phone) AS BIGINT) AS n_phone,
         |       CAST(sum(n_ipv4) AS BIGINT) AS n_ipv4
-        |FROM counted GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM counted GROUP BY 1 ORDER BY source""".stripMargin)),
 
-    "x7_card_scan" ->
+    Lane("x7_card_scan", Queries.x7CardScan, Oracle(
       // The card plants replayed arithmetically — the corpus has no
       // digits (engine-checked by the zero candidate count off the
       // plants), so candidates/valid per doc are pure functions of
@@ -4601,9 +4666,9 @@ object Oracles {
         |       COALESCE(CAST(sum(n_valid) AS BIGINT), 0) AS n_valid,
         |       CAST(sum(CAST(('0x' || substr(md5(redacted), 1, 15)) AS BIGINT)
         |            % 1000000000) AS BIGINT) AS redacted_fp_sum
-        |FROM scanned GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM scanned GROUP BY 1 ORDER BY source""".stripMargin)),
 
-    "s11_stream_scrub" ->
+    Lane("s11_stream_scrub", Queries.s11StreamScrub, Oracle(
       // The scrub replayed arithmetically (the x7_card_scan
       // discipline): the corpus has no digits or '@', so every match
       // is a plant — valid cards and the email redact, the invalid
@@ -4646,9 +4711,9 @@ object Oracles {
         |       COALESCE(CAST(sum(n_phone) AS BIGINT), 0) AS n_phone,
         |       CAST(sum(CAST(('0x' || substr(md5(scrubbed), 1, 15)) AS BIGINT)
         |            % 1000000000) AS BIGINT) AS scrubbed_fp_sum
-        |FROM scrub GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM scrub GROUP BY 1 ORDER BY source""".stripMargin)),
 
-    "s18_stream_join" ->
+    Lane("s18_stream_join", Queries.s18StreamJoin, Oracle(
       // The stream-stream interval join replayed as the plain BETWEEN
       // self-join it equals on complete in-order data (closed bounds,
       // the X22 convention); lag in whole seconds via date_diff —
@@ -4659,9 +4724,9 @@ object Oracles {
         |FROM events i JOIN events c ON i.user_id = c.user_id
         |WHERE i.event_type = 'view' AND c.event_type = 'purchase'
         |  AND c.ts >= i.ts AND c.ts <= i.ts + INTERVAL 12 HOUR
-        |ORDER BY imp_id, conv_id""".stripMargin,
+        |ORDER BY imp_id, conv_id""".stripMargin)),
 
-    "s20_stream_outer_join" ->
+    Lane("s20_stream_outer_join", Queries.s20StreamOuterJoin, Oracle(
       // The left-outer interval join replayed as the plain LEFT JOIN
       // BETWEEN it equals on complete in-order data: unmatched
       // impressions null-extended. Within an imp_id a null conv_id
@@ -4675,9 +4740,9 @@ object Oracles {
         |LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') c
         |  ON i.user_id = c.user_id
         | AND c.ts >= i.ts AND c.ts <= i.ts + INTERVAL 12 HOUR
-        |ORDER BY imp_id, conv_id""".stripMargin,
+        |ORDER BY imp_id, conv_id""".stripMargin)),
 
-    "s22_stream_full_outer" ->
+    Lane("s22_stream_full_outer", Queries.s22StreamFullOuter, Oracle(
       // The full-outer interval join replayed as the plain FULL JOIN
       // BETWEEN it equals on complete in-order data: unmatched
       // impressions AND unmatched conversions null-extended, the key
@@ -4691,9 +4756,9 @@ object Oracles {
         |FULL JOIN (SELECT * FROM events WHERE event_type = 'purchase') c
         |  ON i.user_id = c.user_id
         | AND c.ts >= i.ts AND c.ts <= i.ts + INTERVAL 12 HOUR
-        |ORDER BY imp_id, conv_id""".stripMargin,
+        |ORDER BY imp_id, conv_id""".stripMargin)),
 
-    "s16_stream_madgate" ->
+    Lane("s16_stream_madgate", Queries.s16StreamMadGate, Oracle(
       // The serve-time gate replayed end to end: cuts re-derived from
       // the even half (the twice-median trick), the odd half gated by
       // the all-integer comparison, per-(type, flag) census with a
@@ -4726,9 +4791,9 @@ object Oracles {
         |  WHERE s.event_id % 2 = 1)
         |SELECT event_type, is_outlier, count(*) AS n,
         |       CAST(sum(dev2) AS BIGINT) AS dev2_sum
-        |FROM serve GROUP BY 1, 2 ORDER BY event_type, is_outlier""".stripMargin,
+        |FROM serve GROUP BY 1, 2 ORDER BY event_type, is_outlier""".stripMargin)),
 
-    "g20_corr_stats" ->
+    Lane("g20_corr_stats", Queries.g20CorrStats, Oracle(
       // The five sufficient sums replayed in HUGEINT (DuckDB promotes
       // over-width DECIMAL products to DOUBLE, so the 128-bit integer
       // lane is the exact path here), shipped as canonical integer
@@ -4758,9 +4823,9 @@ object Oracles {
         |             sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
         |                  CAST(n * syy - sy * sy AS DOUBLE)), 6)
         |         AS corr6
-        |FROM a ORDER BY l_returnflag""".stripMargin,
+        |FROM a ORDER BY l_returnflag""".stripMargin)),
 
-    "g23_kl_divergence" -> {
+    Lane("g23_kl_divergence", Queries.g23KlDivergence, Oracle({
       // The three KL screens replayed per value AND per verdict: shared
       // non-null value census, per-declaration LEFT JOIN against the
       // PPM grid, ONE micro-nat rounding per value (association matched
@@ -4785,9 +4850,9 @@ object Oracles {
         "\nUNION ALL\n" +
         klCheckSelect(3, "kl_divergence:event_type:lt:10.0", 10.0) +
         ")\nORDER BY validation_name, value"
-    },
+    })),
 
-    "g24_chi_square" -> {
+    Lane("g24_chi_square", Queries.g24ChiSquare, Oracle({
       // The three chi-square screens replayed per value AND per
       // verdict: shared non-null value census, per-declaration FULL
       // JOIN against the PPM grid (declared-but-unobserved values
@@ -4814,9 +4879,9 @@ object Oracles {
         "\nUNION ALL\n" +
         chiCheckSelect(3, "chi_square:event_type:lt:15.086", 15.086) +
         ")\nORDER BY validation_name, value"
-    },
+    })),
 
-    "g21_rowcount_parity" ->
+    Lane("g21_rowcount_parity", Queries.g21RowcountParity, Oracle(
       // GE's expect_table_row_count_to_equal_other_table replayed:
       // the staged side re-derived (inner join / projection), one
       // count per side. CAST to BIGINT — DuckDB count(*) is BIGINT
@@ -4833,9 +4898,9 @@ object Oracles {
         |SELECT table_a, table_b,
         |       CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
         |       n_a = n_b AS passed
-        |FROM pairs ORDER BY table_a""".stripMargin,
+        |FROM pairs ORDER BY table_a""".stripMargin)),
 
-    "g22_ge_tail" ->
+    Lane("g22_ge_tail", Queries.g22GeTail, Oracle(
       // The GE-tail verdicts replayed: monotonic violations via lag
       // windows over the SAME per-check non-null basis (the engine
       // filters each check's columns independently; event_id is unique,
@@ -4919,9 +4984,9 @@ object Oracles {
         |                        AND sd <= 2000000.0
         |                   THEN 0 ELSE 1 END AS BIGINT)
         |  FROM ag)
-        |ORDER BY validation_name""".stripMargin,
+        |ORDER BY validation_name""".stripMargin)),
 
-    "g19_benford" ->
+    Lane("g19_benford", Queries.g19Benford, Oracle(
       // The digit census replayed: the 4-dp scaled long's decimal
       // rendering gives the first significant digit (no float log10
       // binning), floor-ppm shares, and the SAME Benford literals the
@@ -4948,9 +5013,9 @@ object Oracles {
         |                      WHEN '5' THEN 79181 WHEN '6' THEN 66947
         |                      WHEN '7' THEN 57992 WHEN '8' THEN 51153
         |                      WHEN '9' THEN 45757 END) AS abs_dev_ppm
-        |FROM c CROSS JOIN t ORDER BY digit""".stripMargin,
+        |FROM c CROSS JOIN t ORDER BY digit""".stripMargin)),
 
-    "g18_fd_check" ->
+    Lane("g18_fd_check", Queries.g18FdCheck, Oracle(
       // The FD census replayed over the same staged model + plant:
       // trimmed names (the t1 contract), the ZONE_X second mapping for
       // NATION_0's region, count(DISTINCT) skipping nulls.
@@ -4966,9 +5031,9 @@ object Oracles {
         |SELECT region_name, count(*) AS n_rows,
         |       count(DISTINCT zone_name) AS n_dep_values,
         |       count(DISTINCT zone_name) <= 1 AS fd_holds
-        |FROM f GROUP BY 1 ORDER BY region_name""".stripMargin,
+        |FROM f GROUP BY 1 ORDER BY region_name""".stripMargin)),
 
-    "x52_group_split" ->
+    Lane("x52_group_split", Queries.x52GroupSplit, Oracle(
       // The group-keyed split replayed: author from the plant, the
       // md5-prefix group key, the split-salted bucket, the 80/10/10
       // bands, per-split doc/group censuses, and the straddle count
@@ -4998,9 +5063,9 @@ object Oracles {
         |       count(DISTINCT author) AS n_groups,
         |       (SELECT n_straddling_groups FROM straddle)
         |         AS n_straddling_groups
-        |FROM sp GROUP BY 1 ORDER BY split""".stripMargin,
+        |FROM sp GROUP BY 1 ORDER BY split""".stripMargin)),
 
-    "x10_split_cards" ->
+    Lane("x10_split_cards", Queries.x10SplitCards, Oracle(
       // The E2E capstone replayed end to end: the default-config curate
       // survivor set (min-id keeper over normalized text, the x8
       // containment CTE vs docs 0-2, PII-redacted token count >= 1),
@@ -5077,44 +5142,50 @@ object Oracles {
           |       (SELECT n_straddling_sources FROM straddle)
           |         AS n_straddling_sources
           |FROM sig GROUP BY ROLLUP (split)
-          |ORDER BY grouping_level, split""".stripMargin),
+          |ORDER BY grouping_level, split""".stripMargin))),
 
-    "x53_bpe_train" -> bpeTrainSql(maxWords = 300, merges = 8),
+    Lane("x53_bpe_train", Queries.x53BpeTrain, Oracle(bpeTrainSql(maxWords = 300, merges = 8))),
 
-    "x53_bpe_train_full" ->
+    // Deterministic but not DuckDB-computable at depth: a 1024-step
+    // chained-MATERIALIZED-CTE replay is infeasible; the k=8 twin
+    // runs the identical trainer under the full trajectory oracle,
+    // and BpeTrainSpec pins delta ≡ full-census at k=100.
+    Lane("x53_bpe_deep", Queries.x53BpeDeep, RowsOnly("x53_bpe_train")),
+
+    Lane("x53_bpe_train_full", Queries.x53BpeTrainFull, Oracle(
       // The FULL-ALPHABET merge trajectory (VERDICT r15 next #2):
       // the same 8 chained merge CTEs over the case/punctuation/digit
       // plant — at sf0.01 the trajectory carries a comma merge
       // ('e', ',') and an uppercase merge ('E', 'R'), proving the
       // non-letter path under the oracle, not just in spec.
-      bpeTrainSql(maxWords = 300, merges = 8, fullAlphabet = true),
+      bpeTrainSql(maxWords = 300, merges = 8, fullAlphabet = true))),
 
-    "x53_bpe_bytes" ->
+    Lane("x53_bpe_bytes", Queries.x53BpeBytes, Oracle(
       // The BYTE-LEVEL merge trajectory (VERDICT r16 next #6): the
       // same 8 chained merge CTEs with the initial sequence
       // decomposed to UTF-8 bytes (arithmetic from the code point)
       // under the chr(256+b) bijection; the café plant puts the
       // cross-byte-boundary merge (caf·0xC3, 0xA9) — fusing é's two
       // bytes — in the oracle-matched trajectory at every shipped SF.
-      bpeBytesSql(maxWords = 300, merges = 8),
+      bpeBytesSql(maxWords = 300, merges = 8))),
 
-    "x53_bpe_tokenize" -> bpeTokenizeSql(maxWords = 300, merges = 8),
+    Lane("x53_bpe_tokenize", Queries.x53BpeTokenize, Oracle(bpeTokenizeSql(maxWords = 300, merges = 8))),
 
     // The STREAMING per-document counter (stateless projection, merge
     // list as plan literals) must produce the identical counts as the
     // batch vocab-table serving shape — ONE oracle bound to both, so
     // the two formulations can never drift (the s5/x18 discipline).
-    "s25_stream_bpe" -> bpeCountSql(maxWords = 300, merges = 8),
+    Lane("s25_stream_bpe", Queries.s25StreamBpe, Oracle(bpeCountSql(maxWords = 300, merges = 8))),
 
-    "x53_bpe_count" -> bpeCountSql(maxWords = 300, merges = 8),
+    Lane("x53_bpe_count", Queries.x53BpeCount, Oracle(bpeCountSql(maxWords = 300, merges = 8))),
 
-    "s15_stream_ingest" -> nestedFlattenSql,
+    Lane("s15_stream_ingest", Queries.s15StreamIngest, Oracle(nestedFlattenSql)),
 
-    "x50_nested_flatten" -> nestedFlattenSql,
+    Lane("x50_nested_flatten", Queries.x50NestedFlatten, Oracle(nestedFlattenSql)),
 
 
 
-    "x51_pivot_crosstab" ->
+    Lane("x51_pivot_crosstab", Queries.x51PivotCrosstab, Oracle(
       // The pivot replayed as explicit CASE sums — one column per
       // event type, absent cells 0.
       """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS dt,
@@ -5124,9 +5195,9 @@ object Oracles {
         |         AS purchase,
         |       count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
         |       count(CASE WHEN event_type = 'error' THEN 1 END) AS error
-        |FROM events GROUP BY 1 ORDER BY dt""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY dt""".stripMargin)),
 
-    "x49_rendezvous" -> {
+    Lane("x49_rendezvous", Queries.x49Rendezvous, Oracle({
       // Rendezvous replayed: the nine per-shard ORDER-grade weights (same
       // Scala-side seed lanes), argmax via greatest + first-match CASE
       // (ties to the lowest shard, as the engine's when-chain), both
@@ -5158,9 +5229,9 @@ object Oracles {
          |       count(CASE WHEN shard_next <> shard AND shard_next <> 8
          |                  THEN 1 END) AS n_moved_elsewhere
          |FROM a GROUP BY 1 ORDER BY shard""".stripMargin
-    },
+    })),
 
-    "x48_concurrency" ->
+    Lane("x48_concurrency", Queries.x48Concurrency, Oracle(
       // The staged two-level sweep replayed as ONE plain per-day
       // window over the same (ts, +1-before-−1) order: sessions from
       // the x18 derivation, exploded to the days they touch, clipped,
@@ -5209,9 +5280,9 @@ object Oracles {
         |SELECT strftime(day, '%Y-%m-%d') AS dt,
         |       CAST(count(*) / 2 AS BIGINT) AS n_sessions,
         |       CAST(max(r) AS BIGINT) AS max_concurrent
-        |FROM run GROUP BY 1 ORDER BY dt""".stripMargin,
+        |FROM run GROUP BY 1 ORDER BY dt""".stripMargin)),
 
-    "x47_rolling_metrics" ->
+    Lane("x47_rolling_metrics", Queries.x47RollingMetrics, Oracle(
       // The daily census + RANGE-framed trailing window replayed;
       // DECIMAL through the window sum, one round at the edge (the
       // d-series discipline), integer epoch-day ordering so gap
@@ -5232,9 +5303,9 @@ object Oracles {
         |FROM daily
         |WINDOW w AS (PARTITION BY event_type ORDER BY day
         |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, dt""".stripMargin,
+        |ORDER BY event_type, dt""".stripMargin)),
 
-    "x46_planted_ratio" ->
+    Lane("x46_planted_ratio", Queries.x46PlantedRatio, Oracle(
       // No compressor needed: the plant's band is a certainty (a
       // constant run of >= 200 bytes deflates under 8% in any correct
       // deflate implementation), and n_raw is pure doc_id arithmetic.
@@ -5245,9 +5316,15 @@ object Oracles {
       """SELECT doc_id, CAST(200 + doc_id % 500 AS BIGINT) AS n_raw,
         |       'junk' AS band
         |FROM documents WHERE doc_id % 13 = 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x45_session_funnel" ->
+    // Not randomized but equally unreplayable: DuckDB ships no
+    // deflate, so the ratio census can't hash-compare; the planted
+    // twin's band IS certain (a constant run < 8% under any correct
+    // deflate) and oracle-checked.
+    Lane("x46_compress_ratio", Queries.x46CompressRatio, RowsOnly("x46_planted_ratio")),
+
+    Lane("x45_session_funnel", Queries.x45SessionFunnel, Oracle(
       // The x18 session assignment (4-hour gap) composed under the x37
       // correlated-min funnel, keyed on the user:session composite;
       // strict > and floor division as in both parents.
@@ -5281,9 +5358,9 @@ object Oracles {
         |       CAST((n_users * 1000000) //
         |            (SELECT n_users FROM c WHERE step_idx = 1) AS BIGINT)
         |         AS conv_ppm
-        |FROM c ORDER BY step_idx""".stripMargin,
+        |FROM c ORDER BY step_idx""".stripMargin)),
 
-    "g17_referential" ->
+    Lane("g17_referential", Queries.g17Referential, Oracle(
       // Each edge re-derived as a NOT-EXISTS census (null fks counted
       // separately, never as orphans — SQL FK semantics), with the
       // lineitem %97 plant replayed.
@@ -5331,9 +5408,9 @@ object Oracles {
         |  FROM nation)
         |SELECT child_table, fk_column, parent_table, n_child, n_null_fk,
         |       n_orphans, n_orphans = 0 AS passed
-        |FROM edges ORDER BY child_table, fk_column""".stripMargin,
+        |FROM edges ORDER BY child_table, fk_column""".stripMargin)),
 
-    "x44_mad_outliers" ->
+    Lane("x44_mad_outliers", Queries.x44MadOutliers, Oracle(
       // The twice-median trick replayed: 4-dp scaled longs, med2 =
       // round(2·quantile_cont) — an EXACT .0/.5 double over integer
       // inputs in both engines, so no interpolation ulp exposure —
@@ -5362,9 +5439,9 @@ object Oracles {
         |       count(CASE WHEN d.dev2 * 2 > 3 * m.mad2 THEN 1 END)
         |         AS n_outliers
         |FROM dev d JOIN mad m USING (event_type)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |GROUP BY 1 ORDER BY event_type""".stripMargin)),
 
-    "x43_embed_drift" ->
+    Lane("x43_embed_drift", Queries.x43EmbedDrift, Oracle(
       // The whole drift pipeline replayed: the shared int8 quantization
       // (widen-then-shift for the label-3 plant, same IEEE op order as
       // the engine), per-(label, dim) integer sums per snapshot half,
@@ -5403,13 +5480,13 @@ object Oracles {
         |       CAST(max(nb) AS BIGINT) AS n_cur,
         |       CAST(sum((ma - mb) * (ma - mb)) AS VARCHAR)
         |         AS drift_num
-        |FROM m GROUP BY 1 ORDER BY label""".stripMargin,
+        |FROM m GROUP BY 1 ORDER BY label""".stripMargin)),
 
-    "x42_scd2_enrich" -> scd2EnrichSql,
+    Lane("x42_scd2_enrich", Queries.x42Scd2Enrich, Oracle(scd2EnrichSql)),
 
-    "s14_stream_enrich" -> scd2EnrichSql,
+    Lane("s14_stream_enrich", Queries.s14StreamEnrich, Oracle(scd2EnrichSql)),
 
-    "x41_pmi_pairs" ->
+    Lane("x41_pmi_pairs", Queries.x41PmiPairs, Oracle(
       // PMI replayed: unigram census, adjacent-pair census via lateral
       // unnest over 1..len-1, the >=5 cut, (Nu, Nb) from ONE pass over
       // the token arrays, the SAME pinned multiply/divide association
@@ -5441,9 +5518,9 @@ object Oracles {
         |             JOIN uni u2 ON b.w2 = u2.w
         |             CROSS JOIN tot)
         |SELECT w1, w2, c12, c1, c2, pmi_micro FROM scored
-        |ORDER BY pmi_micro DESC, w1, w2 LIMIT 50""".stripMargin,
+        |ORDER BY pmi_micro DESC, w1, w2 LIMIT 50""".stripMargin)),
 
-    "x40_dataset_card" ->
+    Lane("x40_dataset_card", Queries.x40DatasetCard, Oracle(
       // Every card signal re-derived independently: the shared
       // token-count CASE, the normText dedup family (the oracle counts
       // distinct NORMS where the engine counts distinct md5s — same
@@ -5475,9 +5552,9 @@ object Oracles {
         |       round(CAST(sum(n_tok) AS DOUBLE) / count(*), 4) AS mean_tok,
         |       round(quantile_cont(n_tok, 0.5), 4) AS p50_tok
         |FROM t GROUP BY ROLLUP (source)
-        |ORDER BY grouping_level, source""".stripMargin,
+        |ORDER BY grouping_level, source""".stripMargin)),
 
-    "x39_length_batches" ->
+    Lane("x39_length_batches", Queries.x39LengthBatches, Oracle(
       // The banded hierarchical rank replayed as the NAIVE per-band
       // window the staged plan avoids (row_number over the same
       // (band, doc_id) order), then the same batch census arithmetic —
@@ -5499,9 +5576,9 @@ object Oracles {
         |       count(*) * max(n_tok) AS padded_tok,
         |       CAST(((count(*) * max(n_tok) - sum(n_tok)) * 1000000) //
         |            (count(*) * max(n_tok)) AS BIGINT) AS pad_waste_ppm
-        |FROM r GROUP BY 1, 2 ORDER BY band, batch_idx""".stripMargin,
+        |FROM r GROUP BY 1, 2 ORDER BY band, batch_idx""".stripMargin)),
 
-    "x38_fuzzy_join" ->
+    Lane("x38_fuzzy_join", Queries.x38FuzzyJoin, Oracle(
       // The full linkage replayed: the keyed one-char deletion plant,
       // lowercase trigram sets via lateral unnest, the right-side df
       // census with the cap, candidate blocking on cold trigrams only,
@@ -5543,9 +5620,9 @@ object Oracles {
         |SELECT lkey, rkey, CAST(rank_in_group AS BIGINT) AS rank_in_group,
         |       n_inter, n_union, jaccard_ppm,
         |       lkey = rkey AS is_true_match
-        |FROM t WHERE rank_in_group <= 1 ORDER BY lkey""".stripMargin,
+        |FROM t WHERE rank_in_group <= 1 ORDER BY lkey""".stripMargin)),
 
-    "x37_event_funnel" ->
+    Lane("x37_event_funnel", Queries.x37EventFunnel, Oracle(
       // The chained earliest-after-previous funnel replayed as three
       // correlated min-aggregates; strict > on both engines, floor
       // division for the ppm.
@@ -5565,9 +5642,9 @@ object Oracles {
         |       CAST((n_users * 1000000) //
         |            (SELECT n_users FROM c WHERE step_idx = 1) AS BIGINT)
         |         AS conv_ppm
-        |FROM c ORDER BY step_idx""".stripMargin,
+        |FROM c ORDER BY step_idx""".stripMargin)),
 
-    "x36_cohort_retention" ->
+    Lane("x36_cohort_retention", Queries.x36CohortRetention, Oracle(
       // The retention matrix straight from raw events: distinct
       // (user, UTC day) activity, min-day cohorts, distinct actives
       // per (cohort, offset), cohort sizes, integer-ppm rate (floor
@@ -5585,9 +5662,9 @@ object Oracles {
         |       CAST((n_active * 1000000) // cohort_size AS BIGINT)
         |         AS retained_ppm
         |FROM r JOIN s USING (cohort_day)
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin)),
 
-    "x35_time_layout" ->
+    Lane("x35_time_layout", Queries.x35TimeLayout, Oracle(
       // The one-week census straight from the raw events: dt = UTC day
       // of ts (the engine session pins UTC), DECIMAL-accumulated value
       // sum rounded in decimal then cast (the d-series discipline).
@@ -5598,9 +5675,9 @@ object Oracles {
         |         AS value_sum
         |FROM events
         |WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-08' AND DATE '2024-01-14'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    "x5_header_parse" ->
+    Lane("x5_header_parse", Queries.x5HeaderParse, Oracle(
       // The planted header fields re-derived from the generation
       // formulas: doc_id%3 picks the container; width/height/rate/
       // duration are pure functions of doc_id and n_chars. The Spark side
@@ -5613,9 +5690,9 @@ object Oracles {
         |       CASE WHEN doc_id % 3 = 0 THEN CAST(32 + doc_id % 32 AS INT) END AS height,
         |       CASE WHEN doc_id % 3 = 1 THEN CAST(8000 + (doc_id % 5) * 2000 AS INT) END AS sample_rate,
         |       CASE WHEN doc_id % 3 = 2 THEN CAST(n_chars * 10 AS BIGINT) END AS duration_ms
-        |FROM documents ORDER BY media_id""".stripMargin,
+        |FROM documents ORDER BY media_id""".stripMargin)),
 
-    "x20_psi_drift" ->
+    Lane("x20_psi_drift", Queries.x20PsiDrift, Oracle(
       // PSI replayed bin for bin: absolute epoch weeks (fractional
       // DuckDB epoch floors identically through /604800), width-25
       // value bins, +1 smoothing over the weeks × observed-(type,bin)
@@ -5660,9 +5737,9 @@ object Oracles {
         |       CAST(sum(contrib_micro) AS BIGINT) AS psi_micro,
         |       round(sum(contrib_micro) / 1000000.0, 4) AS psi
         |FROM pb GROUP BY week, event_type
-        |ORDER BY week, event_type""".stripMargin,
+        |ORDER BY week, event_type""".stripMargin)),
 
-    "s12_stream_clean" ->
+    Lane("s12_stream_clean", Queries.s12StreamClean, Oracle(
       // The full stage-0 chain composed from the SHARED replay parts
       // (markup dirt -> mojibake replace -> nfc_normalize -> the
       // line-dedup CTEs' boiler footer + first-occurrence rewrite ->
@@ -5685,9 +5762,9 @@ object Oracles {
           |       CAST(sum(length(clean)) AS BIGINT) AS clean_chars,
           |       CAST(sum(CAST(('0x' || substr(md5(clean), 1, 15)) AS BIGINT)
           |            % 1000000000) AS BIGINT) AS clean_fp_sum
-          |FROM c4 GROUP BY lang ORDER BY lang""".stripMargin),
+          |FROM c4 GROUP BY lang ORDER BY lang""".stripMargin))),
 
-    "x19_text_clean" ->
+    Lane("x19_text_clean", Queries.x19TextClean, Oracle(
       // The cleaning chain replayed step for step (shared dirtyCte +
       // cleanCtes — see their Scaladoc for the &amp;-last single-pass
       // discipline). had_markup = cleaned IS DISTINCT FROM the dirty
@@ -5699,9 +5776,9 @@ object Oracles {
           |            ELSE len(string_split_regex(trim(clean), '\s+')) END
           |         AS n_tok_clean,
           |       md5(coalesce(clean, '')) AS clean_md5
-          |FROM c4 ORDER BY doc_id""".stripMargin),
+          |FROM c4 ORDER BY doc_id""".stripMargin))),
 
-    "x19_line_dedup" ->
+    Lane("x19_line_dedup", Queries.x19LineDedup, Oracle(
       // The within-doc line-dedup rewrite replayed at the string level:
       // first occurrence per exact line wins, order preserved
       // (row_number over the line ordinal, string_agg back in ordinal
@@ -5731,9 +5808,9 @@ object Oracles {
         |       n_lines_in <> n_lines_out AS had_dup_lines,
         |       md5(coalesce(out, '')) AS dedup_md5
         |FROM d JOIN cnt USING (doc_id) JOIN deduped USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "x19_xdoc_dedup" ->
+    Lane("x19_xdoc_dedup", Queries.x19XdocDedup, Oracle(
       // The CROSS-document boilerplate strip replayed end-to-end: the
       // normalized-line census over DISTINCT (line, doc) pairs, the
       // minDocFreq=3 threshold (the planted universal footer drops,
@@ -5771,9 +5848,9 @@ object Oracles {
         |       CAST(sum(CAST(('0x' || substr(md5(coalesce(r.xt, '')), 1, 15))
         |         AS BIGINT) % 1000000000) AS BIGINT) AS text_fp_sum
         |FROM d LEFT JOIN rebuilt r USING (doc_id) JOIN cnt c USING (doc_id)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+        |GROUP BY d.source ORDER BY d.source""".stripMargin)),
 
-    "x10_clean_funnel" ->
+    Lane("x10_clean_funnel", Queries.x10CleanFunnel, Oracle(
       // X19 composed into X10: the funnel replayed over the
       // LINE-DEDUPED, CLEANED dirtied corpus — the planted three-copy
       // boiler footer collapses to one line (dedupLinesFirst), then
@@ -5785,9 +5862,9 @@ object Oracles {
         cleanCtes + ",\n" +
         "cc AS (SELECT doc_id, lang, clean AS text FROM c4),\n" +
         gram4CtesFrom("cc") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("cc")),
+        noFuzzyFunnelBody("cc")))),
 
-    "x10_nfc_funnel" ->
+    Lane("x10_nfc_funnel", Queries.x10NfcFunnel, Oracle(
       // X19d composed into X10 (Config.nfcFirst): the planted NFD twin
       // (+2e6) must share its composed sibling's (+1e6) dedup family —
       // NFC(NFD(x)) = NFC(x), so the oracle needs only nfc_normalize
@@ -5807,9 +5884,9 @@ object Oracles {
           |         nfc_normalize(coalesce(text, '') || ' é café')
           |  FROM documents WHERE doc_id < 10),""".stripMargin + "\n" +
         gram4CtesFrom("pn") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pn")),
+        noFuzzyFunnelBody("pn")))),
 
-    "x10_mojibake_funnel" ->
+    Lane("x10_mojibake_funnel", Queries.x10MojibakeFunnel, Oracle(
       // X19e composed into X10 (Config.fixEncodingFirst): the damaged
       // twin (+2e6, " caf\u00c3\u00a9") repairs to its clean sibling's
       // bytes (+1e6, " caf\u00e9"), so they form ONE dedup family and
@@ -5829,9 +5906,9 @@ object Oracles {
           |                 '\u00c3\u00a9', '\u00e9')
           |  FROM documents WHERE doc_id < 10),""".stripMargin + "\n" +
         gram4CtesFrom("pm") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pm")),
+        noFuzzyFunnelBody("pm")))),
 
-    "x10_card_funnel" ->
+    Lane("x10_card_funnel", Queries.x10CardFunnel, Oracle(
       // X7b composed into X10: the card plants replayed as the same
       // replace arithmetic as x7_card_scan, wired in as the funnel
       // body's redaction BASE (cards before the regex PII chain, the
@@ -5850,9 +5927,9 @@ object Oracles {
         noFuzzyFunnelBody("pc", rtextBase =
           "CASE WHEN doc_id % 17 = 0 THEN " +
             "replace(replace(text, '4111111111111111', '<CARD>'), " +
-            "'4539 5787 6362 1486', '<CARD>') ELSE text END")),
+            "'4539 5787 6362 1486', '<CARD>') ELSE text END")))),
 
-    "x10_blocklist_funnel" ->
+    Lane("x10_blocklist_funnel", Queries.x10BlocklistFunnel, Oracle(
       // X3i composed into X10: the blocklist page gate as one more
       // quality conjunct, replayed as the exact token-split semantics
       // inside the shared funnel body. The plant is MIXED CASE, so a
@@ -5868,9 +5945,9 @@ object Oracles {
           extraAnnCol = ",\n         len(list_filter(" +
             "regexp_split_to_array(lower(rtext), '[^a-z0-9_]+'), " +
             "t -> t IN ('forbidden', 'viagra'))) AS bl",
-          qualExtra = " AND bl = 0")),
+          qualExtra = " AND bl = 0")))),
 
-    "x10_xdedup_funnel" ->
+    Lane("x10_xdedup_funnel", Queries.x10XdedupFunnel, Oracle(
       // X19c composed into X10 (the CCNet ordering — the shard-level
       // line dedup is the FIRST text operation): the planted universal
       // footer strips (its normalized line is in every document),
@@ -5903,9 +5980,9 @@ object Oracles {
         |  FROM pd p LEFT JOIN xreb r USING (doc_id)),
         |""".stripMargin +
         gram4CtesFrom("xdocs") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("xdocs")),
+        noFuzzyFunnelBody("xdocs")))),
 
-    "x10_write_verify" ->
+    Lane("x10_write_verify", Queries.x10WriteVerify, Oracle(
       // The written-corpus census derived INDEPENDENTLY from the base
       // tables: curate survivors (min-key canonical per norm, not
       // contaminated vs bench docs 0-2, redacted-token band 25..90,
@@ -5953,9 +6030,9 @@ object Oracles {
            |FROM ann
            |WHERE is_canonical AND NOT is_contaminated
            |  AND n_tok BETWEEN 25 AND 90 AND b < thr
-           |GROUP BY 1, 2 ORDER BY split, source""".stripMargin),
+           |GROUP BY 1, 2 ORDER BY split, source""".stripMargin))),
 
-    "x10_layout_audit" ->
+    Lane("x10_layout_audit", Queries.x10LayoutAudit, Oracle(
       // The layout audit's expected state derived INDEPENDENTLY: the
       // survivor census (same curation replay as x10_write_verify) and
       // the occupied-leaf count with the 8-way pmod shard replayed on
@@ -6002,18 +6079,18 @@ object Oracles {
            |       CAST(0 AS BIGINT) AS bad_shard
            |FROM ann
            |WHERE is_canonical AND NOT is_contaminated
-           |  AND n_tok BETWEEN 25 AND 90 AND b < thr""".stripMargin),
+           |  AND n_tok BETWEEN 25 AND 90 AND b < thr""".stripMargin))),
 
-    "x10_recipe_funnel" ->
+    Lane("x10_recipe_funnel", Queries.x10RecipeFunnel, Oracle(
       // The recipe file encodes exactly the base config (25..90 token
       // band, en-0.4 sample, 512 seq len), and the replay is assembled
       // ENTIRELY from the shared parts — corpus grams, raw-bench
       // contamination, the no-fuzzy funnel body — so the file-driven
       // funnel binds to SQL that cannot drift from the other funnels.
       ("WITH " + gram4Ctes + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("documents")),
+        noFuzzyFunnelBody("documents")))),
 
-    "x10_c4_funnel" ->
+    Lane("x10_c4_funnel", Queries.x10C4Funnel, Oracle(
       // X3h composed into X10: the funnel census with the C4 bundle as
       // the quality stage — the per-doc line retention through the
       // SAME c4LineCtes as x3_c4_rules, the 3-retained-sentence floor,
@@ -6103,9 +6180,9 @@ object Oracles {
            |       tokens_after_decontam, tokens_after_quality, n_tokens,
            |       CASE WHEN n_tokens = 0 THEN 0
            |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin),
+           |FROM f""".stripMargin))),
 
-    "x10_gopher_funnel" ->
+    Lane("x10_gopher_funnel", Queries.x10GopherFunnel, Oracle(
       // X3g composed into X10: the funnel census with the FULL Gopher
       // rule conjunction as the quality stage, every rule replayed per
       // document over the REDACTED text (gopherPassCtes), the other
@@ -6175,9 +6252,9 @@ object Oracles {
            |       tokens_after_decontam, tokens_after_quality, n_tokens,
            |       CASE WHEN n_tokens = 0 THEN 0
            |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin),
+           |FROM f""".stripMargin))),
 
-    "x10_gopher_bylang" ->
+    Lane("x10_gopher_bylang", Queries.x10GopherByLang, Oracle(
       // The Gopher funnel gate DISPATCHED PER LANGUAGE: identical
       // funnel replay to x10_gopher_funnel, with the per-doc rule CTEs
       // swapping in the language-cased tokenization / stop lists /
@@ -6245,9 +6322,9 @@ object Oracles {
            |       tokens_after_decontam, tokens_after_quality, n_tokens,
            |       CASE WHEN n_tokens = 0 THEN 0
            |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin),
+           |FROM f""".stripMargin))),
 
-    "x10_write_packed" ->
+    Lane("x10_write_packed", Queries.x10WritePacked, Oracle(
       // The terminal artifact replayed end-to-end: curation survivors
       // (the x10_write_verify machinery), the salted 80/10/10 split
       // bands, then each split's OWN pack — the prefix-sum window
@@ -6316,9 +6393,9 @@ object Oracles {
           |       CAST(sum(seq_tok) AS BIGINT) AS n_tokens,
           |       CAST(sum(CAST(('0x' || substr(md5(seq_text), 1, 15)) AS BIGINT)
           |            % 1000000000) AS BIGINT) AS seq_fp_sum
-          |FROM pseq GROUP BY 1 ORDER BY split""".stripMargin),
+          |FROM pseq GROUP BY 1 ORDER BY split""".stripMargin))),
 
-    "x23_chunk_docs" ->
+    Lane("x23_chunk_docs", Queries.x23ChunkDocs, Oracle(
       // Chunk layout replayed: 32-token windows, stride 24, count =
       // (n-33) // 24 + 2 above one chunk (non-negative numerator — the
       // Spark side guards the same way because `div` truncates while
@@ -6345,9 +6422,9 @@ object Oracles {
         |SELECT doc_id, chunk_idx,
         |       CAST(len(chunk) AS BIGINT) AS n_tok_chunk,
         |       md5(array_to_string(chunk, ' ')) AS chunk_md5
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
+        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin)),
 
-    "x25_corpus_diff" ->
+    Lane("x25_corpus_diff", Queries.x25CorpusDiff, Oracle(
       // The snapshot diff replayed with direct TEXT comparison (the
       // engine compares md5 fingerprints — equality of the hash must
       // equal equality of the bytes), the same plant derivation, and
@@ -6368,9 +6445,9 @@ object Oracles {
         |  FROM old o FULL OUTER JOIN newer n ON o.doc_id = n.doc_id)
         |SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
         |       CAST(sum(doc_id) AS BIGINT) AS key_sum
-        |FROM d GROUP BY status ORDER BY status""".stripMargin,
+        |FROM d GROUP BY status ORDER BY status""".stripMargin)),
 
-    "x28_bucketed_join" ->
+    Lane("x28_bucketed_join", Queries.x28BucketedJoin, Oracle(
       // The co-located bucketed join replayed as the PLAIN join — the
       // storage layout must be result-invisible. DECIMAL accumulation
       // + the sessionize round/cast discipline for the double price.
@@ -6380,17 +6457,17 @@ object Oracles {
         |            AS DOUBLE) AS revenue
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |GROUP BY c.c_mktsegment
-        |ORDER BY mktsegment""".stripMargin,
+        |ORDER BY mktsegment""".stripMargin)),
 
-    "x29_jsonl_roundtrip" -> docCensusSql,
+    Lane("x29_jsonl_roundtrip", Queries.x29JsonlRoundtrip, Oracle(docCensusSql)),
 
     // The CSV round trip and the compaction rewrite bind to the SAME
     // original-parquet census: losslessness (x32) and layout-only-ness
     // (x33) are the same proof shape.
-    "x32_csv_roundtrip" -> docCensusSql,
-    "x33_compact_verify" -> docCensusSql,
-    "x34_orc_roundtrip" -> docCensusSql,
-    "x19_fix_mojibake" ->
+    Lane("x32_csv_roundtrip", Queries.x32CsvRoundtrip, Oracle(docCensusSql)),
+    Lane("x33_compact_verify", Queries.x33CompactVerify, Oracle(docCensusSql)),
+    Lane("x34_orc_roundtrip", Queries.x34OrcRoundtrip, Oracle(docCensusSql)),
+    Lane("x19_fix_mojibake", Queries.x19FixMojibake, Oracle(
       // The planted damage vocabulary replays as a literal replace
       // chain (\u escapes mirror the plant; U+009F is invisible) --
       // exact because clean corpus text is ASCII and the repair's
@@ -6418,8 +6495,8 @@ object Oracles {
         |       CAST(sum(length(fixed)) AS BIGINT) AS fixed_chars,
         |       CAST(sum(CAST(('0x' || substr(md5(fixed), 1, 15)) AS BIGINT)
         |            % 1000000000) AS BIGINT) AS fixed_fp_sum
-        |FROM f GROUP BY source ORDER BY source""").stripMargin,
-    "x3_top_terms" ->
+        |FROM f GROUP BY source ORDER BY source""").stripMargin)),
+    Lane("x3_top_terms", Queries.x3TopTerms, Oracle(
       // The shared whitespace token split, one global count, and the
       // same (n DESC, term ASC) total order under the cut — ties at
       // rank 20 are deterministic in both engines.
@@ -6428,9 +6505,9 @@ object Oracles {
         |      FROM documents WHERE text IS NOT NULL AND trim(text) <> '')
         |GROUP BY term
         |ORDER BY n DESC, term ASC
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "x3_word_blocklist" ->
+    Lane("x3_word_blocklist", Queries.x3WordBlocklist, Oracle(
       """WITH planted AS (
         |  SELECT source,
         |         CASE WHEN doc_id % 13 = 5
@@ -6450,9 +6527,9 @@ object Oracles {
         |         AS n_flagged,
         |       CAST(sum(hits) AS BIGINT) AS hits_sum,
         |       CAST(max(hits) AS BIGINT) AS max_hits
-        |FROM h GROUP BY source ORDER BY source""".stripMargin,
+        |FROM h GROUP BY source ORDER BY source""".stripMargin)),
 
-    "x27_pctl_against" ->
+    Lane("x27_pctl_against", Queries.x27PctlAgainst, Oracle(
       // The persisted-cut gate replayed from scratch: the per-source
       // cut is the smallest score whose integer cume_dist clears the
       // 10th percentile, then the gate is one comparison per row
@@ -6473,9 +6550,9 @@ object Oracles {
         |       coalesce(d.n_chars >= t.cut_score, FALSE) AS is_kept
         |FROM documents d
         |LEFT JOIN cut t ON d.source IS NOT DISTINCT FROM t.source
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "s9_stream_pctl_gate" ->
+    Lane("s9_stream_pctl_gate", Queries.s9StreamPctlGate, Oracle(
       // The streaming serve-time gate batch-replayed: cuts re-derived
       // from the FIT corpus only (docs < 300 — the history shard), the
       // gate one comparison per arriving document (docs >= 300). A
@@ -6498,9 +6575,9 @@ object Oracles {
         |FROM documents d
         |LEFT JOIN cut t ON d.source IS NOT DISTINCT FROM t.source
         |WHERE d.doc_id >= 300
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "x10_pctl_funnel" ->
+    Lane("x10_pctl_funnel", Queries.x10PctlFunnel, Oracle(
       // X27 composed into X10: the funnel census with the FITTED
       // per-language token floor as the quality stage — the cut
       // re-derived from scratch (integer cume_dist over the RAW-text
@@ -6586,9 +6663,9 @@ object Oracles {
            |       tokens_after_decontam, tokens_after_quality, n_tokens,
            |       CASE WHEN n_tokens = 0 THEN 0
            |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin),
+           |FROM f""".stripMargin))),
 
-    "x27_score_percentile" ->
+    Lane("x27_score_percentile", Queries.x27ScorePercentile, Oracle(
       // The adaptive threshold replayed as the NAIVE plan the staged
       // census+CDF operator avoids: cume_dist of every corpus row via
       // a census-equivalent window pair (cum ≤-count and group total),
@@ -6611,17 +6688,17 @@ object Oracles {
         |FROM documents d
         |LEFT JOIN g ON d.source IS NOT DISTINCT FROM g.source
         |           AND d.n_chars = g.n_chars
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "x26_budget_bpe" ->
+    Lane("x26_budget_bpe", Queries.x26BudgetBpe, Oracle(
       // The BPE-denominated budget cut: merges re-derived from the
       // census chain, the apply chain replayed per distinct word,
       // wordless docs at 0 tokens, then the same naive global-window
       // prefix cut (ROWS frame — the strict (n_chars DESC, doc_id)
       // total order).
-      bpeBudgetSql(maxWords = 300, merges = 8, budget = 30000L),
+      bpeBudgetSql(maxWords = 300, merges = 8, budget = 30000L))),
 
-    "x26_budget_cut" ->
+    Lane("x26_budget_cut", Queries.x26BudgetCut, Oracle(
       // The staged budget cut replayed as the NAIVE global-window plan
       // the operator exists to avoid: one un-partitioned cumulative sum
       // over the TOTAL order (n_chars DESC, doc_id ASC; explicit ROWS
@@ -6643,9 +6720,9 @@ object Oracles {
         |       CAST(sum(toks) AS BIGINT) AS kept_tokens,
         |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
         |FROM c WHERE cum <= 12000
-        |GROUP BY source ORDER BY source""".stripMargin,
+        |GROUP BY source ORDER BY source""".stripMargin)),
 
-    "x24_tfidf_terms" ->
+    Lane("x24_tfidf_terms", Queries.x24TfidfTerms, Oracle(
       // TF-IDF replayed: per-(doc,term) tf, term df census, ONE
       // micro-nat rounding on ln(N/df) (slack-audited), integer score
       // tf·idf_micro, rank by (score desc, term asc), top 3.
@@ -6669,9 +6746,9 @@ object Oracles {
         |  FROM scored)
         |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tf, score_micro
         |FROM ranked WHERE rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
+        |ORDER BY doc_id, rank""".stripMargin)),
 
-    "x21_asof_join" ->
+    Lane("x21_asof_join", Queries.x21AsofJoin, Oracle(
       // DuckDB's NATIVE ASOF LEFT JOIN replays the union+window
       // formulation: greatest right ts <= left ts per user, right side
       // deduped per (user, ts) by max event_id, unmatched rows null.
@@ -6684,9 +6761,9 @@ object Oracles {
         |       p.event_id AS ref_event_id, p.value AS ref_value
         |FROM events e
         |ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts >= p.ts
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
 
-    "x22_range_join" ->
+    Lane("x22_range_join", Queries.x22RangeJoin, Oracle(
       // The bin-bucketed equi join replayed as the plain BETWEEN join
       // over the SAME session derivation (sessionizeSql as a subquery)
       // — bucketing must be result-invisible.
@@ -6696,23 +6773,23 @@ object Oracles {
         sessionizeSql + "\n" +
         """) s ON e.user_id = s.user_id
           |     AND e.ts >= s.start_ts AND e.ts <= s.end_ts
-          |ORDER BY e.event_id, s.session_idx""".stripMargin),
+          |ORDER BY e.event_id, s.session_idx""".stripMargin))),
 
-    "x18_sessionize" -> sessionizeSql,
+    Lane("x18_sessionize", Queries.x18Sessionize, Oracle(sessionizeSql)),
 
     // The native session_window duel (VERDICT r16 next #7): the
     // floor-second + gap+1 adapter makes the built-in's semantics
     // equal the gaps-and-islands convention by construction, so the
     // SAME oracle binds all three formulations (window, custom-state
     // stream fold, built-in aggregation) — none can drift.
-    "x18_session_builtin" -> sessionizeSql,
+    Lane("x18_session_builtin", Queries.x18SessionBuiltin, Oracle(sessionizeSql)),
 
     // The STREAMING fold (flatMapGroupsWithState, batch-replayed) must
     // produce the identical session set — ONE oracle bound to both, so
     // the two formulations can never drift.
-    "s5_stream_sessions" -> sessionizeSql,
+    Lane("s5_stream_sessions", Queries.s5StreamSessions, Oracle(sessionizeSql)),
 
-    "x5_png_decode" ->
+    Lane("x5_png_decode", Queries.x5PngDecode, Oracle(
       // The real-codec round trip replayed WITHOUT a codec: payloads are
       // JDK-encoded PNGs of the per-scanline formula r=(id+y)%256,
       // g=(2id+y)%256, b=(3id+y)%256 at w=32+id%64, h=32+id%32; PNG is
@@ -6729,9 +6806,9 @@ object Oracles {
         |       CAST(sum(w * ((2 * doc_id + y) % 256)) AS BIGINT) AS sum_g,
         |       CAST(sum(w * ((3 * doc_id + y) % 256)) AS BIGINT) AS sum_b
         |FROM scan GROUP BY doc_id, w, h
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin)),
 
-    "x5_gif_decode" ->
+    Lane("x5_gif_decode", Queries.x5GifDecode, Oracle(
       // The real-codec ANIMATED round trip replayed WITHOUT a codec:
       // payloads are JDK-encoded indexed-color GIFs (explicit 64-entry
       // palette (3i,5i,7i)%256 — no quantizer runs, so the format is
@@ -6756,9 +6833,9 @@ object Oracles {
         |       CAST(sum(w * ((idx * 5) % 256)) AS BIGINT) AS sum_g,
         |       CAST(sum(w * ((idx * 7) % 256)) AS BIGINT) AS sum_b
         |FROM px GROUP BY doc_id, f, w, h
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin)),
 
-    "x5_wav_decode" ->
+    Lane("x5_wav_decode", Queries.x5WavDecode, Oracle(
       // The real-codec WAV round trip replayed WITHOUT a codec: payloads
       // are JDK-encoded 16-bit PCM mono WAVs of sample formula
       // s(t) = ((id*31 + 7t) % 2003) - 1001 with n = 256 + id % 256
@@ -6773,9 +6850,9 @@ object Oracles {
         |SELECT doc_id AS media_id, rate AS sample_rate, n AS n_samples,
         |       CAST(sum((doc_id * 31 + 7 * t) % 2003 - 1001) AS BIGINT) AS sum_samples
         |FROM samp GROUP BY doc_id, rate, n
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin)),
 
-    "x5_dhash_pairs" ->
+    Lane("x5_dhash_pairs", Queries.x5DhashPairs, Oracle(
       // The perceptual-hash near-dup lane replayed as BRUTE FORCE: every
       // pixel of the planted corpus is closed-form (see
       // Multimodal.dhashLuma — the oracle mirrors it verbatim), so the
@@ -6787,16 +6864,16 @@ object Oracles {
       // hash-checked rather than trusted.
       ("WITH " + dhashPairCtes + "\n" +
         """SELECT media_id_a, media_id_b, hamming FROM dpair
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "x5_dhash_dropset" ->
+    Lane("x5_dhash_dropset", Queries.x5DhashDropset, Oracle(
       // Keep-first over the near-dup relation: dropped = the b-side of
       // any qualifying pair (some smaller-id image within Hamming <= 3).
       ("WITH " + dhashPairCtes + "\n" +
         """SELECT DISTINCT media_id_b AS media_id FROM dpair
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_adpcm_decode" ->
+    Lane("x5_adpcm_decode", Queries.x5AdpcmDecode, Oracle(
       // The REAL compressed-audio round trip replayed WITHOUT sharing the
       // decoder: payloads are WAVE/IMA-ADPCM containers carrying the
       // closed-form nibble stream nib(id,t) = xor(id*7 + 13t, t//8) % 16
@@ -6846,9 +6923,9 @@ object Oracles {
         |       d.ssum AS sum_samples, d.wsum AS sum_weighted
         |FROM dec d JOIN aud a USING (doc_id)
         |WHERE d.t = d.n - 1
-        |ORDER BY media_id""".stripMargin),
+        |ORDER BY media_id""".stripMargin))),
 
-    "x5_dhash_groups" ->
+    Lane("x5_dhash_groups", Queries.x5DhashGroups, Oracle(
       // The X1f resolution replayed on the image pair graph: the SAME
       // recursive reachability as x1_dedup_groups over the closed-form
       // dhash pairs — per family the variant chain (|Δvp| <= 3 between
@@ -6858,9 +6935,9 @@ object Oracles {
         componentCtesFrom("dpair", "media_id_a", "media_id_b") + "\n" +
         """SELECT id AS media_id, min(lbl) AS cluster_id,
           |       min(lbl) = id AS keep
-          |FROM creach GROUP BY id ORDER BY media_id""".stripMargin),
+          |FROM creach GROUP BY id ORDER BY media_id""".stripMargin))),
 
-    "x5_jpeg_decode" ->
+    Lane("x5_jpeg_decode", Queries.x5JpegDecode, Oracle(
       // The LOSSY round trip's closed-form verdict: dims replay
       // exactly; fidelity ships as n_blocks_within_tol = n_blocks
       // (every decoded MCU-block mean within ±4 counts of the planted
@@ -6881,9 +6958,9 @@ object Oracles {
         |            * ((16 + 8 * ((doc_id // 3) % 2)) // 8)
         |         AS INTEGER) AS n_blocks_within_tol
         |FROM documents WHERE doc_id % 3 = 0
-        |ORDER BY media_id""".stripMargin,
+        |ORDER BY media_id""".stripMargin)),
 
-    "x5_phash_pairs" ->
+    Lane("x5_phash_pairs", Queries.x5PhashPairs, Oracle(
       // The DCT perceptual-hash near-dup replayed as BRUTE FORCE over
       // hashes recomputed from the closed-form planted luma — the
       // exact-integer DCT (shared fixed-point basis, floor-div cell
@@ -6898,9 +6975,9 @@ object Oracles {
           |  FROM phash a JOIN phash b ON a.doc_id < b.doc_id
           |  WHERE bit_count(xor(a.phash, b.phash)) <= 4)
           |SELECT media_id_a, media_id_b, hamming FROM ppair
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "x5_ahash_pairs" ->
+    Lane("x5_ahash_pairs", Queries.x5AhashPairs, Oracle(
       // The audio perceptual-hash near-dup replayed as BRUTE FORCE
       // over hashes recomputed from the closed-form planted samples —
       // PCM is lossless and every energy comparison is exact-integer,
@@ -6917,18 +6994,18 @@ object Oracles {
           |  FROM ahash a JOIN ahash b ON a.doc_id < b.doc_id
           |  WHERE bit_count(xor(a.ahash, b.ahash)) <= 3)
           |SELECT media_id_a, media_id_b, hamming FROM apair
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "x5_ahash_dropset" ->
+    Lane("x5_ahash_dropset", Queries.x5AhashDropset, Oracle(
       // Keep-first over the audio near-dup relation: dropped = the
       // b-side of any qualifying pair.
       ("WITH " + ahashHashCtes + "\n" +
         """SELECT DISTINCT b.doc_id AS media_id
           |FROM ahash a JOIN ahash b ON a.doc_id < b.doc_id
           |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_ahash_against" ->
+    Lane("x5_ahash_against", Queries.x5AhashAgainst, Oracle(
       // The incremental (cross-shard) audio near-dup replayed as the
       // brute-force cross predicate over closed-form hashes: history =
       // variants 0-2 (the persisted signature index), shard = 3-6.
@@ -6939,9 +7016,9 @@ object Oracles {
           |FROM ahash s JOIN ahash h
           |  ON bit_count(xor(s.ahash, h.ahash)) <= 3
           |WHERE (s.doc_id % 21) // 3 >= 3 AND (h.doc_id % 21) // 3 < 3
-          |ORDER BY media_id_new, media_id_hist""".stripMargin),
+          |ORDER BY media_id_new, media_id_hist""".stripMargin))),
 
-    "x5_video_neardup" ->
+    Lane("x5_video_neardup", Queries.x5VideoNeardup, Oracle(
       // The video frame-majority near-dup replayed end to end in
       // closed form (shared hash chain: videoHashCtes): the
       // brute-force Hamming<=4 frame predicate across clips,
@@ -6964,9 +7041,9 @@ object Oracles {
           |JOIN vcnt vb ON vb.doc_id = m.media_id_b
           |WHERE least(m.matched_a, m.matched_b) * 1000000
           |      >= 600000 * least(va.frames, vb.frames)
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "x10_media_funnel" ->
+    Lane("x10_media_funnel", Queries.x10MediaFunnel, Oracle(
       // The media curation capstone replayed from all three shared
       // closed-form hash chains: per modality the corpus size, the
       // signed (decodable) count, and the unique survivors after the
@@ -7019,9 +7096,9 @@ object Oracles {
           |         (SELECT CAST(count(DISTINCT doc_id) AS BIGINT)
           |          FROM vhash)
           |           - (SELECT CAST(count(*) AS BIGINT) FROM vdrop))
-          |ORDER BY modality""".stripMargin),
+          |ORDER BY modality""".stripMargin))),
 
-    "x5_video_align" ->
+    Lane("x5_video_align", Queries.x5VideoAlign, Oracle(
       // The temporal-alignment video near-dup replayed in closed form
       // (shared hash chain: videoHashCtes): matched frame pairs group
       // by their offset (frame_b - frame_a), the verdict takes the
@@ -7048,9 +7125,9 @@ object Oracles {
           |JOIN vcnt vb ON vb.doc_id = m.media_id_b
           |WHERE m.aligned * 1000000
           |      >= 600000 * least(va.frames, vb.frames)
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "x5_video_against" ->
+    Lane("x5_video_against", Queries.x5VideoAgainst, Oracle(
       // The incremental video probe replayed as the brute-force cross
       // predicate over closed-form hashes: history = member-0 frames,
       // probes = member-1; the frame-majority containment verdict
@@ -7072,9 +7149,9 @@ object Oracles {
           |JOIN vcnt ch ON ch.doc_id = v.media_id_hist
           |WHERE least(v.matched_new, v.matched_hist) * 1000000
           |      >= 600000 * least(cn.frames, ch.frames)
-          |ORDER BY media_id_new, media_id_hist""".stripMargin),
+          |ORDER BY media_id_new, media_id_hist""".stripMargin))),
 
-        "x5_ahash_chunks" ->
+    Lane("x5_ahash_chunks", Queries.x5AhashChunks, Oracle(
       // The window-chunked long-clip audio near-dup replayed end to
       // end in closed form (shared hash chain: ahashChunkCtes): clips
       // pair on EXACT segment-hash equality and the 500,000-ppm
@@ -7099,9 +7176,9 @@ object Oracles {
           |JOIN ccnt cb2 ON cb2.doc_id = m.media_id_b
           |WHERE least(m.matched_a, m.matched_b) * 1000000
           |      >= 500000 * least(ca.segs, cb2.segs)
-          |ORDER BY media_id_a, media_id_b""".stripMargin),
+          |ORDER BY media_id_a, media_id_b""".stripMargin))),
 
-    "s24_stream_chunks" ->
+    Lane("s24_stream_chunks", Queries.s24StreamChunks, Oracle(
       // The streaming segment-containment drop's batch replay in
       // closed form: history = member-0 segment hashes of EVEN
       // families (the saved index), arrivals = every member-1 clip;
@@ -7126,9 +7203,9 @@ object Oracles {
           |WHERE NOT (c.nsegs IS NOT NULL
           |           AND coalesce(mm.matched, 0) * 1000000
           |               >= 500000 * c.nsegs)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "s23_stream_ahash" ->
+    Lane("s23_stream_ahash", Queries.s23StreamAhash, Oracle(
       // The streaming audio drop's batch replay in closed form (the
       // s19/s21 posture on the aHash family): survivors = shard clips
       // (variants 3-6) with NO history clip (variants 0-2) within
@@ -7143,9 +7220,9 @@ object Oracles {
           |    SELECT 1 FROM ahash h
           |    WHERE (h.doc_id % 21) // 3 < 3
           |      AND bit_count(xor(s.ahash, h.ahash)) <= 3)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_xcodec_dedup" ->
+    Lane("x5_xcodec_dedup", Queries.x5XcodecDedup, Oracle(
       // The cross-codec drop set replayed WITHOUT a codec, by certainty
       // bands (measured at sf0.01: re-encode drift <= 4 bits,
       // within-family <= 4, cross-family >= 14; threshold 6 sits in
@@ -7164,9 +7241,9 @@ object Oracles {
           |  SELECT DISTINCT media_id FROM xpair
           |  UNION ALL
           |  SELECT doc_id + 1000000000 AS media_id FROM pimg)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_xcodec_groups" ->
+    Lane("x5_xcodec_groups", Queries.x5XcodecGroups, Oracle(
       // Cross-codec resolution replayed from the PNG side alone, by
       // the x5_xcodec_dedup certainty bands plus the clique claim
       // (within-family pairs of EITHER codec measure <= 4 bits,
@@ -7195,9 +7272,9 @@ object Oracles {
           |  SELECT media_id, cluster_id FROM pngc
           |  UNION ALL
           |  SELECT media_id + 1000000000, cluster_id FROM pngc)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_dhash_pipeline" ->
+    Lane("x5_dhash_pipeline", Queries.x5DhashPipeline, Oracle(
       // The composed production shape replayed per image from the
       // closed-form hash CTE: signature, connected component over the
       // full pair graph (isolated images label themselves), CC keep,
@@ -7213,9 +7290,9 @@ object Oracles {
           |FROM hash h
           |LEFT JOIN (SELECT id, min(lbl) AS cluster_id
           |           FROM creach GROUP BY id) c ON c.id = h.doc_id
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_dhash_against" ->
+    Lane("x5_dhash_against", Queries.x5DhashAgainst, Oracle(
       // The incremental (cross-shard) image near-dup replayed as the
       // brute-force cross predicate: history = variants 0-2 of every
       // family (the persisted signature index), shard = variants 3-6;
@@ -7227,9 +7304,9 @@ object Oracles {
           |FROM hash s JOIN hash h
           |  ON bit_count(xor(s.dhash, h.dhash)) <= 3
           |WHERE (s.doc_id % 21) // 3 >= 3 AND (h.doc_id % 21) // 3 < 3
-          |ORDER BY media_id_new, media_id_hist""".stripMargin),
+          |ORDER BY media_id_new, media_id_hist""".stripMargin))),
 
-    "s19_stream_dhash" ->
+    Lane("s19_stream_dhash", Queries.s19StreamDhash, Oracle(
       // The streaming image drop's batch replay in closed form:
       // survivors = shard images (variants 3-6) with NO history image
       // (variants 0-2) within Hamming <= 2 — at that threshold the
@@ -7245,9 +7322,9 @@ object Oracles {
           |    SELECT 1 FROM hash h
           |    WHERE (h.doc_id % 21) // 3 < 3
           |      AND bit_count(xor(s.dhash, h.dhash)) <= 2)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "s21_stream_phash" ->
+    Lane("s21_stream_phash", Queries.s21StreamPhash, Oracle(
       // The streaming pHash drop's batch replay in closed form (the
       // s19 posture on the DCT family): survivors = shard images
       // (variants 3-7) with NO history image (variants 0-2) within
@@ -7263,9 +7340,9 @@ object Oracles {
           |    SELECT 1 FROM phash h
           |    WHERE (h.doc_id % 24) // 3 < 3
           |      AND bit_count(xor(s.phash, h.phash)) <= 2)
-          |ORDER BY media_id""".stripMargin),
+          |ORDER BY media_id""".stripMargin))),
 
-    "x5_media_features" ->
+    Lane("x5_media_features", Queries.x5MediaFeatures, Oracle(
       // The byte-window pseudo-decode replayed from the document text
       // (payload = its UTF-8 bytes; testdata is pure ASCII so character
       // positions == byte positions): byte i of an n-byte payload lands
@@ -7306,9 +7383,9 @@ object Oracles {
         |       coalesce(f63, 0.0) AS f63,
         |       CAST(coalesce(n_nonzero, 0) AS BIGINT) AS n_nonzero
         |FROM doc LEFT JOIN agg ON doc.media_id = agg.media_id
-        |ORDER BY doc.media_id""".stripMargin,
+        |ORDER BY doc.media_id""".stripMargin)),
 
-    "x5_media_integrity" ->
+    Lane("x5_media_integrity", Queries.x5MediaIntegrity, Oracle(
       """SELECT kind, count(*) AS n,
         |       count(CASE WHEN text IS NULL THEN 1 END) AS null_payload,
         |       count(CASE WHEN octet_length(encode(text)) < 8 THEN 1 END) AS truncated,
@@ -7317,9 +7394,9 @@ object Oracles {
         |             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
         |                  WHEN 1 THEN 'audio' ELSE 'video' END AS kind
         |      FROM documents)
-        |GROUP BY 1 ORDER BY kind""".stripMargin,
+        |GROUP BY 1 ORDER BY kind""".stripMargin)),
 
-    "p5_etl_diamond" ->
+    Lane("p5_etl_diamond", Queries.p5EtlDiamond, Oracle(
       """SELECT r_name AS region_name, trim(p_brand) AS brand,
         |       count(*) AS line_count,
         |       CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
@@ -7331,6 +7408,8 @@ object Oracles {
         |JOIN part     ON l_partkey = p_partkey
         |WHERE p_retailprice > 0
         |GROUP BY 1, 2
-        |ORDER BY region_name, brand""".stripMargin
-  )
+        |ORDER BY region_name, brand""".stripMargin))
+  ))
+
+  private val byName: Map[String, Lane] = all.map(l => l.name -> l).toMap
 }

@@ -58,17 +58,13 @@ object Profile {
   }
 
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) sys.error("usage: Profile <lane> [lane...]")
+    val lanes = Lanes.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(Sessions.cpusFromEnv)
     val collector = new Collector
     spark.sparkContext.addSparkListener(collector)
-    val names =
-      if (args.isEmpty) sys.error("usage: Profile <query> [query...]")
-      else args.toSeq
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    lanes.foreach { case Lane(name, fn, _) =>
       // Warm-up (JIT, codegen, footers), then timed cold pass.
       spark.catalog.clearCache()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()

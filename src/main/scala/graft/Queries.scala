@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Stages
 
-/** Registry of the engine's query surface (SURVEY.md §2 inventory).
-  * Each entry is a `(SparkSession, sfDir) => DataFrame` paired (in
-  * [[Oracles]]) with ANSI SQL the driver replays in DuckDB over the same
-  * parquet tables. Conventions, per SURVEY.md §7.4:
+/** The lane bodies of the engine's query surface (SURVEY.md §2
+  * inventory). Each is a `(SparkSession, sfDir) => DataFrame`, registered
+  * in [[Lanes.all]] with the ANSI SQL that DuckDB replays over the same
+  * parquet tables (or its rows-only twin). Conventions, per
+  * SURVEY.md §7.4:
   *   - deterministic output: every row-returning query ends in orderBy on
   *     a unique key; aggregates are single-row or ordered;
   *   - float aggregates rounded (2–4 dp) in BOTH engines;

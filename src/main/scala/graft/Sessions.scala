@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place to build correctly-configured local sessions for the engine's
-  * mains (Verify/Bench/EntrySmoke) and tests, so per-table loaders stay
-  * side-effect free (no hidden session-conf mutation in the data path).
+  * mains (Verify, Bench, Explain, Profile, EntrySmoke) and tests, so
+  * per-table loaders stay side-effect free (no hidden session-conf
+  * mutation in the data path).
   */
 object Sessions {
 
@@ -53,6 +54,11 @@ object Sessions {
       .config("spark.sql.sources.useV1SourceList", "")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** The core count the mains run on: `SPARK_GRAFT_CPUS`, or every
+    * available processor when it is unset. */
+  def cpusFromEnv: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query bodies live in [[Queries]]; DuckDB oracle SQL in [[Oracles]]. */
+/** Entry contract (SURVEY.md §7): the flagship [[entry]], every lane by
+  * name, and the DuckDB oracle SQL. The lanes and their checks are
+  * declared once in [[Lanes.all]]; their bodies live in [[Queries]]. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -14,252 +15,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.d4WhitelistViolations(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d1_count" -> (Queries.d1Count _),
-    "d2_null_keys" -> (Queries.d2NullKeys _),
-    "d3_distinct" -> (Queries.d3Distinct _),
-    "d4_whitelist_violations" -> (Queries.d4WhitelistViolations _),
-    "r1_region_whitelist" -> (Queries.r1RegionWhitelist _),
-    "r2_nonempty" -> (Queries.r2NonEmpty _),
-    "r3_schema_compliance" -> (Queries.r3SchemaCompliance _),
-    "r4_business_rule" -> (Queries.r4BusinessRule _),
-    "t1_stg_territory" -> (Queries.t1StgTerritory _),
-    "t2_stg_salesperson" -> (Queries.t2StgSalesperson _),
-    "t3_mart_sales" -> (Queries.t3MartSales _),
-    "t3_mart_rollup" -> (Queries.t3MartRollup _),
-    "t4_scd2_snapshot" -> (Queries.t4Scd2Snapshot _),
-    "g1_row_counts" -> (Queries.g1RowCounts _),
-    "g2_not_null" -> (Queries.g2NotNull _),
-    "g3_in_set" -> (Queries.g3InSet _),
-    "g4_not_in_set" -> (Queries.g4NotInSet _),
-    "g5_between" -> (Queries.g5Between _),
-    "g6_schema_columns" -> (Queries.g6SchemaColumns _),
-    "g7_unique" -> (Queries.g7Unique _),
-    "g8_compound_unique" -> (Queries.g8CompoundUnique _),
-    "g9_regex" -> (Queries.g9Regex _),
-    "g10_type_cast" -> (Queries.g10TypeCast _),
-    "g11_agg_bounds" -> (Queries.g11AggBounds _),
-    "g12_pair_greater" -> (Queries.g12PairGreater _),
-    "g13_g15_profile" -> (Queries.g13G15Profile _),
-    "g16_declarative_suite" -> (Queries.g16DeclarativeSuite _),
-    "g17_referential" -> (Queries.g17Referential _),
-    "g18_fd_check" -> (Queries.g18FdCheck _),
-    "g19_benford" -> (Queries.g19Benford _),
-    "g20_corr_stats" -> (Queries.g20CorrStats _),
-    "g21_rowcount_parity" -> (Queries.g21RowcountParity _),
-    "v1_raw_gate" -> (Queries.v1RawGate _),
-    "v2_suite_summary" -> (Queries.v2SuiteSummary _),
-    "v5_drift_check" -> (Queries.v5DriftCheck _),
-    "v6_checkpoint_run" -> (Queries.v6CheckpointRun _),
-    "p5_etl_diamond" -> (Queries.p5EtlDiamond _),
-    "x1_exact_dedup" -> (Queries.x1ExactDedup _),
-    "x1_dedup_keepbest" -> (Queries.x1DedupKeepBest _),
-    "x1_incremental_dedup" -> (Queries.x1IncrementalDedup _),
-    "x1_bloom_dedup" -> (Queries.x1BloomDedup _),
-    "x1_keepbest_against" -> (Queries.x1KeepbestAgainst _),
-    "x1_keepbest_bloom" -> (Queries.x1KeepbestBloom _),
-    "x17_soft_dedup" -> (Queries.x17SoftDedup _),
-    "x1_jaccard_pairs" -> (Queries.x1JaccardPairs _),
-    "x1_minhash_pairs" -> (Queries.x1MinhashPairs _),
-    "x1_minhash_planted" -> (Queries.x1MinhashPlanted _),
-    "x1_simhash_pairs" -> (Queries.x1SimhashPairs _),
-    "x1_simhash_planted" -> (Queries.x1SimhashPlanted _),
-    "x1_dedup_groups" -> (Queries.x1DedupGroups _),
-    "x1_span_dedup" -> (Queries.x1SpanDedup _),
-    "x1_substring_dedup" -> (Queries.x1SubstringDedup _),
-    "x1_embed_neardup" -> (Queries.x1EmbedNearDup _),
-    "x2_topk_cosine" -> (Queries.x2TopkCosine _),
-    "x2_hard_negatives" -> (Queries.x2HardNegatives _),
-    "x2_mrl_topk" -> (Queries.x2MrlTopk _),
-    "x2_ann_topk" -> (Queries.x2AnnTopk _),
-    "x2_ann_planted" -> (Queries.x2AnnPlanted _),
-    "x2_ann_against" -> (Queries.x2AnnAgainst _),
-    "x2_ivf_topk" -> (Queries.x2IvfTopk _),
-    "x2_pq_topk" -> (Queries.x2PqTopk _),
-    "x2_pq_planted" -> (Queries.x2PqPlanted _),
-    "x2_ivfpq_topk" -> (Queries.x2IvfpqTopk _),
-    "x2_ivfpq_planted" -> (Queries.x2IvfpqPlanted _),
-    "x2_ivf_planted" -> (Queries.x2IvfPlanted _),
-    "x2_ivf_against" -> (Queries.x2IvfAgainst _),
-    "x2_quant_topk" -> (Queries.x2QuantTopk _),
-    "x2_centroid_outliers" -> (Queries.x2CentroidOutliers _),
-    "x2_semdedup" -> (Queries.x2SemDedup _),
-    "x3_top_tokens" -> (Queries.x3TopTokens _),
-    "x3_quality_by_lang" -> (Queries.x3QualityByLang _),
-    "x3_fingerprints" -> (Queries.x3Fingerprints _),
-    "x3_token_counts" -> (Queries.x3TokenCounts _),
-    "x3_lang_confusion" -> (Queries.x3LangConfusion _),
-    "x3_lang_train" -> (Queries.x3LangTrain _),
-    "x3_lang_trained" -> (Queries.x3LangTrained _),
-    "x3_repetition" -> (Queries.x3Repetition _),
-    "x3_gopher_rules" -> (Queries.x3GopherRules _),
-    "x3_c4_rules" -> (Queries.x3C4Rules _),
-    "x13_quality_bands" -> (Queries.x13QualityBands _),
-    "x14_url_stage" -> (Queries.x14UrlStage _),
-    "x4_zscore_flags" -> (Queries.x4ZscoreFlags _),
-    "s1_windowed_checks" -> (Queries.s1WindowedChecks _),
-    "s2_stream_dedup" -> (Queries.s2StreamDedup _),
-    "s3_stream_neardup" -> (Queries.s3StreamNeardup _),
-    "s3_planted_neardup" -> (Queries.s3PlantedNeardup _),
-    "s4_stream_simhash" -> (Queries.s4StreamSimhash _),
-    "s4_planted_simhash" -> (Queries.s4PlantedSimhash _),
-    "x5_media_integrity" -> (Queries.x5MediaIntegrity _),
-    "x5_media_features" -> (Queries.x5MediaFeatures _),
-    "x5_frame_sample" -> (Queries.x5FrameSample _),
-    "x5_header_parse" -> (Queries.x5HeaderParse _),
-    "x6_stratified_sample" -> (Queries.x6StratifiedSample _),
-    "x6_splits" -> (Queries.x6Splits _),
-    "x6_sample_then_split" -> (Queries.x6SampleThenSplit _),
-    "x6_top_per_stratum" -> (Queries.x6TopPerStratum _),
-    "x6_quota_sample" -> (Queries.x6QuotaSample _),
-    "x7_pii_scan" -> (Queries.x7PiiScan _),
-    "x7_card_scan" -> (Queries.x7CardScan _),
-    "x8_contamination" -> (Queries.x8Contamination _),
-    "x8_contam_against" -> (Queries.x8ContamAgainst _),
-    "s10_stream_decontam" -> (Queries.s10StreamDecontam _),
-    "x9_pack_sequences" -> (Queries.x9PackSequences _),
-    "x9_pack_padded" -> (Queries.x9PackPadded _),
-    "x9_materialize" -> (Queries.x9Materialize _),
-    "x10_curation_funnel" -> (Queries.x10CurationFunnel _),
-    "x10_keepbest_funnel" -> (Queries.x10KeepbestFunnel _),
-    "x10_ppl_funnel" -> (Queries.x10PplFunnel _),
-    "x10_dsir_funnel" -> (Queries.x10DsirFunnel _),
-    "x10_funnel_by_source" -> (Queries.x10FunnelBySource _),
-    "x10_split_cards" -> (Queries.x10SplitCards _),
-    "x11_skew_profile" -> (Queries.x11SkewProfile _),
-    "x11_salted_join" -> (Queries.x11SaltedJoin _),
-    "x12_token_mix" -> (Queries.x12TokenMix _),
-    "x12_training_order" -> (Queries.x12TrainingOrder _),
-    "x12_temperature_mix" -> (Queries.x12TemperatureMix _),
-    "x12_weighted_mix" -> (Queries.x12WeightedMix _),
-    "x10_soft_funnel" -> (Queries.x10SoftFunnel _),
-    "x5_png_decode" -> (Queries.x5PngDecode _),
-    "x5_wav_decode" -> (Queries.x5WavDecode _),
-    "x5_gif_decode" -> (Queries.x5GifDecode _),
-    "x5_dhash_pairs" -> (Queries.x5DhashPairs _),
-    "x5_dhash_dropset" -> (Queries.x5DhashDropset _),
-    "x5_dhash_against" -> (Queries.x5DhashAgainst _),
-    "x5_dhash_groups" -> (Queries.x5DhashGroups _),
-    "x5_dhash_pipeline" -> (Queries.x5DhashPipeline _),
-    "x5_jpeg_decode" -> (Queries.x5JpegDecode _),
-    "x5_phash_pairs" -> (Queries.x5PhashPairs _),
-    "x5_xcodec_dedup" -> (Queries.x5XcodecDedup _),
-    "x5_ahash_pairs" -> (Queries.x5AhashPairs _),
-    "x5_ahash_against" -> (Queries.x5AhashAgainst _),
-    "x5_ahash_dropset" -> (Queries.x5AhashDropset _),
-    "x5_ahash_chunks" -> (Queries.x5AhashChunks _),
-    "x5_video_neardup" -> (Queries.x5VideoNeardup _),
-    "x5_video_align" -> (Queries.x5VideoAlign _),
-    "x5_video_against" -> (Queries.x5VideoAgainst _),
-    "x10_media_funnel" -> (Queries.x10MediaFunnel _),
-    "x26_budget_bpe" -> (Queries.x26BudgetBpe _),
-    "x31_ldiversity" -> (Queries.x31LDiversity _),
-    "s25_stream_bpe" -> (Queries.s25StreamBpe _),
-    "s24_stream_chunks" -> (Queries.s24StreamChunks _),
-    "x5_xcodec_groups" -> (Queries.x5XcodecGroups _),
-    "s19_stream_dhash" -> (Queries.s19StreamDhash _),
-    "s21_stream_phash" -> (Queries.s21StreamPhash _),
-    "s23_stream_ahash" -> (Queries.s23StreamAhash _),
-    "x5_adpcm_decode" -> (Queries.x5AdpcmDecode _),
-    "x19_line_dedup" -> (Queries.x19LineDedup _),
-    "x19_xdoc_dedup" -> (Queries.x19XdocDedup _),
-    "x18_sessionize" -> (Queries.x18Sessionize _),
-    "x18_session_builtin" -> (Queries.x18SessionBuiltin _),
-    "x19_text_clean" -> (Queries.x19TextClean _),
-    "x20_psi_drift" -> (Queries.x20PsiDrift _),
-    "x10_clean_funnel" -> (Queries.x10CleanFunnel _),
-    "x10_xdedup_funnel" -> (Queries.x10XdedupFunnel _),
-    "x10_nfc_funnel" -> (Queries.x10NfcFunnel _),
-    "x10_c4_funnel" -> (Queries.x10C4Funnel _),
-    "x10_recipe_funnel" -> (Queries.x10RecipeFunnel _),
-    "s5_stream_sessions" -> (Queries.s5StreamSessions _),
-    "s6_stream_anndrop" -> (Queries.s6StreamAnnDrop _),
-    "s7_stream_scd2" -> (Queries.s7StreamScd2 _),
-    "x21_asof_join" -> (Queries.x21AsofJoin _),
-    "x22_range_join" -> (Queries.x22RangeJoin _),
-    "x23_chunk_docs" -> (Queries.x23ChunkDocs _),
-    "x24_tfidf_terms" -> (Queries.x24TfidfTerms _),
-    "x25_corpus_diff" -> (Queries.x25CorpusDiff _),
-    "x26_budget_cut" -> (Queries.x26BudgetCut _),
-    "x14_domain_cap" -> (Queries.x14DomainCap _),
-    "x27_score_percentile" -> (Queries.x27ScorePercentile _),
-    "x28_bucketed_join" -> (Queries.x28BucketedJoin _),
-    "x29_jsonl_roundtrip" -> (Queries.x29JsonlRoundtrip _),
-    "x32_csv_roundtrip" -> (Queries.x32CsvRoundtrip _),
-    "x33_compact_verify" -> (Queries.x33CompactVerify _),
-    "x34_orc_roundtrip" -> (Queries.x34OrcRoundtrip _),
-    "x35_time_layout" -> (Queries.x35TimeLayout _),
-    "x36_cohort_retention" -> (Queries.x36CohortRetention _),
-    "x37_event_funnel" -> (Queries.x37EventFunnel _),
-    "x38_fuzzy_join" -> (Queries.x38FuzzyJoin _),
-    "x39_length_batches" -> (Queries.x39LengthBatches _),
-    "x40_dataset_card" -> (Queries.x40DatasetCard _),
-    "s13_stream_quality" -> (Queries.s13StreamQuality _),
-    "x41_pmi_pairs" -> (Queries.x41PmiPairs _),
-    "x42_scd2_enrich" -> (Queries.x42Scd2Enrich _),
-    "x43_embed_drift" -> (Queries.x43EmbedDrift _),
-    "s14_stream_enrich" -> (Queries.s14StreamEnrich _),
-    "x44_mad_outliers" -> (Queries.x44MadOutliers _),
-    "s16_stream_madgate" -> (Queries.s16StreamMadGate _),
-    "s17_stream_lang" -> (Queries.s17StreamLang _),
-    "s18_stream_join" -> (Queries.s18StreamJoin _),
-    "s20_stream_outer_join" -> (Queries.s20StreamOuterJoin _),
-    "s22_stream_full_outer" -> (Queries.s22StreamFullOuter _),
-    "g22_ge_tail" -> (Queries.g22GeTail _),
-    "g23_kl_divergence" -> (Queries.g23KlDivergence _),
-    "g24_chi_square" -> (Queries.g24ChiSquare _),
-    "x45_session_funnel" -> (Queries.x45SessionFunnel _),
-    "x46_compress_ratio" -> (Queries.x46CompressRatio _),
-    "x47_rolling_metrics" -> (Queries.x47RollingMetrics _),
-    "x48_concurrency" -> (Queries.x48Concurrency _),
-    "x49_rendezvous" -> (Queries.x49Rendezvous _),
-    "x50_nested_flatten" -> (Queries.x50NestedFlatten _),
-    "x52_group_split" -> (Queries.x52GroupSplit _),
-    "x53_bpe_train" -> (Queries.x53BpeTrain _),
-    "x53_bpe_train_full" -> (Queries.x53BpeTrainFull _),
-    "x53_bpe_bytes" -> (Queries.x53BpeBytes _),
-    "x53_bpe_tokenize" -> (Queries.x53BpeTokenize _),
-    "x53_bpe_count" -> (Queries.x53BpeCount _),
-    "x53_bpe_deep" -> (Queries.x53BpeDeep _),
-    "s15_stream_ingest" -> (Queries.s15StreamIngest _),
-    "x51_pivot_crosstab" -> (Queries.x51PivotCrosstab _),
-    "x46_planted_ratio" -> (Queries.x46PlantedRatio _),
-    "x19_fix_mojibake" -> (Queries.x19FixMojibake _),
-    "x3_word_blocklist" -> (Queries.x3WordBlocklist _),
-    "x3_top_terms" -> (Queries.x3TopTerms _),
-    "s11_stream_scrub" -> (Queries.s11StreamScrub _),
-    "s12_stream_clean" -> (Queries.s12StreamClean _),
-    "x10_mojibake_funnel" -> (Queries.x10MojibakeFunnel _),
-    "x10_blocklist_funnel" -> (Queries.x10BlocklistFunnel _),
-    "x10_card_funnel" -> (Queries.x10CardFunnel _),
-    "x27_pctl_against" -> (Queries.x27PctlAgainst _),
-    "x10_pctl_funnel" -> (Queries.x10PctlFunnel _),
-    "x30_perceptron" -> (Queries.x30Perceptron _),
-    "x12_upsample" -> (Queries.x12Upsample _),
-    "x31_kanon" -> (Queries.x31Kanon _),
-    "x19_nfc_dedup" -> (Queries.x19NfcDedup _),
-    "x24_bm25_rank" -> (Queries.x24Bm25Rank _),
-    "x24_bm25_against" -> (Queries.x24Bm25Against _),
-    "x24_bm25_merged" -> (Queries.x24Bm25Merged _),
-    "x24_bm25_removed" -> (Queries.x24Bm25Removed _),
-    "s8_stream_bm25" -> (Queries.s8StreamBm25 _),
-    "s9_stream_pctl_gate" -> (Queries.s9StreamPctlGate _),
-    "x15_lm_ppl" -> (Queries.x15LmPpl _),
-    "x15_lm_ppl3" -> (Queries.x15LmPpl3 _),
-    "x15_lm_ppl5" -> (Queries.x15LmPpl5 _),
-    "x15_lm_against" -> (Queries.x15LmPplAgainst _),
-    "x16_dsir_weights" -> (Queries.x16DsirWeights _),
-    "x16_dsir_select" -> (Queries.x16DsirSelect _),
-    "x16_dsir_against" -> (Queries.x16DsirAgainst _),
-    "x10_write_verify" -> (Queries.x10WriteVerify _),
-    "x10_layout_audit" -> (Queries.x10LayoutAudit _),
-    "x10_gopher_funnel" -> (Queries.x10GopherFunnel _),
-    "x10_gopher_bylang" -> (Queries.x10GopherByLang _),
-    "x10_write_packed" -> (Queries.x10WritePacked _)
-  )
+  /** Every registered lane's body by name: a view of [[Lanes.all]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = builds
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Oracles.sql
+  /** Each oracle-checked lane's DuckDB SQL by name: a view of
+    * [[Lanes.all]]. Rows-only lanes have no entry. */
+  def oracleSql: Map[String, String] = oracles
+
+  private val builds = Lanes.all.map(l => l.name -> l.build).toMap
+  private val oracles =
+    Lanes.all.collect { case Lane(name, _, Oracle(sql)) => name -> sql }.toMap
 }

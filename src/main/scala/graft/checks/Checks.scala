@@ -44,12 +44,6 @@ trait AggCheck extends Check {
     val cols = aggColumns("")
     refine(df, evaluate(df.agg(cols.head, cols.tail: _*).head(), ""))
   }
-
-  /** The check as a one-row DataFrame (used by SparkEntry query surface). */
-  final def aggDF(df: DataFrame): DataFrame = {
-    val cols = aggColumns("")
-    df.agg(cols.head, cols.tail: _*)
-  }
 }
 
 /** Shared helpers for value-level checks: `elementCount` = all rows,
@@ -74,7 +68,7 @@ abstract class ValueCheck extends AggCheck {
 
   /** Rows that can conform or violate, BEFORE the row condition. Column
     * checks: the column is non-null. Pair checks override with GE's
-    * not-both-missing default (`ignore_row_if`). */
+    * not-both-missing default (`ignore_row_if`), not-null with every row. */
   def basisRaw: Column = col(column).isNotNull
 
   /** Rows forming GE's `mostly` denominator: the unconditioned basis
@@ -117,29 +111,25 @@ abstract class ValueCheck extends AggCheck {
   *
   * Modeled as a wrapper so every counting check gets tolerance without
   * touching its scan count: the inner check's fused aggregate columns are
-  * reused (plus one non-null counter for the value family — same single
-  * pass), only the verdict threshold changes. Wrapping an
-  * aggregate-verdict check (row counts, mean bounds…) is rejected at
-  * construction, matching GE, where `mostly` exists only on column map
-  * expectations. */
+  * reused (plus one basis counter — same single pass), only the verdict
+  * threshold changes. Wrapping an aggregate-verdict check (row counts,
+  * mean bounds…) is rejected at construction, matching GE, where
+  * `mostly` exists only on column map expectations. */
 final case class MostlyCheck(inner: AggCheck, mostly: Double) extends AggCheck {
   require(mostly > 0.0 && mostly <= 1.0, s"mostly ($mostly) must be in (0, 1]")
-  require(inner.isInstanceOf[ValueCheck] || inner.isInstanceOf[NotNullCheck],
-    s"mostly is not meaningful for '${inner.name}' — it applies to " +
-      "row-counting (column map) expectations only")
-  val name: String = inner.name
-  override def aggColumns(prefix: String): Seq[Column] = inner match {
-    case v: ValueCheck =>
-      v.aggColumns(prefix) :+
-        count(when(v.mostlyBasis, lit(1))).as(s"${prefix}nonnull_count")
-    case _ => inner.aggColumns(prefix)
+  private val value = inner match {
+    case v: ValueCheck => v
+    case _ => throw new IllegalArgumentException(
+      s"mostly is not meaningful for '${inner.name}' — it applies to " +
+        "row-counting (column map) expectations only")
   }
+  val name: String = inner.name
+  override def aggColumns(prefix: String): Seq[Column] =
+    value.aggColumns(prefix) :+
+      count(when(value.mostlyBasis, lit(1))).as(s"${prefix}nonnull_count")
   override def evaluate(row: Row, prefix: String): ValidationResult = {
     val base = inner.evaluate(row, prefix)
-    val basis = inner match {
-      case _: ValueCheck => row.getAs[Long](s"${prefix}nonnull_count")
-      case _             => base.elementCount
-    }
+    val basis = row.getAs[Long](s"${prefix}nonnull_count")
     val pct =
       if (basis == 0) 0.0 else base.unexpectedCount.toDouble / basis * 100.0
     val ok = pct <= (1.0 - mostly) * 100.0
@@ -190,18 +180,6 @@ final case class ConditionedCheck(inner: ValueCheck, conditionSql: String)
     inner.refine(df.filter(expr(conditionSql)), r)
 }
 
-/** `expect_column_values_to_not_be_null` under a `row_condition`: GE's
-  * not-null semantics lifted into the [[ValueCheck]] family so the
-  * condition folds into both counters — the basis is ALL condition rows
-  * (nulls are the violations, so they must stay in the denominator,
-  * unlike value predicates where null rows can't conform or violate). */
-final case class NotNullWhereCheck(column: String) extends ValueCheck {
-  val name = s"not_null:$column"
-  def unexpected: Column = col(column).isNull
-  def describe: String = s"$column not null"
-  override def basisRaw: Column = lit(true)
-}
-
 /** G1/D1/R2 — `expect_table_row_count_to_be_between` (min=1 ⇒ non-empty).
   * Reference: COUNT(*) tests at pager-workflow.py:126,133,159,174,189;
   * empty-input rule analysis.md:9 (`validate_data_quality`). */
@@ -224,22 +202,15 @@ final case class RowCountCheck(
 }
 
 /** G2/D2 — `expect_column_values_to_not_be_null`.
-  * Reference: `WHERE SalesTerritoryKey IS NULL` count, pager-workflow.py:127,134. */
-final case class NotNullCheck(column: String) extends AggCheck {
+  * Reference: `WHERE SalesTerritoryKey IS NULL` count, pager-workflow.py:127,134.
+  * The nulls ARE the violations, so the basis is every row (under a
+  * `row_condition`, every condition row) — unlike value predicates, where
+  * a null row can neither conform nor violate. */
+final case class NotNullCheck(column: String) extends ValueCheck {
   val name = s"not_null:$column"
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
-    count(when(col(column).isNull, lit(1))).as(s"${prefix}unexpected_count"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val bad   = row.getAs[Long](s"${prefix}unexpected_count")
-    ValidationResult(name,
-      if (bad == 0) ValidationStatus.Passed else ValidationStatus.Failed,
-      if (bad == 0) s"no null $column values in $total rows"
-      else s"$bad null $column values in $total rows",
-      elementCount = total, unexpectedCount = bad,
-      unexpectedPercent = if (total == 0) 0.0 else bad.toDouble / total * 100.0)
-  }
+  def unexpected: Column = col(column).isNull
+  def describe: String = s"$column not null"
+  override def basisRaw: Column = lit(true)
 }
 
 /** G3/D4/R1 — `expect_column_values_to_be_in_set` (whitelist).

@@ -1406,7 +1406,7 @@ object Multimodal {
   /** Fixed-point N=32 DCT-II basis, rows u < 8 only (the kept
     * low-frequency block): C[u][x] = round(2^14 · cos((2x+1)uπ/64)).
     * The SAME table is embedded VERBATIM in the DuckDB oracle
-    * ([[graft.Oracles]] renders it from this array — one source of
+    * ([[graft.Lanes]] renders it from this array — one source of
     * truth), so the integer DCT is replayable to the last bit. The
     * α(u) orthonormalization factors are deliberately dropped: bits
     * compare coefficients against their own median, and a per-u

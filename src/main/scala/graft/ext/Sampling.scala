@@ -89,7 +89,7 @@ object Sampling {
     * lanes' addends. Without this, masking the raw seed to 31 bits made
     * seeds differing only above bit 30 — e.g. seeds derived from 64-bit
     * run-id hashes — produce byte-identical samples/splits/mixes with
-    * no warning. Shared with [[graft.Oracles]]' SQL generation, ONE
+    * no warning. Shared with [[graft.Lanes]]' oracle SQL generation, ONE
     * definition. */
   private[graft] def seedLanes(seed: Long): (Long, Long) = {
     var z = seed + 0x9E3779B97F4A7C15L

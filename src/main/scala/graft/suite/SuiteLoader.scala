@@ -144,10 +144,6 @@ object SuiteLoader {
               "Spark SQL predicate (declare 'spark' or omit)")
         }
         base.map {
-          // GE's not-null keeps nulls in the basis (they ARE the
-          // violations); the lifted ValueCheck variant preserves that
-          // under the condition.
-          case n: NotNullCheck => ConditionedCheck(NotNullWhereCheck(n.column), cond)
           case v: ValueCheck => ConditionedCheck(v, cond)
           case other => throw new IllegalArgumentException(
             s"row_condition is not supported for $expectationType " +

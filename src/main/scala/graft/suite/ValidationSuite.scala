@@ -27,14 +27,8 @@ object ValidationSuite {
     * thread-safe; concurrent actions schedule as parallel jobs): the
     * suite's wall-clock is its slowest table, not the sum — on a real
     * cluster each table's fused scan runs while the others' do. Result
-    * order stays the declaration order.
-    *
-    * The futures run on a DEDICATED pool sized to the table count (not
-    * the global ExecutionContext): each future blocks on a Spark action,
-    * and parking those on the bounded shared pool starves its other
-    * users. All table failures are surfaced together (first thrown,
-    * rest suppressed) — awaiting sequentially would report only the
-    * first and silently discard its siblings' exceptions. */
+    * order stays the declaration order; the pool and the failure
+    * reporting are [[Concurrency.all]]'s. */
   def run(tables: Seq[TableChecks]): ValidationSuiteResult =
     ValidationSuiteResult.of(Concurrency.all(tables)(runTable).flatten)
 

@@ -27,7 +27,7 @@ import graft.ext.{Dedup, Dsir, NgramLm, Sampling}
   * loudly instead of the oracle flaking silently on some platform.
   *
   * The value re-derivations below deliberately mirror the ORACLE SQL
-  * (`Oracles.dsirWeightCtes` / `x15_lm_ppl`) — the oracle's inputs are
+  * (`Lanes.dsirWeightCtes` / `x15_lm_ppl`) — the oracle's inputs are
   * the thing whose slack matters.
   */
 class MicroNatSlackSpec extends SparkSpec {
