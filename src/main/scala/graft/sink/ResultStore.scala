@@ -44,10 +44,14 @@ object ResultStore {
   }
 
   /** Append the suite result into the store, partitioned by run —
-    * partition pruning makes per-run reads O(run), not O(history). */
+    * partition pruning makes per-run reads O(run), not O(history). One
+    * run is a few dozen rows, so it is written as one parquet file: the
+    * local relation would otherwise be split over the session's cores,
+    * one part file (plus its `.crc`) each, and every history read would
+    * open all of them. */
   def write(spark: SparkSession, suite: ValidationSuiteResult,
             dir: String, runId: String): Unit =
-    toDF(spark, suite, runId)
+    toDF(spark, suite, runId).coalesce(1)
       .write.mode(SaveMode.Append).partitionBy("run_id").parquet(dir)
 
   /** Read the store back (all runs, or one), with [[schema]]; `run_id`

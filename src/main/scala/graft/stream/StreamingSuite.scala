@@ -21,7 +21,11 @@ import graft.model.ValidationResult
   *    their state evicted — late data beyond the watermark is dropped,
   *    documented semantics per SURVEY.md §7.4;
   *  - verdict construction reuses each check's `evaluate`, so batch and
-  *    streaming agree on pass/fail logic by construction.
+  *    streaming agree on pass/fail logic by construction;
+  *  - each micro-batch publishes to the checkpoint an offsets entry, a
+  *    commits entry, and one state delta plus its checksum per state
+  *    partition (the session's shuffle partitions when the query starts),
+  *    through [[graft.Sessions.CheckpointFileManagerClass]].
   */
 object StreamingSuite {
 

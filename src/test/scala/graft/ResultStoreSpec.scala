@@ -49,6 +49,32 @@ class ResultStoreSpec extends SparkSpec {
     assert(r42.filter("status = 'FAILED'").count() == 1)
   }
 
+  test("each run is stored as one parquet file holding all its rows") {
+    import scala.jdk.CollectionConverters._
+    val dir = JFiles.createTempDirectory("graft-store").toString + "/store"
+    ResultStore.write(spark, suite(bad = true), dir, "run-1")
+    ResultStore.write(spark, suite(bad = false), dir, "run-2")
+    def list(p: java.nio.file.Path) = {
+      val s = JFiles.list(p)
+      try s.iterator().asScala.toSeq finally s.close()
+    }
+    val runDirs = list(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString.startsWith("run_id="))
+    assert(runDirs.map(_.getFileName.toString).sorted == Seq("run_id=run-1", "run_id=run-2"))
+    runDirs.foreach { d =>
+      val data = list(d).map(_.getFileName.toString).filter(_.endsWith(".parquet"))
+      assert(data.size == 1, s"$d holds $data")
+    }
+    val stored = ResultStore.read(spark, dir, Some("run-1"))
+      .collect().map(r => (r.getAs[String]("validation_name"), r.getAs[String]("status"),
+        r.getAs[Long]("element_count"), r.getAs[Long]("unexpected_count")))
+      .sortBy(_._1).toSeq
+    val expected = suite(bad = true).details
+      .map(r => (r.validationName, r.status, r.elementCount, r.unexpectedCount))
+      .sortBy(_._1)
+    assert(stored == expected)
+  }
+
   test("data docs render the summary table") {
     val md = ResultStore.renderDocs(suite(bad = true), "run-9")
     assert(md.contains("**Overall: FAILED** — 1/2 passed"))
