@@ -1771,15 +1771,18 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  /** S16 — streaming robust anomaly gate ([[graft.stream
-    * .StreamingMadGate]] batch replay): cuts fit on the even-event_id
-    * history half, the odd half gates through them — per-(type, flag)
-    * census; MemoryStream ≡ batch pinned in StreamingMadGateSpec. */
+  /** S16 — streaming robust anomaly gate, batch-replayed: cuts fit once
+    * on the even-event_id history half ([[graft.ext.RobustStats.fit]])
+    * and the odd half gates through them
+    * ([[graft.ext.RobustStats.gateAgainst]]: one broadcast join and one
+    * integer comparison per row — a stateless projection, no state
+    * store, no watermark, so a stream takes the same call) — per-(type,
+    * flag) census; MemoryStream ≡ batch pinned in StreamingMadGateSpec. */
   def s16StreamMadGate(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d)
     val cuts = graft.ext.RobustStats.fit(
       ev.filter(pmod(col("event_id"), lit(2L)) === 0L))
-    graft.stream.StreamingMadGate.gateStream(
+    graft.ext.RobustStats.gateAgainst(
         ev.filter(pmod(col("event_id"), lit(2L)) === 1L), cuts)
       .groupBy("event_type", "is_outlier")
       .agg(count(lit(1)).as("n"),
@@ -2768,15 +2771,18 @@ object Queries {
       .orderBy("lang")
   }
 
-  /** S13 — streaming quality scoring ([[graft.stream.StreamingQuality]]
-    * batch replay, the stateless-lane discipline): the X13 linear
-    * scorer with a FILE-LOADED weight vector
-    * (`recipes/quality_scorer.json`, classpath — the deploy artifact),
-    * censused per (lang, band). MemoryStream ≡ batch pinned in
+  /** S13 — streaming quality scoring, batch-replayed: the X13 linear
+    * scorer ([[graft.ext.QualityScore.scored]]) with a FILE-LOADED
+    * weight vector (`recipes/quality_scorer.json`, classpath — the
+    * deploy artifact), censused per (lang, band). Every feature is a
+    * per-row expression and the band cut an integer comparison, so the
+    * scorer is one stateless projection — no state store, no watermark —
+    * and the same call serves a stream. MemoryStream ≡ batch pinned in
     * StreamingQualitySpec. */
   def s13StreamQuality(s: SparkSession, d: String): DataFrame = {
     val cfg = graft.ext.QualityScore.loadConfig("recipes/quality_scorer.json")
-    graft.stream.StreamingQuality.scoreStream(documents(s, d), cfg)
+    graft.ext.QualityScore.scored(documents(s, d), "text", cfg.weights,
+        cfg.hi, cfg.lo)
       .groupBy("lang", "q_band")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("q_tokens")).as("tokens"),
@@ -4110,17 +4116,19 @@ object Queries {
     graft.ext.LangTrained.confusionVsHeuristic(spreadDocs(documents(s, d)), w)
   }
 
-  /** S17 — streaming language-ID ([[graft.stream.StreamingLang]]): the
-    * trained lid gate as a stateless streaming projection, batch-
-    * replayed here through the SAME code path and censused — hash-
-    * matched against the x3_lang_trained oracle (the s14/x42 shared-
-    * oracle contract); live MemoryStream parity pinned in
-    * StreamingLangSpec. */
+  /** S17 — streaming language-ID: the trained lid gate
+    * ([[graft.ext.LangTrained.classified]]) batch-replayed through the
+    * same call a stream uses and censused — hash-matched against the
+    * x3_lang_trained oracle (the s14/x42 shared-oracle contract).
+    * Features are per-row expressions, the weight matrix rides as plan
+    * literals and the decision is a CASE chain: one stateless
+    * projection, no state store, no watermark. Live MemoryStream parity
+    * pinned in StreamingLangSpec. */
   def s17StreamLang(s: SparkSession, d: String): DataFrame = {
     val dir = langPerceptronDir(s, d)
     val w = graft.ext.LangTrained.finalWeights(
       graft.ext.LangTrained.loadTrajectory(s, s"$dir/traj"))
-    graft.stream.StreamingLang.classifyStream(spreadDocs(documents(s, d)), w)
+    graft.ext.LangTrained.classified(spreadDocs(documents(s, d)), w)
       .groupBy("label", "pred_trained", "pred_heur")
       .agg(count(lit(1)).as("n"))
       .orderBy("label", "pred_trained", "pred_heur")

@@ -27,9 +27,12 @@ import org.apache.spark.sql.functions._
   * counts (parallel), per-(band, superblock) block offsets (parallel),
   * and only the (band, superblock)-TOTAL rows — bands ×
   * keyspace/(blockSize·fanout), dim-sized at any corpus — see a
-  * per-band unpartitioned scan. Counts are integers, so the assignment
-  * is bit-for-bit invariant to partitioning, blockSize, and fanout, and
-  * a plain per-band window replays it exactly (the oracle's form).
+  * per-band unpartitioned scan, a bound the census enforces at run
+  * time: a superblock id at [[Packing.MaxSuperblocks]] fails the task,
+  * as in [[Packing.packSequences]]. Counts are integers, so the
+  * assignment is bit-for-bit invariant to partitioning, blockSize, and
+  * fanout, and a plain per-band window replays it exactly (the oracle's
+  * form).
   *
   * Key-order ranking (not length-order) is deliberate: within a band
   * lengths differ by < bandWidth, so sorting further buys almost no
@@ -71,6 +74,7 @@ object Batching {
       .rowsBetween(Window.unboundedPreceding, -1)
     val superOffsets = blockTotals.groupBy("band", "__sblk")
       .agg(sum(col("__bt")).as("__st"))
+      .withColumn("__sblk", Packing.boundedSuperblock("batching"))
       .withColumn("__soff", coalesce(sum(col("__st")).over(superW), lit(0L)))
       .select("band", "__sblk", "__soff")
     val offsets = blockTotals

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,6 +62,19 @@ object Packing {
     * window rows is already the tolerable ceiling, not a target. */
   val MaxSuperblocks: Long = 1L << 20
 
+  /** `__sblk`, or a task failure naming `what` once a superblock id
+    * reaches [[MaxSuperblocks]]: one comparison per superblock ROW of
+    * the census, before an oversized census can make the unpartitioned
+    * offset scan a scale-killer. Shared by [[packSequences]] and
+    * [[Batching.assignBatches]], which run the same three-level scan. */
+  private[ext] def boundedSuperblock(what: String): Column =
+    when(col("__sblk") < lit(MaxSuperblocks), col("__sblk"))
+      .otherwise(raise_error(concat(
+        lit(s"$what superblock id exceeds MaxSuperblocks=$MaxSuperblocks " +
+          "(the single-partition offset window's bound) — raise " +
+          "blockSize/fanout to cover the key space; got __sblk="),
+        col("__sblk").cast("string"))))
+
   def packSequences(docs: DataFrame, textCol: String = "text",
                     keyCol: String = "doc_id", seqLen: Long = 2048L,
                     blockSize: Long = 100000L,
@@ -97,16 +110,7 @@ object Packing {
       .rowsBetween(Window.unboundedPreceding, -1)
     val superOffsets = blockTotals.groupBy("__sblk")
       .agg(sum(col("__bt")).as("__st"))
-      // Enforce the single-partition-window bound (see MaxSuperblocks):
-      // one comparison per superblock ROW — fires before an oversized
-      // census can make the unpartitioned scan a scale-killer.
-      .withColumn("__sblk",
-        when(col("__sblk") < lit(MaxSuperblocks), col("__sblk"))
-          .otherwise(raise_error(concat(
-            lit(s"packing superblock id exceeds MaxSuperblocks=$MaxSuperblocks " +
-              "(the single-partition offset window's bound) — raise " +
-              "blockSize/fanout to cover the key space; got __sblk="),
-            col("__sblk").cast("string")))))
+      .withColumn("__sblk", boundedSuperblock("packing"))
       .withColumn("__soff", coalesce(sum(col("__st")).over(superW), lit(0L)))
       .select("__sblk", "__soff")
     val offsets = blockTotals

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -13,9 +13,19 @@ import org.apache.spark.sql.types._
   * Why not `aggregate(zip_with(...))`: higher-order functions are
   * interpreted (excluded from whole-stage codegen) and `zip_with`
   * allocates an intermediate array per evaluation — per row, per
-  * hyperplane in the LSH path. These expressions generate a tight
-  * primitive loop (no allocation, stays inside WholeStageCodegen), the
-  * preferred extension point after built-ins (custom Expression > UDF).
+  * hyperplane in the LSH path. These expressions run a tight primitive
+  * loop (no allocation, stays inside WholeStageCodegen), the preferred
+  * extension point after built-ins (custom Expression > UDF).
+  *
+  * One kernel per expression: every kernel is a Scala method that
+  * `eval` runs, and `doGenCode` emits a single call to that same method —
+  * a companion `compute` for a pure function of the inputs, or a method
+  * of the expression itself (reached through `ctx.addReferenceObj`) when
+  * the kernel reads the expression's own matrix. Generated code and the
+  * interpreted fallback therefore cannot answer a row differently.
+  * Kernels that yield a double return a primitive, so generated code
+  * boxes nothing; the float/double element choice is a boolean fixed per
+  * expression, outside the loops.
   *
   * Semantics match the HOF formulation exactly: element products and the
   * accumulator are IEEE doubles, summed left-to-right, null/missing
@@ -35,104 +45,83 @@ abstract class VectorFold extends BinaryExpression {
   }
   override def dataType: DataType = DoubleType
 
-  protected def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  // Lazy: children are unresolved at construction (Column-API path).
+  protected lazy val leftFloat: Boolean = VectorFold.isFloat(left)
+  protected lazy val rightFloat: Boolean = VectorFold.isFloat(right)
+}
 
-  /** Java accessor expression for element i of an ArrayData variable. */
-  protected def access(v: String, i: String, t: DataType): String = t match {
-    case FloatType  => s"(double) $v.getFloat($i)"
-    case DoubleType => s"$v.getDouble($i)"
-    case other      => throw new IllegalStateException(s"unsupported $other")
-  }
+object VectorFold {
 
-  protected def elemAt(a: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType  => a.getFloat(i).toDouble
-    case DoubleType => a.getDouble(i)
-    case other      => throw new IllegalStateException(s"unsupported $other")
-  }
+  def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  /** Element i as a double; `isFloat` is the expression's fixed choice. */
+  def elem(v: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+
+  /** Element i, a null element read as 0 (the cosine convention). */
+  def elemOr0(v: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (v.isNullAt(i)) 0.0 else elem(v, i, isFloat)
 }
 
 /** dot(a, b) = Σ a(i)·b(i) over the common prefix, nulls as 0. */
 case class DotProduct(left: Expression, right: Expression) extends VectorFold {
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val (ta, tb) = (elemType(left), elemType(right))
-    val n = math.min(a.numElements(), b.numElements())
-    var sum = 0.0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i)) sum += elemAt(a, i, ta) * elemAt(b, i, tb)
-      i += 1
-    }
-    sum
-  }
+  override def nullSafeEval(l: Any, r: Any): Any = DotProduct.compute(
+    l.asInstanceOf[ArrayData], leftFloat, r.asInstanceOf[ArrayData], rightFloat)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $sum += ${access(a, i, elemType(left))} * ${access(b, i, elemType(right))};
-         |  }
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.DotProduct.compute($a, $leftFloat, $b, $rightFloat)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  def compute(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var sum = 0.0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i))
+        sum += VectorFold.elem(a, i, aFloat) * VectorFold.elem(b, i, bFloat)
+      i += 1
+    }
+    sum
+  }
 }
 
 /** cosine(a, b) = dot/(√(Σa²)·√(Σb²)) in ONE traversal of both arrays
   * (vs three HOF passes); 0-norm inputs yield NaN like the HOF version. */
 case class CosineSimilarity(left: Expression, right: Expression) extends VectorFold {
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val (ta, tb) = (elemType(left), elemType(right))
+  override def nullSafeEval(l: Any, r: Any): Any = CosineSimilarity.compute(
+    l.asInstanceOf[ArrayData], leftFloat, r.asInstanceOf[ArrayData], rightFloat)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.CosineSimilarity.compute($a, $leftFloat, $b, $rightFloat)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  def compute(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = if (a.isNullAt(i)) 0.0 else elemAt(a, i, ta)
-      val y = if (b.isNullAt(i)) 0.0 else elemAt(b, i, tb)
+      val x = VectorFold.elemOr0(a, i, aFloat)
+      val y = VectorFold.elemOr0(b, i, bFloat)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     dot / math.sqrt(na * nb)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.isNullAt($i) ? 0.0 : ${access(a, i, elemType(left))};
-         |  double $y = $b.isNullAt($i) ? 0.0 : ${access(b, i, elemType(right))};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** All-bands LSH sign signature of a vector in ONE expression node.
@@ -142,9 +131,10 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorF
   * the plan (64×64 = 4,096 at testdata dims; 260k at dim 4096): a
   * driver-side planning/codegen bottleneck that already trips Spark's
   * plan-string truncation (VERDICT r2 "What's wrong" #2). Here the plane
-  * matrix is a class field — shipped to codegen as ONE reference object —
-  * so the plan holds a single node regardless of dim, and all `bands`
-  * buckets fall out of one traversal of the vector.
+  * matrix is a class field — generated code reaches it through ONE
+  * reference to this expression — so the plan holds a single node
+  * regardless of dim, and all `bands` buckets fall out of one traversal
+  * of the vector.
   *
   * Bucket semantics are bit-for-bit the old formulation's: bit j of band b
   * is `dot(vec, plane[b*bitsPerBand+j]) >= 0`, packed little-endian into a
@@ -170,6 +160,7 @@ case class SignBandSignature(child: Expression, planes: Seq[Seq[Double]], bands:
     }
     a
   }
+  private lazy val isFloat = VectorFold.isFloat(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -187,27 +178,35 @@ case class SignBandSignature(child: Expression, planes: Seq[Seq[Double]], bands:
   override def toString: String =
     s"sign_band_signature($child, dim=$dim, numBits=$numBits, bands=$bands)"
 
-  // Public: invoked from generated Java code.
-  def badDim(n: Int): Nothing = throw new IllegalArgumentException(
+  private def badDim(n: Int): Nothing = throw new IllegalArgumentException(
     s"sign_band_signature: vector has $n elements but the hyperplane family " +
       s"has dim=$dim — pass the embedding width as `dim`")
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) badDim(v.numElements())
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def nullSafeEval(input: Any): Any = signature(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("signBandExpr", this, classOf[SignBandSignature].getName)
+    defineCodeGen(ctx, ev, v => s"$self.signature($v)")
+  }
+
+  /** The kernel: `eval` runs it and generated code calls it. */
+  def signature(v: ArrayData): ArrayData = {
+    val n = dim
+    if (v.numElements() != n) badDim(v.numElements())
+    val planeAt = flat
+    val f = isFloat
+    val bpb = bitsPerBand
     val buckets = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var sig = 0L
       var j = 0
-      while (j < bitsPerBand) {
-        val off = (b * bitsPerBand + j) * dim
+      while (j < bpb) {
+        val off = (b * bpb + j) * n
         var dot = 0.0
         var i = 0
-        while (i < dim) {
-          if (!v.isNullAt(i))
-            dot += flat(off + i) * (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i))
+        while (i < n) {
+          if (!v.isNullAt(i)) dot += planeAt(off + i) * VectorFold.elem(v, i, f)
           i += 1
         }
         if (dot >= 0) sig |= (1L << j)
@@ -216,43 +215,8 @@ case class SignBandSignature(child: Expression, planes: Seq[Seq[Double]], bands:
       buckets(b) = sig
       b += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(buckets)
+    UnsafeArrayData.fromPrimitiveArray(buckets)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("signBandPlanes", flat, "double[]")
-      val self = ctx.addReferenceObj("signBandExpr", this, classOf[SignBandSignature].getName)
-      val get = child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => (i: String) => s"(double) $v.getFloat($i)"
-        case DoubleType => (i: String) => s"$v.getDouble($i)"
-        case other      => throw new IllegalStateException(s"unsupported $other")
-      }
-      val buckets = ctx.freshName("buckets")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val sig = ctx.freshName("sig")
-      s"""
-         |if ($v.numElements() != $dim) $self.badDim($v.numElements());
-         |long[] $buckets = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $sig = 0L;
-         |  for (int $j = 0; $j < $bitsPerBand; $j++) {
-         |    int $off = ($b * $bitsPerBand + $j) * $dim;
-         |    double $dot = 0.0;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      if (!$v.isNullAt($i)) $dot += $flatRef[$off + $i] * ${get(i)};
-         |    }
-         |    if ($dot >= 0) $sig |= (1L << $j);
-         |  }
-         |  $buckets[$b] = $sig;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($buckets);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -267,8 +231,8 @@ case class SignBandSignature(child: Expression, planes: Seq[Seq[Double]], bands:
   * plan — harmless at k=8×dim=64, but at a realistic IVF scale (k in the
   * thousands, dim 1024+) a driver-side planning/codegen bottleneck
   * (VERDICT r3 "What's wrong" #2). Here the matrix is a class field
-  * shipped to codegen as one reference object, so plan size is
-  * independent of k and dim.
+  * that generated code reaches through one reference to this
+  * expression, so plan size is independent of k and dim.
   *
   * Scoring is bit-for-bit [[CosineSimilarity]] (same element order, same
   * accumulator interleaving, nulls as 0) — the query-side norm is
@@ -307,6 +271,7 @@ case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]],
     }
     a
   }
+  private lazy val isFloat = VectorFold.isFloat(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -324,46 +289,54 @@ case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]],
   override def toString: String =
     s"nearest_centroids($child, k=$k, dim=$dim, nProbe=$nProbe, tiesHigh=$tiesHigh)"
 
-  // Public: invoked from generated Java code.
-  def badDim(n: Int): Nothing = throw new IllegalArgumentException(
+  private def badDim(n: Int): Nothing = throw new IllegalArgumentException(
     s"nearest_centroids: vector has $n elements but the centroid matrix " +
       s"has dim=$dim — wrong embedding column or model/corpus version skew")
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) badDim(v.numElements())
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def nullSafeEval(input: Any): Any = nearest(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("nearestCentroidsExpr", this,
+      classOf[NearestCentroids].getName)
+    defineCodeGen(ctx, ev, v => s"$self.nearest($v)")
+  }
+
+  /** The kernel: `eval` runs it and generated code calls it. */
+  def nearest(v: ArrayData): ArrayData = {
     val n = dim
+    if (v.numElements() != n) badDim(v.numElements())
+    val cents = flat
+    val f = isFloat
+    val kk = k
+    val probes = effProbe
     var na = 0.0
     var i = 0
     while (i < n) {
-      val x = if (v.isNullAt(i)) 0.0
-              else if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+      val x = VectorFold.elemOr0(v, i, f)
       na += x * x
       i += 1
     }
-    val sims = new Array[Double](k)
+    val sims = new Array[Double](kk)
     var c = 0
-    while (c < k) {
+    while (c < kk) {
       var dot = 0.0; var nb = 0.0
       var j = 0
       while (j < n) {
-        val x = if (v.isNullAt(j)) 0.0
-                else if (isFloat) v.getFloat(j).toDouble else v.getDouble(j)
-        val y = flat(c * dim + j)
+        val x = VectorFold.elemOr0(v, j, f)
+        val y = cents(c * n + j)
         dot += x * y; nb += y * y
         j += 1
       }
       sims(c) = dot / math.sqrt(na * nb)
       c += 1
     }
-    val out = new Array[Int](effProbe)
-    val taken = new Array[Boolean](k)
+    val out = new Array[Int](probes)
+    val taken = new Array[Boolean](kk)
     var p = 0
-    while (p < effProbe) {
+    while (p < probes) {
       var best = -1
       var cc = 0
-      while (cc < k) {
+      while (cc < kk) {
         if (!taken(cc)) {
           if (best < 0) best = cc
           else {
@@ -377,72 +350,8 @@ case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]],
       out(p) = best
       p += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("centroidMatrix", flat, "double[]")
-      val self = ctx.addReferenceObj("nearestCentroidsExpr", this,
-        classOf[NearestCentroids].getName)
-      val get = child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => (i: String) => s"(double) $v.getFloat($i)"
-        case DoubleType => (i: String) => s"$v.getDouble($i)"
-        case other      => throw new IllegalStateException(s"unsupported $other")
-      }
-      val n = ctx.freshName("n")
-      val na = ctx.freshName("na")
-      val sims = ctx.freshName("sims")
-      val taken = ctx.freshName("taken")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val p = ctx.freshName("p")
-      val cc = ctx.freshName("cc")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val dot = ctx.freshName("dot")
-      val nb = ctx.freshName("nb")
-      val best = ctx.freshName("best")
-      val cmp = ctx.freshName("cmp")
-      s"""
-         |if ($v.numElements() != $dim) $self.badDim($v.numElements());
-         |int $n = $dim;
-         |double $na = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $v.isNullAt($i) ? 0.0 : ${get(i)};
-         |  $na += $x * $x;
-         |}
-         |double[] $sims = new double[$k];
-         |for (int $c = 0; $c < $k; $c++) {
-         |  double $dot = 0.0; double $nb = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    double $x = $v.isNullAt($j) ? 0.0 : ${get(j)};
-         |    double $y = $flatRef[$c * $dim + $j];
-         |    $dot += $x * $y; $nb += $y * $y;
-         |  }
-         |  $sims[$c] = $dot / java.lang.Math.sqrt($na * $nb);
-         |}
-         |int[] $out = new int[$effProbe];
-         |boolean[] $taken = new boolean[$k];
-         |for (int $p = 0; $p < $effProbe; $p++) {
-         |  int $best = -1;
-         |  for (int $cc = 0; $cc < $k; $cc++) {
-         |    if (!$taken[$cc]) {
-         |      if ($best < 0) { $best = $cc; }
-         |      else {
-         |        int $cmp = java.lang.Double.compare($sims[$cc], $sims[$best]);
-         |        if ($cmp > 0 || ($cmp == 0 && $tiesHigh)) { $best = $cc; }
-         |      }
-         |    }
-         |  }
-         |  $taken[$best] = true;
-         |  $out[$p] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -472,6 +381,7 @@ case class PqEncode(child: Expression, flat: Array[Double],
   // 14 s; arrays hash by identity). toString is overridden like
   // [[SignBandSignature]] for the same reason.
   private def dim = m * subDim
+  private lazy val isFloat = VectorFold.isFloat(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -489,14 +399,21 @@ case class PqEncode(child: Expression, flat: Array[Double],
   override def toString: String =
     s"pq_encode($child, m=$m, k=$k, subDim=$subDim)"
 
-  def badDim(n: Int): Nothing = throw new IllegalArgumentException(
+  private def badDim(n: Int): Nothing = throw new IllegalArgumentException(
     s"pq_encode: vector has $n elements but the codebook expects ${dim} " +
       s"(M=$m × subDim=$subDim) — wrong embedding column or model skew")
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any = encode(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pqEncodeExpr", this, classOf[PqEncode].getName)
+    defineCodeGen(ctx, ev, v => s"$self.encode($v)")
+  }
+
+  /** The kernel: `eval` runs it and generated code calls it. */
+  def encode(v: ArrayData): ArrayData = {
     if (v.numElements() != dim) badDim(v.numElements())
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val f = isFloat
     val out = new Array[Byte](m)
     var mm = 0
     while (mm < m) {
@@ -508,9 +425,7 @@ case class PqEncode(child: Expression, flat: Array[Double],
         var j = 0
         while (j < subDim) {
           val i = mm * subDim + j
-          val x = if (v.isNullAt(i)) 0.0
-                  else if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-          val d = x - flat((mm * k + cc) * subDim + j)
+          val d = VectorFold.elemOr0(v, i, f) - flat((mm * k + cc) * subDim + j)
           d2 += d * d
           j += 1
         }
@@ -520,49 +435,8 @@ case class PqEncode(child: Expression, flat: Array[Double],
       out(mm) = best.toByte
       mm += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("pqCodebooks", flat, "double[]")
-      val self = ctx.addReferenceObj("pqEncodeExpr", this, classOf[PqEncode].getName)
-      val get = child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => (i: String) => s"(double) $v.getFloat($i)"
-        case DoubleType => (i: String) => s"$v.getDouble($i)"
-        case other      => throw new IllegalStateException(s"unsupported $other")
-      }
-      val out = ctx.freshName("out")
-      val mm = ctx.freshName("mm")
-      val cc = ctx.freshName("cc")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val d = ctx.freshName("d")
-      val d2 = ctx.freshName("d2")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      s"""
-         |if ($v.numElements() != $dim) $self.badDim($v.numElements());
-         |byte[] $out = new byte[$m];
-         |for (int $mm = 0; $mm < $m; $mm++) {
-         |  int $best = 0;
-         |  double $bestD = Double.POSITIVE_INFINITY;
-         |  for (int $cc = 0; $cc < $k; $cc++) {
-         |    double $d2 = 0.0;
-         |    for (int $j = 0; $j < $subDim; $j++) {
-         |      int $i = $mm * $subDim + $j;
-         |      double $x = $v.isNullAt($i) ? 0.0 : ${get(i)};
-         |      double $d = $x - $flatRef[($mm * $k + $cc) * $subDim + $j];
-         |      $d2 += $d * $d;
-         |    }
-         |    if ($d2 < $bestD) { $bestD = $d2; $best = $cc; }
-         |  }
-         |  $out[$mm] = (byte) $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -580,6 +454,7 @@ case class PqLut(child: Expression, flat: Array[Double],
   // Flat-array param for the same hashCode/toString reason as
   // [[PqEncode]].
   private def dim = m * subDim
+  private lazy val isFloat = VectorFold.isFloat(child)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -595,13 +470,20 @@ case class PqLut(child: Expression, flat: Array[Double],
   override def prettyName: String = "pq_lut"
   override def toString: String = s"pq_lut($child, m=$m, k=$k, subDim=$subDim)"
 
-  def badDim(n: Int): Nothing = throw new IllegalArgumentException(
+  private def badDim(n: Int): Nothing = throw new IllegalArgumentException(
     s"pq_lut: vector has $n elements but the codebook expects ${dim}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any = lut(input.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pqLutExpr", this, classOf[PqLut].getName)
+    defineCodeGen(ctx, ev, v => s"$self.lut($v)")
+  }
+
+  /** The kernel: `eval` runs it and generated code calls it. */
+  def lut(v: ArrayData): ArrayData = {
     if (v.numElements() != dim) badDim(v.numElements())
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val f = isFloat
     val out = new Array[Double](m * k)
     var mm = 0
     while (mm < m) {
@@ -610,10 +492,8 @@ case class PqLut(child: Expression, flat: Array[Double],
         var dot = 0.0
         var j = 0
         while (j < subDim) {
-          val i = mm * subDim + j
-          val x = if (v.isNullAt(i)) 0.0
-                  else if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-          dot += x * flat((mm * k + cc) * subDim + j)
+          dot += VectorFold.elemOr0(v, mm * subDim + j, f) *
+            flat((mm * k + cc) * subDim + j)
           j += 1
         }
         out(mm * k + cc) = dot
@@ -621,42 +501,8 @@ case class PqLut(child: Expression, flat: Array[Double],
       }
       mm += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val flatRef = ctx.addReferenceObj("pqLutCodebooks", flat, "double[]")
-      val self = ctx.addReferenceObj("pqLutExpr", this, classOf[PqLut].getName)
-      val get = child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => (i: String) => s"(double) $v.getFloat($i)"
-        case DoubleType => (i: String) => s"$v.getDouble($i)"
-        case other      => throw new IllegalStateException(s"unsupported $other")
-      }
-      val out = ctx.freshName("out")
-      val mm = ctx.freshName("mm")
-      val cc = ctx.freshName("cc")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($v.numElements() != $dim) $self.badDim($v.numElements());
-         |double[] $out = new double[$m * $k];
-         |for (int $mm = 0; $mm < $m; $mm++) {
-         |  for (int $cc = 0; $cc < $k; $cc++) {
-         |    double $dot = 0.0;
-         |    for (int $j = 0; $j < $subDim; $j++) {
-         |      int $i = $mm * $subDim + $j;
-         |      double $x = $v.isNullAt($i) ? 0.0 : ${get(i)};
-         |      $dot += $x * $flatRef[($mm * $k + $cc) * $subDim + $j];
-         |    }
-         |    $out[$mm * $k + $cc] = $dot;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -681,20 +527,27 @@ case class PqAdcScore(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc_score"
 
-  def badShape(m: Int, lutLen: Int): Nothing =
+  private def badShape(m: Int, lutLen: Int): Nothing =
     throw new IllegalArgumentException(
       s"pq_adc_score: $m codes need a ${m * k}-entry lut, got $lutLen — " +
         "codebook/model version skew")
 
-  def badCode(c: Int): Nothing =
+  private def badCode(c: Int): Nothing =
     throw new IllegalArgumentException(
       s"pq_adc_score: code $c >= k=$k — codes encoded under a wider " +
         "codebook than the lut's (model version skew); UnsafeArrayData " +
         "reads are unbounded, so this would be silent garbage, not an error")
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val codes = l.asInstanceOf[ArrayData]
-    val lut = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    score(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("pqAdcExpr", this, classOf[PqAdcScore].getName)
+    defineCodeGen(ctx, ev, (c, l) => s"$self.score($c, $l)")
+  }
+
+  /** The kernel: `eval` runs it and generated code calls it. */
+  def score(codes: ArrayData, lut: ArrayData): Double = {
     val m = codes.numElements()
     if (lut.numElements() != m * k) badShape(m, lut.numElements())
     var sum = 0.0
@@ -707,26 +560,6 @@ case class PqAdcScore(left: Expression, right: Expression, k: Int)
     }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) => {
-      val self = ctx.addReferenceObj("pqAdcExpr", this, classOf[PqAdcScore].getName)
-      val m = ctx.freshName("m")
-      val mm = ctx.freshName("mm")
-      val sum = ctx.freshName("sum")
-      val cd = ctx.freshName("cd")
-      s"""
-         |int $m = $c.numElements();
-         |if ($l.numElements() != $m * $k) $self.badShape($m, $l.numElements());
-         |double $sum = 0.0;
-         |for (int $mm = 0; $mm < $m; $mm++) {
-         |  int $cd = $c.getByte($mm) & 0xFF;
-         |  if ($cd >= $k) $self.badCode($cd);
-         |  $sum += $l.getDouble($mm * $k + $cd);
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -755,15 +588,25 @@ case class UnitVector(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "unit_vector"
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val isFloat = VectorFold.isFloat(child)
+
+  override def nullSafeEval(input: Any): Any =
+    UnitVector.compute(input.asInstanceOf[ArrayData], isFloat)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.functions.UnitVector.compute($v, $isFloat)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object UnitVector {
+  def compute(v: ArrayData, isFloat: Boolean): ArrayData = {
     val n = v.numElements()
     var ss = 0.0
     var i = 0
     while (i < n) {
-      val x = if (v.isNullAt(i)) 0.0
-              else if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+      val x = VectorFold.elemOr0(v, i, isFloat)
       ss += x * x
       i += 1
     }
@@ -771,48 +614,11 @@ case class UnitVector(child: Expression) extends UnaryExpression {
     val out = new Array[Double](n)
     var j = 0
     while (j < n) {
-      val x = if (v.isNullAt(j)) 0.0
-              else if (isFloat) v.getFloat(j).toDouble else v.getDouble(j)
-      out(j) = x / nrm
+      out(j) = VectorFold.elemOr0(v, j, isFloat) / nrm
       j += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val get = child.dataType.asInstanceOf[ArrayType].elementType match {
-        case FloatType  => (i: String) => s"(double) $v.getFloat($i)"
-        case DoubleType => (i: String) => s"$v.getDouble($i)"
-        case other      => throw new IllegalStateException(s"unsupported $other")
-      }
-      val n = ctx.freshName("n")
-      val ss = ctx.freshName("ss")
-      val nrm = ctx.freshName("nrm")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $v.numElements();
-         |double $ss = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $v.isNullAt($i) ? 0.0 : ${get(i)};
-         |  $ss += $x * $x;
-         |}
-         |double $nrm = java.lang.Math.sqrt($ss);
-         |double[] $out = new double[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  double $y = $v.isNullAt($j) ? 0.0 : ${get(j)};
-         |  $out[$j] = $y / $nrm;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** The X2h rational-centroid distance numerator `Σ_i (q_i·n − s_i)²`

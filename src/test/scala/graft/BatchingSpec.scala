@@ -76,4 +76,18 @@ class BatchingSpec extends SparkSpec {
         s"band $band waste $ppm above the banding bound")
     }
   }
+
+  test("superblock ids past MaxSuperblocks fail loudly, not silently " +
+       "(the runtime guard on the per-band offset window)") {
+    // blockSize=1, fanout=1 => superblock id == doc_id; one key at the
+    // bound trips the guard, one key under it does not.
+    def run(key: Long) = Batching.assignBatches(
+      df(Seq(Row(key, "a b c")), ddl), blockSize = 1L, fanout = 1L).collect()
+    val e = intercept[Exception](run(graft.ext.Packing.MaxSuperblocks))
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("batching superblock id exceeds MaxSuperblocks")),
+      s"expected the MaxSuperblocks guard, got: ${messages(e)}")
+    assert(run(graft.ext.Packing.MaxSuperblocks - 1).nonEmpty)
+  }
 }

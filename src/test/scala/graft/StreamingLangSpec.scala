@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 
 import graft.ext.LangTrained
-import graft.stream.StreamingLang
 
 class StreamingLangSpec extends SparkSpec {
 
@@ -27,7 +26,7 @@ class StreamingLangSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, String)]
     val out = scala.collection.mutable.Buffer[(String, String, String)]()
-    val query = StreamingLang.classifyStream(
+    val query = LangTrained.classified(
         input.toDF().toDF("lang", "text"), weights)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>

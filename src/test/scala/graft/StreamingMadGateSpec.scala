@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 
 import graft.ext.RobustStats
-import graft.stream.StreamingMadGate
 
 class StreamingMadGateSpec extends SparkSpec {
 
@@ -42,7 +41,7 @@ class StreamingMadGateSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, Double)]
     val out = scala.collection.mutable.Buffer[(Long, Boolean)]()
-    val query = StreamingMadGate.gateStream(
+    val query = RobustStats.gateAgainst(
         input.toDF().toDF("event_id", "event_type", "value"), cuts)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -60,7 +59,7 @@ class StreamingMadGateSpec extends SparkSpec {
       input.addData(a); query.processAllAvailable()
       input.addData(b); query.processAllAvailable()
     } finally query.stop()
-    val batch = StreamingMadGate.gateStream(
+    val batch = RobustStats.gateAgainst(
         df(serveRows.map(t => Row(t._1, t._2, t._3)),
           "event_id BIGINT, event_type STRING, value DOUBLE"), cuts)
       .collect().map(r => (r.getAs[Long]("event_id"),

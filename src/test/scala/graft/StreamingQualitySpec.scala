@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 
 import graft.ext.QualityScore
-import graft.stream.StreamingQuality
 
 class StreamingQualitySpec extends SparkSpec {
 
@@ -20,7 +19,7 @@ class StreamingQualitySpec extends SparkSpec {
     // At least one document bands differently under the file weights
     // than under the defaults — the gate genuinely serves the file.
     val docs = Tables.documents(spark, sfDir)
-    val file = StreamingQuality.scoreStream(docs, cfg)
+    val file = QualityScore.scored(docs, "text", cfg.weights, cfg.hi, cfg.lo)
       .select("doc_id", "q_band").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val dflt = QualityScore.scored(docs)
@@ -41,8 +40,8 @@ class StreamingQualitySpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val out = scala.collection.mutable.Buffer[(Long, Long, String)]()
-    val query = StreamingQuality.scoreStream(
-        input.toDF().toDF("doc_id", "text"), cfg)
+    val query = QualityScore.scored(
+        input.toDF().toDF("doc_id", "text"), "text", cfg.weights, cfg.hi, cfg.lo)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         out.synchronized {
@@ -59,8 +58,8 @@ class StreamingQualitySpec extends SparkSpec {
       input.addData(a); query.processAllAvailable()
       input.addData(b); query.processAllAvailable()
     } finally query.stop()
-    val batch = StreamingQuality.scoreStream(
-        df(docs.map(t => Row(t._1, t._2)), ddl), cfg)
+    val batch = QualityScore.scored(
+        df(docs.map(t => Row(t._1, t._2)), ddl), "text", cfg.weights, cfg.hi, cfg.lo)
       .collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("q_score_num"),
         r.getAs[String]("q_band")))

@@ -82,20 +82,116 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(fused == naive)
   }
 
-  test("sign_band_signature: interpreted eval agrees with the codegen path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val planes = graft.ext.Similarity.hyperplanes(4, 8, seed = 3L)
-    val vec = Seq(0.5f, -1.25f, 2.0f, 0.75f)
-    val expr = graft.functions.SignBandSignature(
-      Literal.create(vec, ArrayType(FloatType)),
-      planes.map(_.toIndexedSeq).toIndexedSeq, bands = 2)
-    val interpreted = expr.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray.toSeq
-    val viaPlan = df(Seq(Row(1L, vec)), "id BIGINT, v ARRAY<FLOAT>")
-      .select(VectorFunctions.signBands(col("v"), planes, 2))
-      .head().getSeq[Long](0)
-    assert(interpreted == viaPlan)
+  test("all nine vector expressions: generated code and interpreted eval " +
+       "agree bit for bit, errors included") {
+    import org.apache.spark.sql.{Column, SparkSession}
+    import org.apache.spark.sql.types.StructType
+    import graft.functions.VectorFunctions._
+    // One session per evaluation path: interpreted eval only, and
+    // generated code only (a compile failure throws instead of falling
+    // back to eval).
+    def session(confs: (String, String)*): SparkSession = {
+      val s = spark.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    }
+    val interpreted = session("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val generated = session("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+
+    // Each row carries its vector v as array<float> (f) and array<double>
+    // (d), a partner vector g, and the integral centroid_dist_num inputs
+    // derived from them (a null element of v stays null in qi).
+    val schema = StructType.fromDDL("id BIGINT, f ARRAY<FLOAT>, " +
+      "d ARRAY<DOUBLE>, g ARRAY<FLOAT>, qi ARRAY<INT>, s ARRAY<BIGINT>, n BIGINT")
+    def rows(vs: Seq[Seq[Any]], partners: Seq[Seq[Any]]): Seq[Row] =
+      vs.zip(partners).zipWithIndex.map { case ((v, g), i) =>
+        def mapped(xs: Seq[Any])(h: Float => Any) =
+          xs.map(x => if (x == null) null else h(x.asInstanceOf[Float]))
+        Row(i.toLong, v, mapped(v)(_.toDouble), g, mapped(v)(x => math.round(x * 1000f)),
+          mapped(g)(x => math.round(x * 1000f).toLong * 3L), 3L + i % 5)
+      }
+    val emb = Tables.embeddings(spark, sfDir.replace("sf0.001", "sf0.01")).orderBy("vec_id")
+      .collect().map(_.getSeq[Any](1)).toSeq
+    val withNull = emb.head.updated(5, null)
+    val vec4 = Seq(0.5f, -1.25f, 2.0f, 0.75f)
+    val vec6 = Seq(0.5f, -1.25f, 2.0f, 0.75f, -0.1f, 1.5f)
+
+    // Every expression over v (f or d) with matrices sized to `dim`.
+    def allNine(dim: Int, m: Int): Seq[(String, Column => Column)] = {
+      val rnd = new scala.util.Random(dim)
+      val planes = graft.ext.Similarity.hyperplanes(dim, 16, seed = 11L)
+      val cents = Array.fill(5)(Array.fill(dim)(rnd.nextGaussian()))
+      val books = Array.fill(m)(Array.fill(4)(Array.fill(dim / m)(rnd.nextGaussian())))
+      Seq(
+        "dot" -> (v => dot(v, col("g"))),
+        "cosine" -> (v => cosine(v, col("g"))),
+        "sign_band_signature" -> (v => signBands(v, planes, 4)),
+        "nearest_centroids tiesHigh" -> (v => nearestCentroids(v, cents, 3, tiesHigh = true)),
+        "nearest_centroids tiesLow" -> (v => nearestCentroids(v, cents, 3, tiesHigh = false)),
+        "pq_encode" -> (v => pqEncode(v, books)),
+        "pq_lut" -> (v => pqLut(v, books)),
+        "pq_adc_score" -> (v => pqAdcScore(pqEncode(col("g"), books), pqLut(v, books), 4)),
+        "unit_vector" -> (v => unitVector(v)),
+        "centroid_dist_num" -> (_ => centroidDistNum(col("qi"), col("s"), col("n"))))
+    }
+    val cents6 = {
+      val rnd = new scala.util.Random(5)
+      Array.fill(5)(Array.fill(6)(rnd.nextGaussian()))
+    }
+    // (input rows, expressions): sf0.01 embeddings, one null element, a
+    // dim mismatch (3 elements against 64-wide matrices), and a 4-dim and
+    // a 6-dim vector with matrices of their own width.
+    val table: Seq[(String, Seq[Row], Seq[(String, Column => Column)])] = Seq(
+      ("sf0.01 embeddings", rows(emb, emb.tail :+ emb.head), allNine(64, 8)),
+      ("null element", rows(Seq(withNull), Seq(emb(1))), allNine(64, 8)),
+      ("dim mismatch", rows(Seq(emb.head.take(3)), Seq(emb(1))), allNine(64, 8)),
+      ("4-dim vector", rows(Seq(vec4), Seq(vec4)), Seq("sign_band_signature" ->
+        (v => signBands(v, graft.ext.Similarity.hyperplanes(4, 8, seed = 3L), 2)))),
+      ("6-dim vector", rows(Seq(vec6), Seq(vec6)), Seq("nearest_centroids" ->
+        (v => nearestCentroids(v, cents6, 3, tiesHigh = false)))))
+
+    // A result as comparable bits (doubles by their raw bits), or the
+    // root cause's message when evaluation throws.
+    def bits(x: Any): Any = x match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case xs: scala.collection.Seq[_] => xs.map(bits)
+      case other => other
+    }
+    def outcome(s: SparkSession, in: Seq[Row], e: Column): Either[String, Seq[Any]] =
+      try Right(s.createDataFrame(spark.sparkContext.parallelize(in, 2), schema)
+        .select(col("id"), e).collect().toSeq.sortBy(_.getLong(0)).map(r => bits(r.get(1))))
+      catch { case t: Exception =>
+        Left(Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage)
+      }
+
+    val outcomes = for {
+      (input, in, exprs) <- table
+      (name, e) <- exprs
+      v <- Seq("f", "d")
+    } yield {
+      val (i, g) = (outcome(interpreted, in, e(col(v))), outcome(generated, in, e(col(v))))
+      if (i != g) fail(s"$name over $input ($v): " + ((i, g) match {
+        case (Right(a), Right(b)) => a.zip(b).indexWhere(p => p._1 != p._2) match {
+          case -1 => s"${a.size} interpreted rows, ${b.size} generated"
+          case r => s"row $r: interpreted ${a(r)}, generated ${b(r)}"
+        }
+        case _ => s"interpreted $i, generated $g"
+      }))
+      (input, name, i)
+    }
+    assert(outcomes.filter(_._1 == "sf0.01 embeddings").forall(_._3.exists(_.size == 500)))
+    val mismatch = outcomes.filter(_._1 == "dim mismatch").map(o => o._2 -> o._3).toMap
+    assert(mismatch("sign_band_signature").swap.exists(_.contains("dim=64")), mismatch)
+    assert(mismatch("pq_adc_score").swap.exists(_.contains("pq_lut: vector has 3")), mismatch)
+    assert(mismatch("centroid_dist_num").swap.exists(_.contains("vector dim 3")), mismatch)
+    // Both sessions took the path they were set up for.
+    val wholeStage = (s: SparkSession) => s.createDataFrame(spark.sparkContext
+      .parallelize(rows(Seq(vec4), Seq(vec4)), 1), schema)
+      .select(unitVector(col("f"))).queryExecution.executedPlan
+      .find(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined
+    assert(wholeStage(generated) && !wholeStage(interpreted))
   }
 
   test("sign_band_signature throws on a dim mismatch instead of hashing a prefix") {
@@ -180,23 +276,6 @@ class VectorExpressionsSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("dim=8")), s"got: ${messages(e)}")
-  }
-
-  test("nearest_centroids: interpreted eval agrees with the codegen path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val rnd = new scala.util.Random(5)
-    val cents = Array.fill(5)(Array.fill(6)(rnd.nextGaussian()))
-    val vec = Seq(0.5f, -1.25f, 2.0f, 0.75f, -0.1f, 1.5f)
-    val interpreted = graft.functions.NearestCentroids(
-        Literal.create(vec, ArrayType(FloatType)),
-        cents.map(_.toIndexedSeq).toIndexedSeq, 3, tiesHigh = false)
-      .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toIntArray.toSeq
-    val viaPlan = df(Seq(Row(1L, vec)), "id BIGINT, v ARRAY<FLOAT>")
-      .select(VectorFunctions.nearestCentroids(col("v"), cents, 3, tiesHigh = false))
-      .head().getSeq[Int](0)
-    assert(interpreted == viaPlan)
   }
 
   test("TopK buffer encodes as a flat product of primitive arrays, not kryo binary") {

@@ -3,8 +3,16 @@
 in DuckDB over the testdata parquet and compare against the parquet the
 Verify main dumped. Columns sorted by name before compare; rows compared
 in emitted order and (fallback) sorted order. Dev-only tool — the shipped
-Scala library has no Python dependency."""
-import sys, json, glob, math
+Scala library has no Python dependency.
+
+    python3 tools/oracle_check.py SF_DIR OUT                  # vs the oracle
+    python3 tools/oracle_check.py SF_DIR OUT --against OLD    # vs OLD dump
+
+`--against OLD` compares every lane's output in OUT with the same lane in
+an earlier Verify dump OLD, in emitted order, and prints the lanes that
+differ or exist in one dump only. It covers the rows-only lanes, which
+have no oracle. Exit status 1 when any lane differs."""
+import sys, json, glob, math, os
 import duckdb
 import pandas as pd
 
@@ -34,9 +42,45 @@ def frames_equal(a, b):
                 return False, f"col {c} row {i}: {x!r} != {y!r}"
     return True, ""
 
+def lane_frame(con, out, name):
+    files = glob.glob(f"{out}/{name}/*.parquet")
+    if not files:
+        return None
+    return norm(con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf())
+
+def against(out, old):
+    con = duckdb.connect()
+    def names(d):
+        return {os.path.basename(p.rstrip("/")) for p in glob.glob(f"{d}/*/")}
+    new_names, old_names = names(out), names(old)
+    differ = 0
+    for name in sorted(new_names | old_names):
+        if name not in old_names or name not in new_names:
+            where = old if name not in old_names else out
+            print(f"DIFF {name}: missing from {where}")
+            differ += 1
+            continue
+        a, b = lane_frame(con, out, name), lane_frame(con, old, name)
+        if a is None or b is None:
+            ok, why = a is None and b is None, "no parquet output on one side"
+        else:
+            ok, why = frames_equal(a, b)
+        if not ok:
+            print(f"DIFF {name}: {why}")
+            differ += 1
+    print(f"\n{len(new_names | old_names)} lanes, {differ} differ")
+    sys.exit(1 if differ else 0)
+
 def main():
+    old = None
+    if "--against" in sys.argv:
+        i = sys.argv.index("--against")
+        old = sys.argv[i + 1]
+        del sys.argv[i:i + 2]
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+    if old:
+        against(out, old)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
@@ -67,7 +111,6 @@ def main():
         else:
             print(f"PASS {name} ({len(spark_df)} rows)")
     # queries without oracle → rows-only check
-    import os
     for d in sorted(glob.glob(f"{out}/*/")):
         name = d.rstrip("/").split("/")[-1]
         if name in oracle:
