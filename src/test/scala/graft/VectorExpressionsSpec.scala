@@ -82,6 +82,22 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(fused == naive)
   }
 
+  test("sign_band_signature: interpreted eval agrees with the codegen path") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val planes = graft.ext.Similarity.hyperplanes(4, 8, seed = 3L)
+    val vec = Seq(0.5f, -1.25f, 2.0f, 0.75f)
+    val expr = graft.functions.SignBandSignature(
+      Literal.create(vec, ArrayType(FloatType)),
+      planes.map(_.toIndexedSeq).toIndexedSeq, bands = 2)
+    val interpreted = expr.eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray.toSeq
+    val viaPlan = df(Seq(Row(1L, vec)), "id BIGINT, v ARRAY<FLOAT>")
+      .select(VectorFunctions.signBands(col("v"), planes, 2))
+      .head().getSeq[Long](0)
+    assert(interpreted == viaPlan)
+  }
+
   test("all nine vector expressions: generated code and interpreted eval " +
        "agree bit for bit, errors included") {
     import org.apache.spark.sql.{Column, SparkSession}
@@ -276,6 +292,23 @@ class VectorExpressionsSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("dim=8")), s"got: ${messages(e)}")
+  }
+
+  test("nearest_centroids: interpreted eval agrees with the codegen path") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val rnd = new scala.util.Random(5)
+    val cents = Array.fill(5)(Array.fill(6)(rnd.nextGaussian()))
+    val vec = Seq(0.5f, -1.25f, 2.0f, 0.75f, -0.1f, 1.5f)
+    val interpreted = graft.functions.NearestCentroids(
+        Literal.create(vec, ArrayType(FloatType)),
+        cents.map(_.toIndexedSeq).toIndexedSeq, 3, tiesHigh = false)
+      .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toIntArray.toSeq
+    val viaPlan = df(Seq(Row(1L, vec)), "id BIGINT, v ARRAY<FLOAT>")
+      .select(VectorFunctions.nearestCentroids(col("v"), cents, 3, tiesHigh = false))
+      .head().getSeq[Int](0)
+    assert(interpreted == viaPlan)
   }
 
   test("TopK buffer encodes as a flat product of primitive arrays, not kryo binary") {
