@@ -22,7 +22,14 @@ final case class RowsOnly(twin: String) extends LaneCheck
 
 /** The lane registry: every lane declared once in [[all]], with its
   * oracle SQL or its rows-only twin. [[SparkEntry.queries]] and
-  * [[SparkEntry.oracleSql]] are views of it. */
+  * [[SparkEntry.oracleSql]] are views of it.
+  *
+  * An oracle SQL fragment that two or more oracles share is defined
+  * ONCE, in the helper section above [[all]] (the X10 funnel replay
+  * [[Funnel]], the decontamination, PII, cosine, LM and Gopher
+  * builders, …), never copied into a lane: a stage change must be one
+  * edit. Helpers are `def`s or `val`s declared above [[all]] — a `val`
+  * declared below it is still null while [[all]] is built. */
 object Lanes {
 
   /** `lanes` unchanged, once each name is unique and each rows-only
@@ -224,27 +231,27 @@ object Lanes {
   }
 
   /** Shared CTE blocks for the document-dedup family. ONE definition each
-    * — x1_jaccard_pairs, x1_dedup_groups, x8_contamination, and
-    * x10_curation_funnel interpolate these, so a threshold or
-    * shingle-width change cannot desynchronize the oracles that
-    * cross-check each other. */
+    * — x1_jaccard_pairs, x1_dedup_groups, x8_contamination, and the X10
+    * funnels interpolate these, so a threshold or shingle-width change
+    * cannot desynchronize the oracles that cross-check each other. */
 
-  /** Normalized distinct 4-gram shingles per document → `grams`, from an
-    * arbitrary source relation (default: the raw documents table; the
-    * soft-funnel oracle feeds its planted union through the same body). */
-  private def gram4CtesFrom(src: String): String =
-    s"""norm AS (
+  /** Normalized distinct 4-gram shingles per document → `${p}grams`
+    * (through `${p}norm` and `${p}toks`), from an arbitrary source
+    * relation (the raw documents table, a planted or rewritten corpus,
+    * or `documents WHERE …` for the benchmark docs). */
+  private def gram4CtesFrom(src: String, p: String = ""): String =
+    s"""${p}norm AS (
       |  SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS t
       |  FROM $src
-      |), toks AS (
+      |), ${p}toks AS (
       |  SELECT doc_id, unnest(string_split_regex(t, '\\s+')) AS tok,
       |         generate_subscripts(string_split_regex(t, '\\s+'), 1) AS ord
-      |  FROM norm
-      |), grams AS (
+      |  FROM ${p}norm
+      |), ${p}grams AS (
       |  SELECT DISTINCT doc_id,
       |         tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
       |             || ' ' || lead(tok, 3) OVER w AS gram
-      |  FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY ord)
+      |  FROM ${p}toks WINDOW w AS (PARTITION BY doc_id ORDER BY ord)
       |  QUALIFY lead(tok, 3) OVER w IS NOT NULL
       |)""".stripMargin
 
@@ -282,33 +289,407 @@ object Lanes {
   private val componentCtes: String =
     componentCtesFrom("jp", "doc_id_a", "doc_id_b")
 
-  /** Benchmark 4-gram shingles and the containment CTE built from the
-    * RAW documents 0–2 (benchmarks are clean, the crawl is not)
-    * against whatever corpus `grams` CTE is in scope — ONE definition
-    * shared by the funnels that REWRITE the corpus text before
-    * shingling (x10_clean_funnel, x10_xdedup_funnel), so the bench
-    * direction can never drift between them. */
-  private val benchGramsRawCtes: String =
-    raw"""bnorm AS (
-      |  SELECT doc_id, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS t
-      |  FROM documents WHERE doc_id < 3),
-      |btoks AS (
-      |  SELECT doc_id, unnest(string_split_regex(t, '\s+')) AS tok,
-      |         generate_subscripts(string_split_regex(t, '\s+'), 1) AS ord
-      |  FROM bnorm),
-      |bgrams AS (
-      |  SELECT DISTINCT doc_id AS bench_id,
-      |         tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-      |             || ' ' || lead(tok, 3) OVER w AS gram
-      |  FROM btoks WINDOW w AS (PARTITION BY doc_id ORDER BY ord)
-      |  QUALIFY lead(tok, 3) OVER w IS NOT NULL),
-      |bn AS (SELECT bench_id, count(*) AS n FROM bgrams GROUP BY 1),
-      |contam AS (
-      |  SELECT DISTINCT doc_id FROM (
-      |    SELECT g.doc_id, b.bench_id, count(*) AS i
-      |    FROM grams g JOIN bgrams b ON g.gram = b.gram
-      |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-      |  WHERE round(i * 1.0 / n, 4) >= 0.8)""".stripMargin
+  /** The X8 benchmark containment against the corpus `grams` in scope:
+    * `bench` = the 4-gram shingles of documents 0–2, `bn` their counts,
+    * `binter` the shared-shingle count per (doc, benchmark), `contam`
+    * the docs holding ≥ 0.8 of some benchmark's shingles — threshold on
+    * the ROUNDED containment, as the Spark side. `rawBench` shingles the
+    * benchmarks from the RAW documents table instead of the corpus: the
+    * funnels that REWRITE the corpus text before shingling pass the raw
+    * bench frame (benchmarks are clean, the crawl is not). */
+  private def decontamCtes(rawBench: Boolean = false): String =
+    (if (rawBench) gram4CtesFrom("documents WHERE doc_id < 3", "b") + ",\n" else "") +
+      s"""bench AS (SELECT doc_id AS bench_id, gram FROM ${
+          if (rawBench) "bgrams" else "grams WHERE doc_id < 3"}),
+        |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
+        |binter AS (
+        |  SELECT g.doc_id, b.bench_id, count(*) AS i
+        |  FROM grams g JOIN bench b ON g.gram = b.gram
+        |  GROUP BY 1, 2),
+        |contam AS (
+        |  SELECT DISTINCT doc_id FROM binter JOIN bn USING (bench_id)
+        |  WHERE round(i * 1.0 / n, 4) >= 0.8)""".stripMargin
+
+  /** The oracle's own PII patterns, in redaction order, each with its
+    * tag — an independent restatement, deliberately not the engine's
+    * [[graft.ext.Pii]] constants. */
+  private val piiRules: Seq[(String, String)] = Seq(
+    raw"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}" -> "<EMAIL>",
+    raw"\b\d{3}[-.]\d{3}[-.]\d{4}\b" -> "<PHONE>",
+    raw"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b" -> "<IPV4>")
+
+  /** The e-mail → phone → IPv4 redaction chain over any base expression
+    * (the text, or the card-redacted text for the card-first order). */
+  private def redactedSql(base: String): String =
+    piiRules.foldLeft(base) { case (e, (re, tag)) =>
+      s"regexp_replace($e, '$re', '$tag', 'g')"
+    }
+
+  /** Per-pattern PII match counts over `col`, named `names` (e-mail,
+    * phone, IPv4), as select items. */
+  private def piiCountCols(col: String, names: Seq[String]): String =
+    piiRules.zip(names).map { case ((re, _), n) =>
+      s"len(regexp_extract_all($col, '$re')) AS $n"
+    }.mkString(",\n         ")
+
+  /** The two planted Luhn-valid cards (x7_card_scan's plant) redacted by
+    * literal replace — exact, because the base corpus has no digits. */
+  private def cardsRedactedSql(text: String): String =
+    s"replace(replace($text, '4111111111111111', '<CARD>'), " +
+      "'4539 5787 6362 1486', '<CARD>')"
+
+  /** The x7 card plant: two valid cards on every 17th doc, an invalid
+    * candidate pair on every 19th (%17 wins, as the engine's chain). */
+  private val cardPlantSql: String =
+    """CASE WHEN doc_id % 17 = 0 THEN
+      |                text || ' pay 4111111111111111 or 4539 5787 6362 1486 now'
+      |              WHEN doc_id % 19 = 0 THEN
+      |                text || ' order 4111111111111112 ref 1234567890123 end'
+      |              ELSE text END""".stripMargin
+
+  /** The curated writes' 80/10/10 split band over the split-salted
+    * bucket of `key`. */
+  private def splitSql(key: String): String = {
+    val b = bucketSql(key, 42L ^ graft.ext.Sampling.SplitSalt)
+    s"CASE WHEN $b < 8000 THEN 'train' WHEN $b < 9000 THEN 'val' ELSE 'test' END"
+  }
+
+  /** One X10 funnel replay — every Curation stage as a flag on every
+    * document of the corpus `src` (doc_id, lang, text, …; built by the
+    * `prefix` CTEs when planted or rewritten), in `ann`:
+    *  - `is_canonical`: the exact-dedup `keeper` over the normalized
+    *    text `kt` (min doc_id; "TRUE" where no document drops);
+    *  - `is_fuzzy`, with `fuzzy`: not a non-minimal member of a
+    *    Jaccard-pair component;
+    *  - `is_contaminated`: [[decontamCtes]] over the corpus shingles;
+    *  - `n_tok`: whitespace tokens of the PII-redacted text `rtext`
+    *    ([[redactedSql]] over `redactBase`);
+    *  - `b`/`thr`: the keyed-hash bucket and the en 0.4 / other 1.0
+    *    sampling threshold.
+    * `gates` adds CTEs (ending ",\n") between `rdoc` and `ann`, `joins`
+    * joins them onto `rdoc r`, and `annCols` (leading comma) adds their
+    * verdict columns; `quality` and `sample` are the two stage
+    * predicates. ONE replay for every X10 oracle, so a Curation stage
+    * change is one edit here. */
+  private final case class Funnel(
+      src: String = "documents",
+      prefix: String = "",
+      rawBench: Boolean = false,
+      fuzzy: Boolean = false,
+      keeper: String = "r.doc_id = min(r.doc_id) OVER (PARTITION BY r.kt)",
+      redactBase: String = "text",
+      gates: String = "",
+      joins: String = "",
+      annCols: String = "",
+      quality: String = "n_tok BETWEEN 25 AND 90",
+      sample: String = "b < thr") {
+
+    /** `WITH …` through the `ann` CTE. */
+    def annSql: String =
+      (if (fuzzy) "WITH RECURSIVE " else "WITH ") + prefix + gram4CtesFrom(src) +
+        ",\n" + decontamCtes(rawBench) + ",\n" +
+        (if (fuzzy) jaccardPairCtes + ",\n" + componentCtes + ",\n" +
+          "fdrop AS (SELECT id FROM creach GROUP BY id HAVING min(lbl) <> id),\n"
+        else "") +
+        raw"""rdoc AS (
+          |  SELECT *, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
+          |         ${redactedSql(redactBase)} AS rtext
+          |  FROM $src),
+          |""".stripMargin + gates +
+        raw"""ann AS (
+          |  SELECT r.*,
+          |         $keeper AS is_canonical,${
+          if (fuzzy) "\n         r.doc_id NOT IN (SELECT id FROM fdrop) AS is_fuzzy," else ""}
+          |         r.doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
+          |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
+          |              ELSE len(string_split_regex(trim(r.rtext), '\s+')) END AS n_tok,
+          |         ${bucketSql("r.doc_id")} AS b,
+          |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr$annCols
+          |  FROM rdoc r$joins)""".stripMargin
+
+    /** The cumulative survivor predicate after each stage, url …
+      * sample (the url and history stages are no-ops in every
+      * registered funnel: no urlCol, no history index). */
+    private def stages: Seq[(String, String)] = {
+      val preds = Seq("", "is_canonical", "", if (fuzzy) "is_fuzzy" else "",
+        "NOT is_contaminated", quality, sample)
+      val names = Seq("url", "dedup", "history", "fuzzy", "decontam", "quality", "sample")
+      names.zip(preds.scanLeft(Seq.empty[String]) { (acc, p) =>
+        if (p.isEmpty) acc else acc :+ p }.tail
+        .map(ps => if (ps.isEmpty) "TRUE" else ps.mkString(" AND ")))
+    }
+
+    /** [[annSql]] plus `surv`: `cols` of the documents every stage keeps. */
+    def survivorsSql(cols: String): String =
+      annSql + ",\nsurv AS (\n  SELECT " + cols + " FROM ann\n  WHERE " +
+        stages.last._2 + ")"
+
+    /** The stage census (documents and tokens after each stage, and the
+      * 512-token sequence count), per `by` group when given; `weighted`
+      * adds the soft-dedup `wppm`-weighted token mass per stage. */
+    def censusSql(by: String = "", weighted: Boolean = false): String = {
+      def mass(v: String, p: String) =
+        s"COALESCE(CAST(sum(CASE WHEN $p THEN $v END) AS BIGINT), 0)"
+      val cols =
+        Seq((if (by.isEmpty) "" else s"$by, ") + "count(*) AS n_raw") ++
+          stages.map { case (s, p) => s"count(CASE WHEN $p THEN 1 END) AS n_after_$s" } ++
+          Seq("COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw") ++
+          stages.map { case (s, p) =>
+            s"${mass("n_tok", p)} AS ${if (s == "sample") "n_tokens" else s"tokens_after_$s"}"
+          } ++
+          (if (!weighted) Nil
+           else "COALESCE(CAST(sum(n_tok * wppm) AS BIGINT), 0) AS tokens_weighted_raw" +:
+             stages.map { case (s, p) =>
+               s"${mass("n_tok * wppm", p)} AS tokens_weighted_" +
+                 (if (s == "sample") "sampled" else s"after_$s")
+             })
+      val group = if (by.isEmpty) "" else s" GROUP BY $by"
+      val order = if (by.isEmpty) "" else s" ORDER BY $by"
+      annSql + ",\nf AS (\n  SELECT " + cols.mkString(",\n         ") +
+        s"\n  FROM ann$group)\n" +
+        """SELECT *, CASE WHEN n_tokens = 0 THEN 0
+          |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
+          |FROM f""".stripMargin + order
+    }
+  }
+
+  /** The X13 linear scorer's integer features of `text`, by name: the
+    * shared token count, stopword hits, ASCII-letter and punctuation
+    * character counts, character count and summed token length. ONE
+    * definition for x13_quality_bands, s13_stream_quality and the
+    * x30_perceptron training replay. */
+  private val scorerFeatures: Map[String, String] = Map(
+    "ntok" -> raw"""CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
+      |              ELSE len(string_split_regex(trim(text), '\s+')) END""".stripMargin,
+    "nchar" -> "length(coalesce(text, ''))",
+    "stop_hits" ->
+      raw"""len(list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
+      |             x -> list_contains(['a','the','and','of','is','to','in','that'], x)))"""
+        .stripMargin,
+    "alpha_chars" -> "length(regexp_replace(coalesce(text, ''), '[^A-Za-z]', '', 'g'))",
+    "punct_chars" -> ("length(coalesce(text, '')) -\n" +
+      "           length(regexp_replace(coalesce(text, ''), '[.,!?;:]', '', 'g'))"),
+    "sum_tok_len" -> raw"""CAST(coalesce(list_sum(list_transform(
+      |             string_split_regex(trim(coalesce(text, '')), '\s+'),
+      |             x -> length(x))), 0) AS BIGINT)""".stripMargin)
+
+  /** [[scorerFeatures]] as select items, each `feature -> alias`. */
+  private def scorerFeatureCols(aliases: (String, String)*): String =
+    aliases.map { case (f, a) => s"${scorerFeatures(f)}\n           AS $a" }
+      .mkString(",\n         ")
+
+  /** The X13 score band census replayed with zero float division: band
+    * decisions multiply through by the positive denominator
+    * n_tokens·n_chars, so `score >= t` becomes the integer comparison
+    * `score_num >= t·ntok·nchar` over the milli-unit weights `w` (stop,
+    * alpha, punct, sum_tok_len; bias 0) and the hi/lo cuts. `band`
+    * names the band column; `scoreSum` adds the score-sum column, so a
+    * single drifted weight breaks the hash. */
+  private def scoreBandSql(w: (Int, Int, Int, Int), hi: Int, lo: Int,
+                           band: String, scoreSum: Boolean): String = {
+    val (stop, alpha, punct, tokLen) = w
+    val features = Seq("ntok", "nchar", "stop_hits", "alpha_chars", "punct_chars",
+      "sum_tok_len")
+    "WITH m AS (\n  SELECT lang,\n         " +
+      scorerFeatureCols(features.map(f => f -> f): _*) + "\n  FROM documents),\n" +
+      s"""f AS (
+         |  SELECT lang, ntok,
+         |         $stop * stop_hits * nchar + $alpha * alpha_chars * ntok
+         |           - $punct * punct_chars * ntok + $tokLen * sum_tok_len * nchar
+         |           AS score_num,
+         |         ntok * nchar AS den
+         |  FROM m),
+         |b AS (
+         |  SELECT lang, ntok, score_num,
+         |         CASE WHEN den = 0 THEN 'empty'
+         |              WHEN score_num >= $hi * den THEN 'high'
+         |              WHEN score_num >= $lo * den THEN 'medium'
+         |              ELSE 'low' END AS $band
+         |  FROM f)
+         |SELECT lang, $band, count(*) AS n_docs,
+         |       CAST(sum(ntok) AS BIGINT) AS tokens${
+        if (scoreSum) ",\n       CAST(sum(score_num) AS BIGINT) AS score_num_sum" else ""}
+         |FROM b GROUP BY 1, 2 ORDER BY lang, $band""".stripMargin
+  }
+
+  /** The X27 integer cume_dist census of `n_chars` per source over the
+    * documents `fit` admits: `c` counts per score, `g` the running
+    * ≤-count `cum_le` and the group total `tot`. NULL scores sit outside
+    * the census (no rank among real scores). */
+  private def pctlCensusCtes(fit: String): String =
+    s"""c AS (
+       |  SELECT source, n_chars, count(*) AS n FROM documents
+       |  WHERE $fit AND n_chars IS NOT NULL GROUP BY source, n_chars),
+       |g AS (
+       |  SELECT source, n_chars,
+       |         sum(n) OVER (PARTITION BY source ORDER BY n_chars) AS cum_le,
+       |         sum(n) OVER (PARTITION BY source) AS tot
+       |  FROM c)""".stripMargin
+
+  /** The X27 persisted-cut gate replayed from scratch: per source, the
+    * cut is the smallest score whose integer cume_dist over the `fit`
+    * documents clears the 10th percentile; each `probe` document is
+    * kept iff its score reaches the cut — a NULL score, or a source
+    * with no cut row, is FALSE (null never survives an adaptive cut).
+    * Null-safe source join, mirroring the engine's <=>. */
+  private def pctlGateSql(fit: String, probe: String): String =
+    "WITH " + pctlCensusCtes(fit) + ",\n" +
+      s"""cut AS (
+         |  SELECT source, min(n_chars) AS cut_score FROM g
+         |  WHERE (cum_le * 1000000) // tot >= 100000 GROUP BY source)
+         |SELECT d.doc_id, d.source, d.n_chars, t.cut_score,
+         |       coalesce(d.n_chars >= t.cut_score, FALSE) AS is_kept
+         |FROM documents d
+         |LEFT JOIN cut t ON d.source IS NOT DISTINCT FROM t.source
+         |WHERE $probe
+         |ORDER BY d.doc_id""".stripMargin
+
+  /** The X12 recipe replay shared by the token and temperature mixes:
+    * per-source token supply (`tc`, `tot`), the per-source target
+    * `target` (an expression over `ratesFrom`, which `weights` CTEs
+    * may build from `tot`), keep threshold = floor(least(1,
+    * target/supply)·10⁴ + 0.5) — Mixing.rateFrame's explicit half-up
+    * rounding — and survivor selection via the Sampling.bucket replay
+    * (bucketSql). Every sum/coalesce is cast to BIGINT to match Spark's
+    * long aggregates (DuckDB sum(int) widens to HUGEINT). */
+  private def tokenMixSql(target: String, weights: String = "",
+                          ratesFrom: String = "tot"): String =
+    raw"""WITH tc AS (
+      |  SELECT doc_id, source,
+      |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
+      |              ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
+      |  FROM documents),
+      |tot AS (
+      |  SELECT source, count(*) AS n_docs,
+      |         CAST(sum(nt) AS BIGINT) AS tokens_in
+      |  FROM tc GROUP BY 1),
+      |""".stripMargin + weights +
+      s"""rates AS (
+         |  SELECT source, n_docs, tokens_in,
+         |         $target AS target_tokens,
+         |         CASE WHEN tokens_in = 0 THEN 0
+         |              ELSE CAST(floor(least(1.0, $target * 1.0 / tokens_in)
+         |                * 10000 + 0.5) AS BIGINT) END AS thr
+         |  FROM $ratesFrom),
+         |kept AS (
+         |  SELECT t.source, count(*) AS docs_kept,
+         |         CAST(sum(t.nt) AS BIGINT) AS tokens_kept
+         |  FROM tc t JOIN rates r USING (source)
+         |  WHERE ${bucketSql("t.doc_id", 42L ^ graft.ext.Sampling.MixSalt)} < r.thr
+         |  GROUP BY 1)
+         |SELECT r.source, r.n_docs, r.tokens_in, r.target_tokens,
+         |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
+         |       CAST(coalesce(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
+         |FROM rates r LEFT JOIN kept k USING (source)
+         |ORDER BY source""".stripMargin
+
+  /** The X9 pack layout: `t` per-doc token counts (and token lists
+    * `toks`, with `withToks`), `c` each document's start = the
+    * exclusive prefix sum of `advance` (a function of n_tok) in doc_id
+    * order, `spans` the 512-token sequences [start, start + n_tok)
+    * crosses. */
+  private def packCtes(advance: String, withToks: Boolean = false): String = {
+    val toks = if (withToks) "toks, " else ""
+    (if (withToks) raw"""t AS (
+      |  SELECT doc_id,
+      |         string_split_regex(trim(text), '\s+') AS toks,
+      |""".stripMargin else "t AS (\n  SELECT doc_id,\n") +
+      raw"""         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
+        |                   ELSE len(string_split_regex(trim(text), '\s+')) END
+        |              AS BIGINT) AS n_tok
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, ${toks}n_tok,
+        |         COALESCE(CAST(sum($advance) OVER (ORDER BY doc_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS start
+        |  FROM t WHERE n_tok > 0),
+        |spans AS (
+        |  SELECT doc_id, ${toks}n_tok, start,
+        |         unnest(range(start // 512, (start + n_tok - 1) // 512 + 1)) AS seq_id
+        |  FROM c)""".stripMargin
+  }
+
+  /** Each span's [begin, end) token range within its document. */
+  private def packSpansSql(advance: String): String =
+    "WITH " + packCtes(advance) + "\n" +
+      """SELECT doc_id, seq_id,
+        |       greatest(seq_id * 512, start) - start AS begin_tok,
+        |       least((seq_id + 1) * 512, start + n_tok) - start AS end_tok,
+        |       n_tok
+        |FROM spans ORDER BY doc_id, seq_id""".stripMargin
+
+  /** The X16 Gumbel draw over `w` (from [[dsirWeightCtes]]): hash64 →
+    * (h + 0.5)/2⁶³ uniform → round(1e6·(−ln(−ln u))) integer
+    * perturbation of the weight → `top` = the top-100 by the perturbed
+    * key (ties by doc_id). Shared by x16_dsir_select and
+    * x10_dsir_funnel. */
+  private val gumbelTopCtes: String =
+    s"""sel AS (
+       |  SELECT doc_id, dsir_logw_micro,
+       |         dsir_logw_micro + CAST(round(-1000000 * ln(-ln(
+       |           (CAST(${hash64Sql("doc_id", 42L ^ graft.ext.Sampling.GumbelSalt)}
+       |              AS DOUBLE) + 0.5) / 9223372036854775808.0)))
+       |           AS BIGINT) AS dsir_key_micro
+       |  FROM w),
+       |top AS (
+       |  SELECT * FROM sel ORDER BY dsir_key_micro DESC, doc_id LIMIT 100)""".stripMargin
+
+  /** The non-null event_type census (`counts(value, n)`) and its total
+    * (`tot`) — the G23/G24 distribution checks' shared input. */
+  private val eventTypeCensusCtes: String =
+    """counts AS (
+      |  SELECT event_type AS value, CAST(count(*) AS BIGINT) AS n
+      |  FROM events WHERE event_type IS NOT NULL GROUP BY 1),
+      |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM counts)""".stripMargin
+
+  /** The closed-form PQ twin's exact ADC top-5: queries 0–4, every
+    * other vector a candidate, score = Σ over sub-vector m and
+    * component j of `component(id)`·`component(cand)` (integers), under
+    * the (sim DESC, cand_id ASC) total order. */
+  private def pqPlantedTopkSql(component: String => String): String =
+    s"""WITH ids AS (SELECT vec_id FROM embeddings),
+       |q AS (SELECT vec_id AS query_id FROM ids WHERE vec_id < 5),
+       |grid AS (SELECT m, j
+       |         FROM unnest(range(0, 4)) t(m), unnest(range(0, 2)) u(j)),
+       |sc AS (
+       |  SELECT q.query_id, c.vec_id AS cand_id,
+       |         CAST(sum(${component("q.query_id")} *
+       |           ${component("c.vec_id")})
+       |           AS DOUBLE) AS sim
+       |  FROM q, ids c, grid
+       |  WHERE c.vec_id <> q.query_id
+       |  GROUP BY 1, 2)
+       |SELECT query_id, rank, neighbor_id, adc_score FROM (
+       |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS adc_score,
+       |         CAST(row_number() OVER (PARTITION BY query_id
+       |           ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
+       |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** The planted codebook entry of sub-vector m, component j for `id`. */
+  private def pqCodeSql(id: String): String =
+    s"((((($id + m) % 4) + 1) * (m + j + 1)) % 5 - 2)"
+
+  /** The chained earliest-after-previous view → click → purchase funnel
+    * over `src(key, ts, event_type)`: three correlated min-aggregates,
+    * strict > between steps, floor division for the ppm. */
+  private def stepFunnelSql(src: String, key: String): String =
+    s"""s1 AS (SELECT $key, min(ts) AS t1 FROM $src
+       |       WHERE event_type = 'view' GROUP BY 1),
+       |s2 AS (SELECT e.$key, min(ts) AS t2
+       |       FROM $src e JOIN s1 USING ($key)
+       |       WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
+       |s3 AS (SELECT e.$key, min(ts) AS t3
+       |       FROM $src e JOIN s2 USING ($key)
+       |       WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1),
+       |c AS (SELECT 1 AS step_idx, 'view' AS step,
+       |             CAST(count(*) AS BIGINT) AS n_users FROM s1
+       |      UNION ALL SELECT 2, 'click', count(*) FROM s2
+       |      UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
+       |SELECT CAST(step_idx AS BIGINT) AS step_idx, step, n_users,
+       |       CAST((n_users * 1000000) //
+       |            (SELECT n_users FROM c WHERE step_idx = 1) AS BIGINT)
+       |         AS conv_ppm
+       |FROM c ORDER BY step_idx""".stripMargin
 
   /** The C4 line-retention CTEs over a relation `src(doc_id, t)` —
     * whitespace-strip (full-whitespace, Python `.strip()` semantics),
@@ -337,156 +718,77 @@ object Lanes {
       |         count(*) AS n_kept
       |  FROM c4kept GROUP BY doc_id)""".stripMargin
 
-  /** The no-fuzzy funnel body — annotate flags, stage census, final
-    * select with the url/history/fuzzy no-op aliases — over a REWRITTEN
-    * corpus relation `src` (must expose doc_id, lang, text), expecting
-    * `contam` in scope (from [[benchGramsRawCtes]]). ONE body shared by
-    * x10_clean_funnel and x10_xdedup_funnel, so the rewritten-corpus
-    * funnels can never drift from each other's stage replay. */
-  /** `extraAnnCol` (leading comma included) adds a gate column to the
-    * `ann` select (rtext/lang in scope); `qualExtra` (leading AND
-    * included) extends the quality predicate in all four places. */
-  private def noFuzzyFunnelBody(src: String, extraAnnCol: String = "",
-                                qualExtra: String = "",
-                                rtextBase: String = "text"): String =
-    raw"""ann AS (
-      |  SELECT doc_id, lang,
-      |         doc_id = min(doc_id) OVER (
-      |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-      |           AS is_canonical,
-      |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-      |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-      |              ELSE len(string_split_regex(trim(rtext), '\s+')) END AS n_tok,
-      |         ${bucketSql("doc_id")} AS b,
-      |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr${extraAnnCol}
-      |  FROM (SELECT doc_id, lang, text,
-      |               regexp_replace(regexp_replace(regexp_replace(${rtextBase},
-      |                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      |                 '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-      |                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-      |        FROM ${src})
-      |), f AS (
-      |  SELECT count(*) AS n_raw,
-      |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-      |         count(CASE WHEN is_canonical
-      |                         AND NOT is_contaminated THEN 1 END)
-      |           AS n_after_decontam,
-      |         count(CASE WHEN is_canonical AND NOT is_contaminated
-      |                         AND n_tok BETWEEN 25 AND 90${qualExtra} THEN 1 END)
-      |           AS n_after_quality,
-      |         count(CASE WHEN is_canonical AND NOT is_contaminated
-      |                         AND n_tok BETWEEN 25 AND 90${qualExtra} AND b < thr THEN 1 END)
-      |           AS n_after_sample,
-      |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-      |         COALESCE(CAST(sum(CASE WHEN is_canonical
-      |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-      |         COALESCE(CAST(sum(CASE WHEN is_canonical
-      |                         AND NOT is_contaminated
-      |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-      |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-      |                         AND n_tok BETWEEN 25 AND 90${qualExtra}
-      |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-      |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-      |                         AND n_tok BETWEEN 25 AND 90${qualExtra} AND b < thr
-      |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-      |  FROM ann)
-      |SELECT n_raw, n_raw AS n_after_url, n_after_dedup,
-      |       n_after_dedup AS n_after_history,
-      |       n_after_dedup AS n_after_fuzzy,
-      |       n_after_decontam, n_after_quality, n_after_sample,
-      |       tokens_raw, tokens_raw AS tokens_after_url,
-      |       tokens_after_dedup,
-      |       tokens_after_dedup AS tokens_after_history,
-      |       tokens_after_dedup AS tokens_after_fuzzy,
-      |       tokens_after_decontam, tokens_after_quality, n_tokens,
-      |       CASE WHEN n_tokens = 0 THEN 0
-      |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-      |FROM f""".stripMargin
+  /** Exact cosine similarity of two DOUBLE[] expressions, rounded to 6
+    * dp — the engine's ranking discipline. */
+  private def cosineSql(a: String, b: String): String =
+    s"round(list_inner_product($a, $b) / " +
+      s"sqrt(list_inner_product($a, $a) * list_inner_product($b, $b)), 6)"
 
-  /** The curation-funnel stage replay parameterized on the corpus
-    * relation (`src` — raw `documents`, or a planted-union CTE supplied
-    * through `prefix`) and the exact-dedup keeper window (`canonicalSql`,
-    * the complete `is_canonical` select item) — ONE body shared by
-    * x10_curation_funnel and x10_keepbest_funnel, so the stage replay
-    * can never drift between keeper policies. */
-  private def curationFunnelSql(prefix: String, src: String,
-                                canonicalSql: String): String =
-    "WITH RECURSIVE " + prefix + gram4CtesFrom(src) + ",\n" +
-        """bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8
-          |),""".stripMargin + "\n" +
-        jaccardPairCtes + ",\n" + componentCtes + ",\n" +
-      raw"""fdrop AS (SELECT id FROM creach GROUP BY id HAVING min(lbl) <> id),
-        |ann AS (
-        |  SELECT doc_id, lang,
-        |         ${canonicalSql}
-        |         doc_id NOT IN (SELECT id FROM fdrop) AS is_fuzzy,
-        |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-        |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(rtext), '\s+')) END AS n_tok,
-        |         ${bucketSql("doc_id")} AS b,
-        |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-        |  FROM (SELECT doc_id, lang, text,
-        |               regexp_replace(regexp_replace(regexp_replace(text,
-        |                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |                 '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-        |                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-        |        FROM ${src})
-        |), f AS (
-        |  SELECT count(*) AS n_raw,
-        |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-        |         -- no history index in the registered funnel: the X1h
-        |         -- stage is a no-op, so history == dedup on both sides
-        |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_history,
-        |         count(CASE WHEN is_canonical AND is_fuzzy THEN 1 END)
-        |           AS n_after_fuzzy,
-        |         count(CASE WHEN is_canonical AND is_fuzzy
-        |                         AND NOT is_contaminated THEN 1 END)
-        |           AS n_after_decontam,
-        |         count(CASE WHEN is_canonical AND is_fuzzy AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 THEN 1 END)
-        |           AS n_after_quality,
-        |         count(CASE WHEN is_canonical AND is_fuzzy AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 AND b < thr THEN 1 END)
-        |           AS n_after_sample,
-        |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_history,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND is_fuzzy
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_fuzzy,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND is_fuzzy
-        |                         AND NOT is_contaminated
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND is_fuzzy
-        |                         AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND is_fuzzy
-        |                         AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 AND b < thr
-        |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-        |  FROM ann)
-        |SELECT n_raw,
-        |       -- no urlCol in the registered funnel: the URL stage is a
-        |       -- no-op, so after_url == raw on both sides
-        |       n_raw AS n_after_url,
-        |       n_after_dedup, n_after_history, n_after_fuzzy,
-        |       n_after_decontam, n_after_quality, n_after_sample,
-        |       tokens_raw, tokens_raw AS tokens_after_url,
-        |       tokens_after_dedup, tokens_after_history,
-        |       tokens_after_fuzzy, tokens_after_decontam,
-        |       tokens_after_quality, n_tokens,
-        |       CASE WHEN n_tokens = 0 THEN 0
-        |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-        |FROM f""".stripMargin
+  /** The brute-force top-k query vectors `q(query_id, qv)` — vectors
+    * 0–9, or with `planted` their byte-identical copies re-keyed past
+    * max(vec_id), whose true top-1 (their source at cosine exactly 1.0)
+    * survives ANY hyperplane family or centroid seed — and the
+    * candidates `c(cand_id, cv)`. */
+  private def cosineQcCtes(planted: Boolean): String = {
+    val qid = if (planted) "vec_id + (SELECT max(vec_id) + 1 FROM embeddings)" else "vec_id"
+    s"""q AS (SELECT $qid AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings)""".stripMargin
+  }
+
+  /** Ranks the `(query_id, cand_id, sim)` rows of `scored` per query
+    * (sim DESC, id tiebreak; `band` filters the ROUNDED sim before the
+    * rank, as the engine filters before its bounded aggregate) and keeps
+    * the ranks `cut` admits. */
+  private def cosineRankSql(scored: String, cut: String, band: String = ""): String =
+    s"""SELECT query_id, rank, neighbor_id, cosine_sim FROM (
+       |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
+       |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
+       |              AS BIGINT) AS rank
+       |  FROM $scored${if (band.isEmpty) "" else s" WHERE $band"}) WHERE $cut
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** The exact cosine top-k over every candidate but the query itself. */
+  private def cosineTopkSql(planted: Boolean, cut: String, band: String = ""): String =
+    "WITH " + cosineQcCtes(planted) + ",\n" +
+      s"""s AS (
+         |  SELECT query_id, cand_id, ${cosineSql("qv", "cv")} AS sim
+         |  FROM q JOIN c ON cand_id <> query_id)
+         |""".stripMargin + cosineRankSql("s", cut, band)
+
+  /** The x40 dataset card over `src(<key>, lang, <text>)` under
+    * ROLLUP(key) with the '(all)' sentinel: the shared token-count CASE,
+    * the normText dedup family (distinct NORMS where the engine counts
+    * distinct md5s — same cardinality), the PII patterns, and the exact
+    * interpolated median (quantile_cont ≡ Spark percentile). `extra`
+    * (leading comma) appends select items. */
+  private def datasetCardSql(src: String, key: String, text: String,
+                             extra: String = ""): String =
+    raw"""sig AS (
+      |  SELECT $key, lang,
+      |         CASE WHEN $text IS NULL OR length(trim($text)) = 0 THEN 0
+      |              ELSE len(string_split_regex(trim($text), '\s+')) END AS n_tok,
+      |         coalesce(length($text), 0) AS n_ch,
+      |         coalesce(lower(trim(regexp_replace($text, '\s+', ' ', 'g'))), '') AS cnorm,
+      |         ($text IS NULL OR length(trim($text)) = 0) AS blank,
+      |         ${piiCountCols(text, Seq("ne", "np", "ni"))}
+      |  FROM $src)
+      |SELECT coalesce($key, '(all)') AS $key,
+      |       CAST(GROUPING($key) AS BIGINT) AS grouping_level,
+      |       count(*) AS n_docs,
+      |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+      |       CAST(sum(n_ch) AS BIGINT) AS n_chars,
+      |       count(CASE WHEN blank THEN 1 END) AS n_empty,
+      |       count(DISTINCT cnorm) AS n_distinct_text,
+      |       CAST(((count(*) - count(DISTINCT cnorm)) * 1000000) //
+      |            count(*) AS BIGINT) AS dup_ppm,
+      |       count(DISTINCT lang) AS n_langs,
+      |       count(CASE WHEN ne > 0 OR np > 0 OR ni > 0 THEN 1 END)
+      |         AS docs_with_pii,
+      |       round(CAST(sum(n_tok) AS DOUBLE) / count(*), 4) AS mean_tok,
+      |       round(quantile_cont(n_tok, 0.5), 4) AS p50_tok$extra
+      |FROM sig GROUP BY ROLLUP ($key)
+      |ORDER BY grouping_level, $key""".stripMargin
 
   /** The uniquified corpus replayed (see Queries.uniquifiedDocs): each
     * doc's text rebuilt as greatest(4, n_tok) repetitions of a
@@ -523,14 +825,6 @@ object Lanes {
       |  UNION ALL
       |  SELECT doc_id + 20000 AS doc_id, utext FROM u WHERE doc_id < 5)""".stripMargin
 
-  /** Gaps-and-islands sessionization replayed: strict > on the
-    * integer-second gap (DuckDB epoch() is fractional DOUBLE — floor to
-    * match Spark's unix_timestamp), session index = running count of
-    * starts per user in (ts, event_id) total order, value sum in
-    * DECIMAL. ONE definition bound to BOTH x18_sessionize (the window
-    * formulation) and s5_stream_sessions (the flatMapGroupsWithState
-    * fold, batch-replayed) — the two engines' session sets must be
-    * identical. */
   /** The BM25 top-10 replay over `documents WHERE pred` — ONE SQL body
     * for the fresh rank, the persisted/merged probes (pred = TRUE) and
     * the post-removal probe (pred = the kept set): the engine paths all
@@ -598,18 +892,20 @@ object Lanes {
     * Spark side). ONE definition bound to BOTH x8_contamination and
     * the persisted-index probe x8_contam_against. */
   private val contaminationSql: String =
-    ("WITH " + gram4Ctes + ",\n" +
-      """bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-        |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-        |binter AS (
-        |  SELECT g.doc_id, b.bench_id, count(*) AS i
-        |  FROM grams g JOIN bench b ON g.gram = b.gram
-        |  GROUP BY 1, 2)
-        |SELECT doc_id, bench_id, containment FROM (
+    "WITH " + gram4Ctes + ",\n" + decontamCtes() + "\n" +
+      """SELECT doc_id, bench_id, containment FROM (
         |  SELECT doc_id, bench_id, round(i * 1.0 / n, 4) AS containment
         |  FROM binter JOIN bn USING (bench_id))
-        |WHERE containment >= 0.8 ORDER BY doc_id, bench_id""".stripMargin)
+        |WHERE containment >= 0.8 ORDER BY doc_id, bench_id""".stripMargin
 
+  /** Gaps-and-islands sessionization replayed: strict > on the
+    * integer-second gap (DuckDB epoch() is fractional DOUBLE — floor to
+    * match Spark's unix_timestamp), session index = running count of
+    * starts per user in (ts, event_id) total order, value sum in
+    * DECIMAL. ONE definition bound to BOTH x18_sessionize (the window
+    * formulation) and s5_stream_sessions (the flatMapGroupsWithState
+    * fold, batch-replayed) — the two engines' session sets must be
+    * identical. */
   private val sessionizeSql: String =
     """WITH a AS (
       |  SELECT user_id, ts, event_id, value,
@@ -800,45 +1096,21 @@ object Lanes {
       |            AS BIGINT) AS soft_weight_ppm
       |FROM n ORDER BY doc_id""".stripMargin
 
-  /** The DSIR weight pipeline ([[graft.ext.Dsir]]) replayed: md5-prefix
-    * bucket hash, unigram+bigram censuses of target (docs < 300) and raw
-    * (docs ≥ 300), the JM-smoothed per-bucket log-ratio rounded ONCE to
-    * integer micro-nats, per-doc sums. ONE definition shared by
-    * x16_dsir_weights and x16_dsir_select — a smoothing or hashing
-    * change cannot desynchronize them. The λ factor and the
-    * pre-computed uniform floor (1−λ)/B interpolate from the Scala
-    * constants (as does the bucket modulus), so both engines evaluate
-    * the IDENTICAL doubles in the identical association.
-    *
-    * Residual cross-engine risk (here and x15): `ln` is the one
-    * non-IEEE-exact op in any oracle — the JVM's and DuckDB's libm may
-    * differ by ~1 ulp, which flips a micro-nat integer only if the
-    * pre-round value sits within that ulp of a .5 boundary.
-    * MicroNatSlackSpec measures that slack over the verify corpus and
-    * pins it at ≥1e-6 (~250 ulps), so the hash compare is robust to
-    * any faithfully-rounding libm pair. */
-  /** Per-document Gopher rule replay under the DEFAULT English preset
-    * (stopwords a/the/and/of, ASCII symbol class, 50..100000 tokens,
-    * mean token length 3..10, ≥2 stopword hits) — from `gsrc(doc_id,
-    * t)` (text pre-coalesced to '') to `gpass(doc_id, gpass)`. The
-    * rule formulations mirror the x3_gopher_rules oracle's list
-    * machinery (adjacency-built gram lists, count-tie-to-longest
-    * top-gram coverage, dup char mass = total − count-1 mass), reduced
-    * to the single-preset per-doc verdict the x10 gopher funnel joins
-    * on. All CTE names are g-prefixed — the funnel oracle surrounds
-    * this with norm/rdoc/contam CTEs of its own. */
-  private def gopherPassCtes: String = gopherPassCtesImpl(byLang = false)
-
-  /** [[gopherPassCtes]] with the per-language preset dispatch replayed
-    * per document (`gsrc` must also carry `lang`): language-cased
-    * tokenization (zh/ja/ko character tokens), stop lists and script
-    * symbol classes interpolated from the SAME Scala preset catalog
-    * the engine dispatches on (config data — the rule logic stays an
-    * independent SQL restatement), and the CJK mean-token-length
-    * floor of 1. */
-  private def gopherPassByLangCtes: String = gopherPassCtesImpl(byLang = true)
-
-  private def gopherPassCtesImpl(byLang: Boolean): String = {
+  /** Per-document Gopher rule metrics, from `gsrc(doc_id, t)` (text
+    * pre-coalesced to '') to `gm` (with `lang` carried through, and
+    * read, when `byLang`). The formulations are the x3_gopher_rules
+    * oracle's list machinery: adjacency-built gram lists (1-based, like
+    * the Spark slice), count-tie-to-longest top-gram coverage, dup char
+    * mass = total − count-1 mass. `byLang` replays the per-language
+    * preset dispatch per document: language-cased tokenization (zh/ja/ko
+    * character tokens), stop lists and script symbol classes
+    * interpolated from the SAME Scala preset catalog the engine
+    * dispatches on (config data — the rule logic stays an independent
+    * SQL restatement), and the CJK mean-token-length floor of 1; without
+    * it, the DEFAULT English preset (stopwords a/the/and/of, ASCII
+    * symbol class). All CTE names are g-prefixed — the funnel oracles
+    * surround this with norm/rdoc/contam CTEs of their own. */
+  private def gopherMetricCtes(byLang: Boolean): String = {
     val gramLists = (5 to 10).map { k =>
       val cat = (0 until k).map(j => s"toks[i + $j]").mkString(" || ' ' || ")
       s"""         CASE WHEN len(toks) >= $k THEN list_transform(range(1, len(toks) - ${k - 2}),
@@ -852,15 +1124,6 @@ object Lanes {
          |                 u -> len(list_filter(g$k, x -> x = u)) = 1),
          |               u -> length(u))), 0) AS BIGINT) AS dup$k""".stripMargin
     }.mkString(",\n")
-    val thr = Map(5 -> (20, 3), 6 -> (50, 7), 7 -> (100, 13),
-      8 -> (25, 3), 9 -> (100, 11), 10 -> (10, 1))
-    val dupNotHeavy = (5 to 10).map { k =>
-      val (a, b) = thr(k)
-      s"NOT ($a * dup$k > $b * n_chars)"
-    }.mkString("\n               AND ")
-    // Language-dispatched pieces (byLang mode): tokenization, token
-    // count, mean-token-length floor, stop list, and symbol class —
-    // the x3_gopher_rules oracle's dispatch, per document.
     val langCol = if (byLang) "lang," else ""
     val toksExpr =
       if (byLang)
@@ -914,8 +1177,8 @@ object Lanes {
       |                i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]
       |                       || ' ' || toks[i + 3])
       |              ELSE CAST([] AS VARCHAR[]) END AS qg,
-      |$gramLists,
-      |         list_filter(string_split_regex(t, '\n'),
+      |""".stripMargin + gramLists + ",\n" +
+    raw"""         list_filter(string_split_regex(t, '\n'),
       |                     l -> length(l) > 0) AS lns,
       |         list_filter(string_split_regex(t, '\n{2,}'),
       |                     q -> length(trim(q)) > 0) AS paras
@@ -930,7 +1193,7 @@ object Lanes {
       |           u -> len(list_filter(qg, x -> x = u)))), 0) AS mc4
       |  FROM gg),
       |gm AS (
-      |  SELECT doc_id,
+      |  SELECT doc_id, $langCol
       |         $nTokensExpr AS n_tokens,
       |         $minMtlExpr AS min_mtl,
       |         CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
@@ -964,107 +1227,45 @@ object Lanes {
       |           list_filter(list_distinct(qg),
       |             u -> len(list_filter(qg, x -> x = u)) = mc4),
       |           u -> length(u))), 0) AS c4,
-      |$dupMasses
-      |  FROM ggm),
-      |gpass AS (
-      |  SELECT doc_id,
-      |         (n_tokens >= 50 AND n_tokens <= 100000
-      |          AND min_mtl * n_tokens <= sum_tok_len AND sum_tok_len <= 10 * n_tokens
-      |          AND NOT (10 * n_symbols > n_chars)
-      |          AND stop_hits >= 2
-      |          AND NOT (n_bigrams > 0 AND 5 * dup_bigrams >= n_bigrams)
-      |          AND NOT (10 * dup_lines > 3 * n_lines)
-      |          AND NOT (10 * dup_paras > 3 * n_paras)
-      |          AND NOT (5 * dup_line_chars > n_chars)
-      |          AND NOT (5 * dup_para_chars > n_chars)
-      |          AND NOT (5 * c2 > n_chars)
-      |          AND NOT (50 * c3 > 9 * n_chars)
-      |          AND NOT (25 * c4 > 4 * n_chars)
-      |          AND $dupNotHeavy) AS gpass
-      |  FROM gm)""".stripMargin
+      |""".stripMargin + dupMasses + "\n  FROM ggm)"
   }
 
-  /** The bigram stupid-backoff replay — ONE definition bound to BOTH
-    * x15_lm_ppl (fresh train) and x15_lm_against (saved-model probe):
-    * counts from docs < 300, each gram's log-prob rounded ONCE to
-    * integer micro-nats (round(1e6·ln p); backoff ln 0.4 pre-rounded
-    * and ADDED as an integer — the split the Scala side documents), so
-    * the per-doc sum and the cross-multiplied band cut are exact
-    * integer arithmetic. The backoff and band-cut integers interpolate
-    * from NgramLm (one definition — they cannot drift from the
-    * engine). lm_ppl re-derives from the integer sum at 3 dp. */
-  private val lmPplSql: String =
-    s"""WITH norm AS (
-      |  SELECT doc_id,
-      |         lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))) AS t
-      |  FROM documents),
-      |rtoks AS (
-      |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-      |         generate_subscripts(string_split(t, ' '), 1) AS ord
-      |  FROM norm WHERE doc_id < 300 AND t <> ''),
-      |uni AS (SELECT tok AS w, count(*) AS c1 FROM rtoks GROUP BY 1),
-      |big AS (
-      |  SELECT w1, w2, count(*) AS c2 FROM (
-      |    SELECT tok AS w1,
-      |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2
-      |    FROM rtoks) WHERE w2 IS NOT NULL GROUP BY 1, 2),
-      |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS total_toks,
-      |               count(*) AS vocab FROM uni),
-      |ptoks AS (
-      |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-      |         generate_subscripts(string_split(t, ' '), 1) AS ord
-      |  FROM norm WHERE doc_id >= 300 AND t <> ''),
-      |probe AS (
-      |  SELECT doc_id, w1, w2, count(*) AS m FROM (
-      |    SELECT doc_id, tok AS w1,
-      |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2
-      |    FROM ptoks) WHERE w2 IS NOT NULL GROUP BY 1, 2, 3),
-      |g AS (
-      |  SELECT p.doc_id, p.m, b.c2,
-      |         CASE WHEN b.c2 IS NOT NULL THEN
-      |           CAST(round(1000000 * ln(CAST(b.c2 AS DOUBLE) / u1.c1)) AS BIGINT)
-      |         ELSE ${graft.ext.NgramLm.BackoffMicro} + CAST(round(1000000 * ln(
-      |           CAST(coalesce(u2.c1, 0) + 1 AS DOUBLE)
-      |             / (t.total_toks + t.vocab))) AS BIGINT)
-      |         END AS micro
-      |  FROM probe p
-      |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-      |  LEFT JOIN uni u1 ON p.w1 = u1.w
-      |  LEFT JOIN uni u2 ON p.w2 = u2.w
-      |  CROSS JOIN tot t),
-      |per AS (
-      |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS lm_grams,
-      |         CAST(sum(CASE WHEN c2 IS NOT NULL THEN m ELSE 0 END) AS BIGINT)
-      |           AS lm_hits,
-      |         CAST(sum(m * micro) AS BIGINT) AS lm_logp_micro
-      |  FROM g GROUP BY 1)
-      |SELECT d.doc_id,
-      |       coalesce(lm_grams, 0) AS lm_grams,
-      |       coalesce(lm_hits, 0) AS lm_hits,
-      |       coalesce(lm_logp_micro, 0) AS lm_logp_micro,
-      |       CASE WHEN coalesce(lm_grams, 0) > 0
-      |            THEN round(exp(-CAST(lm_logp_micro AS DOUBLE) / 1000000
-      |                           / lm_grams), 3) END AS lm_ppl,
-      |       CASE WHEN coalesce(lm_grams, 0) = 0 THEN 'empty'
-      |            WHEN lm_logp_micro >= ${graft.ext.NgramLm.HeadMicro} * lm_grams THEN 'head'
-      |            WHEN lm_logp_micro >= ${graft.ext.NgramLm.TailMicro} * lm_grams THEN 'middle'
-      |            ELSE 'tail' END AS lm_band
-      |FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
-      |LEFT JOIN per USING (doc_id)
-      |ORDER BY doc_id""".stripMargin
+  /** The Gopher rules over `gm`, each `(flag, condition)` true when the
+    * rule REJECTS the document, in integer cross-multiplied form — no
+    * float division reaches a comparison. The published duplicate
+    * 5..10-gram thresholds 0.15/0.14/0.13/0.12/0.11/0.10 appear as
+    * (numerator, denominator) multipliers. */
+  private def gopherRules: Seq[(String, String)] = {
+    val thr = Map(5 -> (20, 3), 6 -> (50, 7), 7 -> (100, 13),
+      8 -> (25, 3), 9 -> (100, 11), 10 -> (10, 1))
+    Seq(
+      "too_short" -> "n_tokens < 50",
+      "too_long" -> "n_tokens > 100000",
+      "bad_tok_len" ->
+        "NOT (min_mtl * n_tokens <= sum_tok_len AND sum_tok_len <= 10 * n_tokens)",
+      "symbol_heavy" -> "10 * n_symbols > n_chars",
+      "low_stopword" -> "stop_hits < 2",
+      "repetitive" -> "n_bigrams > 0 AND 5 * dup_bigrams >= n_bigrams",
+      "dup_line_heavy" -> "10 * dup_lines > 3 * n_lines",
+      "dup_para_heavy" -> "10 * dup_paras > 3 * n_paras",
+      "dup_line_chars_heavy" -> "5 * dup_line_chars > n_chars",
+      "dup_para_chars_heavy" -> "5 * dup_para_chars > n_chars",
+      "top_2gram_heavy" -> "5 * c2 > n_chars",
+      "top_3gram_heavy" -> "50 * c3 > 9 * n_chars",
+      "top_4gram_heavy" -> "25 * c4 > 4 * n_chars") ++
+      (5 to 10).map { k =>
+        val (a, b) = thr(k)
+        s"dup_${k}gram_heavy" -> s"$a * dup$k > $b * n_chars"
+      }
+  }
 
-  /** SCD-2 snapshot merge replay: same plants, branch-by-branch
-    * unions; IS DISTINCT FROM mirrors the engine's null-safe change
-    * test (a null acctbal +50 stays null → unchanged in BOTH engines).
-    * ONE definition bound to BOTH t4_scd2_snapshot and s7_stream_scd2:
-    * the streaming lane's key-partitioned micro-batch replay claims
-    * composition to the one-shot merge, so it must hash against the
-    * same replay (the x1_incremental/x1_bloom sharing rule). */
-  /** The shared X42/S14 oracle: the validity join replayed as the
-    * NAIVE key + BETWEEN left join (non-overlapping versions -> at
-    * most one match, so the left join is row-preserving); the plant
-    * -- keyed boundaries, the dropped silver version, the gap -- is
-    * re-derived from scratch.  */
+  /** [[gopherMetricCtes]] reduced to the per-doc verdict the X10 Gopher
+    * funnels join on: `gpass(doc_id, gpass)`, no rule firing. */
+  private def gopherPassCtes(byLang: Boolean): String =
+    gopherMetricCtes(byLang) + ",\ngpass AS (\n  SELECT doc_id,\n         " +
+      gopherRules.map { case (_, c) => s"NOT ($c)" }.mkString("\n         AND ") +
+      " AS gpass\n  FROM gm)"
+
   /** The shared X50/S15 oracle — the parse+flatten replayed as pure
     * doc_id arithmetic (the JSON is constructed from doc_id): author/
     * tag/score derive directly, the two tag array slots become two
@@ -1086,6 +1287,11 @@ object Lanes {
         |       CAST(sum(score) AS BIGINT) AS score_sum
         |FROM f GROUP BY 1, 2 ORDER BY author, tag""".stripMargin
 
+  /** The shared X42/S14 oracle: the validity join replayed as the
+    * NAIVE key + BETWEEN left join (non-overlapping versions -> at
+    * most one match, so the left join is row-preserving); the plant
+    * -- keyed boundaries, the dropped silver version, the gap -- is
+    * re-derived from scratch.  */
   private val scd2EnrichSql: String =
     """WITH u AS (SELECT DISTINCT user_id FROM events),
         |v1 AS (SELECT user_id, 'bronze' AS tier,
@@ -1113,6 +1319,13 @@ object Lanes {
         |     AND (d.vt IS NULL OR e.ts < d.vt)
         |ORDER BY event_id""".stripMargin
 
+  /** SCD-2 snapshot merge replay: same plants, branch-by-branch
+    * unions; IS DISTINCT FROM mirrors the engine's null-safe change
+    * test (a null acctbal +50 stays null → unchanged in BOTH engines).
+    * ONE definition bound to BOTH t4_scd2_snapshot and s7_stream_scd2:
+    * the streaming lane's key-partitioned micro-batch replay claims
+    * composition to the one-shot merge, so it must hash against the
+    * same replay (the x1_incremental/x1_bloom sharing rule). */
   private val scd2SnapshotSql: String =
       """WITH hist_closed AS (
         |  SELECT c_custkey, c_mktsegment, c_acctbal - 100 AS c_acctbal,
@@ -1189,14 +1402,19 @@ object Lanes {
         |  AND NOT EXISTS (SELECT 1 FROM hist h WHERE h.norm = k.norm)
         |ORDER BY doc_id""".stripMargin
 
-  /** The order-n stupid-backoff replay, generated for any n — the
-    * x15_lm_ppl / x15_lm_ppl3 shape generalized exactly as the engine's
-    * `NgramLm.scoredN` generalizes the scorers: per order-k census one
-    * lead() CTE, per backoff level one hit join (order k on the LAST k
-    * probe words) + one context join (order k−1 minus the final word),
-    * each CASE arm `(n−k)·BackoffMicro` ADDED as an integer plus ONE
-    * rounded ln — never the 0.4-power folded into the rounding. */
-  private def lmPplSqlN(n: Int): String = {
+  /** The order-n stupid-backoff replay, generated for any n exactly as
+    * the engine's `NgramLm.scoredN` generalizes the scorers: counts from
+    * docs < 300 of the `norm(doc_id, t)` in scope, per order-k census one
+    * lead() CTE `g<k>` (`uni` for k = 1), per backoff level one hit join
+    * (order k on the LAST k probe words) + one context join (order k−1
+    * minus the final word), each CASE arm `(n−k)·BackoffMicro` ADDED as
+    * an integer plus ONE rounded ln — never the 0.4-power folded into
+    * the rounding — so the per-doc sums are exact integer arithmetic.
+    * Probe grams come from `probeFrom` (a `(doc_id, t)` relation and its
+    * filter); `per` holds each probed doc's lm_grams, lm_hits and
+    * lm_logp_micro. ONE definition for x15_lm_ppl/x15_lm_against (n = 2),
+    * x15_lm_ppl3, x15_lm_ppl5 and the x10_ppl_funnel gate. */
+  private def lmCtes(n: Int, probeFrom: String): String = {
     val b = graft.ext.NgramLm.BackoffMicro
     def ws(from: Int, to: Int) = (from to to).map(i => s"w$i")
     def leads(k: Int) = (2 to k).map(j =>
@@ -1227,11 +1445,7 @@ object Lanes {
          |             CAST(h$k.c$k AS DOUBLE) / $ctxCnt)) AS BIGINT)"""
         .stripMargin
     }.mkString("\n         ")
-    s"""WITH norm AS (
-       |  SELECT doc_id,
-       |         lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))) AS t
-       |  FROM documents),
-       |rtoks AS (
+    s"""rtoks AS (
        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
        |         generate_subscripts(string_split(t, ' '), 1) AS ord
        |  FROM norm WHERE doc_id < 300 AND t <> ''),
@@ -1242,7 +1456,7 @@ object Lanes {
        |ptoks AS (
        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
        |         generate_subscripts(string_split(t, ' '), 1) AS ord
-       |  FROM norm WHERE doc_id >= 300 AND t <> ''),
+       |  FROM $probeFrom),
        |probe AS (
        |  SELECT doc_id, ${ws(1, n).mkString(", ")}, count(*) AS m FROM (
        |    SELECT doc_id, tok AS w1,
@@ -1265,8 +1479,20 @@ object Lanes {
        |         CAST(sum(CASE WHEN c$n IS NOT NULL THEN m ELSE 0 END) AS BIGINT)
        |           AS lm_hits,
        |         CAST(sum(m * micro) AS BIGINT) AS lm_logp_micro
-       |  FROM g GROUP BY 1)
-       |SELECT d.doc_id,
+       |  FROM g GROUP BY 1)""".stripMargin
+  }
+
+  /** The x15 perplexity replay: [[lmCtes]] probing docs ≥ 300, lm_ppl
+    * re-derived from the integer sum at 3 dp, and the cross-multiplied
+    * band cut (the backoff and band-cut integers interpolate from
+    * NgramLm — they cannot drift from the engine). */
+  private def lmPplSqlN(n: Int): String =
+    s"""WITH norm AS (
+       |  SELECT doc_id,
+       |         lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))) AS t
+       |  FROM documents),
+       |""".stripMargin + lmCtes(n, "norm WHERE doc_id >= 300 AND t <> ''") + "\n" +
+      s"""SELECT d.doc_id,
        |       coalesce(lm_grams, 0) AS lm_grams,
        |       coalesce(lm_hits, 0) AS lm_hits,
        |       coalesce(lm_logp_micro, 0) AS lm_logp_micro,
@@ -1280,20 +1506,37 @@ object Lanes {
        |FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
        |LEFT JOIN per USING (doc_id)
        |ORDER BY doc_id""".stripMargin
-  }
 
+  /** The DSIR weight pipeline ([[graft.ext.Dsir]]) replayed: md5-prefix
+    * bucket hash, unigram+bigram censuses of target (docs < 300) and raw
+    * (docs ≥ 300), the JM-smoothed per-bucket log-ratio rounded ONCE to
+    * integer micro-nats, per-doc sums. ONE definition shared by
+    * x16_dsir_weights, x16_dsir_select and x10_dsir_funnel — a
+    * smoothing or hashing change cannot desynchronize them (its
+    * normalized text is `dnorm`: the funnel replay owns `norm`). The λ factor and the
+    * pre-computed uniform floor (1−λ)/B interpolate from the Scala
+    * constants (as does the bucket modulus), so both engines evaluate
+    * the IDENTICAL doubles in the identical association.
+    *
+    * Residual cross-engine risk (here and x15): `ln` is the one
+    * non-IEEE-exact op in any oracle — the JVM's and DuckDB's libm may
+    * differ by ~1 ulp, which flips a micro-nat integer only if the
+    * pre-round value sits within that ulp of a .5 boundary.
+    * MicroNatSlackSpec measures that slack over the verify corpus and
+    * pins it at ≥1e-6 (~250 ulps), so the hash compare is robust to
+    * any faithfully-rounding libm pair. */
   private val dsirWeightCtes: String = {
     val lam = graft.ext.Dsir.DefaultLambda
     val nb = graft.ext.Dsir.DefaultBuckets
     val unif = (1.0 - lam) / nb
-    s"""norm AS (
+    s"""dnorm AS (
        |  SELECT doc_id,
        |         lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))) AS t
        |  FROM documents),
        |ttoks AS (
        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
        |         generate_subscripts(string_split(t, ' '), 1) AS ord
-       |  FROM norm WHERE doc_id < 300 AND t <> ''),
+       |  FROM dnorm WHERE doc_id < 300 AND t <> ''),
        |tgrams AS (
        |  SELECT tok AS g FROM ttoks
        |  UNION ALL
@@ -1308,7 +1551,7 @@ object Lanes {
        |rtoks AS (
        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
        |         generate_subscripts(string_split(t, ' '), 1) AS ord
-       |  FROM norm WHERE doc_id >= 300 AND t <> ''),
+       |  FROM dnorm WHERE doc_id >= 300 AND t <> ''),
        |rgrams AS (
        |  SELECT doc_id, tok AS g FROM rtoks
        |  UNION ALL
@@ -1346,6 +1589,15 @@ object Lanes {
        |  FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
        |  LEFT JOIN per USING (doc_id))""".stripMargin
   }
+
+  /** The per-doc DSIR weights — ONE replay for the fresh fit
+    * (x16_dsir_weights) and the persisted-model probe (x16_dsir_against,
+    * integer micro-nat weights; save→load parity pinned by DsirSpec). */
+  private val dsirWeightsSql: String =
+    "WITH " + dsirWeightCtes + "\n" +
+      """SELECT doc_id, dsir_grams, dsir_logw_micro,
+        |       round(CAST(dsir_logw_micro AS DOUBLE) / 1000000, 3) AS dsir_logw
+        |FROM w ORDER BY doc_id""".stripMargin
 
   /** X3k learned-language-ID replay pieces — generated FROM the Scala
     * constants ([[graft.ext.LangTrained.Langs]]/`langProfiles`) so a
@@ -1620,32 +1872,13 @@ object Lanes {
          |FROM ckum WHERE cum <= $budget
          |GROUP BY source ORDER BY source""".stripMargin
 
-  private def bpeCountSql(maxWords: Int, merges: Int): String = {
-    val applySteps = bpeApplySteps(merges)
-    bpeWith(maxWords, merges) + ",\n" +
-      raw"""dwf AS (
-        |  SELECT doc_id, word FROM (
-        |    SELECT doc_id,
-        |           unnest(string_split_regex(trim(lower(text)), '\s+'))
-        |             AS word
-        |    FROM documents)
-        |  WHERE regexp_matches(word, '^[a-z]+${"$"}')),
-        |a1 AS MATERIALIZED (
-        |  SELECT word,
-        |         array_to_string(list_transform(string_split(word, ''),
-        |           c -> chr(1) || c || chr(2)), '') AS seq
-        |  FROM (SELECT DISTINCT word FROM dwf)),
-        |""".stripMargin + applySteps + ",\n" +
-      s"""useg AS (
-         |  SELECT word,
-         |         CAST(len(string_split(substr(seq, 2, length(seq) - 2),
-         |                   chr(2) || chr(1))) AS BIGINT) AS n_syms
-         |  FROM a${merges + 1})
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |       CAST(sum(u.n_syms) AS BIGINT) AS bpe_tokens
-         |FROM dwf d JOIN useg u USING (word)
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin
-  }
+  /** Per-document BPE token counts over the shared serving prelude. */
+  private def bpeCountSql(maxWords: Int, merges: Int): String =
+    bpeWith(maxWords, merges) + ",\n" + bpeServeCtes(merges) + "\n" +
+      """SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
+        |       CAST(sum(u.n_syms) AS BIGINT) AS bpe_tokens
+        |FROM dwf d JOIN useg u USING (word)
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin
 
   /** The shared "WITH …" block: census, initial sequences, and the
     * chained per-step (pair census → argmax → fuse) CTEs through
@@ -2676,25 +2909,7 @@ object Lanes {
     // total order, self excluded. The SAME oracle serves the IVF-PQ
     // planted lane: with nProbe = k every inverted list is probed, so
     // the composed path is mathematically the exhaustive ADC scan.
-    Lane("x2_pq_planted", Queries.x2PqPlanted, Oracle(
-      """WITH ids AS (SELECT vec_id FROM embeddings),
-        |q AS (SELECT vec_id AS query_id FROM ids WHERE vec_id < 5),
-        |grid AS (SELECT m, j
-        |         FROM unnest(range(0, 4)) t(m), unnest(range(0, 2)) u(j)),
-        |sc AS (
-        |  SELECT q.query_id, c.vec_id AS cand_id,
-        |         CAST(sum(
-        |           (((((q.query_id + m) % 4) + 1) * (m + j + 1)) % 5 - 2) *
-        |           (((((c.vec_id + m) % 4) + 1) * (m + j + 1)) % 5 - 2))
-        |           AS DOUBLE) AS sim
-        |  FROM q, ids c, grid
-        |  WHERE c.vec_id <> q.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rank, neighbor_id, adc_score FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS adc_score,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |           ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
-        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    Lane("x2_pq_planted", Queries.x2PqPlanted, Oracle(pqPlantedTopkSql(pqCodeSql))),
 
     Lane("x2_pq_topk", Queries.x2PqTopk, RowsOnly("x2_pq_planted")),
 
@@ -2706,65 +2921,20 @@ object Lanes {
       // q·centroid + residual-ADC sum equals the plain dot of those
       // composed vectors exactly (zero-error residual codebook, all
       // integers). nProbe = 2 probes both lists = the exhaustive scan.
-      """WITH ids AS (SELECT vec_id FROM embeddings),
-        |q AS (SELECT vec_id AS query_id FROM ids WHERE vec_id < 5),
-        |grid AS (SELECT m, j
-        |         FROM unnest(range(0, 4)) t(m), unnest(range(0, 2)) u(j)),
-        |sc AS (
-        |  SELECT q.query_id, c.vec_id AS cand_id,
-        |         CAST(sum(
-        |           ((CASE WHEN (q.query_id % 2 = 0) = (m < 2)
-        |                  THEN 100 ELSE 0 END) +
-        |            (((((q.query_id + m) % 4) + 1) * (m + j + 1)) % 5 - 2)) *
-        |           ((CASE WHEN (c.vec_id % 2 = 0) = (m < 2)
-        |                  THEN 100 ELSE 0 END) +
-        |            (((((c.vec_id + m) % 4) + 1) * (m + j + 1)) % 5 - 2)))
-        |           AS DOUBLE) AS sim
-        |  FROM q, ids c, grid
-        |  WHERE c.vec_id <> q.query_id
-        |  GROUP BY 1, 2)
-        |SELECT query_id, rank, neighbor_id, adc_score FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS adc_score,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |           ORDER BY sim DESC, cand_id) AS BIGINT) AS rank
-        |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+      pqPlantedTopkSql(id =>
+        s"((CASE WHEN ($id % 2 = 0) = (m < 2) THEN 100 ELSE 0 END) + ${pqCodeSql(id)})"))),
 
     Lane("x2_ivfpq_topk", Queries.x2IvfpqTopk, RowsOnly("x2_ivfpq_planted")),
 
     Lane("x2_topk_cosine", Queries.x2TopkCosine, Oracle(
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+      cosineTopkSql(planted = false, "rank <= 5"))),
 
     Lane("x2_hard_negatives", Queries.x2HardNegatives, Oracle(
       // The banded top-k replayed: same cosine/6-dp/tiebreak discipline
       // as x2_topk_cosine, with the [0, 0.95] band applied to the
       // ROUNDED sim before the window — the engine filters before its
       // bounded aggregate at exactly the same values.
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id),
-        |b AS (SELECT * FROM s WHERE sim >= 0.0 AND sim <= 0.95)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM b) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+      cosineTopkSql(planted = false, "rank <= 5", band = "sim >= 0.0 AND sim <= 0.95"))),
 
     Lane("x2_mrl_topk", Queries.x2MrlTopk, Oracle(
       // BOTH stages replayed: candidate ranking on the 16-component
@@ -2773,52 +2943,26 @@ object Lanes {
       // full-dimension re-rank to top-5. Deterministic end to end —
       // no hyperplanes, no centroids — so this is a true hash oracle,
       // not a planted twin.
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s1 AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv[1:16], cv[1:16]) /
-        |               sqrt(list_inner_product(qv[1:16], qv[1:16])
-        |                    * list_inner_product(cv[1:16], cv[1:16])), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id),
-        |cand AS (
-        |  SELECT query_id, cand_id FROM (
-        |    SELECT query_id, cand_id,
-        |           row_number() OVER (PARTITION BY query_id
-        |                              ORDER BY sim DESC, cand_id) AS r
-        |    FROM s1) WHERE r <= 20),
-        |s2 AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv)
-        |                    * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM cand JOIN q USING (query_id) JOIN c USING (cand_id))
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s2) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+      "WITH " + cosineQcCtes(planted = false) + ",\n" +
+        s"""s1 AS (
+          |  SELECT query_id, cand_id, ${cosineSql("qv[1:16]", "cv[1:16]")} AS sim
+          |  FROM q JOIN c ON cand_id <> query_id),
+          |cand AS (
+          |  SELECT query_id, cand_id FROM (
+          |    SELECT query_id, cand_id,
+          |           row_number() OVER (PARTITION BY query_id
+          |                              ORDER BY sim DESC, cand_id) AS r
+          |    FROM s1) WHERE r <= 20),
+          |s2 AS (
+          |  SELECT query_id, cand_id, ${cosineSql("qv", "cv")} AS sim
+          |  FROM cand JOIN q USING (query_id) JOIN c USING (cand_id))
+          |""".stripMargin + cosineRankSql("s2", "rank <= 5"))),
 
     // Planted ANN/IVF twins: queries are byte-identical copies of corpus
     // vectors 0-9 re-keyed past max(vec_id), so the true top-1 (the
     // source vector at cosine exactly 1.0) survives ANY hyperplane
     // family / centroid seed and a brute-force replay is a real oracle.
-    Lane("x2_ann_planted", Queries.x2AnnPlanted, Oracle(
-      """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
-        |                  CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
+    Lane("x2_ann_planted", Queries.x2AnnPlanted, Oracle(cosineTopkSql(planted = true, "rank = 1"))),
 
     // (x2_ann_against also probes the saved index under the oracle)
     Lane("x2_ann_topk", Queries.x2AnnTopk, RowsOnly("x2_ann_planted")),
@@ -2826,56 +2970,14 @@ object Lanes {
     // Same planted fixture probed through the SAVED LSH band index
     // (saveBands → annTopKAgainst): byte-identical vectors reproduce
     // the saved signatures, so the same brute-force rank-1 replay holds.
-    Lane("x2_ann_against", Queries.x2AnnAgainst, Oracle(
-      """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
-        |                  CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
+    Lane("x2_ann_against", Queries.x2AnnAgainst, Oracle(cosineTopkSql(planted = true, "rank = 1"))),
 
     // Same planted fixture probed through the SAVED index
     // (save → load → topKAgainst): byte-identical vectors make rank-1
     // invariant to the round trip, so the same brute-force replay holds.
-    Lane("x2_ivf_against", Queries.x2IvfAgainst, Oracle(
-      """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
-        |                  CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
+    Lane("x2_ivf_against", Queries.x2IvfAgainst, Oracle(cosineTopkSql(planted = true, "rank = 1"))),
 
-    Lane("x2_ivf_planted", Queries.x2IvfPlanted, Oracle(
-      """WITH q AS (SELECT vec_id + (SELECT max(vec_id) + 1 FROM embeddings) AS query_id,
-        |                  CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (
-        |  SELECT query_id, cand_id,
-        |         round(list_inner_product(qv, cv) /
-        |               sqrt(list_inner_product(qv, qv) * list_inner_product(cv, cv)), 6) AS sim
-        |  FROM q JOIN c ON cand_id <> query_id)
-        |SELECT query_id, rank, neighbor_id, cosine_sim FROM (
-        |  SELECT query_id, cand_id AS neighbor_id, round(sim, 4) AS cosine_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id)
-        |              AS BIGINT) AS rank
-        |  FROM s) WHERE rank = 1 ORDER BY query_id""".stripMargin)),
+    Lane("x2_ivf_planted", Queries.x2IvfPlanted, Oracle(cosineTopkSql(planted = true, "rank = 1"))),
 
     // (x2_ivf_against also probes the saved index under the oracle)
     Lane("x2_ivf_topk", Queries.x2IvfTopk, RowsOnly("x2_ivf_planted")),
@@ -2958,189 +3060,34 @@ object Lanes {
       // mc). The plant CASE replicates the Spark side's
       // structural-duplication fixtures.
       {
-      // Duplicate-5..10-gram machinery, generated per size: the gram
-      // list (1-based adjacency like bg/tg/qg), and dup char mass =
-      // total mass − mass of count-1 grams (≡ Σ over repeated grams of
-      // count·len — the same mass reading the engine's NGramStats
-      // returns).
-      val gramLists = (5 to 10).map { k =>
-        val cat = (0 until k).map(j => s"toks[i + $j]").mkString(" || ' ' || ")
-        s"""         CASE WHEN len(toks) >= $k THEN list_transform(range(1, len(toks) - ${k - 2}),
-           |                i -> $cat)
-           |              ELSE CAST([] AS VARCHAR[]) END AS g$k""".stripMargin
-      }.mkString(",\n")
-      val dupMasses = (5 to 10).map { k =>
-        s"""         CAST(coalesce(list_sum(list_transform(g$k, x -> length(x))), 0) AS BIGINT)
-           |           - CAST(coalesce(list_sum(list_transform(
-           |               list_filter(list_distinct(g$k),
-           |                 u -> len(list_filter(g$k, x -> x = u)) = 1),
-           |               u -> length(u))), 0) AS BIGINT) AS dup$k""".stripMargin
-      }.mkString(",\n")
-      // Published thresholds 0.15/0.14/0.13/0.12/0.11/0.10 in integer
-      // cross-multiplied form (numerator multiplier, denominator
-      // multiplier per size).
-      val thr = Map(5 -> (20, 3), 6 -> (50, 7), 7 -> (100, 13),
-        8 -> (25, 3), 9 -> (100, 11), 10 -> (10, 1))
-      val dupFlags = (5 to 10).map { k =>
-        val (a, b) = thr(k)
-        s"         $a * dup$k > $b * n_chars AS dup_${k}gram_heavy"
-      }.mkString(",\n")
-      val dupCounts = (5 to 10).map { k =>
-        s"       count(CASE WHEN dup_${k}gram_heavy THEN 1 END) AS n_dup_${k}gram_heavy"
-      }.mkString(",\n")
-      val dupNotPass = (5 to 10).map(k => s"NOT dup_${k}gram_heavy").mkString(" AND ")
-      // Per-language preset dispatch, interpolated from the SAME Scala
-      // catalog the query runs under (config data — stopword lists and
-      // fixtures share one definition like jaKoFixtures; the RULE logic
-      // below stays an independent SQL restatement). Script classes use
-      // RE2 \x{…} escapes for the same BMP ranges the presets carry as
-      // literal characters.
+      // Per-language preset dispatch and rule metrics: the shared
+      // gopherMetricCtes (config data interpolated from the SAME Scala
+      // catalog the query runs under; the RULE logic an independent SQL
+      // restatement), flagged per rule by gopherRules.
       val fixtureValues = Queries.gopherCjkFixtures
         .map { case (id, l, t) => s"(CAST($id AS BIGINT), '$l', '$t')" }
         .mkString(", ")
-      val stopCase = "CASE lang " +
-        graft.ext.TextAnalysis.gopherPresets.toSeq.sortBy(_._1).map {
-          case (l, p) =>
-            s"WHEN '$l' THEN [${p.stopwords.map(w => s"'$w'").mkString(", ")}]"
-        }.mkString(" ") + " ELSE ['a', 'the', 'and', 'of'] END"
-      val symCase = raw"""CASE
-        |           WHEN lang = 'zh' THEN length(t) - length(regexp_replace(t,
-        |             '[^\x{4e00}-\x{9fff}0-9\s]', '', 'g'))
-        |           WHEN lang = 'ja' THEN length(t) - length(regexp_replace(t,
-        |             '[^\x{4e00}-\x{9fff}\x{3040}-\x{30ff}0-9\s]', '', 'g'))
-        |           WHEN lang = 'ko' THEN length(t) - length(regexp_replace(t,
-        |             '[^\x{ac00}-\x{d7a3}0-9\s]', '', 'g'))
-        |           WHEN lang IN ('es', 'fr', 'de')
-        |             THEN length(t) - length(regexp_replace(t,
-        |               '[^A-Za-z\x{c0}-\x{d6}\x{d8}-\x{f6}\x{f8}-\x{ff}0-9\s]', '', 'g'))
-        |           ELSE length(t) - length(regexp_replace(t,
-        |             '[^A-Za-z0-9\s]', '', 'g')) END""".stripMargin
+      val flags = gopherRules.map(_._1)
       raw"""WITH uni AS (
         |  SELECT doc_id, lang, text FROM documents
         |  UNION ALL
         |  SELECT * FROM (VALUES $fixtureValues) v(doc_id, lang, text)),
         |pl AS (
-        |  SELECT lang,
+        |  SELECT doc_id, lang,
         |         CASE WHEN doc_id % 13 = 0 THEN text ||
         |                e'\nrepeat line\nrepeat line\nrepeat line\n\nsame para\n\nsame para'
         |              WHEN doc_id % 29 = 0 THEN text ||
         |                repeat(' badger badger', length(text) // 10 + 5)
         |              ELSE text END AS text
         |  FROM uni),
-        |d AS (
-        |  SELECT lang, coalesce(text, '') AS t,
-        |         CASE WHEN lang IN ('zh', 'ja', 'ko')
-        |              THEN regexp_extract_all(coalesce(text, ''), '\S')
-        |              ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-        |         END AS toks
-        |  FROM pl),
-        |g AS (
-        |  SELECT lang, t, toks,
-        |         CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)),
-        |                i -> toks[i] || ' ' || toks[i + 1])
-        |              ELSE CAST([] AS VARCHAR[]) END AS bg,
-        |         CASE WHEN len(toks) >= 3 THEN list_transform(range(1, len(toks) - 1),
-        |                i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2])
-        |              ELSE CAST([] AS VARCHAR[]) END AS tg,
-        |         CASE WHEN len(toks) >= 4 THEN list_transform(range(1, len(toks) - 2),
-        |                i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]
-        |                       || ' ' || toks[i + 3])
-        |              ELSE CAST([] AS VARCHAR[]) END AS qg,
-        |$gramLists,
-        |         list_filter(string_split_regex(t, '\n'),
-        |                     l -> length(l) > 0) AS lns,
-        |         list_filter(string_split_regex(t, '\n{2,}'),
-        |                     q -> length(trim(q)) > 0) AS paras
-        |  FROM d),
-        |gm AS (
-        |  SELECT *,
-        |         coalesce(list_max(list_transform(list_distinct(bg),
-        |           u -> len(list_filter(bg, x -> x = u)))), 0) AS mc2,
-        |         coalesce(list_max(list_transform(list_distinct(tg),
-        |           u -> len(list_filter(tg, x -> x = u)))), 0) AS mc3,
-        |         coalesce(list_max(list_transform(list_distinct(qg),
-        |           u -> len(list_filter(qg, x -> x = u)))), 0) AS mc4
-        |  FROM g),
-        |m AS (
-        |  SELECT lang,
-        |         CASE WHEN lang IN ('zh', 'ja', 'ko') THEN len(toks)
-        |              WHEN len(trim(t)) = 0 THEN 0 ELSE len(toks) END AS n_tokens,
-        |         CASE WHEN lang IN ('zh', 'ja', 'ko') THEN 1 ELSE 3 END AS min_mtl,
-        |         CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
-        |              AS BIGINT) AS sum_tok_len,
-        |         length(t) AS n_chars,
-        |         $symCase
-        |           AS n_symbols,
-        |         len(list_filter($stopCase,
-        |                         s -> list_contains(toks, s))) AS stop_hits,
-        |         len(bg) AS n_bigrams,
-        |         len(bg) - len(list_distinct(bg)) AS dup_bigrams,
-        |         len(lns) AS n_lines,
-        |         len(lns) - len(list_distinct(lns)) AS dup_lines,
-        |         len(paras) AS n_paras,
-        |         len(paras) - len(list_distinct(paras)) AS dup_paras,
-        |         CAST(coalesce(list_sum(list_transform(lns, l -> length(l))), 0) AS BIGINT)
-        |           - CAST(coalesce(list_sum(list_transform(list_distinct(lns),
-        |               l -> length(l))), 0) AS BIGINT) AS dup_line_chars,
-        |         CAST(coalesce(list_sum(list_transform(paras, q -> length(q))), 0) AS BIGINT)
-        |           - CAST(coalesce(list_sum(list_transform(list_distinct(paras),
-        |               q -> length(q))), 0) AS BIGINT) AS dup_para_chars,
-        |         CAST(mc2 AS BIGINT) * coalesce(list_max(list_transform(
-        |           list_filter(list_distinct(bg),
-        |             u -> len(list_filter(bg, x -> x = u)) = mc2),
-        |           u -> length(u))), 0) AS c2,
-        |         CAST(mc3 AS BIGINT) * coalesce(list_max(list_transform(
-        |           list_filter(list_distinct(tg),
-        |             u -> len(list_filter(tg, x -> x = u)) = mc3),
-        |           u -> length(u))), 0) AS c3,
-        |         CAST(mc4 AS BIGINT) * coalesce(list_max(list_transform(
-        |           list_filter(list_distinct(qg),
-        |             u -> len(list_filter(qg, x -> x = u)) = mc4),
-        |           u -> length(u))), 0) AS c4,
-        |$dupMasses
-        |  FROM gm),
-        |f AS (
-        |  SELECT lang,
-        |         n_tokens < 50 AS too_short,
-        |         n_tokens > 100000 AS too_long,
-        |         NOT (min_mtl * n_tokens <= sum_tok_len
-        |              AND sum_tok_len <= 10 * n_tokens) AS bad_tok_len,
-        |         10 * n_symbols > n_chars AS symbol_heavy,
-        |         stop_hits < 2 AS low_stopword,
-        |         n_bigrams > 0 AND 5 * dup_bigrams >= n_bigrams AS repetitive,
-        |         10 * dup_lines > 3 * n_lines AS dup_line_heavy,
-        |         10 * dup_paras > 3 * n_paras AS dup_para_heavy,
-        |         5 * dup_line_chars > n_chars AS dup_line_chars_heavy,
-        |         5 * dup_para_chars > n_chars AS dup_para_chars_heavy,
-        |         5 * c2 > n_chars AS top_2gram_heavy,
-        |         50 * c3 > 9 * n_chars AS top_3gram_heavy,
-        |         25 * c4 > 4 * n_chars AS top_4gram_heavy,
-        |$dupFlags
-        |  FROM m)
-        |SELECT lang, count(*) AS n_docs,
-        |       count(CASE WHEN too_short THEN 1 END) AS n_too_short,
-        |       count(CASE WHEN too_long THEN 1 END) AS n_too_long,
-        |       count(CASE WHEN bad_tok_len THEN 1 END) AS n_bad_tok_len,
-        |       count(CASE WHEN symbol_heavy THEN 1 END) AS n_symbol_heavy,
-        |       count(CASE WHEN low_stopword THEN 1 END) AS n_low_stopword,
-        |       count(CASE WHEN repetitive THEN 1 END) AS n_repetitive,
-        |       count(CASE WHEN dup_line_heavy THEN 1 END) AS n_dup_line_heavy,
-        |       count(CASE WHEN dup_para_heavy THEN 1 END) AS n_dup_para_heavy,
-        |       count(CASE WHEN dup_line_chars_heavy THEN 1 END) AS n_dup_line_chars_heavy,
-        |       count(CASE WHEN dup_para_chars_heavy THEN 1 END) AS n_dup_para_chars_heavy,
-        |       count(CASE WHEN top_2gram_heavy THEN 1 END) AS n_top_2gram_heavy,
-        |       count(CASE WHEN top_3gram_heavy THEN 1 END) AS n_top_3gram_heavy,
-        |       count(CASE WHEN top_4gram_heavy THEN 1 END) AS n_top_4gram_heavy,
-        |$dupCounts,
-        |       count(CASE WHEN NOT too_short AND NOT too_long AND NOT bad_tok_len
-        |                   AND NOT symbol_heavy AND NOT low_stopword
-        |                   AND NOT repetitive AND NOT dup_line_heavy
-        |                   AND NOT dup_para_heavy AND NOT dup_line_chars_heavy
-        |                   AND NOT dup_para_chars_heavy AND NOT top_2gram_heavy
-        |                   AND NOT top_3gram_heavy AND NOT top_4gram_heavy
-        |                   AND $dupNotPass
-        |                   THEN 1 END) AS n_pass
-        |FROM f GROUP BY 1 ORDER BY lang""".stripMargin
+        |gsrc AS (SELECT doc_id, lang, coalesce(text, '') AS t FROM pl),
+        |""".stripMargin + gopherMetricCtes(byLang = true) + ",\n" +
+        "f AS (\n  SELECT lang,\n" +
+        gopherRules.map { case (f, c) => s"         $c AS $f" }.mkString(",\n") +
+        "\n  FROM gm)\nSELECT lang, count(*) AS n_docs,\n" +
+        flags.map(f => s"       count(CASE WHEN $f THEN 1 END) AS n_$f").mkString(",\n") +
+        ",\n       count(CASE WHEN " + flags.map("NOT " + _).mkString(" AND ") +
+        " THEN 1 END) AS n_pass\nFROM f GROUP BY 1 ORDER BY lang"
       })),
 
     Lane("x3_fingerprints", Queries.x3Fingerprints, Oracle(
@@ -3214,85 +3161,14 @@ object Lanes {
       // The streaming scorer's batch replay with the FILE-LOADED
       // weights (recipes/quality_scorer.json: 1800·stop + 1200·alpha
       // − 900·punct + 120·sum_tok_len; hi/lo = 1670/1560) — the same
-      // zero-float-division integer replay as x13, plus the score-sum
-      // column so a single drifted weight breaks the hash.
-      """WITH m AS (
-        |  SELECT lang,
-        |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS ntok,
-        |         length(coalesce(text, '')) AS nchar,
-        |         len(list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-        |             x -> list_contains(['a','the','and','of','is','to','in','that'], x)))
-        |           AS stop_hits,
-        |         length(regexp_replace(coalesce(text, ''), '[^A-Za-z]', '', 'g'))
-        |           AS alpha_chars,
-        |         length(coalesce(text, '')) -
-        |           length(regexp_replace(coalesce(text, ''), '[.,!?;:]', '', 'g'))
-        |           AS punct_chars,
-        |         CAST(coalesce(list_sum(list_transform(
-        |             string_split_regex(trim(coalesce(text, '')), '\s+'),
-        |             x -> length(x))), 0) AS BIGINT) AS sum_tok_len
-        |  FROM documents),
-        |f AS (
-        |  SELECT lang, ntok,
-        |         1800 * stop_hits * nchar + 1200 * alpha_chars * ntok
-        |           - 900 * punct_chars * ntok + 120 * sum_tok_len * nchar
-        |           AS score_num,
-        |         ntok * nchar AS den
-        |  FROM m),
-        |b AS (
-        |  SELECT lang, ntok, score_num,
-        |         CASE WHEN den = 0 THEN 'empty'
-        |              WHEN score_num >= 1670 * den THEN 'high'
-        |              WHEN score_num >= 1560 * den THEN 'medium'
-        |              ELSE 'low' END AS q_band
-        |  FROM f)
-        |SELECT lang, q_band, count(*) AS n_docs,
-        |       CAST(sum(ntok) AS BIGINT) AS tokens,
-        |       CAST(sum(score_num) AS BIGINT) AS score_num_sum
-        |FROM b GROUP BY 1, 2 ORDER BY lang, q_band""".stripMargin)),
+      // integer replay as x13, plus the score-sum column.
+      scoreBandSql((1800, 1200, 900, 120), 1670, 1560, "q_band", scoreSum = true))),
 
     Lane("x13_quality_bands", Queries.x13QualityBands, Oracle(
-      // The linear scorer replayed with zero float division: band
-      // decisions multiply through by the positive denominator
-      // n_tokens·n_chars, so `score >= t` becomes the integer
-      // comparison `score_num >= t·ntok·nchar` (milli-unit weights
-      // 2000·stop + 1000·alpha − 1000·punct + 100·sum_tok_len; bias 0;
-      // hi/lo = 1450/1300).
-      """WITH m AS (
-        |  SELECT lang,
-        |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS ntok,
-        |         length(coalesce(text, '')) AS nchar,
-        |         len(list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-        |             x -> list_contains(['a','the','and','of','is','to','in','that'], x)))
-        |           AS stop_hits,
-        |         length(regexp_replace(coalesce(text, ''), '[^A-Za-z]', '', 'g'))
-        |           AS alpha_chars,
-        |         length(coalesce(text, '')) -
-        |           length(regexp_replace(coalesce(text, ''), '[.,!?;:]', '', 'g'))
-        |           AS punct_chars,
-        |         CAST(coalesce(list_sum(list_transform(
-        |             string_split_regex(trim(coalesce(text, '')), '\s+'),
-        |             x -> length(x))), 0) AS BIGINT) AS sum_tok_len
-        |  FROM documents),
-        |f AS (
-        |  SELECT lang, ntok,
-        |         2000 * stop_hits * nchar + 1000 * alpha_chars * ntok
-        |           - 1000 * punct_chars * ntok + 100 * sum_tok_len * nchar
-        |           AS score_num,
-        |         ntok * nchar AS den
-        |  FROM m),
-        |b AS (
-        |  SELECT lang, ntok,
-        |         CASE WHEN den = 0 THEN 'empty'
-        |              WHEN score_num >= 1450 * den THEN 'high'
-        |              WHEN score_num >= 1300 * den THEN 'medium'
-        |              ELSE 'low' END AS band
-        |  FROM f)
-        |SELECT lang, band, count(*) AS n_docs,
-        |       CAST(sum(ntok) AS BIGINT) AS tokens
-        |FROM b GROUP BY 1, 2 ORDER BY lang, band""".stripMargin)),
+      // The linear scorer replayed with zero float division (milli-unit
+      // weights 2000·stop + 1000·alpha − 1000·punct + 100·sum_tok_len;
+      // bias 0; hi/lo = 1450/1300).
+      scoreBandSql((2000, 1000, 1000, 100), 1450, 1300, "band", scoreSum = false))),
 
     Lane("x30_perceptron", Queries.x30Perceptron, Oracle(
       // Distributed TRAINING replayed bit-for-bit: the batch
@@ -3301,20 +3177,10 @@ object Lanes {
       // (y·(w·x) ≤ 0; w starts at 0, so epoch 1 misclassifies ALL)
       // contributes y·x to ONE summed integer update. All-integer, so
       // the weight trajectory is exact in any engine.
-      """WITH m AS (
-        |  SELECT CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
-        |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS x4,
-        |         len(list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-        |             x -> list_contains(['a','the','and','of','is','to','in','that'], x)))
-        |           AS x1,
-        |         length(regexp_replace(coalesce(text, ''), '[^A-Za-z]', '', 'g'))
-        |           AS x2,
-        |         length(coalesce(text, '')) -
-        |           length(regexp_replace(coalesce(text, ''), '[.,!?;:]', '', 'g'))
-        |           AS x3
-        |  FROM documents),
-        |e1 AS (
+      ("WITH m AS (\n  SELECT CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,\n         " +
+        scorerFeatureCols("ntok" -> "x4", "stop_hits" -> "x1", "alpha_chars" -> "x2",
+          "punct_chars" -> "x3") + "\n  FROM documents),\n" +
+      """e1 AS (
         |  SELECT count(*) AS mis,
         |         COALESCE(CAST(sum(y) AS BIGINT), 0) AS d0,
         |         COALESCE(CAST(sum(y * x1) AS BIGINT), 0) AS d1,
@@ -3361,7 +3227,7 @@ object Lanes {
         |  SELECT 1 AS epoch, * FROM w1
         |  UNION ALL SELECT 2 AS epoch, * FROM w2
         |  UNION ALL SELECT 3 AS epoch, * FROM w3)
-        |ORDER BY epoch""".stripMargin)),
+        |ORDER BY epoch""".stripMargin))),
 
     Lane("x24_bm25_rank", Queries.x24Bm25Rank, Oracle(
       // BM25 replayed: the ONE micro-nat idf rounding (non-negative
@@ -3543,126 +3409,33 @@ object Lanes {
         |            AS BIGINT) AS copy_fp_sum
         |FROM e GROUP BY source ORDER BY source""").stripMargin)),
 
-    Lane("x16_dsir_weights", Queries.x16DsirWeights, Oracle(
-      ("WITH " + dsirWeightCtes + "\n" +
-        """SELECT doc_id, dsir_grams, dsir_logw_micro,
-          |       round(CAST(dsir_logw_micro AS DOUBLE) / 1000000, 3) AS dsir_logw
-          |FROM w ORDER BY doc_id""".stripMargin))),
+    Lane("x16_dsir_weights", Queries.x16DsirWeights, Oracle(dsirWeightsSql)),
 
-    // The persisted-model probe scores IDENTICALLY to the fresh fit
-    // (integer micro-nat weights; save→load parity pinned by DsirSpec),
-    // so the loaded-model query replays the SAME weight derivation.
-    Lane("x16_dsir_against", Queries.x16DsirAgainst, Oracle(
-      ("WITH " + dsirWeightCtes + "\n" +
-        """SELECT doc_id, dsir_grams, dsir_logw_micro,
-          |       round(CAST(dsir_logw_micro AS DOUBLE) / 1000000, 3) AS dsir_logw
-          |FROM w ORDER BY doc_id""".stripMargin))),
+    Lane("x16_dsir_against", Queries.x16DsirAgainst, Oracle(dsirWeightsSql)),
 
     Lane("x16_dsir_select", Queries.x16DsirSelect, Oracle(
-      // The Gumbel draw replayed: hash64 → (h + 0.5)/2⁶³ uniform →
-      // round(1e6·(−ln(−ln u))) integer perturbation → top-100 by the
-      // perturbed key (ties by doc_id) → re-sorted on doc_id.
-      ("WITH " + dsirWeightCtes + ",\n" +
-        s"""sel AS (
-           |  SELECT doc_id, dsir_logw_micro,
-           |         dsir_logw_micro + CAST(round(-1000000 * ln(-ln(
-           |           (CAST(${hash64Sql("doc_id", 42L ^ graft.ext.Sampling.GumbelSalt)}
-           |              AS DOUBLE) + 0.5) / 9223372036854775808.0)))
-           |           AS BIGINT) AS dsir_key_micro
-           |  FROM w),
-           |top AS (
-           |  SELECT * FROM sel ORDER BY dsir_key_micro DESC, doc_id LIMIT 100)
-           |SELECT doc_id, dsir_logw_micro, dsir_key_micro
-           |FROM top ORDER BY doc_id""".stripMargin))),
+      // The Gumbel draw replayed (gumbelTopCtes), re-sorted on doc_id.
+      "WITH " + dsirWeightCtes + ",\n" + gumbelTopCtes + "\n" +
+        """SELECT doc_id, dsir_logw_micro, dsir_key_micro
+          |FROM top ORDER BY doc_id""".stripMargin)),
 
-    Lane("x15_lm_ppl", Queries.x15LmPpl, Oracle(lmPplSql)),
+    Lane("x15_lm_ppl", Queries.x15LmPpl, Oracle(lmPplSqlN(2))),
 
     // The persisted-model probe scores IDENTICALLY to the fresh train
     // (integer micro-nats; save→load parity pinned by NgramLmSpec), so
     // the loaded-model query replays the SAME bigram derivation.
-    Lane("x15_lm_against", Queries.x15LmPplAgainst, Oracle(lmPplSql)),
+    Lane("x15_lm_against", Queries.x15LmPplAgainst, Oracle(lmPplSqlN(2))),
 
     // The 5-gram KenLM shape (VERDICT r10 next #5): the generated
     // order-n replay with all four backoff levels.
     Lane("x15_lm_ppl5", Queries.x15LmPpl5, Oracle(lmPplSqlN(5))),
 
     Lane("x15_lm_ppl3", Queries.x15LmPpl3, Oracle(
-      // The trigram stupid-backoff replay: same counts-from-docs<300 /
-      // probe-from-docs>=300 shape as x15_lm_ppl one order up, with the
-      // TWO-level backoff CASE — trigram hit over its (w1,w2) context
-      // count, else BackoffMicro + bigram(w2,w3) over c(w2), else
-      // 2·BackoffMicro + the Laplace unigram of w3. Each level adds the
-      // pre-rounded integer constant; exactly one ln is rounded per arm.
-      s"""WITH norm AS (
-        |  SELECT doc_id,
-        |         lower(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g'))) AS t
-        |  FROM documents),
-        |rtoks AS (
-        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-        |         generate_subscripts(string_split(t, ' '), 1) AS ord
-        |  FROM norm WHERE doc_id < 300 AND t <> ''),
-        |uni AS (SELECT tok AS w, count(*) AS c1 FROM rtoks GROUP BY 1),
-        |big AS (
-        |  SELECT w1, w2, count(*) AS c2 FROM (
-        |    SELECT tok AS w1,
-        |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2
-        |    FROM rtoks) WHERE w2 IS NOT NULL GROUP BY 1, 2),
-        |tri AS (
-        |  SELECT w1, w2, w3, count(*) AS c3 FROM (
-        |    SELECT tok AS w1,
-        |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2,
-        |           lead(tok, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS w3
-        |    FROM rtoks) WHERE w3 IS NOT NULL GROUP BY 1, 2, 3),
-        |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS total_toks,
-        |               count(*) AS vocab FROM uni),
-        |ptoks AS (
-        |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-        |         generate_subscripts(string_split(t, ' '), 1) AS ord
-        |  FROM norm WHERE doc_id >= 300 AND t <> ''),
-        |probe AS (
-        |  SELECT doc_id, w1, w2, w3, count(*) AS m FROM (
-        |    SELECT doc_id, tok AS w1,
-        |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2,
-        |           lead(tok, 2) OVER (PARTITION BY doc_id ORDER BY ord) AS w3
-        |    FROM ptoks) WHERE w3 IS NOT NULL GROUP BY 1, 2, 3, 4),
-        |g AS (
-        |  SELECT p.doc_id, p.m, t3.c3,
-        |         CASE WHEN t3.c3 IS NOT NULL THEN
-        |           CAST(round(1000000 * ln(CAST(t3.c3 AS DOUBLE) / bc.c2)) AS BIGINT)
-        |         WHEN bb.c2 IS NOT NULL THEN
-        |           ${graft.ext.NgramLm.BackoffMicro} + CAST(round(1000000 * ln(
-        |             CAST(bb.c2 AS DOUBLE) / u2.c1)) AS BIGINT)
-        |         ELSE ${2L * graft.ext.NgramLm.BackoffMicro} + CAST(round(1000000 * ln(
-        |           CAST(coalesce(u3.c1, 0) + 1 AS DOUBLE)
-        |             / (t.total_toks + t.vocab))) AS BIGINT)
-        |         END AS micro
-        |  FROM probe p
-        |  LEFT JOIN tri t3 ON p.w1 = t3.w1 AND p.w2 = t3.w2 AND p.w3 = t3.w3
-        |  LEFT JOIN big bc ON p.w1 = bc.w1 AND p.w2 = bc.w2
-        |  LEFT JOIN big bb ON p.w2 = bb.w1 AND p.w3 = bb.w2
-        |  LEFT JOIN uni u2 ON p.w2 = u2.w
-        |  LEFT JOIN uni u3 ON p.w3 = u3.w
-        |  CROSS JOIN tot t),
-        |per AS (
-        |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS lm_grams,
-        |         CAST(sum(CASE WHEN c3 IS NOT NULL THEN m ELSE 0 END) AS BIGINT)
-        |           AS lm_hits,
-        |         CAST(sum(m * micro) AS BIGINT) AS lm_logp_micro
-        |  FROM g GROUP BY 1)
-        |SELECT d.doc_id,
-        |       coalesce(lm_grams, 0) AS lm_grams,
-        |       coalesce(lm_hits, 0) AS lm_hits,
-        |       coalesce(lm_logp_micro, 0) AS lm_logp_micro,
-        |       CASE WHEN coalesce(lm_grams, 0) > 0
-        |            THEN round(exp(-CAST(lm_logp_micro AS DOUBLE) / 1000000
-        |                           / lm_grams), 3) END AS lm_ppl,
-        |       CASE WHEN coalesce(lm_grams, 0) = 0 THEN 'empty'
-        |            WHEN lm_logp_micro >= ${graft.ext.NgramLm.HeadMicro} * lm_grams THEN 'head'
-        |            WHEN lm_logp_micro >= ${graft.ext.NgramLm.TailMicro} * lm_grams THEN 'middle'
-        |            ELSE 'tail' END AS lm_band
-        |FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
-        |LEFT JOIN per USING (doc_id)
-        |ORDER BY doc_id""".stripMargin)),
+      // The trigram stupid-backoff replay: the x15_lm_ppl shape one
+      // order up, with the TWO-level backoff CASE — trigram hit over its
+      // (w1,w2) context count, else BackoffMicro + bigram(w2,w3) over
+      // c(w2), else 2·BackoffMicro + the Laplace unigram of w3.
+      lmPplSqlN(3))),
 
     Lane("x4_zscore_flags", Queries.x4ZscoreFlags, Oracle(
       """WITH stats AS (
@@ -3840,44 +3613,10 @@ object Lanes {
         |GROUP BY 1 ORDER BY s_suppkey""".stripMargin)),
 
     Lane("x12_token_mix", Queries.x12TokenMix, Oracle(
-      // The recipe replayed: per-source token supply, literal targets
-      // (budget 3000 × weights .5/.3/.2 on src0/1/2, else 0), keep
-      // threshold = floor(least(1, target/supply)·10⁴ + 0.5) — the same
-      // explicit half-up rounding as Mixing.rateFrame — and survivor
-      // selection via the shared Sampling.bucket replay (bucketSql).
-      // Every sum/coalesce cast to BIGINT to match Spark's long
-      // aggregates (DuckDB sum(int) widens to HUGEINT).
-      raw"""WITH tc AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-        |  FROM documents),
-        |tot AS (
-        |  SELECT source, count(*) AS n_docs,
-        |         CAST(sum(nt) AS BIGINT) AS tokens_in
-        |  FROM tc GROUP BY 1),
-        |rates AS (
-        |  SELECT source, n_docs, tokens_in,
-        |         CAST(CASE source WHEN 'src0' THEN 1500 WHEN 'src1' THEN 900
-        |                          WHEN 'src2' THEN 600 ELSE 0 END AS BIGINT)
-        |           AS target_tokens,
-        |         CASE WHEN tokens_in = 0 THEN 0
-        |              ELSE CAST(floor(least(1.0,
-        |                CAST(CASE source WHEN 'src0' THEN 1500 WHEN 'src1' THEN 900
-        |                                 WHEN 'src2' THEN 600 ELSE 0 END AS BIGINT)
-        |                * 1.0 / tokens_in) * 10000 + 0.5) AS BIGINT) END AS thr
-        |  FROM tot),
-        |kept AS (
-        |  SELECT t.source, count(*) AS docs_kept,
-        |         CAST(sum(t.nt) AS BIGINT) AS tokens_kept
-        |  FROM tc t JOIN rates r USING (source)
-        |  WHERE ${bucketSql("t.doc_id", 42L ^ graft.ext.Sampling.MixSalt)} < r.thr
-        |  GROUP BY 1)
-        |SELECT r.source, r.n_docs, r.tokens_in, r.target_tokens,
-        |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
-        |       CAST(coalesce(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
-        |FROM rates r LEFT JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin)),
+      // The recipe replayed: literal targets (budget 3000 × weights
+      // .5/.3/.2 on src0/1/2, else 0) through the shared mix replay.
+      tokenMixSql("CAST(CASE source WHEN 'src0' THEN 1500 WHEN 'src1' THEN 900\n" +
+        "                          WHEN 'src2' THEN 600 ELSE 0 END AS BIGINT)"))),
 
     Lane("x12_weighted_mix", Queries.x12WeightedMix, Oracle(
       // Weight-aware mixing replayed end-to-end: the soft-dedup census
@@ -3935,89 +3674,18 @@ object Lanes {
       // wppm = floor(10⁶ / family size) and the tokens_weighted_* sums
       // show the effective (deduplicated) mass per stage. No fuzzy
       // stage; no url/history stage (both no-ops → copied columns).
-      ("WITH all_docs AS (\n" +
-        """  SELECT doc_id, text, lang FROM documents
+      Funnel(src = "all_docs", prefix =
+        """all_docs AS (
+          |  SELECT doc_id, text, lang FROM documents
           |  UNION ALL
           |  SELECT doc_id + 10000, text, lang FROM documents WHERE doc_id < 10
           |  UNION ALL
           |  SELECT doc_id + 20000, text, lang FROM documents WHERE doc_id < 5),
-          |""".stripMargin +
-        gram4CtesFrom("all_docs") + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8
-          |),
-          |ann AS (
-          |  SELECT doc_id, lang,
-          |         CAST(floor(1000000.0 / count(*) OVER (
-          |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))))
-          |           AS BIGINT) AS wppm,
-          |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-          |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-          |              ELSE len(string_split_regex(trim(rtext), '\s+')) END AS n_tok,
-          |         ${bucketSql("doc_id")} AS b,
-          |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-          |  FROM (SELECT doc_id, lang, text,
-          |               regexp_replace(regexp_replace(regexp_replace(text,
-          |                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |                 '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |        FROM all_docs)
-          |), f AS (
-          |  SELECT count(*) AS n_raw,
-          |         count(CASE WHEN NOT is_contaminated THEN 1 END) AS n_after_decontam,
-          |         count(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 THEN 1 END)
-          |           AS n_after_quality,
-          |         count(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND b < thr THEN 1 END)
-          |           AS n_after_sample,
-          |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND b < thr
-          |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens,
-          |         COALESCE(CAST(sum(n_tok * wppm) AS BIGINT), 0)
-          |           AS tokens_weighted_raw,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                    THEN n_tok * wppm END) AS BIGINT), 0)
-          |           AS tokens_weighted_after_decontam,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90
-          |                    THEN n_tok * wppm END) AS BIGINT), 0)
-          |           AS tokens_weighted_after_quality,
-          |         COALESCE(CAST(sum(CASE WHEN NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND b < thr
-          |                    THEN n_tok * wppm END) AS BIGINT), 0)
-          |           AS tokens_weighted_sampled
-          |  FROM ann)
-          |SELECT n_raw, n_raw AS n_after_url, n_raw AS n_after_dedup,
-          |       n_raw AS n_after_history, n_raw AS n_after_fuzzy,
-          |       n_after_decontam, n_after_quality, n_after_sample,
-          |       tokens_raw, tokens_raw AS tokens_after_url,
-          |       tokens_raw AS tokens_after_dedup,
-          |       tokens_raw AS tokens_after_history,
-          |       tokens_raw AS tokens_after_fuzzy,
-          |       tokens_after_decontam, tokens_after_quality, n_tokens,
-          |       tokens_weighted_raw,
-          |       tokens_weighted_raw AS tokens_weighted_after_url,
-          |       tokens_weighted_raw AS tokens_weighted_after_dedup,
-          |       tokens_weighted_raw AS tokens_weighted_after_history,
-          |       tokens_weighted_raw AS tokens_weighted_after_fuzzy,
-          |       tokens_weighted_after_decontam, tokens_weighted_after_quality,
-          |       tokens_weighted_sampled,
-          |       CASE WHEN n_tokens = 0 THEN 0
-          |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin))),
+          |""".stripMargin,
+        keeper = "TRUE",
+        annCols = ",\n         CAST(floor(1000000.0 / count(*) OVER (PARTITION BY r.kt))" +
+          " AS BIGINT) AS wppm")
+        .censusSql(weighted = true))),
 
     Lane("x12_temperature_mix", Queries.x12TemperatureMix, Oracle(
       // Temperature-0.5 targets replayed exactly: sqrt is IEEE-754
@@ -4025,40 +3693,14 @@ object Lanes {
       // why the registered recipe uses α = 0.5), weights quantize to
       // integer milli-units before the integer-sum normalization, and
       // every remaining op is integer or exact-double arithmetic.
-      raw"""WITH tc AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN text IS NULL OR len(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
-        |  FROM documents),
-        |tot AS (
-        |  SELECT source, count(*) AS n_docs,
-        |         CAST(sum(nt) AS BIGINT) AS tokens_in
-        |  FROM tc GROUP BY 1),
-        |wq AS (
-        |  SELECT source, n_docs, tokens_in,
-        |         CAST(floor(sqrt(tokens_in) * 1000 + 0.5) AS BIGINT) AS w
-        |  FROM tot),
-        |rates AS (
-        |  SELECT source, n_docs, tokens_in,
-        |         CAST(floor((10000 * w) * 1.0 / (SELECT sum(w) FROM wq) + 0.5)
-        |              AS BIGINT) AS target_tokens,
-        |         CASE WHEN tokens_in = 0 THEN 0
-        |              ELSE CAST(floor(least(1.0,
-        |                CAST(floor((10000 * w) * 1.0 / (SELECT sum(w) FROM wq) + 0.5)
-        |                     AS BIGINT) * 1.0 / tokens_in) * 10000 + 0.5)
-        |              AS BIGINT) END AS thr
-        |  FROM wq),
-        |kept AS (
-        |  SELECT t.source, count(*) AS docs_kept,
-        |         CAST(sum(t.nt) AS BIGINT) AS tokens_kept
-        |  FROM tc t JOIN rates r USING (source)
-        |  WHERE ${bucketSql("t.doc_id", 42L ^ graft.ext.Sampling.MixSalt)} < r.thr
-        |  GROUP BY 1)
-        |SELECT r.source, r.n_docs, r.tokens_in, r.target_tokens,
-        |       CAST(coalesce(k.docs_kept, 0) AS BIGINT) AS docs_kept,
-        |       CAST(coalesce(k.tokens_kept, 0) AS BIGINT) AS tokens_kept
-        |FROM rates r LEFT JOIN kept k USING (source)
-        |ORDER BY source""".stripMargin)),
+      tokenMixSql(
+        "CAST(floor((10000 * w) * 1.0 / (SELECT sum(w) FROM wq) + 0.5) AS BIGINT)",
+        weights = """wq AS (
+          |  SELECT source, n_docs, tokens_in,
+          |         CAST(floor(sqrt(tokens_in) * 1000 + 0.5) AS BIGINT) AS w
+          |  FROM tot),
+          |""".stripMargin,
+        ratesFrom = "wq"))),
 
     Lane("x12_training_order", Queries.x12TrainingOrder, Oracle(
       // The keyed-hash global order replayed (the shared FULL-WIDTH
@@ -4172,7 +3814,7 @@ object Lanes {
     // the same containment CTE (a doc with >= 0.8 of any benchmark's
     // 4-grams drops; null/short docs have no grams and survive).
     Lane("s10_stream_decontam", Queries.s10StreamDecontam, Oracle(
-      ("WITH " + gram4Ctes + ",\n" + benchGramsRawCtes + "\n" +
+      ("WITH " + gram4Ctes + ",\n" + decontamCtes(rawBench = true) + "\n" +
         """SELECT doc_id FROM documents
           |WHERE doc_id NOT IN (SELECT doc_id FROM contam)
           |ORDER BY doc_id""".stripMargin))),
@@ -4209,72 +3851,7 @@ object Lanes {
       // source. Stage flags are corpus-global (the dedup window
       // partitions on the normalized text across ALL sources); only
       // the counting groups.
-      ("WITH " + gram4Ctes + ",\n" +
-        """bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8
-          |),""".stripMargin + "\n" +
-      raw"""ann AS (
-        |  SELECT doc_id, lang, source,
-        |         doc_id = min(doc_id) OVER (
-        |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |           AS is_canonical,
-        |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-        |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(rtext), '\s+')) END AS n_tok,
-        |         ${bucketSql("doc_id")} AS b,
-        |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-        |  FROM (SELECT doc_id, lang, source, text,
-        |               regexp_replace(regexp_replace(regexp_replace(text,
-        |                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |                 '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-        |                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-        |        FROM documents)
-        |), f AS (
-        |  SELECT source,
-        |         count(*) AS n_raw,
-        |         count(*) AS n_after_url,
-        |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-        |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_history,
-        |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_fuzzy,
-        |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-        |           AS n_after_decontam,
-        |         count(CASE WHEN is_canonical AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 THEN 1 END)
-        |           AS n_after_quality,
-        |         count(CASE WHEN is_canonical AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 AND b < thr THEN 1 END)
-        |           AS n_after_sample,
-        |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-        |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_after_url,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_history,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_fuzzy,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90
-        |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-        |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-        |                         AND n_tok BETWEEN 25 AND 90 AND b < thr
-        |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-        |  FROM ann GROUP BY source)
-        |SELECT source, n_raw, n_after_url, n_after_dedup, n_after_history,
-        |       n_after_fuzzy, n_after_decontam, n_after_quality,
-        |       n_after_sample, tokens_raw, tokens_after_url,
-        |       tokens_after_dedup, tokens_after_history, tokens_after_fuzzy,
-        |       tokens_after_decontam, tokens_after_quality, n_tokens,
-        |       CASE WHEN n_tokens = 0 THEN 0
-        |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-        |FROM f ORDER BY source""".stripMargin))),
+      Funnel().censusSql(by = "source"))),
 
     Lane("x10_curation_funnel", Queries.x10CurationFunnel, Oracle(
       // The annotate-don't-filter funnel replayed: dedup flag = min id
@@ -4284,10 +3861,7 @@ object Lanes {
       // whitespace tokens of the PII-REDACTED text in [25, 90]; sampling
       // = the x6 hash bucket with en→0.4; sequences = ceil(survivor
       // tokens / 512).
-      curationFunnelSql("", "documents",
-        raw"""doc_id = min(doc_id) OVER (
-             |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-             |           AS is_canonical,""".stripMargin))),
+      Funnel(fuzzy = true).censusSql())),
 
     Lane("x10_keepbest_funnel", Queries.x10KeepbestFunnel, Oracle(
       // The same funnel replay over the padded keeper plant
@@ -4296,257 +3870,52 @@ object Lanes {
       // stays min-label — a planted family's dedup canonical (+10000)
       // is never its component min, so those families survive dedup
       // but not fuzzy, the census signature only this policy produces.
-      curationFunnelSql(
+      Funnel(src = "corpus", prefix =
         """corpus AS (
           |  SELECT doc_id, lang, text FROM documents
           |  UNION ALL
           |  SELECT doc_id + 10000, lang, '  ' || text || '  '
           |  FROM documents WHERE doc_id < 10
           |),
-          |""".stripMargin, "corpus",
-        raw"""doc_id = first_value(doc_id) OVER (
-             |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
-             |           ORDER BY coalesce(length(text), -1) DESC, doc_id)
-             |           AS is_canonical,""".stripMargin))),
+          |""".stripMargin,
+        fuzzy = true,
+        keeper = "r.doc_id = first_value(r.doc_id) OVER (PARTITION BY r.kt" +
+          " ORDER BY coalesce(length(r.text), -1) DESC, r.doc_id)")
+        .censusSql())),
 
     Lane("x10_dsir_funnel", Queries.x10DsirFunnel, Oracle(
       // The funnel with the X16 Gumbel top-100 replacing the hash
       // sampler: DSIR weights + the deterministic Gumbel draw replayed
-      // from dsirWeightCtes (x16_dsir_select's exact CTEs), the
-      // contamination grams inlined under c-prefixed names (dsir's CTE
-      // set already owns `norm`), dedup key from the NON-coalesced
-      // norm (nulls group together like the engine's <=> join, apart
-      // from empty strings), quality = token band of the redacted
-      // text, sampling = membership in the top-100.
-      ("WITH " + dsirWeightCtes + ",\n" +
-        s"""sel AS (
-           |  SELECT doc_id,
-           |         dsir_logw_micro + CAST(round(-1000000 * ln(-ln(
-           |           (CAST(${hash64Sql("doc_id", 42L ^ graft.ext.Sampling.GumbelSalt)}
-           |              AS DOUBLE) + 0.5) / 9223372036854775808.0)))
-           |           AS BIGINT) AS dsir_key_micro
-           |  FROM w),
-           |top AS (
-           |  SELECT doc_id FROM sel ORDER BY dsir_key_micro DESC, doc_id LIMIT 100),
-           |""".stripMargin +
-        raw"""ctoks AS (
-          |  SELECT doc_id, unnest(string_split_regex(t, '\s+')) AS tok,
-          |         generate_subscripts(string_split_regex(t, '\s+'), 1) AS ord
-          |  FROM norm),
-          |cgrams AS (
-          |  SELECT DISTINCT doc_id,
-          |         tok || ' ' || lead(tok, 1) OVER cw || ' ' || lead(tok, 2) OVER cw
-          |             || ' ' || lead(tok, 3) OVER cw AS gram
-          |  FROM ctoks WINDOW cw AS (PARTITION BY doc_id ORDER BY ord)
-          |  QUALIFY lead(tok, 3) OVER cw IS NOT NULL),
-          |bench AS (SELECT doc_id AS bench_id, gram FROM cgrams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM cgrams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |knorm AS (
-          |  SELECT doc_id, lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt
-          |  FROM documents),
-          |rdoc AS (
-          |  SELECT doc_id,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |ann AS (
-          |  SELECT doc_id,
-          |         doc_id = min(doc_id) OVER (PARTITION BY k.kt) AS is_canonical,
-          |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-          |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-          |              ELSE len(string_split_regex(trim(r.rtext), '\s+')) END AS n_tok,
-          |         doc_id IN (SELECT doc_id FROM top) AS in_sel
-          |  FROM rdoc r JOIN knorm k USING (doc_id)
-          |), f AS (
-          |  SELECT count(*) AS n_raw,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_history,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_fuzzy,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-          |           AS n_after_decontam,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 THEN 1 END)
-          |           AS n_after_quality,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND in_sel THEN 1 END)
-          |           AS n_after_sample,
-          |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_history,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_fuzzy,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND in_sel
-          |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-          |  FROM ann)
-          |SELECT n_raw, n_raw AS n_after_url,
-          |       n_after_dedup, n_after_history, n_after_fuzzy,
-          |       n_after_decontam, n_after_quality, n_after_sample,
-          |       tokens_raw, tokens_raw AS tokens_after_url,
-          |       tokens_after_dedup, tokens_after_history,
-          |       tokens_after_fuzzy, tokens_after_decontam,
-          |       tokens_after_quality, n_tokens,
-          |       CASE WHEN n_tokens = 0 THEN 0
-          |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin))),
+      // from dsirWeightCtes (x16_dsir_select's exact CTEs); sampling =
+      // membership in the top-100.
+      Funnel(prefix = dsirWeightCtes + ",\n" + gumbelTopCtes + ",\n",
+        annCols = ",\n         r.doc_id IN (SELECT doc_id FROM top) AS in_sel",
+        sample = "in_sel").censusSql())),
 
     Lane("x10_ppl_funnel", Queries.x10PplFunnel, Oracle(
       // The ppl-gated funnel (CCNet recipe) replayed end-to-end: the x10
       // stages (no fuzzy pairs, no URL/history — those legs are no-ops
       // here) plus the full x15 LM arithmetic — training counts from RAW
-      // docs < 300 (the shared `norm` CTE), probe grams from the
+      // docs < 300 (the funnel's `norm` CTE), probe grams from the
       // REDACTED text of EVERY document (what the engine's quality gate
       // scores), quality = token band AND lm_band = 'head'.
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |rtoks AS (
-          |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-          |         generate_subscripts(string_split(t, ' '), 1) AS ord
-          |  FROM norm WHERE doc_id < 300 AND t <> ''),
-          |uni AS (SELECT tok AS w, count(*) AS c1 FROM rtoks GROUP BY 1),
-          |big AS (
-          |  SELECT w1, w2, count(*) AS c2 FROM (
-          |    SELECT tok AS w1,
-          |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2
-          |    FROM rtoks) WHERE w2 IS NOT NULL GROUP BY 1, 2),
-          |tot AS (SELECT CAST(sum(c1) AS BIGINT) AS total_toks,
-          |               count(*) AS vocab FROM uni),
-          |rnorm AS (
+      Funnel(
+        gates = raw"""rnorm AS (
           |  SELECT doc_id,
           |         lower(trim(regexp_replace(rtext, '\s+', ' ', 'g'))) AS t
           |  FROM rdoc),
-          |ptoks AS (
-          |  SELECT doc_id, unnest(string_split(t, ' ')) AS tok,
-          |         generate_subscripts(string_split(t, ' '), 1) AS ord
-          |  FROM rnorm WHERE t <> ''),
-          |probe AS (
-          |  SELECT doc_id, w1, w2, count(*) AS m FROM (
-          |    SELECT doc_id, tok AS w1,
-          |           lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY ord) AS w2
-          |    FROM ptoks) WHERE w2 IS NOT NULL GROUP BY 1, 2, 3),
-          |g AS (
-          |  SELECT p.doc_id, p.m, b.c2,
-          |         CASE WHEN b.c2 IS NOT NULL THEN
-          |           CAST(round(1000000 * ln(CAST(b.c2 AS DOUBLE) / u1.c1)) AS BIGINT)
-          |         ELSE ${graft.ext.NgramLm.BackoffMicro} + CAST(round(1000000 * ln(
-          |           CAST(coalesce(u2.c1, 0) + 1 AS DOUBLE)
-          |             / (t.total_toks + t.vocab))) AS BIGINT)
-          |         END AS micro
-          |  FROM probe p
-          |  LEFT JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-          |  LEFT JOIN uni u1 ON p.w1 = u1.w
-          |  LEFT JOIN uni u2 ON p.w2 = u2.w
-          |  CROSS JOIN tot t),
-          |per AS (
-          |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS lm_grams,
-          |         CAST(sum(m * micro) AS BIGINT) AS lm_logp_micro
-          |  FROM g GROUP BY 1),
-          |ann AS (
-          |  SELECT doc_id, r.lang,
-          |         doc_id = min(doc_id) OVER (PARTITION BY n.t) AS is_canonical,
-          |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-          |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-          |              ELSE len(string_split_regex(trim(r.rtext), '\s+')) END AS n_tok,
-          |         coalesce(p.lm_grams, 0) > 0
-          |           AND p.lm_logp_micro >= ${graft.ext.NgramLm.HeadMicro} * p.lm_grams
-          |           AS is_head,
-          |         ${bucketSql("doc_id")} AS b,
-          |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-          |  FROM rdoc r JOIN norm n USING (doc_id) LEFT JOIN per p USING (doc_id)
-          |), f AS (
-          |  SELECT count(*) AS n_raw,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_history,
-          |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_fuzzy,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-          |           AS n_after_decontam,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND is_head THEN 1 END)
-          |           AS n_after_quality,
-          |         count(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND is_head
-          |                         AND b < thr THEN 1 END)
-          |           AS n_after_sample,
-          |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_history,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_fuzzy,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND is_head
-          |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-          |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-          |                         AND n_tok BETWEEN 25 AND 90 AND is_head AND b < thr
-          |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-          |  FROM ann)
-          |SELECT n_raw, n_raw AS n_after_url,
-          |       n_after_dedup, n_after_history, n_after_fuzzy,
-          |       n_after_decontam, n_after_quality, n_after_sample,
-          |       tokens_raw, tokens_raw AS tokens_after_url,
-          |       tokens_after_dedup, tokens_after_history,
-          |       tokens_after_fuzzy, tokens_after_decontam,
-          |       tokens_after_quality, n_tokens,
-          |       CASE WHEN n_tokens = 0 THEN 0
-          |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-          |FROM f""".stripMargin))),
+          |""".stripMargin + lmCtes(2, "rnorm WHERE t <> ''") + ",\n",
+        joins = " LEFT JOIN per p USING (doc_id)",
+        annCols = ",\n         coalesce(p.lm_grams, 0) > 0\n" +
+          s"           AND p.lm_logp_micro >= ${graft.ext.NgramLm.HeadMicro} * p.lm_grams" +
+          " AS is_head",
+        quality = "n_tok BETWEEN 25 AND 90 AND is_head").censusSql())),
 
     Lane("x9_pack_sequences", Queries.x9PackSequences, Oracle(
       // The two-level prefix sum degenerates to ONE ordered window
       // single-node: start = exclusive cumsum of token counts in doc_id
       // order; spans = the 512-token chunks [start, start+n_tok) crosses.
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |                   ELSE len(string_split_regex(trim(text), '\s+')) END
-        |              AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tok,
-        |         COALESCE(CAST(sum(n_tok) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS start
-        |  FROM t WHERE n_tok > 0),
-        |spans AS (
-        |  SELECT doc_id, n_tok, start,
-        |         unnest(range(start // 512, (start + n_tok - 1) // 512 + 1)) AS seq_id
-        |  FROM c)
-        |SELECT doc_id, seq_id,
-        |       greatest(seq_id * 512, start) - start AS begin_tok,
-        |       least((seq_id + 1) * 512, start + n_tok) - start AS end_tok,
-        |       n_tok
-        |FROM spans ORDER BY doc_id, seq_id""".stripMargin)),
+      packSpansSql("n_tok"))),
 
     Lane("x9_materialize", Queries.x9Materialize, Oracle(
       // The pack layout replayed (same CTEs as x9_pack_sequences) and
@@ -4554,59 +3923,24 @@ object Lanes {
       // token range, sequences reassemble by string_agg in doc_id
       // order (chunks internally space-joined, chunks joined by one
       // space — the exact flatten-join string), md5 per sequence.
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         string_split_regex(trim(text), '\s+') AS toks,
-        |         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |                   ELSE len(string_split_regex(trim(text), '\s+')) END
-        |              AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks, n_tok,
-        |         COALESCE(CAST(sum(n_tok) OVER (ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS start
-        |  FROM t WHERE n_tok > 0),
-        |spans AS (
-        |  SELECT doc_id, toks, n_tok, start,
-        |         unnest(range(start // 512, (start + n_tok - 1) // 512 + 1)) AS seq_id
-        |  FROM c),
-        |sl AS (
-        |  SELECT seq_id, doc_id, e - b AS ntk,
-        |         array_to_string(list_slice(toks, b + 1, e), ' ') AS chunk
-        |  FROM (SELECT seq_id, doc_id, toks,
-        |               greatest(seq_id * 512, start) - start AS b,
-        |               least((seq_id + 1) * 512, start + n_tok) - start AS e
-        |        FROM spans))
-        |SELECT seq_id, CAST(sum(ntk) AS BIGINT) AS seq_tok,
-        |       md5(string_agg(chunk, ' ' ORDER BY doc_id)) AS seq_md5
-        |FROM sl GROUP BY seq_id ORDER BY seq_id""".stripMargin)),
+      "WITH " + packCtes("n_tok", withToks = true) + ",\n" +
+        """sl AS (
+          |  SELECT seq_id, doc_id, e - b AS ntk,
+          |         array_to_string(list_slice(toks, b + 1, e), ' ') AS chunk
+          |  FROM (SELECT seq_id, doc_id, toks,
+          |               greatest(seq_id * 512, start) - start AS b,
+          |               least((seq_id + 1) * 512, start + n_tok) - start AS e
+          |        FROM spans))
+          |SELECT seq_id, CAST(sum(ntk) AS BIGINT) AS seq_tok,
+          |       md5(string_agg(chunk, ' ' ORDER BY doc_id)) AS seq_md5
+          |FROM sl GROUP BY seq_id ORDER BY seq_id""".stripMargin)),
 
     Lane("x9_pack_padded", Queries.x9PackPadded, Oracle(
       // Pad-to-boundary variant: the advance summed by the window is the
       // token count ceil-rounded to whole 512-token sequences, so every
       // document starts on a boundary; spans still cover actual tokens
       // only (the rounded tail is implicit padding).
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         CAST(CASE WHEN len(trim(text)) = 0 THEN 0
-        |                   ELSE len(string_split_regex(trim(text), '\s+')) END
-        |              AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tok,
-        |         COALESCE(CAST(sum(((n_tok - 1) // 512 + 1) * 512) OVER (
-        |           ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS start
-        |  FROM t WHERE n_tok > 0),
-        |spans AS (
-        |  SELECT doc_id, n_tok, start,
-        |         unnest(range(start // 512, (start + n_tok - 1) // 512 + 1)) AS seq_id
-        |  FROM c)
-        |SELECT doc_id, seq_id,
-        |       greatest(seq_id * 512, start) - start AS begin_tok,
-        |       least((seq_id + 1) * 512, start + n_tok) - start AS end_tok,
-        |       n_tok
-        |FROM spans ORDER BY doc_id, seq_id""".stripMargin)),
+      packSpansSql("((n_tok - 1) // 512 + 1) * 512"))),
 
     Lane("x7_pii_scan", Queries.x7PiiScan, Oracle(
       // Synthetic PII planted on every 17th doc, replicated verbatim;
@@ -4620,9 +3954,8 @@ object Lanes {
         |  FROM documents),
         |counted AS (
         |  SELECT source,
-        |         len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-        |         len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS n_phone,
-        |         len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ipv4
+        |         """.stripMargin + piiCountCols("text", Seq("n_email", "n_phone", "n_ipv4")) +
+      """
         |  FROM planted)
         |SELECT source,
         |       count(*) AS n_docs,
@@ -4640,13 +3973,9 @@ object Lanes {
       // cards become <CARD>, invalid candidates survive byte-for-byte.
       // %17 wins over %19 like the engine's when-chain. NULL text
       // null-propagates through the plant in both engines.
-      """WITH planted AS (
+      s"""WITH planted AS (
         |  SELECT source, doc_id,
-        |         CASE WHEN doc_id % 17 = 0 THEN
-        |                text || ' pay 4111111111111111 or 4539 5787 6362 1486 now'
-        |              WHEN doc_id % 19 = 0 THEN
-        |                text || ' order 4111111111111112 ref 1234567890123 end'
-        |              ELSE text END AS text
+        |         $cardPlantSql AS text
         |  FROM documents),
         |scanned AS (
         |  SELECT source,
@@ -4656,8 +3985,7 @@ object Lanes {
         |         CASE WHEN text IS NULL THEN NULL
         |              WHEN doc_id % 17 = 0 THEN 2 ELSE 0 END AS n_valid,
         |         CASE WHEN doc_id % 17 = 0 AND text IS NOT NULL THEN
-        |                replace(replace(text, '4111111111111111', '<CARD>'),
-        |                        '4539 5787 6362 1486', '<CARD>')
+        |                ${cardsRedactedSql("text")}
         |              ELSE text END AS redacted
         |  FROM planted)
         |SELECT source, count(*) AS n_docs,
@@ -4674,7 +4002,7 @@ object Lanes {
       // is a plant — valid cards and the email redact, the invalid
       // candidates survive, the phone redacts. %17 wins over %19 like
       // the engine's when-chain; NULL text null-propagates.
-      """WITH planted AS (
+      s"""WITH planted AS (
         |  SELECT source, doc_id,
         |         CASE WHEN doc_id % 17 = 0 THEN
         |                text || ' pay 4111111111111111 or 4539 5787 6362 1486' ||
@@ -4695,9 +4023,7 @@ object Lanes {
         |              WHEN doc_id % 19 = 0 THEN 1 ELSE 0 END AS n_phone,
         |         CASE WHEN text IS NULL THEN text
         |              WHEN doc_id % 17 = 0 THEN
-        |                replace(replace(replace(text,
-        |                  '4111111111111111', '<CARD>'),
-        |                  '4539 5787 6362 1486', '<CARD>'),
+        |                replace(${cardsRedactedSql("text")},
         |                  'user' || doc_id || '@example.com', '<EMAIL>')
         |              WHEN doc_id % 19 = 0 THEN
         |                replace(text, '555-867-5309', '<PHONE>')
@@ -4835,11 +4161,7 @@ object Lanes {
       val uniform = types.map(_ -> 200000L)
       val skewed = types.map(t => t -> (if (t == "click") 600000L else 100000L))
       val missing = types.filterNot(_ == "error").map(_ -> 250000L)
-      """WITH counts AS (
-        |  SELECT event_type AS value, CAST(count(*) AS BIGINT) AS n
-        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM counts),
-        |""".stripMargin +
+      "WITH " + eventTypeCensusCtes + ",\n" +
         klCheckCtes(1, uniform) + ",\n" +
         klCheckCtes(2, skewed) + ",\n" +
         klCheckCtes(3, missing) + "\n" +
@@ -4864,11 +4186,7 @@ object Lanes {
       val skewed = types.map(t => t -> (if (t == "click") 600000L else 100000L))
       val refund = Seq("click", "purchase", "refund", "signup", "view")
         .map(_ -> 200000L)
-      """WITH counts AS (
-        |  SELECT event_type AS value, CAST(count(*) AS BIGINT) AS n
-        |  FROM events WHERE event_type IS NOT NULL GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM counts),
-        |""".stripMargin +
+      "WITH " + eventTypeCensusCtes + ",\n" +
         chiCheckCtes(1, uniform) + ",\n" +
         chiCheckCtes(2, skewed) + ",\n" +
         chiCheckCtes(3, refund) + "\n" +
@@ -5068,40 +4386,14 @@ object Lanes {
     Lane("x10_split_cards", Queries.x10SplitCards, Oracle(
       // The E2E capstone replayed end to end: the default-config curate
       // survivor set (min-id keeper over normalized text, the x8
-      // containment CTE vs docs 0-2, PII-redacted token count >= 1),
-      // the SOURCE-keyed group split (md5-prefix group key, split-
-      // salted bucket, 80/20 bands — the x52 replay), every x40 card
-      // signal re-derived over the REDACTED text under ROLLUP(split),
-      // and the straddle count re-derived from scratch — its zero IS
-      // the leakage guarantee.
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8
-          |),
-          |ann AS (
-          |  SELECT doc_id, lang, source, rtext,
-          |         doc_id = min(doc_id) OVER (
-          |           PARTITION BY lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-          |           AS is_canonical,
-          |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-          |         CASE WHEN rtext IS NULL OR len(trim(rtext)) = 0 THEN 0
-          |              ELSE len(string_split_regex(trim(rtext), '\s+')) END AS n_tok
-          |  FROM (SELECT doc_id, lang, source, text,
-          |               regexp_replace(regexp_replace(regexp_replace(text,
-          |                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |                 '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |        FROM documents)),
-          |surv AS (
-          |  SELECT doc_id, lang, source, rtext, n_tok FROM ann
-          |  WHERE is_canonical AND NOT is_contaminated AND n_tok >= 1),
-          |""".stripMargin +
+      // containment CTE vs docs 0-2, PII-redacted token count >= 1, no
+      // sampling), the SOURCE-keyed group split (md5-prefix group key,
+      // split-salted bucket, 80/20 bands — the x52 replay), every x40
+      // card signal re-derived over the REDACTED text under
+      // ROLLUP(split), and the straddle count re-derived from scratch —
+      // its zero IS the leakage guarantee.
+      Funnel(quality = "n_tok >= 1", sample = "TRUE")
+        .survivorsSql("doc_id, lang, source, rtext") + ",\n" +
         s"""sp AS (
           |  SELECT *, CASE WHEN b < 8000 THEN 'train' ELSE 'val' END AS split
           |  FROM (SELECT *,
@@ -5115,34 +4407,9 @@ object Lanes {
           |    SELECT source FROM sp GROUP BY 1
           |    HAVING count(DISTINCT split) > 1)),
           |""".stripMargin +
-        raw"""sig AS (
-          |  SELECT split, lang,
-          |         n_tok,
-          |         coalesce(length(rtext), 0) AS n_ch,
-          |         coalesce(lower(trim(regexp_replace(rtext, '\s+', ' ', 'g'))), '') AS cnorm,
-          |         (rtext IS NULL OR length(trim(rtext)) = 0) AS blank,
-          |         len(regexp_extract_all(rtext, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS ne,
-          |         len(regexp_extract_all(rtext, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS np,
-          |         len(regexp_extract_all(rtext, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS ni
-          |  FROM sp)
-          |SELECT coalesce(split, '(all)') AS split,
-          |       CAST(GROUPING(split) AS BIGINT) AS grouping_level,
-          |       count(*) AS n_docs,
-          |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-          |       CAST(sum(n_ch) AS BIGINT) AS n_chars,
-          |       count(CASE WHEN blank THEN 1 END) AS n_empty,
-          |       count(DISTINCT cnorm) AS n_distinct_text,
-          |       CAST(((count(*) - count(DISTINCT cnorm)) * 1000000) //
-          |            count(*) AS BIGINT) AS dup_ppm,
-          |       count(DISTINCT lang) AS n_langs,
-          |       count(CASE WHEN ne > 0 OR np > 0 OR ni > 0 THEN 1 END)
-          |         AS docs_with_pii,
-          |       round(CAST(sum(n_tok) AS DOUBLE) / count(*), 4) AS mean_tok,
-          |       round(quantile_cont(n_tok, 0.5), 4) AS p50_tok,
-          |       (SELECT n_straddling_sources FROM straddle)
-          |         AS n_straddling_sources
-          |FROM sig GROUP BY ROLLUP (split)
-          |ORDER BY grouping_level, split""".stripMargin))),
+        datasetCardSql("sp", "split", "rtext", extra =
+          ",\n       (SELECT n_straddling_sources FROM straddle)" +
+            "\n         AS n_straddling_sources"))),
 
     Lane("x53_bpe_train", Queries.x53BpeTrain, Oracle(bpeTrainSql(maxWords = 300, merges = 8))),
 
@@ -5200,7 +4467,7 @@ object Lanes {
     Lane("x49_rendezvous", Queries.x49Rendezvous, Oracle({
       // Rendezvous replayed: the nine per-shard ORDER-grade weights (same
       // Scala-side seed lanes), argmax via greatest + first-match CASE
-      // (ties to the lowest shard, as the engine's when-chain), both
+      // (ties to the lowest shard, as the engine's struct argmax), both
       // ring sizes, and the moved/moved-elsewhere censuses — the
       // minimal-disruption theorem shows up as an all-zero column the
       // hash compare pins.
@@ -5328,7 +4595,7 @@ object Lanes {
       // The x18 session assignment (4-hour gap) composed under the x37
       // correlated-min funnel, keyed on the user:session composite;
       // strict > and floor division as in both parents.
-      """WITH a AS (
+      ("""WITH a AS (
         |  SELECT user_id, ts, event_id, event_type,
         |         CAST(floor(epoch(ts)) AS BIGINT)
         |           - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) AS gap_s
@@ -5342,23 +4609,7 @@ object Lanes {
         |                  OVER (PARTITION BY user_id ORDER BY ts, event_id)
         |                  AS VARCHAR)) AS sk
         |  FROM a),
-        |s1 AS (SELECT sk, min(ts) AS t1 FROM sess
-        |       WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT s.sk, min(ts) AS t2
-        |       FROM sess s JOIN s1 USING (sk)
-        |       WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
-        |s3 AS (SELECT s.sk, min(ts) AS t3
-        |       FROM sess s JOIN s2 USING (sk)
-        |       WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1),
-        |c AS (SELECT 1 AS step_idx, 'view' AS step,
-        |             CAST(count(*) AS BIGINT) AS n_users FROM s1
-        |      UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |      UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT CAST(step_idx AS BIGINT) AS step_idx, step, n_users,
-        |       CAST((n_users * 1000000) //
-        |            (SELECT n_users FROM c WHERE step_idx = 1) AS BIGINT)
-        |         AS conv_ppm
-        |FROM c ORDER BY step_idx""".stripMargin)),
+        |""".stripMargin + stepFunnelSql("sess", "sk")))),
 
     Lane("g17_referential", Queries.g17Referential, Oracle(
       // Each edge re-derived as a NOT-EXISTS census (null fks counted
@@ -5521,38 +4772,9 @@ object Lanes {
         |ORDER BY pmi_micro DESC, w1, w2 LIMIT 50""".stripMargin)),
 
     Lane("x40_dataset_card", Queries.x40DatasetCard, Oracle(
-      // Every card signal re-derived independently: the shared
-      // token-count CASE, the normText dedup family (the oracle counts
-      // distinct NORMS where the engine counts distinct md5s — same
-      // cardinality), the x7 PII patterns, exact interpolated median
-      // (quantile_cont ≡ Spark percentile), all under GROUP BY
-      // ROLLUP(source) with the '(all)' sentinel.
-      """WITH t AS (SELECT source, lang, text,
-        |    CASE WHEN text IS NULL OR length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tok,
-        |    coalesce(length(text), 0) AS n_ch,
-        |    coalesce(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), '') AS norm,
-        |    (text IS NULL OR length(trim(text)) = 0) AS blank,
-        |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS ne,
-        |    len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS np,
-        |    len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS ni
-        |  FROM documents)
-        |SELECT coalesce(source, '(all)') AS source,
-        |       CAST(GROUPING(source) AS BIGINT) AS grouping_level,
-        |       count(*) AS n_docs,
-        |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-        |       CAST(sum(n_ch) AS BIGINT) AS n_chars,
-        |       count(CASE WHEN blank THEN 1 END) AS n_empty,
-        |       count(DISTINCT norm) AS n_distinct_text,
-        |       CAST(((count(*) - count(DISTINCT norm)) * 1000000) //
-        |            count(*) AS BIGINT) AS dup_ppm,
-        |       count(DISTINCT lang) AS n_langs,
-        |       count(CASE WHEN ne > 0 OR np > 0 OR ni > 0 THEN 1 END)
-        |         AS docs_with_pii,
-        |       round(CAST(sum(n_tok) AS DOUBLE) / count(*), 4) AS mean_tok,
-        |       round(quantile_cont(n_tok, 0.5), 4) AS p50_tok
-        |FROM t GROUP BY ROLLUP (source)
-        |ORDER BY grouping_level, source""".stripMargin)),
+      // Every card signal re-derived independently (datasetCardSql)
+      // under GROUP BY ROLLUP(source) with the '(all)' sentinel.
+      "WITH " + datasetCardSql("documents", "source", "text"))),
 
     Lane("x39_length_batches", Queries.x39LengthBatches, Oracle(
       // The banded hierarchical rank replayed as the NAIVE per-band
@@ -5626,23 +4848,7 @@ object Lanes {
       // The chained earliest-after-previous funnel replayed as three
       // correlated min-aggregates; strict > on both engines, floor
       // division for the ppm.
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(ts) AS t2
-        |       FROM events e JOIN s1 USING (user_id)
-        |       WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(ts) AS t3
-        |       FROM events e JOIN s2 USING (user_id)
-        |       WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1),
-        |c AS (SELECT 1 AS step_idx, 'view' AS step,
-        |             CAST(count(*) AS BIGINT) AS n_users FROM s1
-        |      UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |      UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT CAST(step_idx AS BIGINT) AS step_idx, step, n_users,
-        |       CAST((n_users * 1000000) //
-        |            (SELECT n_users FROM c WHERE step_idx = 1) AS BIGINT)
-        |         AS conv_ppm
-        |FROM c ORDER BY step_idx""".stripMargin)),
+      "WITH " + stepFunnelSql("events", "user_id"))),
 
     Lane("x36_cohort_retention", Queries.x36CohortRetention, Oracle(
       // The retention matrix straight from raw events: distinct
@@ -5858,11 +5064,9 @@ object Lanes {
       // cleaned text vs bench grams from the RAW docs 0-2), PII
       // redaction, token band, and sampling all run downstream of the
       // clean chain. No url/history/fuzzy stages (no-ops).
-      ("WITH " + dirtyCteNamed("dirty0") + ",\n" + lineDedupCtes + ",\n" +
-        cleanCtes + ",\n" +
-        "cc AS (SELECT doc_id, lang, clean AS text FROM c4),\n" +
-        gram4CtesFrom("cc") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("cc")))),
+      Funnel(src = "cc", rawBench = true, prefix =
+        dirtyCteNamed("dirty0") + ",\n" + lineDedupCtes + ",\n" + cleanCtes + ",\n" +
+          "cc AS (SELECT doc_id, lang, clean AS text FROM c4),\n").censusSql())),
 
     Lane("x10_nfc_funnel", Queries.x10NfcFunnel, Oracle(
       // X19d composed into X10 (Config.nfcFirst): the planted NFD twin
@@ -5873,8 +5077,9 @@ object Lanes {
       // the RAW docs 0-2 (the engine passes the raw bench frame — NFC
       // of the ASCII bench text is the identity). No url/history/fuzzy
       // stages (no-ops).
-      ("WITH pn AS (\n" +
-        raw"""  SELECT doc_id, lang, nfc_normalize(text) AS text FROM documents
+      Funnel(src = "pn", rawBench = true, prefix =
+        raw"""pn AS (
+          |  SELECT doc_id, lang, nfc_normalize(text) AS text FROM documents
           |  UNION ALL
           |  SELECT doc_id + 1000000, lang,
           |         nfc_normalize(coalesce(text, '') || ' é café')
@@ -5882,9 +5087,8 @@ object Lanes {
           |  UNION ALL
           |  SELECT doc_id + 2000000, lang,
           |         nfc_normalize(coalesce(text, '') || ' é café')
-          |  FROM documents WHERE doc_id < 10),""".stripMargin + "\n" +
-        gram4CtesFrom("pn") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pn")))),
+          |  FROM documents WHERE doc_id < 10),
+          |""".stripMargin).censusSql())),
 
     Lane("x10_mojibake_funnel", Queries.x10MojibakeFunnel, Oracle(
       // X19e composed into X10 (Config.fixEncodingFirst): the damaged
@@ -5895,8 +5099,9 @@ object Lanes {
       // clean twin's lone \u00e9 is a malformed continuation byte, also
       // passthrough). Bench grams from the RAW docs 0-2; no url/
       // history/fuzzy stages (no-ops).
-      ("WITH pm AS (\n" +
-        """  SELECT doc_id, lang, text FROM documents
+      Funnel(src = "pm", rawBench = true, prefix =
+        """pm AS (
+          |  SELECT doc_id, lang, text FROM documents
           |  UNION ALL
           |  SELECT doc_id + 1000000, lang, coalesce(text, '') || ' caf\u00e9'
           |  FROM documents WHERE doc_id < 10
@@ -5904,48 +5109,40 @@ object Lanes {
           |  SELECT doc_id + 2000000, lang,
           |         replace(coalesce(text, '') || ' caf\u00c3\u00a9',
           |                 '\u00c3\u00a9', '\u00e9')
-          |  FROM documents WHERE doc_id < 10),""".stripMargin + "\n" +
-        gram4CtesFrom("pm") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pm")))),
+          |  FROM documents WHERE doc_id < 10),
+          |""".stripMargin).censusSql())),
 
     Lane("x10_card_funnel", Queries.x10CardFunnel, Oracle(
       // X7b composed into X10: the card plants replayed as the same
-      // replace arithmetic as x7_card_scan, wired in as the funnel
-      // body's redaction BASE (cards before the regex PII chain, the
-      // s11 ordering) -- the census observes redaction through the
-      // token mass and restraint through the surviving invalid
-      // candidates' tokens.
-      ("WITH pc AS (\n" +
-        """  SELECT doc_id, lang,
-          |         CASE WHEN doc_id % 17 = 0 THEN
-          |                text || ' pay 4111111111111111 or 4539 5787 6362 1486 now'
-          |              WHEN doc_id % 19 = 0 THEN
-          |                text || ' order 4111111111111112 ref 1234567890123 end'
-          |              ELSE text END AS text
-          |  FROM documents),""".stripMargin + "\n" +
-        gram4CtesFrom("pc") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pc", rtextBase =
-          "CASE WHEN doc_id % 17 = 0 THEN " +
-            "replace(replace(text, '4111111111111111', '<CARD>'), " +
-            "'4539 5787 6362 1486', '<CARD>') ELSE text END")))),
+      // replace arithmetic as x7_card_scan, wired in as the funnel's
+      // redaction BASE (cards before the regex PII chain, the s11
+      // ordering) -- the census observes redaction through the token
+      // mass and restraint through the surviving invalid candidates'
+      // tokens.
+      Funnel(src = "pc", rawBench = true,
+        prefix = s"pc AS (\n  SELECT doc_id, lang,\n         $cardPlantSql AS text\n" +
+          "  FROM documents),\n",
+        redactBase =
+          s"CASE WHEN doc_id % 17 = 0 THEN ${cardsRedactedSql("text")} ELSE text END")
+        .censusSql())),
 
     Lane("x10_blocklist_funnel", Queries.x10BlocklistFunnel, Oracle(
       // X3i composed into X10: the blocklist page gate as one more
       // quality conjunct, replayed as the exact token-split semantics
-      // inside the shared funnel body. The plant is MIXED CASE, so a
+      // inside the shared funnel replay. The plant is MIXED CASE, so a
       // hash match proves the engine's byte-level case folding too.
-      ("WITH pb AS (\n" +
-        """  SELECT doc_id, lang,
+      Funnel(src = "pb", rawBench = true, prefix =
+        """pb AS (
+          |  SELECT doc_id, lang,
           |         CASE WHEN doc_id % 9 = 2
           |              THEN coalesce(text, '') || ' utterly FORBIDDEN content'
           |              ELSE text END AS text
-          |  FROM documents),""".stripMargin + "\n" +
-        gram4CtesFrom("pb") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("pb",
-          extraAnnCol = ",\n         len(list_filter(" +
-            "regexp_split_to_array(lower(rtext), '[^a-z0-9_]+'), " +
-            "t -> t IN ('forbidden', 'viagra'))) AS bl",
-          qualExtra = " AND bl = 0")))),
+          |  FROM documents),
+          |""".stripMargin,
+        annCols = ",\n         len(list_filter(" +
+          "regexp_split_to_array(lower(r.rtext), '[^a-z0-9_]+'), " +
+          "t -> t IN ('forbidden', 'viagra'))) AS bl",
+        quality = "n_tok BETWEEN 25 AND 90 AND bl = 0").censusSql())),
 
     Lane("x10_xdedup_funnel", Queries.x10XdedupFunnel, Oracle(
       // X19c composed into X10 (the CCNet ordering — the shard-level
@@ -5956,7 +5153,8 @@ object Lanes {
       // the rewritten corpus. Bench grams from the RAW docs 0-2, the
       // x10_clean_funnel direction. No url/history/fuzzy stages
       // (no-ops).
-      (raw"""WITH pd AS (
+      Funnel(src = "xdocs", rawBench = true, prefix =
+        raw"""pd AS (
         |  SELECT doc_id, lang,
         |         coalesce(text, '') || chr(10) || 'subscribe to our newsletter' AS t
         |  FROM documents),
@@ -5978,9 +5176,7 @@ object Lanes {
         |xdocs AS (
         |  SELECT p.doc_id, p.lang, coalesce(r.xt, '') AS text
         |  FROM pd p LEFT JOIN xreb r USING (doc_id)),
-        |""".stripMargin +
-        gram4CtesFrom("xdocs") + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("xdocs")))),
+        |""".stripMargin).censusSql())),
 
     Lane("x10_write_verify", Queries.x10WriteVerify, Oracle(
       // The written-corpus census derived INDEPENDENTLY from the base
@@ -5991,46 +5187,15 @@ object Lanes {
       // The engine aggregates the same census from the parquet it
       // WROTE and re-read, so a hash match proves the write -> read
       // round trip preserved every surviving row byte-for-byte.
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang, source,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |""".stripMargin +
-        s"""ann AS (
-           |  SELECT doc_id, source,
-           |         doc_id = min(doc_id) OVER (PARTITION BY kt) AS is_canonical,
-           |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(rtext), '\\s+')) END AS n_tok,
-           |         ${bucketSql("doc_id")} AS b,
-           |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr,
-           |         CASE WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 8000 THEN 'train'
-           |              WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 9000 THEN 'val'
-           |              ELSE 'test' END AS split,
-           |         CAST(('0x' || substr(md5(rtext), 1, 15)) AS BIGINT)
-           |           % 1000000000 AS fp
-           |  FROM rdoc)
-           |SELECT split, source, count(*) AS n_docs,
-           |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-           |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
-           |       CAST(sum(fp) AS BIGINT) AS text_fp_sum
-           |FROM ann
-           |WHERE is_canonical AND NOT is_contaminated
-           |  AND n_tok BETWEEN 25 AND 90 AND b < thr
-           |GROUP BY 1, 2 ORDER BY split, source""".stripMargin))),
+      Funnel().survivorsSql(s"doc_id, source, n_tok, ${splitSql("doc_id")} AS split,\n" +
+        "         CAST(('0x' || substr(md5(rtext), 1, 15)) AS BIGINT) % 1000000000 AS fp") +
+        """
+          |SELECT split, source, count(*) AS n_docs,
+          |       CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+          |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
+          |       CAST(sum(fp) AS BIGINT) AS text_fp_sum
+          |FROM surv
+          |GROUP BY 1, 2 ORDER BY split, source""".stripMargin)),
 
     Lane("x10_layout_audit", Queries.x10LayoutAudit, Oracle(
       // The layout audit's expected state derived INDEPENDENTLY: the
@@ -6039,68 +5204,34 @@ object Lanes {
       // the salted order key — and ZERO violations (the
       // engine counts them from the parquet it re-read; the oracle
       // pins the expectation).
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang, source,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |""".stripMargin +
-        s"""ann AS (
-           |  SELECT doc_id, source,
-           |         doc_id = min(doc_id) OVER (PARTITION BY kt) AS is_canonical,
-           |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(rtext), '\\s+')) END AS n_tok,
-           |         ${bucketSql("doc_id")} AS b,
-           |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr,
-           |         CASE WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 8000 THEN 'train'
-           |              WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 9000 THEN 'val'
-           |              ELSE 'test' END AS split,
-           |         (${orderKeySql("doc_id", 42L ^ graft.ext.Sampling.OrderSalt)} % 8)
-           |           AS shard
-           |  FROM rdoc)
-           |SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           |       CAST(count(DISTINCT split || '/' || source || '/'
-           |                  || CAST(shard AS VARCHAR)) AS BIGINT) AS n_leaves,
-           |       CAST(0 AS BIGINT) AS bad_split,
-           |       CAST(0 AS BIGINT) AS bad_shuffle_key,
-           |       CAST(0 AS BIGINT) AS bad_shard
-           |FROM ann
-           |WHERE is_canonical AND NOT is_contaminated
-           |  AND n_tok BETWEEN 25 AND 90 AND b < thr""".stripMargin))),
+      Funnel().survivorsSql(s"source, ${splitSql("doc_id")} AS split,\n" +
+        s"         (${orderKeySql("doc_id", 42L ^ graft.ext.Sampling.OrderSalt)} % 8) AS shard") +
+        """
+          |SELECT CAST(count(*) AS BIGINT) AS n_rows,
+          |       CAST(count(DISTINCT split || '/' || source || '/'
+          |                  || CAST(shard AS VARCHAR)) AS BIGINT) AS n_leaves,
+          |       CAST(0 AS BIGINT) AS bad_split,
+          |       CAST(0 AS BIGINT) AS bad_shuffle_key,
+          |       CAST(0 AS BIGINT) AS bad_shard
+          |FROM surv""".stripMargin)),
 
     Lane("x10_recipe_funnel", Queries.x10RecipeFunnel, Oracle(
       // The recipe file encodes exactly the base config (25..90 token
-      // band, en-0.4 sample, 512 seq len), and the replay is assembled
-      // ENTIRELY from the shared parts — corpus grams, raw-bench
-      // contamination, the no-fuzzy funnel body — so the file-driven
-      // funnel binds to SQL that cannot drift from the other funnels.
-      ("WITH " + gram4Ctes + ",\n" + benchGramsRawCtes + ",\n" +
-        noFuzzyFunnelBody("documents")))),
+      // band, en-0.4 sample, 512 seq len), and the replay is the shared
+      // funnel with raw-bench contamination, so the file-driven funnel
+      // binds to SQL that cannot drift from the other funnels.
+      Funnel(rawBench = true).censusSql())),
 
     Lane("x10_c4_funnel", Queries.x10C4Funnel, Oracle(
       // X3h composed into X10: the funnel census with the C4 bundle as
       // the quality stage — the per-doc line retention through the
       // SAME c4LineCtes as x3_c4_rules, the 3-retained-sentence floor,
       // and both page gates over the REDACTED text; the other stages
-      // the standard replay (min-key canonical per norm, 4-gram
-      // contamination vs the planted docs 0-2, en-0.4 keyed-hash
-      // sample). minTokens = 1, so quality = n_tok >= 1 AND the C4
-      // verdict — the stage isolates the rule bundle.
-      ("WITH pd AS (\n" +
-        raw"""  SELECT doc_id, lang,
+      // the standard replay. minTokens = 1, so quality = n_tok >= 1 AND
+      // the C4 verdict — the stage isolates the rule bundle.
+      Funnel(src = "pd", prefix =
+        raw"""pd AS (
+          |  SELECT doc_id, lang,
           |         coalesce(text, '') ||
           |         CASE WHEN doc_id % 2 = 0
           |              THEN chr(10) || 'this is a good first sentence here.'
@@ -6110,149 +5241,34 @@ object Lanes {
           |         CASE WHEN doc_id % 6 = 0 THEN chr(10) || 'brace { line'
           |              ELSE '' END AS text
           |  FROM documents),
-          |""".stripMargin + gram4CtesFrom("pd") + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM pd),
-          |csrc AS (SELECT doc_id, coalesce(rtext, '') AS t FROM rdoc),
-          |""".stripMargin + c4LineCtes("csrc") + ",\n" +
-        raw"""cpass AS (
-          |  SELECT s.doc_id,
-          |         NOT contains(s.t, '{')
-          |         AND NOT contains(lower(s.t), 'lorem ipsum')
-          |         AND len(regexp_extract_all(coalesce(r.xt, ''), '[.!?]')) >= 3
-          |           AS cpass
-          |  FROM csrc s LEFT JOIN c4reb r USING (doc_id)),
-          |""".stripMargin +
-        s"""ann AS (
-           |  SELECT r.doc_id,
-           |         r.doc_id = min(r.doc_id) OVER (PARTITION BY r.kt) AS is_canonical,
-           |         r.doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(r.rtext), '\\s+')) END AS n_tok,
-           |         p.cpass,
-           |         ${bucketSql("r.doc_id")} AS b,
-           |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-           |  FROM rdoc r JOIN cpass p ON r.doc_id = p.doc_id
-           |), f AS (
-           |  SELECT count(*) AS n_raw,
-           |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-           |           AS n_after_decontam,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND cpass THEN 1 END)
-           |           AS n_after_quality,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND cpass AND b < thr THEN 1 END)
-           |           AS n_after_sample,
-           |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND cpass
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND cpass AND b < thr
-           |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-           |  FROM ann)
-           |SELECT n_raw, n_raw AS n_after_url,
-           |       n_after_dedup, n_after_dedup AS n_after_history,
-           |       n_after_dedup AS n_after_fuzzy,
-           |       n_after_decontam, n_after_quality, n_after_sample,
-           |       tokens_raw, tokens_raw AS tokens_after_url,
-           |       tokens_after_dedup, tokens_after_dedup AS tokens_after_history,
-           |       tokens_after_dedup AS tokens_after_fuzzy,
-           |       tokens_after_decontam, tokens_after_quality, n_tokens,
-           |       CASE WHEN n_tokens = 0 THEN 0
-           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin))),
+          |""".stripMargin,
+        gates = "csrc AS (SELECT doc_id, coalesce(rtext, '') AS t FROM rdoc),\n" +
+          c4LineCtes("csrc") + ",\n" +
+          raw"""cpass AS (
+            |  SELECT s.doc_id,
+            |         NOT contains(s.t, '{')
+            |         AND NOT contains(lower(s.t), 'lorem ipsum')
+            |         AND len(regexp_extract_all(coalesce(r.xt, ''), '[.!?]')) >= 3
+            |           AS cpass
+            |  FROM csrc s LEFT JOIN c4reb r USING (doc_id)),
+            |""".stripMargin,
+        joins = " JOIN cpass p ON r.doc_id = p.doc_id",
+        annCols = ",\n         p.cpass",
+        quality = "n_tok >= 1 AND cpass").censusSql())),
 
     Lane("x10_gopher_funnel", Queries.x10GopherFunnel, Oracle(
       // X3g composed into X10: the funnel census with the FULL Gopher
       // rule conjunction as the quality stage, every rule replayed per
       // document over the REDACTED text (gopherPassCtes), the other
-      // stages the standard replay (min-key canonical per norm,
-      // 4-gram contamination vs bench docs 0-2, en-0.4 keyed-hash
-      // sample). Config.minTokens = 1, so quality = n_tok >= 1 AND the
-      // Gopher verdict — the stage isolates the rule bundle.
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |gsrc AS (SELECT doc_id, coalesce(rtext, '') AS t FROM rdoc),
-          |""".stripMargin + gopherPassCtes + ",\n" +
-        s"""ann AS (
-           |  SELECT r.doc_id,
-           |         r.doc_id = min(r.doc_id) OVER (PARTITION BY r.kt) AS is_canonical,
-           |         r.doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(r.rtext), '\\s+')) END AS n_tok,
-           |         p.gpass,
-           |         ${bucketSql("r.doc_id")} AS b,
-           |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-           |  FROM rdoc r JOIN gpass p ON r.doc_id = p.doc_id
-           |), f AS (
-           |  SELECT count(*) AS n_raw,
-           |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-           |           AS n_after_decontam,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass THEN 1 END)
-           |           AS n_after_quality,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass AND b < thr THEN 1 END)
-           |           AS n_after_sample,
-           |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass AND b < thr
-           |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-           |  FROM ann)
-           |SELECT n_raw, n_raw AS n_after_url,
-           |       n_after_dedup, n_after_dedup AS n_after_history,
-           |       n_after_dedup AS n_after_fuzzy,
-           |       n_after_decontam, n_after_quality, n_after_sample,
-           |       tokens_raw, tokens_raw AS tokens_after_url,
-           |       tokens_after_dedup, tokens_after_dedup AS tokens_after_history,
-           |       tokens_after_dedup AS tokens_after_fuzzy,
-           |       tokens_after_decontam, tokens_after_quality, n_tokens,
-           |       CASE WHEN n_tokens = 0 THEN 0
-           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin))),
+      // stages the standard replay. Config.minTokens = 1, so quality =
+      // n_tok >= 1 AND the Gopher verdict — the stage isolates the rule
+      // bundle.
+      Funnel(
+        gates = "gsrc AS (SELECT doc_id, coalesce(rtext, '') AS t FROM rdoc),\n" +
+          gopherPassCtes(byLang = false) + ",\n",
+        joins = " JOIN gpass p ON r.doc_id = p.doc_id",
+        annCols = ",\n         p.gpass",
+        quality = "n_tok >= 1 AND gpass").censusSql())),
 
     Lane("x10_gopher_bylang", Queries.x10GopherByLang, Oracle(
       // The Gopher funnel gate DISPATCHED PER LANGUAGE: identical
@@ -6260,116 +5276,24 @@ object Lanes {
       // swapping in the language-cased tokenization / stop lists /
       // script symbol classes / CJK mean-token floor (the shipped
       // preset catalog, interpolated — config data, rules restated).
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |gsrc AS (SELECT doc_id, lang, coalesce(rtext, '') AS t FROM rdoc),
-          |""".stripMargin + gopherPassByLangCtes + ",\n" +
-        s"""ann AS (
-           |  SELECT r.doc_id,
-           |         r.doc_id = min(r.doc_id) OVER (PARTITION BY r.kt) AS is_canonical,
-           |         r.doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(r.rtext), '\\s+')) END AS n_tok,
-           |         p.gpass,
-           |         ${bucketSql("r.doc_id")} AS b,
-           |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-           |  FROM rdoc r JOIN gpass p ON r.doc_id = p.doc_id
-           |), f AS (
-           |  SELECT count(*) AS n_raw,
-           |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-           |           AS n_after_decontam,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass THEN 1 END)
-           |           AS n_after_quality,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass AND b < thr THEN 1 END)
-           |           AS n_after_sample,
-           |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND n_tok >= 1 AND gpass AND b < thr
-           |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-           |  FROM ann)
-           |SELECT n_raw, n_raw AS n_after_url,
-           |       n_after_dedup, n_after_dedup AS n_after_history,
-           |       n_after_dedup AS n_after_fuzzy,
-           |       n_after_decontam, n_after_quality, n_after_sample,
-           |       tokens_raw, tokens_raw AS tokens_after_url,
-           |       tokens_after_dedup, tokens_after_dedup AS tokens_after_history,
-           |       tokens_after_dedup AS tokens_after_fuzzy,
-           |       tokens_after_decontam, tokens_after_quality, n_tokens,
-           |       CASE WHEN n_tokens = 0 THEN 0
-           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin))),
+      Funnel(
+        gates = "gsrc AS (SELECT doc_id, lang, coalesce(rtext, '') AS t FROM rdoc),\n" +
+          gopherPassCtes(byLang = true) + ",\n",
+        joins = " JOIN gpass p ON r.doc_id = p.doc_id",
+        annCols = ",\n         p.gpass",
+        quality = "n_tok >= 1 AND gpass").censusSql())),
 
     Lane("x10_write_packed", Queries.x10WritePacked, Oracle(
       // The terminal artifact replayed end-to-end: curation survivors
-      // (the x10_write_verify machinery), the salted 80/10/10 split
+      // (the x10_write_verify replay), the salted 80/10/10 split
       // bands, then each split's OWN pack — the prefix-sum window
       // PARTITIONED BY split — sliced, reassembled in doc order, and
       // fingerprinted per sequence (md5-prefix mod 1e9, summed per
       // split). The engine aggregates the same census from the shards
       // it wrote and re-read.
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |""".stripMargin +
-        s"""ann AS (
-           |  SELECT doc_id, rtext,
-           |         doc_id = min(doc_id) OVER (PARTITION BY kt) AS is_canonical,
-           |         doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(rtext), '\\s+')) END AS n_tok,
-           |         ${bucketSql("doc_id")} AS bkt,
-           |         CASE lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr,
-           |         CASE WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 8000 THEN 'train'
-           |              WHEN ${bucketSql("doc_id", 42L ^ graft.ext.Sampling.SplitSalt)} < 9000 THEN 'val'
-           |              ELSE 'test' END AS split
-           |  FROM rdoc),
-           |""".stripMargin +
-        raw"""surv AS (
-          |  SELECT doc_id, split,
-          |         string_split_regex(trim(rtext), '\s+') AS toks, n_tok
-          |  FROM ann
-          |  WHERE is_canonical AND NOT is_contaminated
-          |    AND n_tok BETWEEN 25 AND 90 AND bkt < thr),
-          |pc AS (
+      Funnel().survivorsSql(s"doc_id, ${splitSql("doc_id")} AS split,\n" +
+        raw"         string_split_regex(trim(rtext), '\s+') AS toks, n_tok") + ",\n" +
+        raw"""pc AS (
           |  SELECT doc_id, split, toks, n_tok,
           |         COALESCE(CAST(sum(n_tok) OVER (PARTITION BY split ORDER BY doc_id
           |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS start
@@ -6393,7 +5317,7 @@ object Lanes {
           |       CAST(sum(seq_tok) AS BIGINT) AS n_tokens,
           |       CAST(sum(CAST(('0x' || substr(md5(seq_text), 1, 15)) AS BIGINT)
           |            % 1000000000) AS BIGINT) AS seq_fp_sum
-          |FROM pseq GROUP BY 1 ORDER BY split""".stripMargin))),
+          |FROM pseq GROUP BY 1 ORDER BY split""".stripMargin)),
 
     Lane("x23_chunk_docs", Queries.x23ChunkDocs, Oracle(
       // Chunk layout replayed: 32-token windows, stride 24, count =
@@ -6529,53 +5453,13 @@ object Lanes {
         |       CAST(max(hits) AS BIGINT) AS max_hits
         |FROM h GROUP BY source ORDER BY source""".stripMargin)),
 
-    Lane("x27_pctl_against", Queries.x27PctlAgainst, Oracle(
-      // The persisted-cut gate replayed from scratch: the per-source
-      // cut is the smallest score whose integer cume_dist clears the
-      // 10th percentile, then the gate is one comparison per row
-      // (NULL score ⇒ FALSE — null never survives an adaptive cut).
-      // Null-safe stratum join, mirroring the engine's <=>.
-      """WITH c AS (
-        |  SELECT source, n_chars, count(*) AS n FROM documents
-        |  WHERE n_chars IS NOT NULL GROUP BY source, n_chars),
-        |g AS (
-        |  SELECT source, n_chars,
-        |         sum(n) OVER (PARTITION BY source ORDER BY n_chars) AS cum_le,
-        |         sum(n) OVER (PARTITION BY source) AS tot
-        |  FROM c),
-        |cut AS (
-        |  SELECT source, min(n_chars) AS cut_score FROM g
-        |  WHERE (cum_le * 1000000) // tot >= 100000 GROUP BY source)
-        |SELECT d.doc_id, d.source, d.n_chars, t.cut_score,
-        |       coalesce(d.n_chars >= t.cut_score, FALSE) AS is_kept
-        |FROM documents d
-        |LEFT JOIN cut t ON d.source IS NOT DISTINCT FROM t.source
-        |ORDER BY d.doc_id""".stripMargin)),
+    Lane("x27_pctl_against", Queries.x27PctlAgainst, Oracle(pctlGateSql("TRUE", "TRUE"))),
 
     Lane("s9_stream_pctl_gate", Queries.s9StreamPctlGate, Oracle(
       // The streaming serve-time gate batch-replayed: cuts re-derived
       // from the FIT corpus only (docs < 300 — the history shard), the
-      // gate one comparison per arriving document (docs >= 300). A
-      // source absent from history yields no cut row → NULL cut_score
-      // → FALSE (an unknown stratum never survives an adaptive cut).
-      """WITH c AS (
-        |  SELECT source, n_chars, count(*) AS n FROM documents
-        |  WHERE doc_id < 300 AND n_chars IS NOT NULL
-        |  GROUP BY source, n_chars),
-        |g AS (
-        |  SELECT source, n_chars,
-        |         sum(n) OVER (PARTITION BY source ORDER BY n_chars) AS cum_le,
-        |         sum(n) OVER (PARTITION BY source) AS tot
-        |  FROM c),
-        |cut AS (
-        |  SELECT source, min(n_chars) AS cut_score FROM g
-        |  WHERE (cum_le * 1000000) // tot >= 100000 GROUP BY source)
-        |SELECT d.doc_id, d.source, d.n_chars, t.cut_score,
-        |       coalesce(d.n_chars >= t.cut_score, FALSE) AS is_kept
-        |FROM documents d
-        |LEFT JOIN cut t ON d.source IS NOT DISTINCT FROM t.source
-        |WHERE d.doc_id >= 300
-        |ORDER BY d.doc_id""".stripMargin)),
+      // gate one comparison per arriving document (docs >= 300).
+      pctlGateSql("doc_id < 300", "d.doc_id >= 300"))),
 
     Lane("x10_pctl_funnel", Queries.x10PctlFunnel, Oracle(
       // X27 composed into X10: the funnel census with the FITTED
@@ -6583,26 +5467,9 @@ object Lanes {
       // re-derived from scratch (integer cume_dist over the RAW-text
       // token census, min passing count), the gate replayed per
       // document over the REDACTED text's n_tok, the other stages the
-      // standard replay (min-key canonical per norm, 4-gram
-      // contamination vs bench docs 0-2, en-0.4 keyed-hash sample).
-      ("WITH " + gram4Ctes + ",\n" +
-        raw"""bench AS (SELECT doc_id AS bench_id, gram FROM grams WHERE doc_id < 3),
-          |bn AS (SELECT bench_id, count(*) AS n FROM bench GROUP BY 1),
-          |contam AS (
-          |  SELECT DISTINCT doc_id FROM (
-          |    SELECT g.doc_id, b.bench_id, count(*) AS i
-          |    FROM grams g JOIN bench b ON g.gram = b.gram
-          |    GROUP BY 1, 2) JOIN bn USING (bench_id)
-          |  WHERE round(i * 1.0 / n, 4) >= 0.8),
-          |rdoc AS (
-          |  SELECT doc_id, lang,
-          |         lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS kt,
-          |         regexp_replace(regexp_replace(regexp_replace(text,
-          |           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |           '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g'),
-          |           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IPV4>', 'g') AS rtext
-          |  FROM documents),
-          |rawtok AS (
+      // standard replay.
+      Funnel(
+        gates = raw"""rawtok AS (
           |  SELECT lang,
           |         CASE WHEN text IS NULL OR trim(text) = '' THEN 0
           |              ELSE len(string_split_regex(trim(text), '\s+')) END AS rt
@@ -6616,54 +5483,10 @@ object Lanes {
           |cut AS (
           |  SELECT lang, min(rt) AS cs FROM tg
           |  WHERE (cum * 1000000) // tot >= 100000 GROUP BY lang),
-          |""".stripMargin +
-        s"""ann AS (
-           |  SELECT r.doc_id,
-           |         r.doc_id = min(r.doc_id) OVER (PARTITION BY r.kt) AS is_canonical,
-           |         r.doc_id IN (SELECT doc_id FROM contam) AS is_contaminated,
-           |         CASE WHEN len(trim(r.rtext)) = 0 THEN 0
-           |              ELSE len(string_split_regex(trim(r.rtext), '\\s+')) END AS n_tok,
-           |         c.cs,
-           |         ${bucketSql("r.doc_id")} AS b,
-           |         CASE r.lang WHEN 'en' THEN 4000 ELSE 10000 END AS thr
-           |  FROM rdoc r LEFT JOIN cut c ON r.lang IS NOT DISTINCT FROM c.lang
-           |), q AS (
-           |  SELECT *, n_tok >= 1 AND coalesce(n_tok >= cs, FALSE) AS qpass
-           |  FROM ann
-           |), f AS (
-           |  SELECT count(*) AS n_raw,
-           |         count(CASE WHEN is_canonical THEN 1 END) AS n_after_dedup,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated THEN 1 END)
-           |           AS n_after_decontam,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND qpass THEN 1 END)
-           |           AS n_after_quality,
-           |         count(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND qpass AND b < thr THEN 1 END)
-           |           AS n_after_sample,
-           |         COALESCE(CAST(sum(n_tok) AS BIGINT), 0) AS tokens_raw,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_dedup,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_decontam,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND qpass
-           |                    THEN n_tok END) AS BIGINT), 0) AS tokens_after_quality,
-           |         COALESCE(CAST(sum(CASE WHEN is_canonical AND NOT is_contaminated
-           |                         AND qpass AND b < thr
-           |                    THEN n_tok END) AS BIGINT), 0) AS n_tokens
-           |  FROM q)
-           |SELECT n_raw, n_raw AS n_after_url,
-           |       n_after_dedup, n_after_dedup AS n_after_history,
-           |       n_after_dedup AS n_after_fuzzy,
-           |       n_after_decontam, n_after_quality, n_after_sample,
-           |       tokens_raw, tokens_raw AS tokens_after_url,
-           |       tokens_after_dedup, tokens_after_dedup AS tokens_after_history,
-           |       tokens_after_dedup AS tokens_after_fuzzy,
-           |       tokens_after_decontam, tokens_after_quality, n_tokens,
-           |       CASE WHEN n_tokens = 0 THEN 0
-           |            ELSE (n_tokens - 1) // 512 + 1 END AS n_sequences
-           |FROM f""".stripMargin))),
+          |""".stripMargin,
+        joins = " LEFT JOIN cut c ON r.lang IS NOT DISTINCT FROM c.lang",
+        annCols = ",\n         c.cs",
+        quality = "n_tok >= 1 AND coalesce(n_tok >= cs, FALSE)").censusSql())),
 
     Lane("x27_score_percentile", Queries.x27ScorePercentile, Oracle(
       // The adaptive threshold replayed as the NAIVE plan the staged
@@ -6671,24 +5494,16 @@ object Lanes {
       // a census-equivalent window pair (cum ≤-count and group total),
       // all integer — (cum_le·10⁶) // tot is DuckDB floor division,
       // identical to Spark's `div` for these non-negative operands.
-      // NULL scores sit outside the census (no rank among real
-      // scores): pctl_ppm NULL, is_kept FALSE.
-      """WITH c AS (
-        |  SELECT source, n_chars, count(*) AS n FROM documents
-        |  WHERE n_chars IS NOT NULL GROUP BY source, n_chars),
-        |g AS (
-        |  SELECT source, n_chars,
-        |         sum(n) OVER (PARTITION BY source ORDER BY n_chars) AS cum_le,
-        |         sum(n) OVER (PARTITION BY source) AS tot
-        |  FROM c)
-        |SELECT d.doc_id, d.source, d.n_chars,
-        |       CAST((g.cum_le * 1000000) // g.tot AS BIGINT) AS pctl_ppm,
-        |       coalesce((g.cum_le * 1000000) // g.tot >= 100000, FALSE)
-        |         AS is_kept
-        |FROM documents d
-        |LEFT JOIN g ON d.source IS NOT DISTINCT FROM g.source
-        |           AND d.n_chars = g.n_chars
-        |ORDER BY d.doc_id""".stripMargin)),
+      // NULL scores: pctl_ppm NULL, is_kept FALSE.
+      "WITH " + pctlCensusCtes("TRUE") + "\n" +
+        """SELECT d.doc_id, d.source, d.n_chars,
+          |       CAST((g.cum_le * 1000000) // g.tot AS BIGINT) AS pctl_ppm,
+          |       coalesce((g.cum_le * 1000000) // g.tot >= 100000, FALSE)
+          |         AS is_kept
+          |FROM documents d
+          |LEFT JOIN g ON d.source IS NOT DISTINCT FROM g.source
+          |           AND d.n_chars = g.n_chars
+          |ORDER BY d.doc_id""".stripMargin)),
 
     Lane("x26_budget_bpe", Queries.x26BudgetBpe, Oracle(
       // The BPE-denominated budget cut: merges re-derived from the

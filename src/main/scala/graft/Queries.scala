@@ -2974,9 +2974,9 @@ object Queries {
     * another directory failed exactly that way). Proves the file →
     * Config → funnel loop end-to-end against the oracle. No fuzzy pair frame — recipes CONFIGURE; detector
     * frames are pipeline arguments — so the fuzzy stage is the
-    * documented no-op, and the oracle is assembled from the existing
-    * shared parts (gram4Ctes + benchGramsRawCtes + noFuzzyFunnelBody),
-    * zero new SQL bodies to drift. */
+    * documented no-op, and the oracle is the shared funnel replay
+    * (`Lanes.Funnel` with raw-bench contamination), zero new SQL bodies
+    * to drift. */
   def x10RecipeFunnel(s: SparkSession, d: String): DataFrame = {
     val docs = spreadDocs(documents(s, d))
     val bench = docs.filter(col("doc_id") < 3)

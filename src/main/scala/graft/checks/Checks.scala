@@ -364,33 +364,62 @@ final case class NullCheck(column: String) extends ValueCheck {
   override def basisRaw: Column = lit(true)
 }
 
+/** A check that bounds ONE aggregate statistic, `observed`, to
+  * `[lo, hi]`: the table passes when the statistic is a number inside
+  * the bounds (null or NaN fails) and counts as one expectation
+  * (`unexpectedCount` 0 or 1). Subclasses give the statistic, the
+  * bounds test ([[inDoubleBounds]] or [[inCountBounds]]) and the
+  * message, which prints the value as read: a count as `5`, a double
+  * as `5.0`, a null double as `NaN`. */
+abstract class StatBoundsCheck extends AggCheck {
+  protected def observedCol: Column
+  /** Whether the value at `idx` is inside the bounds, and the value. */
+  protected def judge(row: Row, idx: Int): (Boolean, Any)
+  protected def message(observed: Any): String
+
+  final override def aggColumns(prefix: String): Seq[Column] = Seq(
+    count(lit(1)).as(s"${prefix}element_count"),
+    observedCol.as(s"${prefix}observed"))
+
+  final override def evaluate(row: Row, prefix: String): ValidationResult = {
+    val (ok, observed) = judge(row, row.fieldIndex(s"${prefix}observed"))
+    ValidationResult(name,
+      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
+      message(observed),
+      elementCount = row.getAs[Long](s"${prefix}element_count"),
+      unexpectedCount = if (ok) 0L else 1L)
+  }
+
+  protected final def inDoubleBounds(row: Row, idx: Int, lo: Double,
+                                     hi: Double): (Boolean, Any) = {
+    val observed = if (row.isNullAt(idx)) Double.NaN else row.getDouble(idx)
+    (!observed.isNaN && observed >= lo && observed <= hi, observed)
+  }
+
+  protected final def inCountBounds(row: Row, idx: Int, lo: Long,
+                                    hi: Long): (Boolean, Any) = {
+    val observed = row.getLong(idx)
+    (observed >= lo && observed <= hi, observed)
+  }
+}
+
 /** G11 — `expect_column_mean/min/max_to_be_between` (aggregate profiling). */
 final case class AggBoundsCheck(
     column: String, statistic: String, // "mean" | "min" | "max" | "sum" | "stddev"
     lo: Double, hi: Double)
-  extends AggCheck {
+  extends StatBoundsCheck {
   val name = s"agg_bounds:$statistic:$column"
-  private def statCol: Column = statistic match {
+  protected def observedCol: Column = (statistic match {
     case "mean"   => avg(col(column))
     case "min"    => min(col(column))
     case "max"    => max(col(column))
     case "sum"    => sum(col(column))
     case "stddev" => stddev_samp(col(column))
     case other    => throw new IllegalArgumentException(s"unknown statistic $other")
-  }
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
-    statCol.cast("double").as(s"${prefix}observed"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val idx = row.fieldIndex(s"${prefix}observed")
-    val observed = if (row.isNullAt(idx)) Double.NaN else row.getDouble(idx)
-    val ok = !observed.isNaN && observed >= lo && observed <= hi
-    ValidationResult(name,
-      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
-      s"$statistic($column) = $observed, expected [$lo, $hi]",
-      elementCount = total, unexpectedCount = if (ok) 0L else 1L)
-  }
+  }).cast("double")
+  protected def judge(row: Row, idx: Int) = inDoubleBounds(row, idx, lo, hi)
+  protected def message(observed: Any) =
+    s"$statistic($column) = $observed, expected [$lo, $hi]"
 }
 
 /** G7/G8 — `expect_column_values_to_be_unique` /
@@ -437,20 +466,12 @@ final case class ValueLengthCheck(column: String, minLen: Int, maxLen: Int)
   * [[ApproxDistinctCountCheck]] (`approx: true` in a suite file) when
   * ±2% suffices on very hot columns. */
 final case class DistinctCountCheck(column: String, lo: Long, hi: Long)
-  extends AggCheck {
+  extends StatBoundsCheck {
   val name = s"distinct_count:$column"
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
-    countDistinct(col(column)).as(s"${prefix}observed"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val observed = row.getAs[Long](s"${prefix}observed")
-    val ok = observed >= lo && observed <= hi
-    ValidationResult(name,
-      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
-      s"distinct($column) = $observed, expected [$lo, $hi]",
-      elementCount = total, unexpectedCount = if (ok) 0L else 1L)
-  }
+  protected def observedCol: Column = countDistinct(col(column))
+  protected def judge(row: Row, idx: Int) = inCountBounds(row, idx, lo, hi)
+  protected def message(observed: Any) =
+    s"distinct($column) = $observed, expected [$lo, $hi]"
 }
 
 /** G14-approx — the `approx: true` variant: HyperLogLog++
@@ -466,21 +487,13 @@ final case class DistinctCountCheck(column: String, lo: Long, hi: Long)
   * value on both sides). */
 final case class ApproxDistinctCountCheck(
     column: String, lo: Long, hi: Long, rsd: Double = 0.05)
-  extends AggCheck {
+  extends StatBoundsCheck {
   require(rsd > 0.0 && rsd < 1.0, s"rsd ($rsd) must be in (0, 1)")
   val name = s"distinct_count_approx:$column"
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
-    approx_count_distinct(col(column), rsd).as(s"${prefix}observed"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val observed = row.getAs[Long](s"${prefix}observed")
-    val ok = observed >= lo && observed <= hi
-    ValidationResult(name,
-      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
-      s"approx_distinct($column) = $observed (rsd=$rsd), expected [$lo, $hi]",
-      elementCount = total, unexpectedCount = if (ok) 0L else 1L)
-  }
+  protected def observedCol: Column = approx_count_distinct(col(column), rsd)
+  protected def judge(row: Row, idx: Int) = inCountBounds(row, idx, lo, hi)
+  protected def message(observed: Any) =
+    s"approx_distinct($column) = $observed (rsd=$rsd), expected [$lo, $hi]"
 }
 
 /** `expect_column_proportion_of_unique_values_to_be_between` — distinct
@@ -516,22 +529,13 @@ final case class ProportionUniqueCheck(column: String, lo: Double, hi: Double)
   * oracle to a range assertion. */
 final case class QuantileCheck(
     column: String, quantile: Double, lo: Double, hi: Double)
-  extends AggCheck {
+  extends StatBoundsCheck {
   val name = s"quantile:$column:$quantile"
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
+  protected def observedCol: Column =
     round(expr(s"percentile(`$column`, $quantile)"), 4)
-      .as(s"${prefix}observed"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val idx = row.fieldIndex(s"${prefix}observed")
-    val observed = if (row.isNullAt(idx)) Double.NaN else row.getDouble(idx)
-    val ok = !observed.isNaN && observed >= lo && observed <= hi
-    ValidationResult(name,
-      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
-      s"p$quantile($column) = $observed, expected [$lo, $hi]",
-      elementCount = total, unexpectedCount = if (ok) 0L else 1L)
-  }
+  protected def judge(row: Row, idx: Int) = inDoubleBounds(row, idx, lo, hi)
+  protected def message(observed: Any) =
+    s"p$quantile($column) = $observed, expected [$lo, $hi]"
 }
 
 /** G15-approx — the `approx: true` variant: Greenwald-Khanna
@@ -545,24 +549,16 @@ final case class QuantileCheck(
 final case class ApproxQuantileCheck(
     column: String, quantile: Double, lo: Double, hi: Double,
     accuracy: Int = 10000)
-  extends AggCheck {
+  extends StatBoundsCheck {
   require(quantile >= 0.0 && quantile <= 1.0, s"quantile in [0,1]: $quantile")
   require(accuracy > 0, s"accuracy ($accuracy) must be positive")
   val name = s"quantile_approx:$column:$quantile"
-  override def aggColumns(prefix: String): Seq[Column] = Seq(
-    count(lit(1)).as(s"${prefix}element_count"),
+  protected def observedCol: Column =
     round(expr(s"approx_percentile(`$column`, $quantile, $accuracy)")
-      .cast("double"), 4).as(s"${prefix}observed"))
-  override def evaluate(row: Row, prefix: String): ValidationResult = {
-    val total = row.getAs[Long](s"${prefix}element_count")
-    val idx = row.fieldIndex(s"${prefix}observed")
-    val observed = if (row.isNullAt(idx)) Double.NaN else row.getDouble(idx)
-    val ok = !observed.isNaN && observed >= lo && observed <= hi
-    ValidationResult(name,
-      if (ok) ValidationStatus.Passed else ValidationStatus.Failed,
-      s"approx_p$quantile($column) = $observed, expected [$lo, $hi]",
-      elementCount = total, unexpectedCount = if (ok) 0L else 1L)
-  }
+      .cast("double"), 4)
+  protected def judge(row: Row, idx: Int) = inDoubleBounds(row, idx, lo, hi)
+  protected def message(observed: Any) =
+    s"approx_p$quantile($column) = $observed, expected [$lo, $hi]"
 }
 
 /** G6/R3 — `expect_table_columns_to_match_set` / `expect_column_to_exist`.

@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
   * hash64 the argmax picks the same seed for nearly EVERY key and one
   * shard swallows the corpus (measured: 500/500 keys on one shard
   * before the finalizer; rendezvous is exactly the "sorts BY the hash
-  * value" consumer family orderKey exists for). Argmax resolves by a
-  * when-chain
-  * against the greatest weight — first match wins, so ties (already
+  * value" consumer family orderKey exists for). Argmax is ONE
+  * expression: the greatest (weight, −shard) struct, so ties (already
   * ~2⁻⁶² per pair) break to the LOWEST shard identically in both
-  * engines. Map-only: n hash evaluations + n comparisons per row, no
-  * shuffle, no state.
+  * engines, and a null key (null weights) gets no shard. Map-only: n
+  * hash evaluations + n comparisons per row, no shuffle, no state.
   */
 object Rendezvous {
 
@@ -35,38 +34,39 @@ object Rendezvous {
   def shardOf(key: Column, nShards: Int, seed: Long): Column = {
     require(nShards >= 1 && nShards <= 1024,
       s"nShards ($nShards) must be in [1, 1024]")
-    val ws = (0 until nShards).map(s => Sampling.orderKey(key, seed + s))
-    val wMax = if (ws.size == 1) ws.head else greatest(ws: _*)
-    ws.zipWithIndex.tail.foldLeft(
-        when(ws.head === wMax, lit(0L)): Column) {
-      case (acc, (w, s)) => acc.when(w === wMax, lit(s.toLong))
-    }
+    argmax((0 until nShards).map(s => Sampling.orderKey(key, seed + s)))
+  }
+
+  /** The index of the greatest weight in `ws`, lowest index on a tie,
+    * null when the weights are (a null key). One `greatest` over
+    * (weight, −index) structs: each weight appears once, where a
+    * when-chain against the max repeats every weight twice — and
+    * Catalyst may inline the weights again into a filter it pushes below
+    * [[assign]]'s projection. */
+  private def argmax(ws: Seq[Column]): Column = {
+    val best =
+      if (ws.size == 1) lit(0L)
+      else -greatest(ws.zipWithIndex.map { case (w, s) =>
+        struct(w.as("w"), lit(-s.toLong).as("s"))
+      }: _*).getField("s")
+    when(ws.head.isNotNull, best)
   }
 
   /** Append `shard` (and, when `compareWith` is set, `shard_next` for
-    * the grown ring) to `df`. The weights MATERIALIZE through one
-    * projection before the argmax: inlining [[shardOf]]'s expression
-    * directly would evaluate every per-shard hash once inside
-    * `greatest` and again in the when-chain (and twice more for the
-    * grown ring) — materialized, each of the max(n, n₂) hashes
-    * computes exactly once per row and both argmaxes read plain
-    * column refs. Same values, same ties, half the work (bench:
-    * 2.7 s → the projected form; decisions pinned equal to
-    * [[shardOf]] in RendezvousSpec). */
+    * the grown ring) to `df`. The weights are projected once as
+    * columns before the argmax, so both rings' argmaxes read the same
+    * max(n, n₂) hashes instead of each computing its own (decisions
+    * pinned equal to [[shardOf]] in RendezvousSpec). That holds for
+    * the plan as built: a filter over `shard`/`shard_next` can be
+    * pushed below the projection, and Catalyst then inlines the
+    * weights into the filter and evaluates them there again. */
   def assign(df: DataFrame, keyCol: String, nShards: Int, seed: Long,
              compareWith: Option[Int] = None): DataFrame = {
     val maxN = math.max(nShards, compareWith.getOrElse(0))
     val ws = (0 until maxN).map(s =>
       Sampling.orderKey(col(keyCol), seed + s).as(s"__w$s"))
     val projected = df.select(df.columns.map(col).toIndexedSeq ++ ws: _*)
-    def pick(n: Int): Column = {
-      val cols = (0 until n).map(s => col(s"__w$s"))
-      val m = if (cols.size == 1) cols.head else greatest(cols: _*)
-      cols.zipWithIndex.tail.foldLeft(
-          when(cols.head === m, lit(0L)): Column) {
-        case (acc, (w, s)) => acc.when(w === m, lit(s.toLong))
-      }
-    }
+    def pick(n: Int): Column = argmax((0 until n).map(s => col(s"__w$s")))
     val out = projected.withColumn("shard", pick(nShards))
     compareWith.fold(out)(n2 => out.withColumn("shard_next", pick(n2)))
       .drop((0 until maxN).map(s => s"__w$s"): _*)

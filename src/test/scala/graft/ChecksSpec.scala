@@ -184,6 +184,28 @@ class ChecksSpec extends SparkSpec {
     assert(!ApproxQuantileCheck("v", 0.5, 0.0, 100.0).run(vals).passed)
   }
 
+  test("bounded-statistic checks: verdict, counts and message text") {
+    val empty = regions.filter("id < 0")
+    val cases = Seq(
+      AggBoundsCheck("value", "mean", 0.0, 10.0).run(regions) ->
+        (true, 4L, 0L, "mean(value) = 8.125, expected [0.0, 10.0]"),
+      AggBoundsCheck("value", "mean", 0.0, 10.0).run(empty) ->
+        (false, 0L, 1L, "mean(value) = NaN, expected [0.0, 10.0]"),
+      DistinctCountCheck("region", 1L, 1L).run(regions) ->
+        (false, 4L, 1L, "distinct(region) = 2, expected [1, 1]"),
+      ApproxDistinctCountCheck("region", 1L, 5L).run(regions) ->
+        (true, 4L, 0L, "approx_distinct(region) = 2 (rsd=0.05), expected [1, 5]"),
+      QuantileCheck("value", 0.5, 0.0, 100.0).run(regions) ->
+        (true, 4L, 0L, "p0.5(value) = 8.75, expected [0.0, 100.0]"),
+      ApproxQuantileCheck("value", 0.5, 8.0, 100.0).run(regions) ->
+        (false, 4L, 1L, "approx_p0.5(value) = 7.5, expected [8.0, 100.0]"))
+    for ((r, (passed, total, unexpected, message)) <- cases) {
+      assert(r.passed == passed && r.elementCount == total &&
+        r.unexpectedCount == unexpected && r.message == message,
+        r.toString)
+    }
+  }
+
   test("CheckSuite.runBatched fuses checks with identical verdicts") {
     val checks = Seq(
       RowCountCheck(), NotNullCheck("region"),

@@ -11,14 +11,35 @@ class RendezvousSpec extends SparkSpec {
 
   test("minimal disruption: growing 8 -> 9 moves ~1/9 of keys and " +
        "every one of them moves TO the new shard") {
-    val out = Rendezvous.assign(keys(20000), "k", nShards = 8,
-      seed = 7L, compareWith = Some(9))
-    val moved = out.filter(col("shard_next") =!= col("shard"))
-    val n = moved.count()
-    // E[n] = 20000/9 ≈ 2222; bind generously.
-    assert(n > 1600 && n < 2900, s"moved $n of 20000 — not ~1/9")
-    assert(moved.filter(col("shard_next") =!= 8L).count() == 0L,
-      "a key moved between two OLD shards — rendezvous broken")
+    // With the interpreted fallback off, a generated method past Janino's
+    // 64 KB limit fails the query instead of running it slowly: the
+    // filter pushed below assign's projection inlines every weight.
+    val fallback = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val out = Rendezvous.assign(keys(20000), "k", nShards = 8,
+        seed = 7L, compareWith = Some(9))
+      val moved = out.filter(col("shard_next") =!= col("shard"))
+      val n = moved.count()
+      // E[n] = 20000/9 ≈ 2222; bind generously.
+      assert(n > 1600 && n < 2900, s"moved $n of 20000 — not ~1/9")
+      assert(moved.filter(col("shard_next") =!= 8L).count() == 0L,
+        "a key moved between two OLD shards — rendezvous broken")
+    } finally prev.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
+  }
+
+  test("a null key gets no shard, from shardOf and assign alike") {
+    val withNull = keys(10).withColumn("k",
+      when(col("k") === 3L, lit(null).cast("long")).otherwise(col("k")))
+    for (n <- Seq(1, 8)) {
+      val viaAssign = Rendezvous.assign(withNull, "k", n, seed = 5L)
+        .filter(col("k").isNull).select("shard").collect().map(_.get(0))
+      val viaShardOf = withNull.filter(col("k").isNull)
+        .select(Rendezvous.shardOf(col("k"), n, 5L)).collect().map(_.get(0))
+      assert(viaAssign.toSeq == Seq(null) && viaShardOf.toSeq == Seq(null),
+        s"n=$n: null key routed to ${viaAssign.toSeq} / ${viaShardOf.toSeq}")
+    }
   }
 
   test("occupancy is uniform-ish and the assignment is deterministic " +

@@ -7,11 +7,20 @@ Scala library has no Python dependency.
 
     python3 tools/oracle_check.py SF_DIR OUT                  # vs the oracle
     python3 tools/oracle_check.py SF_DIR OUT --against OLD    # vs OLD dump
+    python3 tools/oracle_check.py SF_DIR OUT --sql-against OLD_ORACLE_JSON
 
 `--against OLD` compares every lane's output in OUT with the same lane in
 an earlier Verify dump OLD, in emitted order, and prints the lanes that
 differ or exist in one dump only. It covers the rows-only lanes, which
-have no oracle. Exit status 1 when any lane differs."""
+have no oracle. Exit status 1 when any lane differs.
+
+`--sql-against OLD_ORACLE_JSON` checks a rewrite of the oracle SQL
+itself: for every lane whose SQL in OUT/oracle_sql.json differs from
+the text in OLD_ORACLE_JSON (an earlier Verify's oracle_sql.json), it
+runs both versions in DuckDB over SF_DIR and compares the answers in
+emitted order. It prints `SQLDIFF <lane>: <why>` per difference and the
+number of lanes whose text changed; a lane in one file only is a
+difference. Needs no Spark output. Exit status 1 on any difference."""
 import sys, json, glob, math, os
 import duckdb
 import pandas as pd
@@ -48,6 +57,36 @@ def lane_frame(con, out, name):
         return None
     return norm(con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf())
 
+def connect(sf):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    return con
+
+def sql_against(sf, out, old_path):
+    con = connect(sf)
+    new = json.load(open(f"{out}/oracle_sql.json"))
+    old = json.load(open(old_path))
+    changed = differ = 0
+    for name in sorted(new.keys() | old.keys()):
+        if name not in old or name not in new:
+            print(f"SQLDIFF {name}: missing from {old_path if name not in old else out}")
+            differ += 1
+            continue
+        if new[name] == old[name]:
+            continue
+        changed += 1
+        try:
+            ok, why = frames_equal(norm(con.execute(new[name]).fetchdf()),
+                                   norm(con.execute(old[name]).fetchdf()))
+        except Exception as e:
+            ok, why = False, str(e).splitlines()[0]
+        if not ok:
+            print(f"SQLDIFF {name}: {why}")
+            differ += 1
+    print(f"\n{changed} lanes' SQL text changed, {differ} differ")
+    sys.exit(1 if differ else 0)
+
 def against(out, old):
     con = duckdb.connect()
     def names(d):
@@ -72,18 +111,19 @@ def against(out, old):
     sys.exit(1 if differ else 0)
 
 def main():
-    old = None
-    if "--against" in sys.argv:
-        i = sys.argv.index("--against")
-        old = sys.argv[i + 1]
-        del sys.argv[i:i + 2]
+    opts = {}
+    for flag in ("--against", "--sql-against"):
+        if flag in sys.argv:
+            i = sys.argv.index(flag)
+            opts[flag] = sys.argv[i + 1]
+            del sys.argv[i:i + 2]
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-    if old:
-        against(out, old)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    if "--against" in opts:
+        against(out, opts["--against"])
+    if "--sql-against" in opts:
+        sql_against(sf, out, opts["--sql-against"])
+    con = connect(sf)
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     failures = 0
     for name in sorted(oracle):

@@ -11,11 +11,18 @@ ids, RDD ids, source line numbers of call sites, the random suffixes
 of temporary directories, lambda class names and variables, and object
 identity hashes.
 
+Spark's distinct-aggregate rewrite orders its Expand projections (and
+so the group ids, and the columns that follow them) by what the JVM ran
+before, not by the query. A lane with an Expand node whose two plans
+differ only that way is listed as `reordered`, not as differing: its
+plans match once every list's items are sorted and the group-id
+literals masked.
+
     python3 tools/plan_diff.py OLD NEW            # list differing lanes
     python3 tools/plan_diff.py OLD NEW --show X   # unified diff of lane X
 
-Exit status: 0 when every lane present in both dumps is identical,
-1 otherwise.
+Exit status: 0 when every lane present in both dumps is identical or
+reordered, 1 otherwise.
 """
 import argparse
 import difflib
@@ -49,6 +56,56 @@ def normalize(text):
     for pattern, repl in NORMALIZE:
         text = pattern.sub(repl, text)
     return text.strip()
+
+
+EXPAND = re.compile(r"^\(N\) Expand$")
+GID_TEST = re.compile(r"\(gid#N = \d+\)")
+BARE_INT = re.compile(r"(?:(?<=\[)|(?<=, ))\d+(?=,|\])")
+PAIRS = {"[": "]", "(": ")"}
+
+
+def sort_lists(line):
+    """`line` with the items of every [...] and (...) list sorted, inner
+    lists first; unchanged when its brackets do not balance."""
+    def group(i, close):
+        items, cur = [], ""
+        while i < len(line):
+            ch = line[i]
+            if ch in PAIRS:
+                inner, i = group(i + 1, PAIRS[ch])
+                cur += ch + inner + PAIRS[ch]
+                continue
+            if ch in ")]":
+                if ch != close:
+                    raise ValueError(line)
+                return ", ".join(sorted(x.strip() for x in items + [cur])), i + 1
+            if ch == "," and close:
+                items.append(cur)
+                cur = ""
+            else:
+                cur += ch
+            i += 1
+        if close:
+            raise ValueError(line)
+        return cur, i
+    try:
+        return group(0, None)[0]
+    except ValueError:
+        return line
+
+
+def group_order_free(text):
+    """A normalized plan with the distinct-aggregate group order erased:
+    the group ids on Expand projections and in `gid = k` filters masked,
+    every list sorted."""
+    out, in_expand = [], False
+    for line in text.split("\n"):
+        if EXPAND.match(line):
+            in_expand = True
+        elif in_expand and line.startswith("Arguments: "):
+            line, in_expand = BARE_INT.sub("G", line), False
+        out.append(sort_lists(GID_TEST.sub("(gid#N = G)", line)))
+    return "\n".join(out)
 
 
 def lanes(path):
@@ -90,15 +147,20 @@ def main():
         return 0
 
     common = sorted(set(old) & set(new))
-    differ = [n for n in common if old[n] != new[n]]
+    changed = [n for n in common if old[n] != new[n]]
+    reordered = [n for n in changed if "Expand" in old[n]
+                 and group_order_free(old[n]) == group_order_free(new[n])]
+    differ = [n for n in changed if n not in reordered]
     for n in sorted(set(old) - set(new)):
         print(f"only in {args.old}: {n}")
     for n in sorted(set(new) - set(old)):
         print(f"only in {args.new}: {n}")
+    for n in reordered:
+        print(f"reordered: {n}")
     for n in differ:
         print(f"differs: {n}")
-    print(f"{len(common)} lanes compared, {len(common) - len(differ)} "
-          f"identical, {len(differ)} differ")
+    print(f"{len(common)} lanes compared, {len(common) - len(changed)} "
+          f"identical, {len(reordered)} reordered, {len(differ)} differ")
     return 1 if differ else 0
 
 
